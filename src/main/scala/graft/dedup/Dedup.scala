@@ -524,8 +524,8 @@ object Dedup {
         edges.unpersist(); labelsRdd.unpersist(false)
         throw new IllegalStateException(
           s"duplicateClusters did not converge in $maxRounds rounds " +
-          s"(${3 * maxRounds} hops) — component diameter exceeds the guard; " +
-          "raise maxRounds")
+          "(each 3 hops plus a pointer jump; the covered radius doubles per " +
+          "round) — component diameter exceeds the guard; raise maxRounds")
       }
       // Convergence = the LAST hop was a no-op (round 17; labels only
       // ever DECREASE, so h(L) == L is the fixpoint test): the final

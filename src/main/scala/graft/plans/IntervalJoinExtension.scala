@@ -279,21 +279,8 @@ case class BroadcastIntervalJoinExec(
     // ~1 s per annotate invocation re-expanding a one-partition
     // aggregate output. Raw scan chains (a small parquet file reads
     // as ONE partition regardless of row count) still widen.
-    val probeShuffled = probePlan.exists {
-      case _: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => true
-      case s: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        s.plan.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeLike]
-      case _ => false
-    }
-    if (sys.env.contains("SPARK_GRAFT_BUILDLOG") && probeRdd0.getNumPartitions < target)
-      // scalastyle:off println
-      println(s"  [probe-repartition] parts=${probeRdd0.getNumPartitions} " +
-        s"shuffled=$probeShuffled " +
-        s"cols=${probePlan.output.map(_.name).take(8).mkString(",")} " +
-        s"plan=${probePlan.getClass.getSimpleName}")
-      // scalastyle:on println
     val probeRdd =
-      if (!probeShuffled && probeRdd0.getNumPartitions < target)
+      if (!graft.core.Parallelism.shuffled(probePlan) && probeRdd0.getNumPartitions < target)
         probeRdd0.map(_.copy()).repartition(target)
       else probeRdd0
 

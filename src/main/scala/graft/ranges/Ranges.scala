@@ -134,14 +134,18 @@ object Ranges {
           floor(col(prefix + cols.start).cast("long") / w).cast("long"),
           floor(col(prefix + cols.end).cast("long") / w).cast("long"))))
     }
-    // SHUFFLE_HASH on both sides (round 18, guide-class join choice):
-    // the grid join is a plain equi-join on (contig, bucket) whose
-    // sort order nothing downstream reuses — sort-merge paid two full
-    // sorts of the exploded bucket rows (~15-20 executor-seconds at
-    // sf0.1). With both sides hinted the planner builds the smaller
-    // side's hash table per partition; bucket fan-out bounds the
-    // per-key group, and AQE skew-split still applies to shuffled
-    // hash joins.
+    // The join condition also carries the interval predicate, so with
+    // IntervalJoinStrategy installed and either exploded side under
+    // spark.graft.broadcast_build_limit, the grid join plans as a
+    // BroadcastIntervalJoinExec (the bucket equality becomes a residual
+    // on the index probe) and the hints below play no part. Otherwise
+    // SHUFFLE_HASH on both sides (guide-class join choice): the grid
+    // join is a plain equi-join on (contig, bucket) whose sort order
+    // nothing downstream reuses — sort-merge paid two full sorts of the
+    // exploded bucket rows (~15-20 executor-seconds at sf0.1). With
+    // both sides hinted the planner builds the smaller side's hash
+    // table per partition; bucket fan-out bounds the per-key group, and
+    // AQE skew-split still applies to shuffled hash joins.
     val a = bucketed(left, lcols, "left_").hint("shuffle_hash")
     val b = bucketed(right, rcols, "right_").hint("shuffle_hash")
     val ls = col("left_" + lcols.start); val le = col("left_" + lcols.end)

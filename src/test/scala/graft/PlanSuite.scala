@@ -1,5 +1,11 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.core.Parallelism
+import graft.pileup.Pileup
+import graft.ranges.Ranges
+
 /** Plan-shape regression guards: the load-bearing operators must keep
   * the physical shapes the scale design depends on — interval
   * strategies plan as broadcast index probes, and nothing in the
@@ -36,5 +42,41 @@ class PlanSuite extends SparkSpec {
       assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
         s"$q degenerated to a nested-loop join:\n${p.take(2000)}")
     }
+  }
+
+  /** Jobs started while `body` runs, counted by a listener between two
+    * bus drains so no earlier job's event lands in the count. */
+  private def jobsStarted(body: => Any): Int = {
+    val n = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    drainListenerBus()
+    spark.sparkContext.addSparkListener(listener)
+    try { body; drainListenerBus(); n.get }
+    finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("Parallelism.ensure decides from the plan: building a pipeline runs no job") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("plan_jobs").toString
+    (0 until 400).map(i => ("c" + (i % 2), 1L + (i * 7L) % 3000, 0, "30M5D20M", 60))
+      .toDF("chrom", "start", "flags", "cigar", "mapping_quality")
+      .coalesce(1).write.parquet(dir + "/reads")
+    (0 until 50).map(i => ("c" + (i % 2), 1L + i * 60L, 81L + i * 60L, i.toLong))
+      .toDF("contig", "pos_start", "pos_end", "id")
+      .coalesce(1).write.parquet(dir + "/targets")
+    // schema inference of a parquet read is a job: keep it outside the counts
+    val reads = spark.read.parquet(dir + "/reads")
+    val targets = spark.read.parquet(dir + "/targets")
+    val built = jobsStarted(Ranges.overlapPartitioned(Pileup.depth(reads), targets))
+    assert(built == 0, s"building depth -> overlapPartitioned ran $built jobs")
+    val aggregated = jobsStarted(Parallelism.ensure(targets.groupBy("contig").count()))
+    assert(aggregated == 0, s"ensure over an aggregate ran $aggregated jobs")
+    // the case the helper exists for: a one-file scan still widens
+    assert(targets.rdd.getNumPartitions < spark.sparkContext.defaultParallelism)
+    val parts = Parallelism.ensure(targets).rdd.getNumPartitions
+    assert(parts >= spark.sparkContext.defaultParallelism,
+      s"one-file parquet scan left at $parts partitions")
   }
 }

@@ -254,6 +254,60 @@ class PropertySuite extends SparkSpec {
     }
   }
 
+  test("invariance: depth -> overlapPartitioned target depth across AQE and join strategy") {
+    import org.apache.spark.sql.functions.{greatest, least, sum}
+    // one-file parquet inputs: the reads scan is widened, the depth
+    // output keeps whatever partitioning its shuffles (and AQE) gave it
+    val r = new Random(13)
+    val readRows = (0 until 300).map { _ =>
+      val cigar = s"${1 + r.nextInt(60)}M${1 + r.nextInt(30)}${Seq("D", "N", "I")(r.nextInt(3))}${1 + r.nextInt(60)}M"
+      ("c" + r.nextInt(2), 1 + r.nextInt(3000), 0, cigar, 60)
+    }
+    val targetRows = (0 until 60).map { i =>
+      val s = 1L + r.nextInt(3200)
+      ("c" + r.nextInt(2), s, s + r.nextInt(400), i.toLong)
+    }
+    val dir = java.nio.file.Files.createTempDirectory("depth_targets").toString
+    readRows.toDF("chrom", "start", "flags", "cigar", "mapping_quality")
+      .coalesce(1).write.parquet(dir + "/reads")
+    targetRows.toDF("contig", "pos_start", "pos_end", "id").coalesce(1).write.parquet(dir + "/targets")
+    val reads = spark.read.parquet(dir + "/reads")
+    val targets = spark.read.parquet(dir + "/targets")
+    // naive model: per-base depth from the CIGAR walker, summed over
+    // each target's closed range; targets no read touches are absent
+    val depthAt = readRows.flatMap { case (c, start, _, cigar, _) =>
+      graft.pileup.Cigar.coveredSegments(start.toLong, cigar)
+        .flatMap { case (s, e) => (s until e).map(p => (c, p)) }
+    }.groupBy(identity).map { case (k, xs) => k -> xs.size.toLong }
+    val naive = targetRows.map { case (c, s, e, id) =>
+      id -> (s to e).map(p => depthAt.getOrElse((c, p), 0L)).sum
+    }.filter(_._2 > 0).toMap
+    def covered(): Map[Long, Long] =
+      Ranges.overlapPartitioned(graft.pileup.Pileup.depth(reads), targets)
+        .groupBy($"right_id")
+        .agg(sum($"left_coverage".cast("long") *
+          (least($"left_pos_end", $"right_pos_end") -
+            greatest($"left_pos_start", $"right_pos_start") + 1)))
+        .collect().map(row => row.getLong(0) -> row.getLong(1)).toMap
+    graft.plans.Graft.enable(spark)
+    val keys = Seq("spark.sql.adaptive.enabled", "spark.graft.intervalJoin.enabled")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      for (aqe <- Seq("true", "false"); ij <- Seq("true", "false")) {
+        spark.conf.set(keys(0), aqe)
+        spark.conf.set(keys(1), ij)
+        val plan = Ranges.overlapPartitioned(graft.pileup.Pileup.depth(reads), targets)
+          .queryExecution.executedPlan.toString
+        assert(plan.contains("BroadcastIntervalJoin") == (ij == "true"),
+          s"aqe=$aqe intervalJoin=$ij planned:\n$plan")
+        assert(covered() == naive, s"aqe=$aqe intervalJoin=$ij")
+      }
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   // NOTE: the integrated annotate pipeline's invariance is covered by
   // the driver gate itself (Verify runs at a different shuffle-
   // partition count than Bench and both hash-match the same oracle);

@@ -34,21 +34,12 @@ class SweepReuseSuite extends SparkSpec {
             full += 1
         }
     }
-    // LiveListenerBus.waitUntilEmpty is private[spark] in source but
-    // public in bytecode — same reflective drain CacheBuilder uses
-    def drainBus(): Unit =
-      try {
-        val sc = spark.sparkContext
-        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-        bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
-          .invoke(bus, java.lang.Long.valueOf(20000L))
-      } catch { case _: Throwable => Thread.sleep(500) }
     def fullStages(df: org.apache.spark.sql.DataFrame): Int = {
       lock.synchronized { full = 0 }
       spark.sparkContext.addSparkListener(listener)
       try {
         df.write.format("noop").mode("overwrite").save()
-        drainBus()
+        drainListenerBus()
         lock.synchronized(full)
       } finally spark.sparkContext.removeSparkListener(listener)
     }

@@ -21,33 +21,17 @@ object SparkEntry {
     * table-function providers are similarly built once and streamed
     * through). Each execution still runs its own optimizer + AQE pass
     * over the cached analyzed tree, so runtime re-planning is intact;
-    * only the construction is shared. Keyed on the session itself (so
-    * two concurrent sessions never share plans); a stopped session's
-    * entry is evicted EXPLICITLY — weak keys alone cannot reclaim it,
-    * because each cached Dataset strongly references its session and so
-    * the value map pins the key for the JVM lifetime (round-14 ADVICE;
-    * the WeakHashMap javadoc's value-refers-to-key caveat). Every
-    * access sweeps entries whose SparkContext has stopped, and
-    * [[invalidate]] is the direct hook for tests/benches. */
-  private val prepared =
-    new java.util.HashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]]()
+    * only the construction is shared. Session scoping, stopped-session
+    * eviction and the LRU bound come from the shared
+    * [[graft.core.SessionCache]]; [[invalidate]] drops the session's
+    * entries from every such cache (plan templates and localized dims
+    * included). */
+  private val prepared = new graft.core.SessionCache[(String, String), DataFrame](1024)
 
-  /** Drop a session's prepared plans (idempotent; called implicitly for
-    * stopped sessions on the next access from any session). */
-  def invalidate(s: SparkSession): Unit =
-    prepared.synchronized { prepared.remove(s) }
-
-  private def preparedFor(s: SparkSession) =
-    prepared.synchronized {
-      prepared.entrySet().removeIf(e => e.getKey.sparkContext.isStopped)
-      var m = prepared.get(s)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-        prepared.put(s, m)
-      }
-      m
-    }
+  /** Drop a session's prepared plans, localized dims and plan
+    * templates (idempotent; called implicitly for stopped sessions on
+    * the next access from any session). */
+  def invalidate(s: SparkSession): Unit = graft.core.SessionCache.invalidate(s)
 
   /** A plan is re-executable from its analyzed tree only when every
     * leaf re-reads a durable source. File relations and literal
@@ -68,13 +52,9 @@ object SparkEntry {
       : Map[String, (SparkSession, String) => DataFrame] =
     m.map { case (n, fn) =>
       n -> ((s: SparkSession, d: String) => {
-        val reg = preparedFor(s)
-        val key = (n, d)
-        val hit = reg.get(key)
-        if (hit != null) hit
-        else {
+        prepared.get(s, (n, d)).getOrElse {
           val df = fn(s, d)
-          if (reExecutable(df)) reg.putIfAbsent(key, df)
+          if (reExecutable(df)) prepared.put(s, (n, d), df)
           df
         }
       })

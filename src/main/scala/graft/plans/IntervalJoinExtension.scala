@@ -195,12 +195,6 @@ case class BroadcastIntervalJoinExec(
         if (buildLeft) c._1 else c._2, buildPlan.output))
       val bs = BindReferences.bindReference(bStartE, buildPlan.output)
       val be = BindReferences.bindReference(bEndE, buildPlan.output)
-      if (sys.env.contains("SPARK_GRAFT_BUILDLOG"))
-        // scalastyle:off println
-        println(s"  [build] exec=${sparkContext.getLocalProperty("spark.sql.execution.id")} " +
-          s"cols=${buildPlan.output.map(_.name).mkString(",")} " +
-          s"canon=${buildPlan.canonicalized.semanticHash()}")
-        // scalastyle:on println
       val rows = buildPlan.executeCollect()
 
       val groups = mutable.HashMap.empty[UTF8String,

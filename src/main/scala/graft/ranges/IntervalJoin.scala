@@ -103,21 +103,11 @@ object IntervalJoin {
       df: DataFrame, cols: IntervalCols, tieBreakCol: Option[String] = None)
       : (mutable.LinkedHashMap[String, (Array[Long], Array[Long], Array[Int], Array[Long])], DataFrame) = {
     import org.apache.spark.sql.catalyst.InternalRow
-    val logT = sys.env.contains("SPARK_GRAFT_BUILDLOG")
-    var t0 = System.nanoTime()
-    def lap(tag: String): Unit = if (logT) {
-      val t1 = System.nanoTime()
-      // scalastyle:off println
-      println(f"  [collectBuild] $tag ${(t1 - t0) / 1e9}%.3f s")
-      // scalastyle:on println
-      t0 = t1
-    }
     // executeCollect: UnsafeRows straight off the wire — df.collect()
     // additionally ran CatalystTypeConverters per field per row and
     // re-boxed every value again for the _lidx append (driver-serial;
     // ~2 s of the nearest build at sf0.1)
     val rows = df.queryExecution.executedPlan.executeCollect()
-    lap("collect")
     val ci = df.schema.fieldIndex(cols.contig)
     val si = df.schema.fieldIndex(cols.start)
     val ei = df.schema.fieldIndex(cols.end)
@@ -150,7 +140,6 @@ object IntervalJoin {
     val coords = groups.map { case (k, (s, e, p, t)) =>
       k -> (s.toArray, e.toArray, p.toArray, t.toArray)
     }
-    lap("group")
     val schema2 = StructType(df.schema.fields :+ StructField("_lidx", IntegerType, nullable = false))
     // _lidx rides a JoinedRow over the collected UnsafeRow, then the
     // pair is flattened to ONE UnsafeRow before broadcast: UnsafeRows
@@ -169,7 +158,6 @@ object IntervalJoin {
       idxRows(i) = proj(joined(rows(i), idx)).copy()
       i += 1
     }
-    lap("flatten")
     // RDD-backed, NOT a LocalRelation: LocalTableScanExec keeps its rows
     // as a plan-node field, and the whole plan serializes into every
     // task closure of the probe stage (observed 1.3 MiB/task at sf0.1).
@@ -182,7 +170,6 @@ object IntervalJoin {
     // packed block: one byte[] + offsets instead of 600k Externalizable
     // UnsafeRows (round 18 — broadcast serialize 0.33 s -> memcpy)
     val bcAll = sc.broadcast(graft.core.RowBlock(idxRows, schema2.length))
-    lap("broadcast")
     val slices = math.max(1, math.min(sc.defaultParallelism, rows.length / 10000))
     val rdd = sc.parallelize(0 until slices, slices).mapPartitions { it =>
       it.flatMap { s =>

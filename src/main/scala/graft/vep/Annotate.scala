@@ -403,12 +403,6 @@ object Annotate {
   private def variantTail(
       vcf: DataFrame, cache: DataFrame, entries: DataFrame,
       opts: VepOptions, withXrefs: Boolean = false): DataFrame = {
-    // eager cache-contract check (schema_contract.rs:10-56) — covers
-    // every annotate-family public entry ([[annotate]],
-    // [[annotateTyped]], [[annotateTypedFull]],
-    // [[annotateProviderFrame]]): fail at the API boundary with the
-    // reference's error shape, not deep inside the pipeline
-    SchemaContract.validateVariationCache(cache)
     val evStruct = struct(
       col("_ftrank").as("r"), col("transcript_id").as("t"),
       col("_entry").as("e"), col("_termstr").as("c"),
@@ -514,8 +508,28 @@ object Annotate {
       exons: DataFrame, sift: DataFrame, polyphen: DataFrame,
       regulatory: DataFrame, motifs: DataFrame,
       opts: VepOptions = VepOptions.Everything): DataFrame =
-    annotateFrom(vcf, cache, transcripts, exons, sift, polyphen,
-      regulatory, motifs, opts, withXrefs = false)
+    templated("annotate", opts, vcf, cache, transcripts, exons, sift, polyphen,
+        regulatory, motifs) {
+      annotateFrom(vcf, cache, transcripts, exons, sift, polyphen,
+        regulatory, motifs, opts, withXrefs = false)
+    }
+
+  /** Every public annotate-family entry ([[annotate]],
+    * [[annotateTyped]], [[annotateTypedFull]],
+    * [[annotateProviderFrame]]) builds through here. The eager
+    * cache-contract check (schema_contract.rs:10-56) runs on every
+    * call, failing at the API boundary with the reference's error
+    * shape. The plan itself is built once per (session, entry,
+    * options, SQL confs, context) and each later VCF is bound into it
+    * ([[graft.core.PlanTemplates]]) — the reference provider's
+    * load-once lifecycle (annotate_provider.rs), which streams variant
+    * batches through one loaded context. */
+  private def templated(entry: String, opts: VepOptions, vcf: DataFrame,
+      cache: DataFrame, context: DataFrame*)(build: => DataFrame): DataFrame = {
+    SchemaContract.validateVariationCache(cache)
+    graft.plans.Graft.enable(vcf.sparkSession)
+    graft.core.PlanTemplates.bind(s"Annotate.$entry($opts)", Seq(vcf), cache +: context)(build)
+  }
 
   /** [[annotate]] plus, when `withXrefs`, the 7 cache-only xref output
     * columns appended after `csq` — computed INSIDE the variant
@@ -526,10 +540,6 @@ object Annotate {
       exons: DataFrame, sift: DataFrame, polyphen: DataFrame,
       regulatory: DataFrame, motifs: DataFrame,
       opts: VepOptions, withXrefs: Boolean): DataFrame = {
-    // eager cache-contract check (schema_contract.rs:10-56): fail at
-    // the API boundary with the reference's error shape, before any
-    // plan is built
-    SchemaContract.validateVariationCache(cache)
     val entries = entriesDf(vcf, selectTranscripts(transcripts, opts), exons,
       sift, polyphen, regulatory, motifs, opts)
     variantTail(vcf, cache, entries, opts, withXrefs = withXrefs)
@@ -573,28 +583,29 @@ object Annotate {
       vcf: DataFrame, cache: DataFrame, transcripts: DataFrame,
       exons: DataFrame, sift: DataFrame, polyphen: DataFrame,
       regulatory: DataFrame, motifs: DataFrame,
-      opts: VepOptions = VepOptions.Everything): DataFrame = {
-    SchemaContract.validateVariationCache(cache)
-    val entries = entriesDf(vcf, selectTranscripts(transcripts, opts), exons,
-      sift, polyphen, regulatory, motifs, opts)
-    // `_evs` carries the (feature-type rank, feature id) sort order —
-    // the reference's CSQ permutation, shared with [[annotate]] so
-    // the Nth typed element matches the Nth CSQ entry; a variant with
-    // no entries has an empty `_evs`, so every array is born empty
-    variantTail(vcf, cache, entries, opts)
-      .select((col("id") +: col("variation_name") +:
-        afCsq.map { case (_, c) => col(c) }) ++ Seq(
-        col("max_af"), col("max_af_pops"),
-        col("most_severe_consequence"),
-        col("n_transcripts"),
-        expr("transform(_evs, x -> x.t)").as("transcript_ids"),
-        expr("transform(_evs, x -> x.c)").as("consequences"),
-        expr("transform(_evs, x -> x.hc)").as("hgvs_c"),
-        expr("transform(_evs, x -> x.hp)").as("hgvs_p"),
-        expr("transform(_evs, x -> x.s)").as("sift"),
-        expr("transform(_evs, x -> x.q)").as("polyphen"),
-        expr("transform(_evs, x -> x.im)").as("impact")): _*)
-  }
+      opts: VepOptions = VepOptions.Everything): DataFrame =
+    templated("annotateTyped", opts, vcf, cache, transcripts, exons, sift, polyphen,
+        regulatory, motifs) {
+      val entries = entriesDf(vcf, selectTranscripts(transcripts, opts), exons,
+        sift, polyphen, regulatory, motifs, opts)
+      // `_evs` carries the (feature-type rank, feature id) sort order —
+      // the reference's CSQ permutation, shared with [[annotate]] so
+      // the Nth typed element matches the Nth CSQ entry; a variant with
+      // no entries has an empty `_evs`, so every array is born empty
+      variantTail(vcf, cache, entries, opts)
+        .select((col("id") +: col("variation_name") +:
+          afCsq.map { case (_, c) => col(c) }) ++ Seq(
+          col("max_af"), col("max_af_pops"),
+          col("most_severe_consequence"),
+          col("n_transcripts"),
+          expr("transform(_evs, x -> x.t)").as("transcript_ids"),
+          expr("transform(_evs, x -> x.c)").as("consequences"),
+          expr("transform(_evs, x -> x.hc)").as("hgvs_c"),
+          expr("transform(_evs, x -> x.hp)").as("hgvs_p"),
+          expr("transform(_evs, x -> x.s)").as("sift"),
+          expr("transform(_evs, x -> x.q)").as("polyphen"),
+          expr("transform(_evs, x -> x.im)").as("impact")): _*)
+    }
 
   /** Transcript-level List columns of the reference's FULL typed
     * output frame, in its order (annotation_column_defs — the
@@ -681,8 +692,11 @@ object Annotate {
       exons: DataFrame, sift: DataFrame, polyphen: DataFrame,
       regulatory: DataFrame, motifs: DataFrame,
       opts: VepOptions = VepOptions.Everything): DataFrame =
-    typedFullFrom(vcf, cache, transcripts, exons, sift, polyphen,
-      regulatory, motifs, opts, provider = false)
+    templated("annotateTypedFull", opts, vcf, cache, transcripts, exons, sift, polyphen,
+        regulatory, motifs) {
+      typedFullFrom(vcf, cache, transcripts, exons, sift, polyphen,
+        regulatory, motifs, opts, provider = false)
+    }
 
   /** The reference AnnotateProvider's PRIMARY output shape
     * (annotate_provider.rs:2270-2296): ALL input VCF columns pass
@@ -697,15 +711,17 @@ object Annotate {
       exons: DataFrame, sift: DataFrame, polyphen: DataFrame,
       regulatory: DataFrame, motifs: DataFrame,
       opts: VepOptions = VepOptions.Everything): DataFrame =
-    typedFullFrom(vcf, cache, transcripts, exons, sift, polyphen,
-      regulatory, motifs, opts, provider = true)
+    templated("annotateProviderFrame", opts, vcf, cache, transcripts, exons, sift, polyphen,
+        regulatory, motifs) {
+      typedFullFrom(vcf, cache, transcripts, exons, sift, polyphen,
+        regulatory, motifs, opts, provider = true)
+    }
 
   private def typedFullFrom(
       vcf: DataFrame, cache: DataFrame, transcripts: DataFrame,
       exons: DataFrame, sift: DataFrame, polyphen: DataFrame,
       regulatory: DataFrame, motifs: DataFrame,
       opts: VepOptions, provider: Boolean): DataFrame = {
-    SchemaContract.validateVariationCache(cache)
     // xref fold (round 19): with check_existing on (the default), the
     // 7 cache-only xref columns come out of [[annotateFrom]]'s variant
     // union-aggregate directly — one cache lookup pass for both the
@@ -1184,41 +1200,20 @@ object Annotate {
     * per session and streams batches through
     * (annotate_provider.rs load-once lifecycle); re-collecting the
     * same dim subtree on every annotate call paid its Spark jobs and
-    * driver copies per call. Keyed per SESSION (two sessions can never
-    * share an entry); a stopped session's dims are evicted EXPLICITLY
-    * on the next access — weak keys cannot reclaim them because each
-    * cached localized DataFrame strongly references its session, so
-    * the value map would pin the weak key forever (round-14 ADVICE) —
-    * and, within a session, by the dim's
-    * canonicalized plan PLUS every leaf's physical identity. The leaf
-    * identity is load-bearing: a V1 parquet LogicalRelation
-    * canonicalizes WITHOUT its location — two different dirs with
-    * one schema both render `Relation [none#0,…] parquet` — so the
-    * canonical string alone would hand a caller the OTHER dir's
-    * collected rows. Bounded LRU per session so pathological callers
-    * cannot pin unbounded driver memory. */
-  private val dimCache =
-    new java.util.HashMap[org.apache.spark.sql.SparkSession,
-      java.util.LinkedHashMap[String, DataFrame]]()
+    * driver copies per call. Session scoping, stopped-session eviction
+    * and the 64-entry LRU come from [[graft.core.SessionCache]]; within
+    * a session the key is the dim's canonicalized plan PLUS every
+    * leaf's physical identity. The leaf identity is load-bearing: a V1
+    * parquet LogicalRelation canonicalizes WITHOUT its location — two
+    * different dirs with one schema both render
+    * `Relation [none#0,…] parquet` — so the canonical string alone
+    * would hand a caller the OTHER dir's collected rows. */
+  private val dimCache = new graft.core.SessionCache[String, DataFrame](64)
 
-  /** Drop a session's localized dims (idempotent; stopped sessions are
-    * also swept implicitly on the next access from any session). */
+  /** Drop a session's localized dims — and with them every other
+    * session-scoped entry, plan templates included (idempotent). */
   private[graft] def invalidateDims(s: org.apache.spark.sql.SparkSession): Unit =
-    dimCache.synchronized { dimCache.remove(s) }
-
-  private def sessionCache(s: org.apache.spark.sql.SparkSession) =
-    dimCache.synchronized {
-      dimCache.entrySet().removeIf(e => e.getKey.sparkContext.isStopped)
-      var m = dimCache.get(s)
-      if (m == null) {
-        m = new java.util.LinkedHashMap[String, DataFrame](16, 0.75f, true) {
-          override def removeEldestEntry(e: java.util.Map.Entry[String, DataFrame]) =
-            size() > 64
-        }
-        dimCache.put(s, m)
-      }
-      m
-    }
+    graft.core.SessionCache.invalidate(s)
 
   /** A dim plan is cacheable only when every leaf is a file-backed
     * relation: a LocalRelation/LogicalRDD leaf neither canonicalizes
@@ -1261,12 +1256,11 @@ object Annotate {
     else {
       val analyzed = df.queryExecution.analyzed
       val key =
-        leafIdentities(analyzed) + "\u001F" + analyzed.canonicalized.toString
-      val cache = sessionCache(df.sparkSession)
-      cache.synchronized(Option(cache.get(key))).getOrElse {
+        leafIdentities(analyzed) + "\u001F" + graft.core.PlanTemplates.canonicalString(analyzed)
+      dimCache.get(df.sparkSession, key).getOrElse {
         val local = df.sparkSession.createDataFrame(
           java.util.Arrays.asList(df.collect(): _*), df.schema)
-        cache.synchronized(cache.put(key, local))
+        dimCache.put(df.sparkSession, key, local)
         local
       }
     }

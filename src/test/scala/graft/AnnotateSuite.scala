@@ -618,4 +618,62 @@ class AnnotateSuite extends SparkSpec {
     assert(regEntries.head.split("\\|", -1)(5) == "RegulatoryFeature")
     assert(regEntries.head.split("\\|", -1)(6) == "ENSR_DUP")
   }
+
+  test("xrefs: least allele-matched tuple wins; ';'/',' lists split, empty renders NULL") {
+    // variant 1 matches TWO cache rows on its allele (rs1, rs2) plus a
+    // same-site row on another allele (rs0, A/T); variant 2 matches one
+    // row whose xref strings are all empty
+    val vcf = Seq(
+      ("chr1", 1205L, 1205L, 1L, "A", "C"),
+      ("chr1", 1305L, 1305L, 2L, "A", "G"),
+    ).toDF("chrom", "start", "end", "id", "ref", "alt")
+    val cache = Seq(
+      ("1", 1205L, "rs2", "A/C", "C:benign", "low", "C", 0.4, "RCV2", "COSV2", "rs2"),
+      ("1", 1205L, "rs1", "A/C", "C:pathogenic;C:likely_pathogenic", "", "C", 0.2,
+        "RCV1, RCV3", "", "rs1"),
+      ("1", 1205L, "rs0", "A/T", "T:benign", "high", "T", 0.1, "RCV0", "COSV0", "rs0"),
+      ("1", 1305L, "rs5", "A/G", "", "", "", Double.NaN, "", "", ""),
+    ).toDF("chrom", "start", "variation_name", "allele_string", "clin_sig_allele",
+      "clinical_impact", "minor_allele", "minor_allele_freq", "clinvar_id",
+      "cosmic_id", "dbsnp_id")
+      .selectExpr(Seq("chrom", "start", "start AS `end`", "variation_name", "allele_string") ++
+        Annotate.afCsq.map(c => s"CAST(NULL AS DOUBLE) AS ${c._2}") ++
+        Seq("'0' AS somatic", "'0' AS pheno", "CAST(NULL AS STRING) AS pubmed",
+          "CAST(NULL AS STRING) AS clin_sig", "clin_sig_allele", "clinical_impact",
+          "minor_allele", "nanvl(minor_allele_freq, NULL) AS minor_allele_freq",
+          "clinvar_id", "cosmic_id", "dbsnp_id"): _*)
+    val tx = Seq(("chr1", 1000L, 1999L, "T1", 1, "protein_coding", 1100L, 1900L))
+      .toDF("chrom", "start", "end", "transcript_id", "strand", "biotype",
+        "cds_start", "cds_end")
+      .selectExpr("*", "'G1' AS gene_id", "'SYM1' AS symbol", "'YES' AS canonical",
+        "'' AS flags", "'' AS mane_select", "'' AS mane_plus_clinical",
+        "1 AS tsl", "'' AS appris", "'' AS ccds", "'' AS swissprot",
+        "'' AS trembl", "'' AS uniparc", "'' AS uniprot_isoform",
+        "'0' AS gene_pheno", "'' AS domains", "'' AS mirna")
+    val ex = Seq(("T1", 1000L, 1999L)).toDF("transcript_id", "start", "end")
+    val sift = Seq.empty[(String, Long, String, Double)]
+      .toDF("transcript_id", "protein_pos", "aa", "sift_score")
+    val pp = Seq.empty[(String, Long, String, Double)]
+      .toDF("transcript_id", "protein_pos", "aa", "polyphen_score")
+    val reg = Seq.empty[(String, Long, Long, String, String)]
+      .toDF("chrom", "start", "end", "feature_id", "feature_type")
+    val mot = Seq.empty[(String, Long, Long, String, String, Double)]
+      .toDF("chrom", "start", "end", "motif_id", "tf_name", "score_change")
+    val xrefCols = Seq("clin_sig_allele", "clinical_impact", "minor_allele",
+      "minor_allele_freq", "clinvar_ids", "cosmic_ids", "dbsnp_ids")
+    def byId(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Any]] =
+      df.select(("id" +: xrefCols).map(org.apache.spark.sql.functions.col): _*)
+        .collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
+    val folded = byId(Annotate.annotateTypedFull(vcf, cache, tx, ex, sift, pp, reg, mot))
+    // (variation_name, clin_sig_allele, ...) is compared as a tuple:
+    // rs1 < rs2 decides, though rs1's clin_sig_allele sorts later; the
+    // A/T row (rs0) never matches the C allele. ';' splits
+    // clin_sig_allele, ',' the id lists (elements trimmed); empty
+    // strings render NULL, not empty lists
+    assert(folded(1L) == Seq(Seq("C:pathogenic", "C:likely_pathogenic"), null, "C", 0.2,
+      Seq("RCV1", "RCV3"), null, Seq("rs1")))
+    assert(folded(2L) == Seq(null, null, null, null, null, null, null))
+    // the standalone lookup renders the same columns identically
+    assert(byId(Annotate.existingXrefs(vcf, cache)) == folded)
+  }
 }

@@ -25,15 +25,21 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+  private var live: SparkSession = _
+
+  /** The shared session, rebuilt when a spec stopped the previous one
+    * (the stopped-session eviction specs must stop a real context). */
+  def session: SparkSession = synchronized {
+    if (live == null || live.sparkContext.isStopped) {
+      live = SparkSession.builder()
+        .master("local[4]")
+        .appName("graft-test")
+        .config("spark.sql.shuffle.partitions", "4")
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+      live.sparkContext.setLogLevel("WARN")
+    }
+    live
   }
 }

@@ -24,16 +24,11 @@ import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ReusedExc
   * shuffle-free scan pipeline, whose partition count is its scans'
   * file splits, is measured and widened. */
 object Parallelism {
-  def ensure(df: DataFrame): DataFrame =
-    if (widens(df)) df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    else df
-
-  /** `ensure`'s decision: true when `df` is a shuffle-free scan
-    * pipeline with fewer partitions than the default parallelism. */
-  def widens(df: DataFrame): Boolean = {
+  def ensure(df: DataFrame): DataFrame = {
     val plan = df.queryExecution.executedPlan
-    !(shuffled(plan) || preparesJob(plan) ||
-      df.queryExecution.toRdd.getNumPartitions >= df.sparkSession.sparkContext.defaultParallelism)
+    val target = df.sparkSession.sparkContext.defaultParallelism
+    if (shuffled(plan) || preparesJob(plan) || df.rdd.getNumPartitions >= target) df
+    else df.repartition(target)
   }
 
   /** True when the plan's output went through a shuffle — before or

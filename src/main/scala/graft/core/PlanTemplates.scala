@@ -26,13 +26,14 @@ import org.apache.spark.sql.sources.BaseRelation
   *     `spark.graft.broadcast_build_limit` all shape construction);
   *   - each input's canonicalized analyzed plan, untruncated, and
   *     which leaves share one relation;
+  *   - each input's schema — names, types, nullability and field
+  *     metadata, all of which canonicalization erases but construction
+  *     reads (output column names, the coordinate-system tag);
   *   - each file relation's format, index type, options (without the
   *     path), data and partition schema and bucketing;
   *   - the CONTEXT inputs' root paths: construction may embed their
-  *     collected rows, so another directory is another template;
-  *   - for the VARIANT inputs only their shape, plus whether
-  *     [[Parallelism.ensure]] widens them — the one construction-time
-  *     decision read off their files.
+  *     collected rows, so another directory is another template; the
+  *     VARIANT inputs contribute only their shape.
   * Inputs with any leaf other than a file relation (in-memory frames,
   * RDDs, V2 scans) build as before and are never stored; so is a
   * built plan holding a leaf other than an input file relation or a
@@ -67,11 +68,11 @@ object PlanTemplates {
         tag,
         spark.conf.getAll.toSeq.sorted.mkString(","),
         inputs.map(df => canonicalString(df.queryExecution.analyzed)).mkString("\n"),
+        inputs.map(_.schema.json).mkString("\n"),
         rels.map(r => rels.indexWhere(_ eq r)).mkString(","),
         rels.map(shape).mkString("\n"),
         files.drop(variants.size).flatMap(_.get)
-          .map(_.location.rootPaths.mkString(",")).mkString(";"),
-        variants.map(Parallelism.widens).mkString(",")
+          .map(_.location.rootPaths.mkString(",")).mkString(";")
       ).mkString("\u001E")
       templates.get(spark, key) match {
         case Some(t) =>

@@ -5,15 +5,15 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.PlanTemplates
+import graft.core.{Coord, PlanTemplates}
 import graft.vep.{Annotate, VepOptions}
 
 /** Annotate plan templates ([[PlanTemplates]]) on file-backed inputs:
   * the first call against a context builds the plan, later calls bind
   * their own VCF into it. A hit must give exactly the rows of a
   * template-free build; anything construction reads — the VCF's
-  * derivation, the context's directory, the SQL confs, the options —
-  * must miss instead. */
+  * derivation, column names and field metadata, the context's
+  * directory, the SQL confs, the options — must miss instead. */
 class PlanTemplateSuite extends SparkSpec {
 
   private val root = Files.createTempDirectory("graft_tpl").toString
@@ -96,6 +96,31 @@ class PlanTemplateSuite extends SparkSpec {
     val (rowsW, hitsW) = run(widened())
     assert(hitsW == 0)
     assert(rowsW == fresh(widened()))
+  }
+
+  test("a renamed VCF column or another coordinate tag builds fresh") {
+    // both differ from the stored template only in what canonicalization
+    // erases: a column name and a field's metadata
+    def provider(v: DataFrame): DataFrame =
+      Annotate.annotateProviderFrame(v, Tables.vepCache(spark, ctx),
+        Tables.transcripts(spark, ctx), Tables.exons(spark, ctx), Tables.siftContext(spark, ctx),
+        Tables.polyphenContext(spark, ctx), Tables.regulatory(spark, ctx), Tables.motifs(spark, ctx))
+    SparkEntry.invalidate(spark)
+    provider(vcf(vcfA).withColumn("qual", lit(30.0)))
+    val renamed = () => provider(vcf(vcfB).withColumn("score", lit(30.0)))
+    val (rowsR, hitsR) = run(renamed())
+    assert(hitsR == 0)
+    assert(renamed().columns.contains("score") && !renamed().columns.contains("qual"))
+    assert(rowsR == fresh(renamed()))
+
+    val tagged = (zeroBased: Boolean) => annotate(Coord.mark(vcf(vcfB), zeroBased), ctx)
+    val oneBased = fresh(tagged(false))
+    annotate(Coord.mark(vcf(vcfA), zeroBased = false), ctx)
+    val (rowsZ, hitsZ) = run(tagged(true))
+    assert(hitsZ == 0)
+    // precondition: the tag moves the cache lookup, so a shared template would show
+    assert(rowsZ != oneBased)
+    assert(rowsZ == fresh(tagged(true)))
   }
 
   test("a same-schema context at another path never shares a template") {

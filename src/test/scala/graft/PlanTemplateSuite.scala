@@ -96,16 +96,13 @@ class PlanTemplateSuite extends SparkSpec {
     val (rowsW, hitsW) = run(widened())
     assert(hitsW == 0)
     assert(rowsW == fresh(widened()))
-  }
 
-  test("a renamed VCF column or another coordinate tag builds fresh") {
-    // both differ from the stored template only in what canonicalization
-    // erases: a column name and a field's metadata
+    // a rename and a coordinate tag differ from the stored template only
+    // in what canonicalization erases: a column name, a field's metadata
     def provider(v: DataFrame): DataFrame =
       Annotate.annotateProviderFrame(v, Tables.vepCache(spark, ctx),
         Tables.transcripts(spark, ctx), Tables.exons(spark, ctx), Tables.siftContext(spark, ctx),
         Tables.polyphenContext(spark, ctx), Tables.regulatory(spark, ctx), Tables.motifs(spark, ctx))
-    SparkEntry.invalidate(spark)
     provider(vcf(vcfA).withColumn("qual", lit(30.0)))
     val renamed = () => provider(vcf(vcfB).withColumn("score", lit(30.0)))
     val (rowsR, hitsR) = run(renamed())

@@ -16,13 +16,12 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   * Cases (all run from parquet like the gates, never cached):
   *
   *  - `simhash16_hot`: the sf corpus plus `hotN` VERBATIM-identical
-  *    documents — every hot doc lands in the SAME four (band, nibble)
-  *    groups of [[graft.dedup.Dedup.simhashPairs]]' banded self-join,
-  *    the worst key the 16-bit signature admits. The build side of
-  *    that partition holds only the banded ROWS (4 per doc), never the
-  *    ~hotN²/2 expanded pairs — peak task memory is the evidence; the
-  *    quadratic expansion streams through the codegen'd probe into the
-  *    spillable distinct.
+  *    documents — every hot doc shares ONE 16-bit signature, so
+  *    without a guard all of them land in the same four (band, nibble)
+  *    groups of [[graft.dedup.Dedup.simhashPairs]]' banded self-join
+  *    and expand ~hotN²/2 pairs into the distinct. The identical-class
+  *    star guard (cap 1024 < hotN) sends only the class representative
+  *    into the join — peak task memory is the evidence.
   *  - `simhash64_star` / `simhash64_clique`: the same hot class
   *    through [[graft.dedup.Dedup.simhash64Pairs]] with the default
   *    `identicalCliqueCap` (star guard ON: pair list LINEAR in the
@@ -92,7 +91,13 @@ object SkewProbe {
       val d = df
       d.write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(220) // listener + task events drain
+      // task-end events and the executed plan arrive on the async
+      // listener bus: wait until it is empty (waitUntilEmpty is
+      // private[spark] in source, public in bytecode)
+      val sc = spark.sparkContext
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
+        .invoke(bus, java.lang.Long.valueOf(20000L))
       // the join's isSkewJoin marker renders as "(skew=true)"; a bare
       // "skew" substring also matches this probe's own fixture paths
       val skew = lastPlan.toLowerCase.contains("skew=true")

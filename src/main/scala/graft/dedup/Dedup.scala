@@ -57,70 +57,119 @@ object Dedup {
         i => concat_ws(" ", slice(words, i, lit(k)))))
       .otherwise(array())
 
-  /** Word k-shingles of the normalized text, as an array column.
-    * Documents with fewer than k words yield an empty array.
-    * Convenience form; hot paths go through [[shinglesOfWords]] with
-    * a bound token column. */
-  def shingles(text: Column, k: Int): Column =
-    shinglesOfWords(split(TextFunctions.normalized(text), " "), k)
-
-  /** Exploded (id, shingle) rows — the word array is bound to its own
-    * projection so the shingle lambda slices a materialized array;
-    * band fan-out happens on the exploded rows (an inner-transform
-    * formulation re-evaluates the whole normalize+split+slice
-    * pipeline per band — 8x the work). */
-  private def explodedShingles(df: DataFrame, textCol: String, idCol: String, k: Int): DataFrame =
-    graft.core.Parallelism.ensure(df)
-      .select(col(idCol).as("id"),
-        split(TextFunctions.normalized(col(textCol)), " ").as("_w"))
-      .select(col("id"), explode(shinglesOfWords(col("_w"), k)).as("sh"))
-
-  /** Per-(doc, band) minhash rows: ONE md5 per shingle occurrence
-    * yields a 28-bit base hash; each band applies an affine universal
-    * hash `(2b+1)*H + 7919b + 13 mod 1e9+7` (integer arithmetic both
-    * engines reproduce exactly; an md5-per-band variant costs 8x the
-    * hashing). */
   /** Both md5-prefix reductions of each shingle occurrence in one
     * projection — `hv` (28-bit, minhash base) and `sh60` (60-bit,
     * Jaccard set key) come from ONE md5 per occurrence, so a pipeline
     * needing both ([[removeNearDuplicates]]) scans, normalizes,
-    * shingles and hashes the corpus once. */
+    * shingles and hashes the corpus once. The word array is bound to
+    * its own projection so the shingle lambda slices a materialized
+    * array. */
   private def hashedShingles(
       df: DataFrame, textCol: String, idCol: String, k: Int): DataFrame =
-    explodedShingles(df, textCol, idCol, k)
+    graft.core.Parallelism.ensure(df)
+      .select(col(idCol).as("id"),
+        split(TextFunctions.normalized(col(textCol)), " ").as("_w"))
+      .select(col("id"), explode(shinglesOfWords(col("_w"), k)).as("sh"))
       .withColumn("_h", md5(col("sh").cast("binary")))
       .select(col("id"),
         conv(substring(col("_h"), 1, 7), 16, 10).cast("long").as("hv"),
         conv(substring(col("_h"), 1, 15), 16, 10).cast("long").as("sh60"))
 
-  private def minhashOfHashes(hs: DataFrame, bands: Int): DataFrame =
-    hs.select(col("id"), explode(sequence(lit(0), lit(bands - 1))).as("band"), col("hv"))
-      .groupBy(col("id"), col("band"))
-      .agg(min(((col("band") * 2 + 1) * col("hv") + col("band") * 7919 + 13) % 1000000007L).as("h"))
+  /** Minhash candidate pairs of hashed shingles: the per-document
+    * signature `(id, sig)` holds one minimum per band as aggregate
+    * columns of ONE groupBy(id), as [[simhashOf]] holds one vote sum
+    * per bit, and band b's minimum is that band's key in
+    * [[bandedPairs]]. The 28-bit `hv` of each shingle occurrence (one
+    * md5) is the base hash; band b applies the affine universal hash
+    * `(2b+1)*H + 7919b + 13 mod 1e9+7` (integer arithmetic both engines
+    * reproduce exactly; an md5-per-band variant costs 8x the hashing). */
+  private def minhashPairs(hs: DataFrame, bands: Int): DataFrame =
+    bandedPairs(
+      hs.groupBy(col("id")).agg(array((0 until bands).map(b =>
+        min((col("hv") * (2 * b + 1) + (7919 * b + 13)) % 1000000007L)): _*).as("sig")),
+      (0 until bands).map(col("sig")(_)))
 
-  private[dedup] def minhashRows(df: DataFrame, textCol: String, idCol: String,
-      k: Int, bands: Int): DataFrame =
-    minhashOfHashes(hashedShingles(df, textCol, idCol, k), bands)
-
-  private def candidatePairsOf(sig: DataFrame): DataFrame = {
-    // SHUFFLE_HASH (round 18): the bucket self-join has no downstream
-    // sort-order consumer; sort-merge paid two sorts of the signature
-    // rows per call
-    val a = sig.as("a"); val b = sig.hint("shuffle_hash").as("b")
-    a.join(b, col("a.band") === col("b.band") && col("a.h") === col("b.h") &&
-      col("a.id") < col("b.id"))
-      .select(col("a.id").as("id1"), col("b.id").as("id2"))
-      .distinct()
+  /** The banded self-join behind every candidate generator here (the
+    * banded tables of Manku, Jain & Das Sarma, WWW 2007): each
+    * `(id, sig)` row fans out to one `(band, key)` row per `bandKeys`
+    * expression over `sig`, and documents sharing any (band, key)
+    * become candidate pairs — never all-pairs. Output: distinct
+    * (id1, id2), id1 < id2.
+    *
+    * `maxHamming` selects SimHash mode, for a BIGINT `sig`: candidates
+    * are verified by exact Hamming distance (output gains `hamming`),
+    * and the identical-signature star guard runs. A signature shared
+    * VERBATIM by a huge class — boilerplate pages, template spam —
+    * puts all its members in the same (band, key) groups and would
+    * expand |class|²/2 pairs on single keys. Classes larger than
+    * `identicalCliqueCap` therefore emit a linear STAR — every member
+    * pairs with the class minimum id at Hamming 0 — and only that
+    * representative enters the banded join (cross-signature candidates
+    * connect through it). An identical signature passes any Hamming
+    * verification, so connected components, and thus
+    * [[duplicateClusters]] output, equal the clique formulation's;
+    * classes at or below the cap keep emitting full cliques. MinHash
+    * mode (`None`) runs no guard: equal minhash vectors do not imply
+    * equal shingle sets, so a star could change Jaccard-verified
+    * components. */
+  private def bandedPairs(sig: DataFrame, bandKeys: Seq[Column],
+      maxHamming: Option[Int] = None, identicalCliqueCap: Int = 1024): DataFrame = {
+    val (kept, star) = maxHamming match {
+      case None => (sig, None)
+      case Some(_) =>
+        // class size + representative (min id) in one window over the
+        // signature — shuffles on sig, never a key with more rows than
+        // the class itself
+        val sw = Window.partitionBy(col("sig"))
+        val g = sig.withColumn("_rep", min(col("id")).over(sw))
+          .withColumn("_n", count(lit(1)).over(sw))
+        (g.where(col("_n") <= identicalCliqueCap || col("id") === col("_rep"))
+            .select(col("id"), col("sig")),
+          Some(g.where(col("_n") > identicalCliqueCap && col("id") =!= col("_rep"))
+            .select(col("_rep").as("id1"), col("id").as("id2"), lit(0).as("hamming"))))
+    }
+    val banded = kept.select(Seq(col("id"),
+        posexplode(array(bandKeys: _*)).as(Seq("band", "key"))) ++
+      maxHamming.map(_ => col("sig")): _*)
+    def side(d: DataFrame, i: Int) = d.select(d.columns.toSeq.map(c => col(c).as(s"$c$i")): _*)
+    // Both sides read the SAME (band, key) exchange (reused), so the
+    // banded rows shuffle once. SimHash keys are coarse (16 or 65,536
+    // values per band): the banded input is tiny in bytes, so AQE would
+    // coalesce the reader to one partition while the join EXPANDS
+    // ~|group|²/2 candidate pairs within each group, serial on that
+    // task — so SimHash pins the session's full width. Minhash keys
+    // (~1e9 values per band) form tiny groups: AQE sizes that exchange,
+    // as a pinned width costs a near-empty task per partition
+    // (d_lsh_pairs +24% at 32 partitions). SHUFFLE_HASH: no sort order
+    // is needed downstream; sort-merge paid two sorts of the banded
+    // rows per call.
+    val w = sig.sparkSession.sparkContext.defaultParallelism
+    val byKey = maxHamming.fold(banded.repartition(col("band"), col("key")))(_ =>
+      banded.repartition(w, col("band"), col("key")))
+    val cand = side(byKey, 1).join(side(byKey.hint("shuffle_hash"), 2),
+      col("band1") === col("band2") && col("key1") === col("key2") &&
+        col("id1") < col("id2"))
+    val pairs = maxHamming.fold(cand.select(col("id1"), col("id2"))) { h =>
+      cand.select(col("id1"), col("id2"),
+          expr("CAST(bit_count(sig1 ^ sig2) AS INT)").as("hamming"))
+        .where(col("hamming") <= h)
+    }
+      // the distinct shuffles BEFORE it aggregates: a map-side partial
+      // distinct held a task's whole candidate expansion in one hash map
+      // (116 MB peak task memory on the 16-bit SkewProbe corpus; 52 MB
+      // with this exchange). No explicit width here: AQE coalesces the
+      // pairs to a few partitions when they are few, and consumers that
+      // keep the partitioning (duplicateClusters) pay per task.
+      .repartition(col("id1"), col("id2")).distinct()
+    star.fold(pairs)(pairs.unionByName(_))
   }
 
   /** LSH candidate pairs: documents sharing any minhash band value
-    * (banding with r=1 rows/band). Output distinct (id1 < id2).
-    * The self-join key is (band, minhash) — tiny vs the corpus; no
-    * all-pairs comparison ever materializes. */
+    * (banding with r=1 rows/band). Output distinct (id1 < id2). */
   def lshCandidatePairs(
       df: DataFrame, textCol: String, idCol: String,
       k: Int = 3, bands: Int = 8): DataFrame =
-    candidatePairsOf(minhashRows(df, textCol, idCol, k, bands))
+    minhashPairs(hashedShingles(df, textCol, idCol, k), bands)
 
   /** n-gram Jaccard similarity for candidate pairs:
     * |A∩B| / |A∪B| over distinct k-shingles. Pure joins + aggregates —
@@ -151,22 +200,15 @@ object Dedup {
           .as("jaccard"))
   }
 
-  /** End-to-end near-duplicate REMOVAL — the filter a training
-    * pipeline actually runs, composed from the verified parts:
-    * [[lshCandidatePairs]] (banded minhash candidates, never
-    * all-pairs) → [[ngramJaccard]] ≥ `threshold` (exact shingle-set
-    * verification of candidates only) → [[duplicateClusters]]
-    * (connected components, so transitive near-dup chains collapse to
-    * ONE survivor, not one per pairwise edge) → keep each cluster's
-    * minimum id plus every unclustered document. The drop set is
-    * id-only — document text rides no shuffle beyond the shingle
-    * scans — and the final keep is one left-anti join AQE broadcasts
-    * while the drop set is small. */
-  def removeNearDuplicates(
-      df: DataFrame, textCol: String, idCol: String,
-      k: Int = 3, bands: Int = 8, threshold: Double = 0.7): DataFrame = {
-    require(threshold >= 0.0 && threshold <= 1.0,
-      s"jaccard threshold must be in [0, 1], got $threshold")
+  /** The removal tail both near-duplicate filters share: connected
+    * components of `pairs` ([[duplicateClusters]], so transitive
+    * near-dup chains collapse to ONE survivor, not one per pairwise
+    * edge), then keep each cluster's minimum id plus every unclustered
+    * document. The drop set is id-only and the keep is one left-anti
+    * join AQE broadcasts while the drop set is small. `pairs` is by
+    * name: the id check runs before any of it is built. */
+  private def keepClusterMinima(df: DataFrame, idCol: String, op: String)(
+      pairs: => DataFrame): DataFrame = {
     // Loud failure instead of a silent no-op (ADVICE r17): clustering
     // casts ids to long, and a non-numeric id (string doc keys) casts
     // to NULL — the drop set empties and the anti join keeps every
@@ -174,145 +216,69 @@ object Dedup {
     // long (xxhash64 / monotonically_increasing_id) before calling.
     val idType = df.schema(idCol).dataType
     require(idType.isInstanceOf[org.apache.spark.sql.types.NumericType],
-      s"removeNearDuplicates requires a numeric id column (the cluster " +
-      s"ids it drops by are longs); got $idCol: ${idType.simpleString} — " +
-      "derive a surrogate long id (e.g. xxhash64) first")
-    // ONE corpus scan: the hashed-shingle frame (both md5 prefixes
-    // from one md5 per occurrence) is RDD-materialized once, so the
-    // minhash and Jaccard branches read cached partitions instead of
-    // re-scanning + re-normalizing + re-hashing the corpus. An
-    // exchange barrier here coalesces to a handful of tasks at gate
-    // scale and makes every consumer pay a shuffle re-read; the RDD
-    // cache keeps the scan's width and block-local reads.
-    val hs = graft.core.Materialize(hashedShingles(df, textCol, idCol, k))
-    val cand = candidatePairsOf(minhashOfHashes(hs, bands))
-    val dup = jaccardOfHashes(hs, cand)
-      .where(col("jaccard") >= threshold)
-      .select(col("id1"), col("id2"))
-    val drop = duplicateClusters(dup)
-      .where(col("id") =!= col("cluster_id"))
-      .select(col("id").as("_dropid"))
-    df.join(drop, col(idCol).cast("long") === col("_dropid"), "left_anti")
-  }
-
-  /** End-to-end SimHash near-duplicate removal —
-    * [[removeNearDuplicates]]' sibling on the 64-bit signature path:
-    * [[simhash64Pairs]] banded Hamming-neighbor edges →
-    * [[duplicateClusters]] connected components → keep each cluster's
-    * minimum id plus every unclustered document. Star compression
-    * above `identicalCliqueCap` changes only the explicit pair list,
-    * never the components, so the survivor set is cap-invariant. */
-  def removeNearDuplicatesSimhash(
-      df: DataFrame, textCol: String, idCol: String,
-      maxHamming: Int = 3, identicalCliqueCap: Int = 1024): DataFrame = {
-    val idType = df.schema(idCol).dataType
-    require(idType.isInstanceOf[org.apache.spark.sql.types.NumericType],
-      s"removeNearDuplicatesSimhash requires a numeric id column; got " +
-      s"$idCol: ${idType.simpleString} — derive a surrogate long id first")
-    val pairs = simhash64Pairs(df, textCol, idCol, maxHamming, identicalCliqueCap)
-      .select(col("id1"), col("id2"))
+      s"$op requires a numeric id column (the cluster ids it drops by " +
+      s"are longs); got $idCol: ${idType.simpleString} — derive a " +
+      "surrogate long id (e.g. xxhash64) first")
     val drop = duplicateClusters(pairs)
       .where(col("id") =!= col("cluster_id"))
       .select(col("id").as("_dropid"))
     df.join(drop, col(idCol).cast("long") === col("_dropid"), "left_anti")
   }
 
-  /** 16-bit SimHash (oracle-checkable size; [[simhash64]] is the
-    * production variant): per distinct token, md5 hex digit j's low bit
-    * votes ±count for bit j; bit set iff the vote sum is positive. */
-  def simhash16(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    // Votes are occurrence-weighted, so the old distinct-(id, token)
-    // aggregate was unnecessary: summing ±1 per OCCURRENCE equals
-    // summing ±count per distinct token, bit for bit. Dropping it
-    // (round 17) removes a whole shuffle AND keeps the md5 + 16-way
-    // bit fan-out in the wide scan stage — AQE had coalesced the tiny
-    // (id, token) shuffle to one task and serialized that CPU onto it
-    // (an 0.86 s single-task stage at sf0.1). The only shuffles left
-    // carry (id, bit) partial votes: ≤ 16 rows per id after map-side
-    // combine. (md5 stays a per-row projection — Catalyst does not
-    // inline it into the transform lambda across the Generate.)
-    val toks = graft.core.Parallelism.ensure(df).select(col(idCol).as("id"),
-        explode(split(TextFunctions.normalized(col(textCol)), " ")).as("tok"))
-      .where(col("tok") =!= "")
-      .withColumn("h", md5(col("tok").cast("binary")))
-    val bits = toks.select(col("id"), posexplode(
-      transform(sequence(lit(0), lit(15)),
-        j => conv(substring(col("h"), 1, 16).substr(j + 1, lit(1)), 16, 10).cast("int") % 2))
-      .as(Seq("bit", "v")))
-    bits
-      .groupBy(col("id"), col("bit"))
-      .agg(sum(when(col("v") === 1, 1L).otherwise(-1L)).as("vote"))
-      .groupBy(col("id"))
-      .agg(sum(when(col("vote") > 0, expr("shiftleft(CAST(1 AS BIGINT), bit)")).otherwise(0L)).as("simhash"))
-  }
-
-  /** SimHash near-duplicate pairs: banded Hamming-neighbor join over
-    * the 16-bit signatures. Each signature splits into 4 disjoint
-    * 4-bit chunks; documents sharing any (chunk index, chunk value)
-    * become candidates (pigeonhole: pairs within Hamming distance 3
-    * differ in at most 3 chunks, so at least one chunk matches —
-    * recall is exact for `maxHamming <= 3`). Exact Hamming distance
-    * filters candidates. The join key is (band, nibble) — tiny vs the
-    * corpus, never all-pairs. Output: (id1, id2, hamming), id1 < id2. */
-  def simhashPairs(
+  /** End-to-end near-duplicate REMOVAL — the filter a training
+    * pipeline actually runs, composed from the verified parts:
+    * [[lshCandidatePairs]] (banded minhash candidates, never
+    * all-pairs) → [[ngramJaccard]] ≥ `threshold` (exact shingle-set
+    * verification of candidates only) → [[duplicateClusters]] → keep
+    * each cluster's minimum id plus every unclustered document.
+    * Document text rides no shuffle beyond the shingle scans. */
+  def removeNearDuplicates(
       df: DataFrame, textCol: String, idCol: String,
-      maxHamming: Int = 3): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 3,
-      s"4 bands of 4 bits guarantee full recall only for maxHamming <= 3, got $maxHamming")
-    val sig = simhash16(df, textCol, idCol)
-    val banded = sig.select(col("id"), col("simhash"),
-        explode(sequence(lit(0), lit(3))).as("band"))
-      .withColumn("ck", expr("(simhash >> (band * 4)) & 15"))
-    // explicit (AQE-respected) width for the candidate join: its INPUT
-    // is tiny (4 rows per doc), so AQE coalesces the reader to one
-    // partition — but the join EXPANDS quadratically within each
-    // (band, nibble) group (~|group|^2/2 candidate pairs), and the
-    // whole expansion+verify ran serial on that one task. Partitioning
-    // by the join key keeps the expansion parallel; the 64-key space
-    // (4 bands x 16 nibbles) bounds the spread — an inherent skew
-    // residual of coarse signatures, same class as contig keys.
-    val w = df.sparkSession.sparkContext.defaultParallelism
-    val a = banded.repartition(w, col("band"), col("ck"))
-      .select(col("id").as("id1"), col("simhash").as("_s1"),
-        col("band"), col("ck"))
-    // SHUFFLE_HASH (round 18): the banded self-join needs no sort
-    // order downstream — sort-merge paid two sorts of the banded rows
-    // per pair query; per-partition hash tables are bounded by the
-    // band/chunk key space
-    val b = banded.hint("shuffle_hash")
-      .select(col("id").as("id2"), col("simhash").as("_s2"),
-        col("band").as("_band2"), col("ck").as("_ck2"))
-    a.join(b, col("band") === col("_band2") && col("ck") === col("_ck2") &&
-        col("id1") < col("id2"))
-      .select(col("id1"), col("id2"),
-        expr("CAST(bit_count(_s1 ^ _s2) AS INT)").as("hamming"))
-      .where(col("hamming") <= maxHamming)
-      .distinct()
+      k: Int = 3, bands: Int = 8, threshold: Double = 0.7): DataFrame = {
+    require(threshold >= 0.0 && threshold <= 1.0,
+      s"jaccard threshold must be in [0, 1], got $threshold")
+    keepClusterMinima(df, idCol, "removeNearDuplicates") {
+      // ONE corpus scan: the hashed-shingle frame (both md5 prefixes
+      // from one md5 per occurrence) is RDD-materialized once, so the
+      // minhash and Jaccard branches read cached partitions instead of
+      // re-scanning + re-normalizing + re-hashing the corpus. An
+      // exchange barrier here coalesces to a handful of tasks at gate
+      // scale and makes every consumer pay a shuffle re-read; the RDD
+      // cache keeps the scan's width and block-local reads.
+      val hs = graft.core.Materialize(hashedShingles(df, textCol, idCol, k))
+      jaccardOfHashes(hs, minhashPairs(hs, bands)).where(col("jaccard") >= threshold)
+    }
   }
 
-  /** 64-bit SimHash as a DataFrame column op (the production width,
-    * oracle-gated): per distinct token, md5 hex digit `j div 4`'s bit
-    * `j mod 4` votes ±count for signature bit j — all 64 bits of the
-    * first 16 hex digits. Bit 63 is the SIGN bit: it contributes
-    * Long.MinValue to the sum (both engines' 64-bit two's-complement
-    * word; DuckDB errors on `1 << 63`, so the oracle spells the same
-    * constant) — the per-id sum of distinct powers never leaves the
-    * signed range, so Spark's wrapping Long sum and DuckDB's
-    * HUGEINT-then-cast sum agree bit for bit. */
-  def simhash64Df(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    // Round 18 (VERDICT r17 #1): the round-17 per-occurrence rewrite
-    // kept the shuffle win but ran the 64-way bit fan-out per token
-    // OCCURRENCE — a 3× CPU regression on repetitive text at this
-    // width (the 16-bit family absorbs it; 64-bit does not). The
-    // votes depend only on the md5 prefix, so occurrences aggregate
-    // to (id, prefix) → count FIRST (8+16-byte keys, map-side
-    // combine), and the fan-out runs once per DISTINCT hash. It is
-    // also no longer a posexplode: the 16 hex digits decode once per
-    // distinct hash (16 convs, was 64 per occurrence) and all 64
-    // votes accumulate as aggregate columns of ONE groupBy(id) —
-    // no 64× row expansion, and one shuffle fewer than either prior
-    // formulation (occurrences → distinct-hash counts → per-id vote
-    // vector; the (id, bit) exchange is gone).
+  /** End-to-end SimHash near-duplicate removal —
+    * [[removeNearDuplicates]]' sibling on the 64-bit signature path:
+    * [[simhash64Pairs]] banded Hamming-neighbor edges →
+    * [[duplicateClusters]] → keep each cluster's minimum id plus every
+    * unclustered document. Star compression above `identicalCliqueCap`
+    * changes only the explicit pair list, never the components, so the
+    * survivor set is cap-invariant. */
+  def removeNearDuplicatesSimhash(
+      df: DataFrame, textCol: String, idCol: String,
+      maxHamming: Int = 3, identicalCliqueCap: Int = 1024): DataFrame =
+    keepClusterMinima(df, idCol, "removeNearDuplicatesSimhash")(
+      simhash64Pairs(df, textCol, idCol, maxHamming, identicalCliqueCap))
+
+  /** SimHash signature kernel `(id, simhash)`: per distinct token, md5
+    * hex digit `j div 4`'s bit `j mod 4` votes ±count for vote bit j
+    * (j in 0..63, the first 16 hex digits), and `bits(p)`'s vote sets
+    * signature bit p iff its sum is positive. Position 63 is the SIGN
+    * bit (`1L << 63` is Long.MinValue, the two's-complement word both
+    * engines use; DuckDB errors on `1 << 63`, so the oracle spells the
+    * constant). */
+  private def simhashOf(df: DataFrame, textCol: String, idCol: String,
+      bits: Seq[Int]): DataFrame = {
+    // Votes depend only on the md5 prefix, so occurrences aggregate to
+    // (id, prefix) → count FIRST (map-side combine) and the bit fan-out
+    // runs once per DISTINCT hash, not per occurrence (a 3× CPU cost on
+    // repetitive text at 64 bits). No posexplode: the 16 hex digits
+    // decode once per distinct hash and every vote is an aggregate
+    // column of ONE groupBy(id) — no per-bit row expansion and no
+    // (id, bit) exchange.
     val toks = graft.core.Parallelism.ensure(df).select(col(idCol).as("id"),
         explode(split(TextFunctions.normalized(col(textCol)), " ")).as("tok"))
       .where(col("tok") =!= "")
@@ -323,111 +289,69 @@ object Dedup {
     // count, digit decode, and vote aggregate all run in a single
     // full-width stage — an implicit (id, h) aggregate exchange here
     // gets AQE-coalesced to one task (~4 MB of distinct hashes at
-    // sf0.1) and serializes the decode CPU, the round-15 failure mode.
+    // sf0.1) and serializes the decode CPU.
     val w = df.sparkSession.sparkContext.defaultParallelism
     val dist = toks.repartition(w, col("id"))
       .groupBy(col("id"), col("h")).agg(count(lit(1)).as("cnt"))
     val digits = dist.select(
       (Seq(col("id"), col("cnt")) ++ (0 until 16).map(i =>
         conv(substring(col("h"), i + 1, 1), 16, 10).cast("int").as(s"d$i"))): _*)
-    val votes = digits.groupBy(col("id")).agg(
-      sum(when((col("d0") % 2) === 1, col("cnt")).otherwise(-col("cnt"))).as("v0"),
-      (1 until 64).map { j =>
-        sum(when(shiftright(col(s"d${j / 4}"), j % 4) % 2 === 1, col("cnt"))
-          .otherwise(-col("cnt"))).as(s"v$j")
-      }: _*)
-    val sig = (1 until 63).foldLeft(
-        when(col("v0") > 0, 1L).otherwise(0L)) { (acc, j) =>
-      acc + when(col(s"v$j") > 0, 1L << j).otherwise(0L)
-    } + when(col("v63") > 0, Long.MinValue).otherwise(0L)
-    votes.select(col("id"), sig.as("simhash"))
+    val sig = bits.zipWithIndex.map { case (j, p) =>
+      val vote = sum(when(shiftright(col(s"d${j / 4}"), j % 4) % 2 === 1, col("cnt"))
+        .otherwise(-col("cnt")))
+      when(vote > 0, 1L << p).otherwise(0L)
+    }.reduce(_ bitwiseOR _)
+    digits.groupBy(col("id")).agg(sig.as("simhash"))
+  }
+
+  /** 16-bit SimHash (oracle-checkable size): bit i is bit 4i of
+    * [[simhash64Df]] — md5 hex digit i's low bit votes for it. */
+  def simhash16(df: DataFrame, textCol: String, idCol: String): DataFrame =
+    simhashOf(df, textCol, idCol, 0 until 64 by 4)
+
+  /** 64-bit SimHash (the production width, oracle-gated): all 64 vote
+    * bits of [[simhashOf]]. */
+  def simhash64Df(df: DataFrame, textCol: String, idCol: String): DataFrame =
+    simhashOf(df, textCol, idCol, 0 until 64)
+
+  /** SimHash near-duplicate pairs over the 16-bit signatures: 4
+    * disjoint 4-bit chunks; documents sharing any (chunk index, chunk
+    * value) become candidates (pigeonhole: pairs within Hamming
+    * distance 3 differ in at most 3 chunks, so at least one chunk
+    * matches — recall is exact for `maxHamming <= 3`), verified by
+    * exact Hamming distance. The 64-key space (4 bands × 16 nibbles)
+    * bounds the spread of the candidate expansion — an inherent skew
+    * residual of coarse signatures; identical-signature classes above
+    * 1024 documents emit a star (see [[bandedPairs]]).
+    * Output: (id1, id2, hamming), id1 < id2. */
+  def simhashPairs(
+      df: DataFrame, textCol: String, idCol: String,
+      maxHamming: Int = 3): DataFrame = {
+    require(maxHamming >= 0 && maxHamming <= 3,
+      s"4 bands of 4 bits guarantee full recall only for maxHamming <= 3, got $maxHamming")
+    bandedPairs(simhash16(df, textCol, idCol).withColumnRenamed("simhash", "sig"),
+      (0 until 4).map(b => shiftright(col("sig"), b * 4).bitwiseAND(15)),
+      Some(maxHamming))
   }
 
   /** SimHash near-duplicate pairs over the PRODUCTION 64-bit
-    * signatures: 4 disjoint 16-bit chunks, documents sharing any
-    * (chunk index, chunk value) become candidates — the same
-    * pigeonhole as [[simhashPairs]] (full recall for Hamming ≤ 3),
-    * but the candidate-join key space is 4 bands × 65,536 chunk
-    * values (262,144 keys), so the quadratic per-group expansion
-    * spreads across the cluster instead of 64 coarse buckets. The
-    * chunk mask (& 65535) makes arithmetic-vs-logical shift of the
-    * sign bit irrelevant. Output: (id1, id2, hamming), id1 < id2.
-    *
-    * Hot-group guard (the 100 TB degenerate case): a signature shared
-    * VERBATIM by a huge document class — boilerplate pages, template
-    * spam — would put all its members in the same four (band, chunk)
-    * groups and expand |class|²/2 pairs on single keys, a job-killer
-    * at corpus scale. Identical-signature classes larger than
-    * `identicalCliqueCap` therefore emit a linear STAR instead of the
-    * full clique — every member pairs with the class minimum id at
-    * Hamming 0 — and only the class representative enters the banded
-    * join (cross-signature candidates connect through it). Connected
-    * components, and thus [[duplicateClusters]] output, are identical
-    * to the clique formulation; only the explicit pair list is
-    * star-compressed, and ONLY above the cap (small classes keep
-    * emitting full cliques, so fixed-scale gates are unchanged). */
+    * signatures: the same pigeonhole as [[simhashPairs]] with 4
+    * disjoint 16-bit chunks (full recall for Hamming ≤ 3), but the
+    * candidate-join key space is 4 bands × 65,536 chunk values, so the
+    * quadratic per-group expansion spreads across the cluster instead
+    * of 64 coarse buckets. The chunk mask makes arithmetic-vs-logical
+    * shift of the sign bit irrelevant. Identical-signature classes
+    * above `identicalCliqueCap` emit a star (see [[bandedPairs]]).
+    * Output: (id1, id2, hamming), id1 < id2. */
   def simhash64Pairs(
       df: DataFrame, textCol: String, idCol: String,
       maxHamming: Int = 3, identicalCliqueCap: Int = 1024): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 3,
       s"4 bands of 16 bits guarantee full recall only for maxHamming <= 3, got $maxHamming")
     require(identicalCliqueCap >= 1, s"identicalCliqueCap must be >= 1")
-    val sig = simhash64Df(df, textCol, idCol)
-    // per-signature class size + representative (min id), one window
-    // over the signature hash — shuffles on simhash, never a key with
-    // more rows than the class itself
-    val sw = org.apache.spark.sql.expressions.Window.partitionBy(col("simhash"))
-    val g = sig.withColumn("_rep", min(col("id")).over(sw))
-      .withColumn("_n", count(lit(1)).over(sw))
-    val star = g.where(col("_n") > identicalCliqueCap && col("id") =!= col("_rep"))
-      .select(col("_rep").as("id1"), col("id").as("id2"),
-        lit(0).cast("int").as("hamming"))
-    val kept = g.where(col("_n") <= identicalCliqueCap || col("id") === col("_rep"))
-      .select(col("id"), col("simhash"))
-    val banded = kept.select(col("id"), col("simhash"),
-        explode(sequence(lit(0), lit(3))).as("band"))
-      .withColumn("ck", expr("(simhash >> (band * 16)) & 65535"))
-    // explicit width for the same reason as [[simhashPairs]]: the
-    // banded input is tiny in bytes, so AQE coalesces the reader, but
-    // the join expands ~|group|^2/2 within each (band, chunk) group
-    val w = df.sparkSession.sparkContext.defaultParallelism
-    val a = banded.repartition(w, col("band"), col("ck"))
-      .select(col("id").as("id1"), col("simhash").as("_s1"),
-        col("band"), col("ck"))
-    // SHUFFLE_HASH: same rationale as [[simhashPairs]]
-    val b = banded.hint("shuffle_hash")
-      .select(col("id").as("id2"), col("simhash").as("_s2"),
-        col("band").as("_band2"), col("ck").as("_ck2"))
-    a.join(b, col("band") === col("_band2") && col("ck") === col("_ck2") &&
-        col("id1") < col("id2"))
-      .select(col("id1"), col("id2"),
-        expr("CAST(bit_count(_s1 ^ _s2) AS INT)").as("hamming"))
-      .where(col("hamming") <= maxHamming)
-      .distinct()
-      .unionByName(star)
-  }
-
-  /** 64-bit SimHash computed from md5 bytes in Scala (per-row library
-    * hot path; the DataFrame variant [[simhash64Df]] is the
-    * oracle-gated one — this byte-order formulation is covered by
-    * unit tests). */
-  def simhash64(tokens: Seq[String]): Long = {
-    val votes = new Array[Long](64)
-    val mdProto = java.security.MessageDigest.getInstance("MD5")
-    tokens.foreach { t =>
-      val d = mdProto.digest(t.getBytes("UTF-8"))
-      var j = 0
-      while (j < 64) {
-        val bit = (d(j / 8) >> (7 - j % 8)) & 1
-        votes(j) += (if (bit == 1) 1L else -1L)
-        j += 1
-      }
-      mdProto.reset()
-    }
-    var sig = 0L
-    var j = 0
-    while (j < 64) { if (votes(j) > 0) sig |= (1L << j); j += 1 }
-    sig
+    bandedPairs(simhash64Df(df, textCol, idCol).withColumnRenamed("simhash", "sig"),
+      (0 until 4).map(b => shiftright(col("sig"), b * 16).bitwiseAND(65535)),
+      Some(maxHamming), identicalCliqueCap)
   }
 
   /** Connected-component cluster assignment over a near-duplicate
@@ -576,10 +500,6 @@ object Dedup {
       round += 1
     }
     edges.unpersist()
-    if (sys.env.contains("GRAFT_CC_LOG"))
-      // scalastyle:off println
-      println(s"  [cc] converged rounds=$round width=$w")
-      // scalastyle:on println
     labels.select(col("id"), col("lbl").as("cluster_id"))
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
 import graft.ml.Similarity
@@ -138,40 +139,49 @@ class MlSuite extends SparkSpec {
   }
 
   test("simhash: identical docs equal, 64-bit variant consistent") {
-    val sh = Dedup.simhash16(docsDf, "text", "doc_id").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(sh(1L) == sh(2L))
-    assert(sh.values.forall(v => v >= 0 && v < 65536))
-    val s1 = Dedup.simhash64(Seq("a", "b", "a"))
-    val s2 = Dedup.simhash64(Seq("a", "a", "b"))
-    assert(s1 == s2) // order-independent
+    def sigs(df: DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val sh16 = sigs(Dedup.simhash16(docsDf, "text", "doc_id"))
+    val sh64 = sigs(Dedup.simhash64Df(docsDf, "text", "doc_id"))
+    assert(sh16(1L) == sh16(2L) && sh64(1L) == sh64(2L))
+    assert(sh16.values.forall(v => v >= 0 && v < 65536))
+    // bit i of the 16-bit signature is bit 4i of the 64-bit one
+    def gather(s: Long): Long = (0 until 16).map(i => ((s >>> (4 * i)) & 1L) << i).sum
+    assert(sh64.keySet == Set(1L, 2L, 3L, 4L, 5L) && sh16.keySet == sh64.keySet)
+    sh64.foreach { case (id, s) => assert(sh16(id) == gather(s), s"doc $id") }
+    // order-independent: reversing every document's tokens keeps its signature
+    val reversed = docsDf.select($"doc_id",
+      concat_ws(" ", reverse(split($"text", " "))).as("text"))
+    assert(sigs(Dedup.simhash64Df(reversed, "text", "doc_id")) == sh64)
   }
 
   test("simhash64Pairs: a huge identical-signature class emits a linear star, not a clique") {
     // the 100 TB degenerate case (round-11 verdict #5): 100K documents
     // with VERBATIM-identical text share one signature; the clique
-    // formulation would materialize ~5e9 pairs on four hot
-    // (band, chunk) keys. The guard emits |class|-1 star pairs at
-    // Hamming 0 instead, and a near-miss outsider still connects
-    // through the class representative.
+    // formulation would materialize ~5e9 pairs on the hot (band, chunk)
+    // keys. The guard emits |class|-1 star pairs at Hamming 0 instead —
+    // at both signature widths, which share one banded join.
     val n = 100000
     val hot = spark.range(0, n).selectExpr("id AS doc_id",
       "'spark spark engines engines graft' AS text")
-    val out = Dedup.simhash64Pairs(hot, "text", "doc_id")
-    assert(out.count() == (n - 1).toLong)
-    val sample = out.limit(5).collect()
-    assert(sample.forall(r => r.getLong(0) == 0L && r.getInt(2) == 0))
-    // below the cap the full clique is preserved (gate semantics)
     val small = spark.range(0, 5).selectExpr("id AS doc_id",
       "'spark spark engines engines graft' AS text")
-    assert(Dedup.simhash64Pairs(small, "text", "doc_id").count() == 10L)
-    // connected components are unchanged by star compression
-    val clusters = Dedup.duplicateClusters(
-      Dedup.simhash64Pairs(hot.limit(3000).union(
-        spark.range(n, n + 1).selectExpr("id AS doc_id",
-          "'completely different text entirely' AS text")), "text", "doc_id"))
-      .agg(countDistinct(col("cluster_id"))).head().getLong(0)
-    assert(clusters == 1L)
+    val outsider = spark.range(n, n + 1).selectExpr("id AS doc_id",
+      "'completely different text entirely' AS text")
+    for ((width, pairsOf) <- Seq[(Int, DataFrame => DataFrame)](
+        64 -> (Dedup.simhash64Pairs(_, "text", "doc_id")),
+        16 -> (Dedup.simhashPairs(_, "text", "doc_id")))) withClue(s"$width-bit: ") {
+      val out = pairsOf(hot)
+      assert(out.count() == (n - 1).toLong)
+      val sample = out.limit(5).collect()
+      assert(sample.forall(r => r.getLong(0) == 0L && r.getInt(2) == 0))
+      // below the cap the full clique is preserved (gate semantics)
+      assert(pairsOf(small).count() == 10L)
+      // connected components are unchanged by star compression
+      val clusters = Dedup.duplicateClusters(pairsOf(hot.limit(3000).union(outsider)))
+        .agg(countDistinct(col("cluster_id"))).head().getLong(0)
+      assert(clusters == 1L)
+    }
   }
 
   test("brute-force cosine top-k ranks an exact duplicate first") {

@@ -92,12 +92,8 @@ object SkewProbe {
       d.write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
       // task-end events and the executed plan arrive on the async
-      // listener bus: wait until it is empty (waitUntilEmpty is
-      // private[spark] in source, public in bytecode)
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
-        .invoke(bus, java.lang.Long.valueOf(20000L))
+      // listener bus: wait until it is empty
+      org.apache.spark.sql.GraftExecBridge.drainListenerBus(spark.sparkContext)
       // the join's isSkewJoin marker renders as "(skew=true)"; a bare
       // "skew" substring also matches this probe's own fixture paths
       val skew = lastPlan.toLowerCase.contains("skew=true")

@@ -75,85 +75,86 @@ object Dedup {
         conv(substring(col("_h"), 1, 7), 16, 10).cast("long").as("hv"),
         conv(substring(col("_h"), 1, 15), 16, 10).cast("long").as("sh60"))
 
-  /** Minhash candidate pairs of hashed shingles: the per-document
-    * signature `(id, sig)` holds one minimum per band as aggregate
-    * columns of ONE groupBy(id), as [[simhashOf]] holds one vote sum
-    * per bit, and band b's minimum is that band's key in
-    * [[bandedPairs]]. The 28-bit `hv` of each shingle occurrence (one
-    * md5) is the base hash; band b applies the affine universal hash
-    * `(2b+1)*H + 7919b + 13 mod 1e9+7` (integer arithmetic both engines
-    * reproduce exactly; an md5-per-band variant costs 8x the hashing). */
-  private def minhashPairs(hs: DataFrame, bands: Int): DataFrame =
-    bandedPairs(
-      hs.groupBy(col("id")).agg(array((0 until bands).map(b =>
-        min((col("hv") * (2 * b + 1) + (7919 * b + 13)) % 1000000007L)): _*).as("sig")),
-      (0 until bands).map(col("sig")(_)))
+  /** Minhash candidate pairs of hashed shingles: one `(id, band, h)`
+    * row per band, `h` the band's minimum, and documents sharing any
+    * (band, h) become candidates — never all-pairs. The 28-bit `hv` of
+    * each shingle occurrence (one md5) is the base hash; band b applies
+    * the affine universal hash `(2b+1)*H + 7919b + 13 mod 1e9+7`
+    * (integer arithmetic both engines reproduce exactly; an
+    * md5-per-band variant costs 8x the hashing). Not
+    * [[simhashBandedPairs]]: the keys (~1e9 values per band) form tiny
+    * groups, so AQE sizes the exchange, nothing needs verifying, and
+    * the distinct keeps its map-side partial aggregate, which drops a
+    * pair's per-band copies before they shuffle. No star guard: equal
+    * minhash vectors do not imply equal shingle sets. SHUFFLE_HASH: no
+    * sort order is needed downstream. Output: distinct (id1 < id2). */
+  private def minhashPairs(hs: DataFrame, bands: Int): DataFrame = {
+    val sig = hs.select(col("id"), explode(sequence(lit(0), lit(bands - 1))).as("band"), col("hv"))
+      .groupBy(col("id"), col("band"))
+      .agg(min(((col("band") * 2 + 1) * col("hv") + col("band") * 7919 + 13) % 1000000007L).as("h"))
+    val a = sig.as("a"); val b = sig.hint("shuffle_hash").as("b")
+    a.join(b, col("a.band") === col("b.band") && col("a.h") === col("b.h") &&
+      col("a.id") < col("b.id"))
+      .select(col("a.id").as("id1"), col("b.id").as("id2"))
+      .distinct()
+  }
 
-  /** The banded self-join behind every candidate generator here (the
-    * banded tables of Manku, Jain & Das Sarma, WWW 2007): each
-    * `(id, sig)` row fans out to one `(band, key)` row per `bandKeys`
-    * expression over `sig`, and documents sharing any (band, key)
-    * become candidate pairs — never all-pairs. Output: distinct
-    * (id1, id2), id1 < id2.
+  /** The banded self-join behind both SimHash widths (the banded
+    * tables of Manku, Jain & Das Sarma, WWW 2007): each `(id, simhash)`
+    * row fans out to 4 `(band, key)` rows, key = the band's disjoint
+    * `chunkBits`-bit chunk of the signature, and documents sharing any
+    * (band, key) become candidates — pigeonhole: pairs within Hamming
+    * distance 3 differ in at most 3 chunks, so at least one chunk
+    * matches and recall is exact for `maxHamming <= 3`. Candidates are
+    * verified by exact Hamming distance. The chunk mask makes
+    * arithmetic-vs-logical shift of the sign bit irrelevant.
+    * Output: distinct (id1, id2, hamming), id1 < id2.
     *
-    * `maxHamming` selects SimHash mode, for a BIGINT `sig`: candidates
-    * are verified by exact Hamming distance (output gains `hamming`),
-    * and the identical-signature star guard runs. A signature shared
-    * VERBATIM by a huge class — boilerplate pages, template spam —
-    * puts all its members in the same (band, key) groups and would
-    * expand |class|²/2 pairs on single keys. Classes larger than
+    * Identical-signature star guard: a signature shared VERBATIM by a
+    * huge class — boilerplate pages, template spam — puts all its
+    * members in the same (band, key) groups and would expand
+    * |class|²/2 pairs on single keys. Classes larger than
     * `identicalCliqueCap` therefore emit a linear STAR — every member
     * pairs with the class minimum id at Hamming 0 — and only that
     * representative enters the banded join (cross-signature candidates
-    * connect through it). An identical signature passes any Hamming
-    * verification, so connected components, and thus
-    * [[duplicateClusters]] output, equal the clique formulation's;
-    * classes at or below the cap keep emitting full cliques. MinHash
-    * mode (`None`) runs no guard: equal minhash vectors do not imply
-    * equal shingle sets, so a star could change Jaccard-verified
-    * components. */
-  private def bandedPairs(sig: DataFrame, bandKeys: Seq[Column],
-      maxHamming: Option[Int] = None, identicalCliqueCap: Int = 1024): DataFrame = {
-    val (kept, star) = maxHamming match {
-      case None => (sig, None)
-      case Some(_) =>
-        // class size + representative (min id) in one window over the
-        // signature — shuffles on sig, never a key with more rows than
-        // the class itself
-        val sw = Window.partitionBy(col("sig"))
-        val g = sig.withColumn("_rep", min(col("id")).over(sw))
-          .withColumn("_n", count(lit(1)).over(sw))
-        (g.where(col("_n") <= identicalCliqueCap || col("id") === col("_rep"))
-            .select(col("id"), col("sig")),
-          Some(g.where(col("_n") > identicalCliqueCap && col("id") =!= col("_rep"))
-            .select(col("_rep").as("id1"), col("id").as("id2"), lit(0).as("hamming"))))
-    }
-    val banded = kept.select(Seq(col("id"),
-        posexplode(array(bandKeys: _*)).as(Seq("band", "key"))) ++
-      maxHamming.map(_ => col("sig")): _*)
-    def side(d: DataFrame, i: Int) = d.select(d.columns.toSeq.map(c => col(c).as(s"$c$i")): _*)
+    * connect through it). An identical signature is at Hamming 0, so
+    * connected components, and thus [[duplicateClusters]] output, equal
+    * the clique formulation's; classes at or below the cap keep
+    * emitting full cliques. */
+  private def simhashBandedPairs(sig: DataFrame, chunkBits: Int,
+      maxHamming: Int, identicalCliqueCap: Int): DataFrame = {
+    require(maxHamming >= 0 && maxHamming <= 3,
+      s"4 bands of $chunkBits bits guarantee full recall only for maxHamming <= 3, got $maxHamming")
+    require(identicalCliqueCap >= 1, s"identicalCliqueCap must be >= 1")
+    // class size + representative (min id) in one window over the
+    // signature — shuffles on it, never a key with more rows than the
+    // class itself
+    val sw = Window.partitionBy(col("simhash"))
+    val g = sig.withColumn("_rep", min(col("id")).over(sw))
+      .withColumn("_n", count(lit(1)).over(sw))
+    val star = g.where(col("_n") > identicalCliqueCap && col("id") =!= col("_rep"))
+      .select(col("_rep").as("id1"), col("id").as("id2"), lit(0).as("hamming"))
+    val banded = g.where(col("_n") <= identicalCliqueCap || col("id") === col("_rep"))
+      .select(col("id"), col("simhash").as("sig"), posexplode(array((0 until 4).map(b =>
+        shiftright(col("simhash"), b * chunkBits).bitwiseAND((1L << chunkBits) - 1)): _*))
+        .as(Seq("band", "key")))
     // Both sides read the SAME (band, key) exchange (reused), so the
-    // banded rows shuffle once. SimHash keys are coarse (16 or 65,536
+    // banded rows shuffle once. The keys are coarse (16 or 65,536
     // values per band): the banded input is tiny in bytes, so AQE would
     // coalesce the reader to one partition while the join EXPANDS
     // ~|group|²/2 candidate pairs within each group, serial on that
-    // task — so SimHash pins the session's full width. Minhash keys
-    // (~1e9 values per band) form tiny groups: AQE sizes that exchange,
-    // as a pinned width costs a near-empty task per partition
-    // (d_lsh_pairs +24% at 32 partitions). SHUFFLE_HASH: no sort order
-    // is needed downstream; sort-merge paid two sorts of the banded
-    // rows per call.
-    val w = sig.sparkSession.sparkContext.defaultParallelism
-    val byKey = maxHamming.fold(banded.repartition(col("band"), col("key")))(_ =>
-      banded.repartition(w, col("band"), col("key")))
-    val cand = side(byKey, 1).join(side(byKey.hint("shuffle_hash"), 2),
-      col("band1") === col("band2") && col("key1") === col("key2") &&
-        col("id1") < col("id2"))
-    val pairs = maxHamming.fold(cand.select(col("id1"), col("id2"))) { h =>
-      cand.select(col("id1"), col("id2"),
-          expr("CAST(bit_count(sig1 ^ sig2) AS INT)").as("hamming"))
-        .where(col("hamming") <= h)
-    }
+    // task — so the exchange pins the session's full width.
+    // SHUFFLE_HASH: no sort order is needed downstream; sort-merge paid
+    // two sorts of the banded rows per call.
+    val byKey = banded.repartition(
+      sig.sparkSession.sparkContext.defaultParallelism, col("band"), col("key"))
+    def side(i: Int) = byKey.select(byKey.columns.toSeq.map(c => col(c).as(s"$c$i")): _*)
+    side(1).join(side(2).hint("shuffle_hash"),
+        col("band1") === col("band2") && col("key1") === col("key2") &&
+          col("id1") < col("id2"))
+      .select(col("id1"), col("id2"),
+        expr("CAST(bit_count(sig1 ^ sig2) AS INT)").as("hamming"))
+      .where(col("hamming") <= maxHamming)
       // the distinct shuffles BEFORE it aggregates: a map-side partial
       // distinct held a task's whole candidate expansion in one hash map
       // (116 MB peak task memory on the 16-bit SkewProbe corpus; 52 MB
@@ -161,7 +162,7 @@ object Dedup {
       // pairs to a few partitions when they are few, and consumers that
       // keep the partitioning (duplicateClusters) pay per task.
       .repartition(col("id1"), col("id2")).distinct()
-    star.fold(pairs)(pairs.unionByName(_))
+      .unionByName(star)
   }
 
   /** LSH candidate pairs: documents sharing any minhash band value
@@ -315,44 +316,28 @@ object Dedup {
     simhashOf(df, textCol, idCol, 0 until 64)
 
   /** SimHash near-duplicate pairs over the 16-bit signatures: 4
-    * disjoint 4-bit chunks; documents sharing any (chunk index, chunk
-    * value) become candidates (pigeonhole: pairs within Hamming
-    * distance 3 differ in at most 3 chunks, so at least one chunk
-    * matches — recall is exact for `maxHamming <= 3`), verified by
-    * exact Hamming distance. The 64-key space (4 bands × 16 nibbles)
+    * disjoint 4-bit chunks, full recall for Hamming ≤ 3 (see
+    * [[simhashBandedPairs]]). The 64-key space (4 bands × 16 nibbles)
     * bounds the spread of the candidate expansion — an inherent skew
     * residual of coarse signatures; identical-signature classes above
-    * 1024 documents emit a star (see [[bandedPairs]]).
-    * Output: (id1, id2, hamming), id1 < id2. */
+    * 1024 documents emit a star. Output: (id1, id2, hamming), id1 < id2. */
   def simhashPairs(
       df: DataFrame, textCol: String, idCol: String,
-      maxHamming: Int = 3): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 3,
-      s"4 bands of 4 bits guarantee full recall only for maxHamming <= 3, got $maxHamming")
-    bandedPairs(simhash16(df, textCol, idCol).withColumnRenamed("simhash", "sig"),
-      (0 until 4).map(b => shiftright(col("sig"), b * 4).bitwiseAND(15)),
-      Some(maxHamming))
-  }
+      maxHamming: Int = 3): DataFrame =
+    simhashBandedPairs(simhash16(df, textCol, idCol), 4, maxHamming, 1024)
 
   /** SimHash near-duplicate pairs over the PRODUCTION 64-bit
     * signatures: the same pigeonhole as [[simhashPairs]] with 4
     * disjoint 16-bit chunks (full recall for Hamming ≤ 3), but the
     * candidate-join key space is 4 bands × 65,536 chunk values, so the
     * quadratic per-group expansion spreads across the cluster instead
-    * of 64 coarse buckets. The chunk mask makes arithmetic-vs-logical
-    * shift of the sign bit irrelevant. Identical-signature classes
-    * above `identicalCliqueCap` emit a star (see [[bandedPairs]]).
+    * of 64 coarse buckets. Identical-signature classes above
+    * `identicalCliqueCap` emit a star (see [[simhashBandedPairs]]).
     * Output: (id1, id2, hamming), id1 < id2. */
   def simhash64Pairs(
       df: DataFrame, textCol: String, idCol: String,
-      maxHamming: Int = 3, identicalCliqueCap: Int = 1024): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 3,
-      s"4 bands of 16 bits guarantee full recall only for maxHamming <= 3, got $maxHamming")
-    require(identicalCliqueCap >= 1, s"identicalCliqueCap must be >= 1")
-    bandedPairs(simhash64Df(df, textCol, idCol).withColumnRenamed("simhash", "sig"),
-      (0 until 4).map(b => shiftright(col("sig"), b * 16).bitwiseAND(65535)),
-      Some(maxHamming), identicalCliqueCap)
-  }
+      maxHamming: Int = 3, identicalCliqueCap: Int = 1024): DataFrame =
+    simhashBandedPairs(simhash64Df(df, textCol, idCol), 16, maxHamming, identicalCliqueCap)
 
   /** Connected-component cluster assignment over a near-duplicate
     * pair set — the step a training-data pipeline runs after candidate

@@ -301,31 +301,12 @@ object CacheBuilder {
       // the listener bus is async: the queued task-end events must
       // drain before detaching or the returned total undercounts. Two
       // equal reads 25 ms apart were NOT a drain proof — a loaded
-      // driver's bus can lull longer than that mid-queue (round-14
-      // ADVICE: latent flake) — so ask the bus itself:
-      // LiveListenerBus.waitUntilEmpty blocks until every queue is
-      // drained (private[spark] in source, public in bytecode —
-      // invoked reflectively; zero wait when already empty). Fallback
-      // if the accessor ever moves: counter stable across four reads
-      // 50 ms apart.
-      val drained =
-        try {
-          val sc = spark.sparkContext
-          val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-          bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
-            .invoke(bus, java.lang.Long.valueOf(20000L))
-          true
-        } catch { case _: Throwable => false }
-      if (!drained) {
-        var prev = -1L
-        var stable = 0
-        var spins = 0
-        while (stable < 3 && spins < 400) {
-          val cur = total.get()
-          if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-          Thread.sleep(50); spins += 1
-        }
-      }
+      // driver's bus can lull longer than that mid-queue — so ask the
+      // bus itself. A bus still busy after 20 s leaves the total as
+      // counted so far rather than failing a build whose write
+      // succeeded.
+      try org.apache.spark.sql.GraftExecBridge.drainListenerBus(spark.sparkContext)
+      catch { case _: java.util.concurrent.TimeoutException => }
       spark.sparkContext.removeSparkListener(listener)
     }
     if (onProgress != null) onProgress(entity, format, total.get())

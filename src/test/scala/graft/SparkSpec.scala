@@ -12,16 +12,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def sortedRows(df: DataFrame): Seq[Seq[Any]] =
     rows(df).sortBy(_.mkString(""))
 
-  /** Blocks until every event posted so far reached the listeners.
-    * LiveListenerBus.waitUntilEmpty is private[spark] in source but
-    * public in bytecode — same reflective drain CacheBuilder uses. */
+  /** Blocks until every event posted so far reached the listeners. */
   def drainListenerBus(): Unit =
-    try {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
-        .invoke(bus, java.lang.Long.valueOf(20000L))
-    } catch { case _: Throwable => Thread.sleep(500) }
+    org.apache.spark.sql.GraftExecBridge.drainListenerBus(spark.sparkContext)
 }
 
 object SparkSpec {

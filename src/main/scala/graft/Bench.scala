@@ -49,43 +49,14 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val repeats = sys.env.getOrElse("SPARK_GRAFT_REPEATS", "3").toInt
     val heavyRepeats = math.max(repeats,
       sys.env.getOrElse("SPARK_GRAFT_HEAVY_REPEATS", "5").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // large-plan workload tuning: constraint propagation is
-      // quadratic in plan width and cost the annotate pipeline ~2 s
-      // of driver time per invocation (optimizer + AQE re-planning);
-      // every gate query is oracle-verified under this setting
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      // with 32 reduce partitions the bypass-merge shuffle writer
-      // opens one file per (map task x partition) — ~45 executor-
-      // seconds of file handling per annotate run at bench scale
-      // (stack-sampled: DiskBlockObjectWriter.open + KeyLock
-      // contention + NIO concat). Threshold 0 selects the
-      // tungsten-sort writer: one spill file per map task
-      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-      // the annotate-family plans alone compile >100 distinct
-      // whole-stage-codegen units; the default 100-entry compile
-      // cache evicted them EVERY sample, re-paying ~45 executor-task-
-      // seconds of janino compilation + compile-lock blocking per run
-      // (stack-sampled round 11: 610 ticks in KeyLock.acquireLock <-
-      // NonFateSharingLoadingCache.get). With the cache sized to the
-      // suite, warm samples measure the operators: e2e 7.2-8.4 ->
-      // 4.6-5.4 s, executor task time 63-73 -> 17-21 s
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // NO short periodic-GC interval here: runOnce GCs BETWEEN
-      // queries (off the clock), so a 1-min cleaner backstop could
-      // only ever fire MID-SAMPLE — a full STW collection charged to
-      // whatever query it lands on
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // NO short periodic-GC interval in the session: reap() GCs BETWEEN
+    // queries (off the clock), so a 1-min cleaner backstop could only
+    // ever fire MID-SAMPLE, a full STW collection charged to whatever
+    // query it lands on
+    val spark = graft.obs.Session(32, "WARN")
     // warm the JVM + parquet footers once so per-query numbers measure
     // the operators, not first-touch class loading
     SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
@@ -93,184 +64,26 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    // per-sample diagnostics: JVM GC time, host steal (a VM guest's
-    // thread-CPU accounting includes host-stolen cycles), and
-    // EXTERNAL host CPU (total host busy minus this process) — the
-    // 1-min load average cannot attribute a slow sample (it trails,
-    // and the bench inflates it itself), these can
-    val gcBeans = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-    def jvmGcMs: Long = {
-      var t = 0L; gcBeans.forEach(b => t += math.max(b.getCollectionTime, 0)); t
-    }
-    def procStat: (Long, Long) = // (busy jiffies, steal jiffies) across all cpus
-      try {
-        val src = scala.io.Source.fromFile("/proc/stat")
-        try src.getLines().find(_.startsWith("cpu ")).map(_.trim.split("\\s+")).map { f =>
-          (f(1).toLong + f(2).toLong + f(3).toLong + (if (f.length > 6) f(6).toLong else 0L)
-            + (if (f.length > 7) f(7).toLong else 0L),
-           if (f.length > 8) f(8).toLong else 0L)
-        }.getOrElse((-1L, -1L))
-        finally src.close()
-      } catch { case _: Exception => (-1L, -1L) }
-    val osMx = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    def procCpuNs: Long = osMx match {
-      case m: com.sun.management.OperatingSystemMXBean => m.getProcessCpuTime
-      case _ => -1L
-    }
-    final case class Diag(gcSec: Double, stealSec: Double, extCpuSec: Double,
-      taskSec: Double, busyWall: Double, cgN: Long, jitSec: Double,
-      cpuSec: Double, tasks: Long, jobsN: Long, rowsIn: Long, maxTask: Double)
-    // per-sample whole-stage-codegen compile count + JVM JIT time:
-    // a sample whose taskSec multiplies with flat canary/gc/steal and
-    // a compile burst is a janino recompile storm (executor threads
-    // serialize on the compile KeyLock, and blocked time lands in
-    // executorRunTime — the round-11 signature)
-    def cgCount: Long =
-      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    val jitBean = java.lang.management.ManagementFactory.getCompilationMXBean
-    def jitMs: Long =
-      if (jitBean != null && jitBean.isCompilationTimeMonitoringSupported)
-        jitBean.getTotalCompilationTime else -1L
-    // per-sample executor accounting (the ScaleProbe decomposition,
-    // reset per sample): taskSec = summed executor run time, busyWall
-    // = wall covered by >= 1 running task. A slow sample with LOW
+    // per-sample attribution (graft.obs.Host): JVM GC, host steal and
+    // EXTERNAL host CPU, since the 1-min load average cannot attribute
+    // a slow sample (it trails, and the bench inflates it itself);
+    // whole-stage-codegen compiles + JIT time, since a sample whose
+    // taskSec multiplies with flat canary/gc/steal and a compile burst
+    // is a janino recompile storm (the round-11 signature); and the
+    // two-phase calibration, judged per sample against the best the
+    // whole run observed (round-13 verdict #1: heavy medians shipped
+    // ~2x inflated by co-tenant memory-bandwidth contention with ZERO
+    // steal and ZERO external cpu). Executor accounting comes from the
+    // query profile (graft.obs.Profiler): a slow sample with LOW
     // taskSec/busyWall relative to its siblings stalled on the DRIVER
-    // (planning, compile locks, cleaner) — round-14: heavy samples
-    // varied 3.4 -> 39 s with flat canary/gc/steal/extcpu, i.e.
-    // executor threads blocked, not CPU-starved
-    val metricsLock = new Object
-    var taskMsAcc = 0L
-    var taskCpuNsAcc = 0L
-    var maxTaskMs = 0L
-    var nTasks = 0L
-    var nJobs = 0L
-    var inputRows = 0L
-    val taskIntervals = collection.mutable.ArrayBuffer[(Long, Long)]()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        metricsLock.synchronized {
-          nTasks += 1
-          if (e.taskMetrics != null) {
-            taskMsAcc += e.taskMetrics.executorRunTime
-            taskCpuNsAcc += e.taskMetrics.executorCpuTime
-            maxTaskMs = math.max(maxTaskMs, e.taskMetrics.executorRunTime)
-            inputRows += e.taskMetrics.inputMetrics.recordsRead +
-              e.taskMetrics.shuffleReadMetrics.recordsRead
-          }
-          if (e.taskInfo != null)
-            taskIntervals += ((e.taskInfo.launchTime, e.taskInfo.finishTime))
-        }
-      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-        metricsLock.synchronized { nJobs += 1 }
-    })
-    def busyWallOf(iv: Seq[(Long, Long)]): Double = {
-      val sorted = iv.sortBy(_._1)
-      var total = 0L; var curS = -1L; var curE = -1L
-      for ((s, e) <- sorted) {
-        if (s > curE) { if (curE > curS) total += curE - curS; curS = s; curE = e }
-        else if (e > curE) curE = e
-      }
-      if (curE > curS) total += curE - curS
-      total / 1e3
-    }
-    // live broadcast-block population (adds = valid-level block
-    // updates, ContextCleaner removals = NONE-level updates)
-    val liveBroadcasts = collection.mutable.HashSet[Long]()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onBlockUpdated(e: org.apache.spark.scheduler.SparkListenerBlockUpdated): Unit =
-        e.blockUpdatedInfo.blockId match {
-          case b: org.apache.spark.storage.BroadcastBlockId => liveBroadcasts.synchronized {
-            if (e.blockUpdatedInfo.storageLevel.isValid) liveBroadcasts += b.broadcastId
-            else liveBroadcasts -= b.broadcastId
-          }
-          case _ =>
-        }
-    })
-    // two-phase host calibration (the ScaleProbe instrument, scaled to
-    // per-sample cost — round-13 verdict #1: five rounds of official
-    // heavy medians shipped ~2x inflated by contention that shows ZERO
-    // steal and ZERO external-guest cpu; the co-tenant memory-bandwidth
-    // signature only a fixed-work probe can attribute). ALU phase:
-    // register-only LCG, stretched by cpu-quota throttling. MEMORY
-    // phase: strided walks over preallocated per-thread 4 MB arrays
-    // (32 x 4 MB > L3, so the walk is bandwidth-bound; preallocated so
-    // 300+ calibrations add zero GC churn). Both run OFF the clock,
-    // before every sample; each sample is judged against the best
-    // calibration the whole run observed (self-normalizing — no
-    // assumption that the run STARTS quiet).
-    val calThreads = 32
-    val calArrays = Array.fill(calThreads)(new Array[Long](524288)) // 4 MB each
-    def calibrate(): (Double, Double) = {
-      val sink = new java.util.concurrent.atomic.AtomicLong()
-      def run(body: Int => Long): Double = {
-        val t0 = System.nanoTime()
-        val ts = (0 until calThreads).map { i =>
-          val t = new Thread(() => sink.addAndGet(body(i)))
-          t.start(); t
-        }
-        ts.foreach(_.join())
-        (System.nanoTime() - t0) / 1e9
-      }
-      // work sized so each phase runs ~60-100 ms: at ~25 ms the
-      // thread-start jitter exceeded the poisoning thresholds and
-      // every sample read as dirty (observed on first smoke). Each
-      // phase runs TWICE back to back and keeps the MIN: after an
-      // idle gap the first run pays CPU frequency ramp-up (observed
-      // 1.5x ALU spread on a quiet host), the second sees ramped
-      // clocks — and real contention stretches both.
-      def twice(body: Int => Long): Double = math.min(run(body), run(body))
-      val alu = twice { i =>
-        var x = 12345L + i; var n = 0
-        while (n < 40000000) { x = x * 6364136223846793005L + 1442695040888963407L; n += 1 }
-        x
-      }
-      val mem = twice { i =>
-        val a = calArrays(i)
-        var x = 0L; var r = 0
-        while (r < 10) {
-          var j = 0
-          while (j < a.length) { a(j) = a(j) + j + i; j += 8 } // one touch per cache line
-          var k = (i * 97) % 64
-          while (k < a.length) { x += a(k); k += 512 }
-          r += 1
-        }
-        x
-      }
-      (alu, mem)
-    }
-    // JIT-warm the calibration + canary loops so the first samples
-    // aren't judged against interpreter-speed probes
-    (1 to 3).foreach(_ => calibrate())
-    graft.core.Canary.warm()
+    // (round-14: heavy samples varied 3.4 -> 39 s with flat
+    // canary/gc/steal/extcpu).
+    val host = new graft.obs.Host(spark)
+    host.warm()
     val calSeq = collection.mutable.ArrayBuffer[(Double, Double)]()
-    def cleanup(): Unit = {
-      // off-the-clock cleanup between queries: release any blocks the
-      // previous query materialized (Materialize RDDs, caches), then
-      // GC so the ContextCleaner reaps prior broadcasts — query N
-      // must not pay query N-1's heap (round-6 drift: late-running
-      // queries 1.4-1.6x slower from accumulated resident blocks).
-      // Runs BEFORE the calibration probes so the previous query's
-      // collection never overlaps (and spuriously inflates) them.
-      // WAITS for the ContextCleaner's async broadcast reaping to
-      // drain (the ScaleProbe reap contract): without the wait, the
-      // previous heavy query's 30+ broadcast removals run INSIDE the
-      // next sample — driver/block-manager work charged to whichever
-      // query is on the clock.
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
-      var live = liveBroadcasts.synchronized(liveBroadcasts.size)
-      var prev = -1
-      while (live > 0 && live != prev && System.nanoTime() < deadline) {
-        prev = live
-        System.gc()
-        Thread.sleep(150)
-        live = liveBroadcasts.synchronized(liveBroadcasts.size)
-      }
-      if (live == 0 || prev < 0) System.gc()
-    }
-    def runOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Diag, Double, Double) = {
-      val gc0 = jvmGcMs; val (busy0, steal0) = procStat; val pc0 = procCpuNs
+    def runOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+        : (Double, graft.obs.Host.Delta, graft.obs.QueryProfile, Double, Double) = {
+      val h0 = graft.obs.Host.snap()
       // in-band canary (graft.core.Canary): the surrounding
       // calibration cannot see contention that starts and ends INSIDE
       // the sample — the round-14 first full run shipped 13-27 s heavy
@@ -278,38 +91,13 @@ object Bench {
       // QUERY below (p50 vs the query's best sample p50): within one
       // query the workload's thread profile is comparable, across
       // queries it is not.
-      metricsLock.synchronized {
-        taskMsAcc = 0; taskCpuNsAcc = 0; maxTaskMs = 0; nTasks = 0; nJobs = 0
-        inputRows = 0
-        taskIntervals.clear()
-      }
-      val cg0 = cgCount; val jit0 = jitMs
       val canary = new graft.core.Canary(25).start()
-      val t0 = System.nanoTime()
-      val sec =
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-            -1.0
-        }
+      val (ok, prof) = graft.obs.Profiler.measure(spark)(scala.util.Try(
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()))
       val (canP50, canMemP50) = { val r = canary.finish(); (r._1._1, r._2._1) }
-      val (busy1, steal1) = procStat
-      val ext =
-        if (busy0 >= 0 && pc0 >= 0)
-          math.max((busy1 - busy0) / 100.0 - (procCpuNs - pc0) / 1e9, 0)
-        else -1.0
-      val (tSec, bWall, tCpu, tN, jN, rIn, mxT) = metricsLock.synchronized {
-        (taskMsAcc / 1e3, busyWallOf(taskIntervals.toSeq), taskCpuNsAcc / 1e9,
-         nTasks, nJobs, inputRows, maxTaskMs / 1e3)
-      }
-      (sec, Diag((jvmGcMs - gc0) / 1e3,
-        if (steal0 >= 0) (steal1 - steal0) / 100.0 else -1.0, ext,
-        tSec, bWall, cgCount - cg0,
-        { val j1 = jitMs; if (jit0 >= 0 && j1 >= 0) (j1 - jit0) / 1e3 else -1.0 },
-        tCpu, tN, jN, rIn, mxT), canP50, canMemP50)
+      ok.failed.foreach(e => System.err.println(s"[bench] $name failed: ${e.getMessage}"))
+      (if (ok.isSuccess) prof.wall else -1.0, h0.to(graft.obs.Host.snap()), prof,
+        canP50, canMemP50)
     }
     // schedule: `repeats` full rounds over every query, with the
     // extra heavy-only passes SPREAD BETWEEN them (not back-to-back)
@@ -333,8 +121,8 @@ object Bench {
     // attribution (gc / steal / external cpu) — round-12 verdict #4:
     // load average alone could not identify poisoned samples (it
     // trails, and the bench inflates it itself)
-    final case class Sample(sec: Double, load: Double, d: Diag, calIdx: Int,
-        canP50: Double, canMemP50: Double) {
+    final case class Sample(sec: Double, load: Double, d: graft.obs.Host.Delta,
+        p: graft.obs.QueryProfile, calIdx: Int, canP50: Double, canMemP50: Double) {
       // externally contended: >1.5 cores of NON-bench host CPU ran
       // during this sample (steal counts double — it stalls us)
       def contended: Boolean =
@@ -367,15 +155,28 @@ object Bench {
       bad(s.calBefore) || bad(s.calAfter)
     }
     val acc = collection.mutable.LinkedHashMap[String, Vector[Sample]]()
+    val byName = selected.toMap
     def record(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
         load: Double): Unit = {
-      cleanup()
-      calSeq += calibrate()
+      host.reap()
+      calSeq += host.calibrate()
       val idx = calSeq.size - 1
-      val (sec, d, canP50, canMemP50) = runOnce(name, fn)
+      val (sec, d, p, canP50, canMemP50) = runOnce(name, fn)
       acc(name) = acc.getOrElse(name, Vector.empty) :+
-        Sample(sec, load, d, idx, canP50, canMemP50)
+        Sample(sec, load, d, p, idx, canP50, canMemP50)
     }
+    // one post-sweep re-sample pass over `names`, each recorded in
+    // `into`; the closing calibration bounds the pass's last sample
+    def resample(names: Seq[String], into: collection.mutable.Set[String]): Unit =
+      if (names.nonEmpty) {
+        val load = osBean.getSystemLoadAverage
+        loads += load
+        for (name <- names; fn <- byName.get(name)) {
+          into += name
+          record(name, fn, load)
+        }
+        calSeq += host.calibrate()
+      }
     // canary-poisoned: this sample's in-band burst median exceeds 1.5x
     // the BEST burst median any sample of the SAME query achieved
     // (same workload = comparable scheduling pressure on the canary);
@@ -395,7 +196,7 @@ object Bench {
       loads += load
       for ((name, fn) <- block) record(name, fn, load)
     }
-    calSeq += calibrate() // closes the last sample's post-window
+    calSeq += host.calibrate() // closes the last sample's post-window
     // record-quality gate (round-11 verdict #7): a query whose sample
     // spread exceeds SpreadGate was hit by a contention burst — its
     // median is not a property of the code. Re-sample those queries
@@ -409,19 +210,8 @@ object Bench {
     }
     val resampleRounds = sys.env.getOrElse("SPARK_GRAFT_RESAMPLE", "2").toInt
     val resampled = collection.mutable.LinkedHashSet[String]()
-    val byName = selected.toMap
-    for (_ <- 1 to resampleRounds) {
-      val noisy = acc.filter { case (_, xs) => spread(xs) > SpreadGate }.keys.toSeq
-      if (noisy.nonEmpty) {
-        val load = osBean.getSystemLoadAverage
-        loads += load
-        for (name <- noisy; fn <- byName.get(name)) {
-          resampled += name
-          record(name, fn, load)
-        }
-        calSeq += calibrate()
-      }
-    }
+    for (_ <- 1 to resampleRounds)
+      resample(acc.filter { case (_, xs) => spread(xs) > SpreadGate }.keys.toSeq, resampled)
     // a sample is DIRTY when any instrument attributes host
     // interference to it: external cpu / steal (contended), a
     // degraded surrounding calibration (the round-13 signature:
@@ -444,8 +234,8 @@ object Bench {
     // samples are clean and cgn-warm (enough evidence to discard it).
     def cold(name: String, xs: Vector[Sample], i: Int): Boolean = {
       val s = xs(i)
-      s.d.cgN > 5 || (i == 0 && xs.indices.count(j =>
-        j > 0 && xs(j).sec > 0 && !dirty(name, xs(j)) && xs(j).d.cgN <= 5) >= 3)
+      s.d.codegens > 5 || (i == 0 && xs.indices.count(j =>
+        j > 0 && xs(j).sec > 0 && !dirty(name, xs(j)) && xs(j).d.codegens <= 5) >= 3)
     }
     // contention-aware re-sample (round-12 verdict #4, widened to the
     // calibration instrument in round 14): spread alone cannot catch
@@ -457,20 +247,10 @@ object Bench {
     def cleanWarmSecs(n: String, xs: Vector[Sample]): Seq[Double] =
       xs.indices.filter(i => xs(i).sec > 0 && !dirty(n, xs(i)) && !cold(n, xs, i))
         .map(xs(_).sec)
-    for (pass <- 1 to 2) {
-      val needy = acc.filter { case (n, xs) =>
+    for (_ <- 1 to 2)
+      resample(acc.filter { case (n, xs) =>
         xs.nonEmpty && cleanWarmSecs(n, xs).size < 2
-      }.keys.toSeq
-      if (needy.nonEmpty) {
-        val load = osBean.getSystemLoadAverage
-        loads += load
-        for (name <- needy; fn <- byName.get(name)) {
-          loadResampled += name
-          record(name, fn, load)
-        }
-        calSeq += calibrate()
-      }
-    }
+      }.keys.toSeq, loadResampled)
     // GLOBAL-min anchor (round-15 verdict #1): contention can only
     // ever STRETCH a sample — nothing makes one run FASTER than the
     // code — so the fastest sample of a query, DIRTY OR NOT, is a
@@ -492,23 +272,13 @@ object Bench {
     // only fresh quiet samples can corroborate the fast evidence
     val consensusResampled = collection.mutable.LinkedHashSet[String]()
     val consensusPasses = sys.env.getOrElse("SPARK_GRAFT_CONSENSUS", "3").toInt
-    for (_ <- 1 to consensusPasses) {
-      val needy = acc.filter { case (n, xs) =>
+    for (_ <- 1 to consensusPasses)
+      resample(acc.filter { case (n, xs) =>
         val clean = cleanWarmSecs(n, xs)
         val gmin = globalMin(xs)
         (clean.size >= 2 && clean.max / clean.min > 1.5 && !hasConsensus(clean)) ||
           (clean.nonEmpty && gmin > 0 && clean.min > 1.5 * gmin)
-      }.keys.toSeq
-      if (needy.nonEmpty) {
-        val load = osBean.getSystemLoadAverage
-        loads += load
-        for (name <- needy; fn <- byName.get(name)) {
-          consensusResampled += name
-          record(name, fn, load)
-        }
-        calSeq += calibrate()
-      }
-    }
+      }.keys.toSeq, consensusResampled)
     // official per-query value: the median over the FIRST pool (warm >
     // clean > all samples) holding >= 2 samples anchored at the GLOBAL
     // min — samples beyond 1.5x the fastest observed run are burst
@@ -527,8 +297,11 @@ object Bench {
     // official record carries vs_best deltas, making a contended run
     // self-adjudicating (a query at vs_best >> 1 with `contended`
     // unset is a REAL regression; one with the flag is a noisy slot).
-    // per-SF history: a dev run at another scale factor must not
-    // pollute the official sf0.1 bests with incomparable values.
+    // per-(SF, cores) history: a dev run at another scale factor or
+    // core count must not pollute the official 32-core sf0.1 bests with
+    // incomparable values (a 4-core run against 32-core minima flagged
+    // and re-ran every gate as a vs_best outlier). The 32-core files
+    // keep their names; any other core count adds a `_c<cores>` suffix.
     // The path resolves against the repo's bench root — CWD only when
     // tools/bench actually exists there, else SPARK_GRAFT_BENCH_ROOT —
     // so a bench launched elsewhere reads the real history instead of
@@ -537,8 +310,10 @@ object Bench {
     val benchRoot = sys.env.get("SPARK_GRAFT_BENCH_ROOT")
       .getOrElse(".")
     val minimaDir = new java.io.File(benchRoot, "tools/bench")
+    val cores = spark.sparkContext.defaultParallelism
     val minimaPath = new java.io.File(minimaDir,
-      if (sfName == "sf0.1") "minima.json" else s"minima_$sfName.json").getPath
+      Seq(Some("minima"), Some(sfName).filter(_ != "sf0.1"), Some(s"c$cores").filter(_ != "c32"))
+        .flatten.mkString("_") + ".json").getPath
     val priorMinima: Map[String, Double] =
       try {
         val src = scala.io.Source.fromFile(minimaPath, "UTF-8")
@@ -594,13 +369,7 @@ object Bench {
     }
     val outliers0 = bestOutliers()
     if (outliers0.nonEmpty) {
-      val load = osBean.getSystemLoadAverage
-      loads += load
-      for (name <- outliers0; fn <- byName.get(name)) {
-        outlierResampled += name
-        record(name, fn, load)
-      }
-      calSeq += calibrate()
+      resample(outliers0, outlierResampled)
       val rec = officialPools()
       samples = rec._1; contendedQ = rec._2
       results = samples.map { case (name, xs) => name -> median(xs) }
@@ -648,14 +417,19 @@ object Bench {
       "\"" + k + "\":[" + xs.map(x => fmt.format(f(x))).mkString(",") + "]"
     }.mkString("{", ",", "}")
     val loadArr = loads.map(x => f"$x%.2f").mkString("[", ",", "]")
-    val resampledArr = resampled.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val loadResampledArr = loadResampled.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.map(_._2).filter(_ >= 0).sum
     val calMin = f"""[${calBaseline._1}%.3f,${calBaseline._2}%.3f]"""
+    def perSample(f: Sample => Long) = acc.toSeq.map { case (k, xs) =>
+      "\"" + k + "\":[" + xs.map(f).mkString(",") + "]"
+    }.mkString("{", ",", "}")
+    def flags(f: (String, Vector[Sample], Int) => Boolean) = acc.toSeq.map { case (k, xs) =>
+      "\"" + k + "\":[" + xs.indices.map(i => if (f(k, xs, i)) "1" else "0").mkString(",") + "]"
+    }.mkString("{", ",", "}")
+    def names(xs: Iterable[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
     val samplesLine =
-      s"""{"metric":"samples","samples":$rawAll,"sample_loads":${diagMap(_.load, "%.1f")},"sample_gc":${diagMap(_.d.gcSec, "%.2f")},"sample_steal":${diagMap(_.d.stealSec, "%.2f")},"sample_extcpu":${diagMap(_.d.extCpuSec, "%.2f")},"sample_calib":${diagMap(_.calBefore._1, "%.3f")},"sample_calibmem":${diagMap(_.calBefore._2, "%.3f")},"sample_canary":${diagMap(_.canP50, "%.4f")},"sample_canarymem":${diagMap(_.canMemP50, "%.4f")},"sample_tasksec":${diagMap(_.d.taskSec, "%.1f")},"sample_busywall":${diagMap(_.d.busyWall, "%.2f")},"sample_cgn":${acc.toSeq.map { case (k, xs) => "\"" + k + "\":[" + xs.map(_.d.cgN.toString).mkString(",") + "]" }.mkString("{", ",", "}")},"sample_jit":${diagMap(_.d.jitSec, "%.2f")},"sample_cpusec":${diagMap(_.d.cpuSec, "%.1f")},"sample_tasks":${acc.toSeq.map { case (k, xs) => "\"" + k + "\":[" + xs.map(_.d.tasks.toString).mkString(",") + "]" }.mkString("{", ",", "}")},"sample_jobs":${acc.toSeq.map { case (k, xs) => "\"" + k + "\":[" + xs.map(_.d.jobsN.toString).mkString(",") + "]" }.mkString("{", ",", "}")},"sample_rowsin":${acc.toSeq.map { case (k, xs) => "\"" + k + "\":[" + xs.map(_.d.rowsIn.toString).mkString(",") + "]" }.mkString("{", ",", "}")},"sample_maxtask":${diagMap(_.d.maxTask, "%.2f")},"sample_dirty":${acc.toSeq.map { case (k, xs) => "\"" + k + "\":[" + xs.map(x => if (dirty(k, x)) "1" else "0").mkString(",") + "]" }.mkString("{", ",", "}")},"sample_cold":${acc.toSeq.map { case (k, xs) => "\"" + k + "\":[" + xs.indices.map(i => if (cold(k, xs, i)) "1" else "0").mkString(",") + "]" }.mkString("{", ",", "}")},"calib_best":$calMin,"load":$loadArr,"repeats":$repeats,"heavy_repeats":$heavyRepeats,"resampled":$resampledArr,"contention_resampled":$loadResampledArr,"consensus_resampled":${consensusResampled.map("\"" + _ + "\"").mkString("[", ",", "]")},"outlier_resampled":${outlierResampled.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
-    val contendedArr = contendedQ.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val outlierArr = vsBestOutlier.map("\"" + _ + "\"").mkString("[", ",", "]")
+      s"""{"metric":"samples","samples":$rawAll,"sample_loads":${diagMap(_.load, "%.1f")},"sample_gc":${diagMap(_.d.gcSec, "%.2f")},"sample_steal":${diagMap(_.d.stealSec, "%.2f")},"sample_extcpu":${diagMap(_.d.extCpuSec, "%.2f")},"sample_calib":${diagMap(_.calBefore._1, "%.3f")},"sample_calibmem":${diagMap(_.calBefore._2, "%.3f")},"sample_canary":${diagMap(_.canP50, "%.4f")},"sample_canarymem":${diagMap(_.canMemP50, "%.4f")},"sample_tasksec":${diagMap(_.p.taskSec, "%.1f")},"sample_busywall":${diagMap(_.p.busyWall, "%.2f")},"sample_cgn":${perSample(_.d.codegens)},"sample_jit":${diagMap(_.d.jitSec, "%.2f")},"sample_cpusec":${diagMap(_.p.cpuSec, "%.1f")},"sample_tasks":${perSample(_.p.tasks)},"sample_jobs":${perSample(_.p.jobs)},"sample_rowsin":${perSample(s => s.p.inputRows + s.p.shuffleRows)},"sample_maxtask":${diagMap(_.p.maxTaskSec, "%.2f")},"sample_dirty":${flags((k, xs, i) => dirty(k, xs(i)))},"sample_cold":${flags(cold)},"calib_best":$calMin,"load":$loadArr,"repeats":$repeats,"heavy_repeats":$heavyRepeats,"resampled":${names(resampled)},"contention_resampled":${names(loadResampled)},"consensus_resampled":${names(consensusResampled)},"outlier_resampled":${names(outlierResampled)}}"""
+    val contendedArr = names(contendedQ)
+    val outlierArr = names(vsBestOutlier)
     val fullLine =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"contended":$contendedArr,"vs_best":$vsBestJson,"vs_best_outlier":$outlierArr,"best_total":$bestTotal%.3f,"repeats":$repeats,"sf":"$sfDir"}"""
     // 1. the complete record goes to FILES — the canonical per-query

@@ -8,12 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.obs.Session(4)
     def dump(name: String, q: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit = {
       println(s"==== $name ====")
       println(q(spark, d).queryExecution.explainString(

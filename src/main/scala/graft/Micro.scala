@@ -1,14 +1,23 @@
 package graft
 
 import scala.util.Random
-import org.apache.spark.sql.SparkSession
 import graft.index.NearestIndex
 
-/** Scratch micro-benchmarks (not part of the library surface):
-  * index probe path + targeted query timings with repetition, to
-  * separate operator cost from JVM/run-to-run noise. */
+/** Scratch micro-benchmarks (not part of the library surface), no
+  * query execution; per-query timings are [[Profile]]'s job.
+  *
+  * Usage: graft.Micro                          nearest-index kernel, synthetic
+  *        graft.Micro realprobe <sfDir>        the same kernel over sf intervals
+  *        graft.Micro codec [n=1000] [threads=1]  JDK codec fixture encoders */
 object Micro {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = args.headOption match {
+    case Some("realprobe") => realprobe(args(1))
+    case Some("codec") =>
+      codec(args.lift(1).map(_.toInt).getOrElse(1000), args.lift(2).map(_.toInt).getOrElse(1))
+    case _ => kernel()
+  }
+
+  private def kernel(): Unit = {
     val rnd = new Random(7)
     val n = 150000
     val s = Array.fill(n)(rnd.nextInt(1000000).toLong)
@@ -23,128 +32,59 @@ object Micro {
       }
       println(s"pass $warm: ${(System.nanoTime() - t0) / 1e6} ms for 4000 probes (sink=$sink)")
     }
+  }
 
-    if (args.contains("realprobe")) {
-      // probe the REAL derived data outside Spark to isolate index cost
-      val spark0 = SparkSession.builder().master("local[8]")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark0.sparkContext.setLogLevel("ERROR")
-      val d = args.head
-      val a = Tables.ivA(spark0, d).collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      val b = Tables.ivBSample(spark0, d).collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      val byContig = a.groupBy(_._1).map { case (c, rows) =>
-        c -> NearestIndex.build(rows.map(_._2), rows.map(_._3),
-          Array.range(0, rows.length).map(_.toLong), Array.range(0, rows.length))
-      }
-      var sink2 = 0L; var calls = 0L
-      for (pass <- 0 until 2) {
-        val t0 = System.nanoTime()
-        b.foreach { case (c, qs, qe) =>
-          byContig(c).nearestK(qs, qe, 1, includeOverlaps = false) { (p, dd) =>
-            sink2 += p + dd; calls += 1
-          }
-        }
-        println(f"realprobe pass $pass: ${(System.nanoTime() - t0) / 1e6}%.1f ms for ${b.length} probes, $calls emits (sink=$sink2)")
-      }
-      spark0.stop()
-      return
+  /** The kernel over the REAL derived intervals, collected out of Spark
+    * to isolate index cost. */
+  private def realprobe(d: String): Unit = {
+    val spark = graft.obs.Session(8)
+    val a = Tables.ivA(spark, d).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    val b = Tables.ivBSample(spark, d).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    spark.stop()
+    val byContig = a.groupBy(_._1).map { case (c, rows) =>
+      c -> NearestIndex.build(rows.map(_._2), rows.map(_._3),
+        Array.range(0, rows.length).map(_.toLong), Array.range(0, rows.length))
     }
+    var sink = 0L; var calls = 0L
+    for (pass <- 0 until 2) {
+      val t0 = System.nanoTime()
+      b.foreach { case (c, qs, qe) =>
+        byContig(c).nearestK(qs, qe, 1, includeOverlaps = false) { (p, dd) =>
+          sink += p + dd; calls += 1
+        }
+      }
+      println(f"realprobe pass $pass: ${(System.nanoTime() - t0) / 1e6}%.1f ms for ${b.length} probes, $calls emits (sink=$sink)")
+    }
+  }
 
-    if (args.nonEmpty) {
-      val b0 = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled",
-          sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-        .config("spark.ui.enabled", "false")
-      // extra confs for A/B probes: SPARK_GRAFT_CONF="k=v;k=v"
-      val b = sys.env.get("SPARK_GRAFT_CONF").map(_.split(";").toSeq).getOrElse(Seq.empty)
-        .foldLeft(b0) { (acc, kv) =>
-          val Array(k, v) = kv.split("=", 2); acc.config(k, v)
-        }
-      val spark = b.getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      val d = args.head
-      val names = args.drop(1)
-      val qs = SparkEntry.queries
-      // job/stage counters: structural overhead shows up as scheduling
-      // volume long before it shows up in task time at gate scale
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val stages = new java.util.concurrent.atomic.AtomicInteger
-      val stageTime = new java.util.concurrent.ConcurrentHashMap[String, Long]()
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); stages.addAndGet(j.stageInfos.size)
-          if (sys.env.contains("SPARK_GRAFT_JOBLOG")) {
-            val names = j.stageInfos.map(si =>
-              si.name.takeWhile(_ != '(').trim).mkString("|")
-            println(f"  [job ${j.jobId}%3d start t=${j.time % 1000000}%6d stages=${j.stageInfos.size} ${names.take(120)}")
-          }
-        }
-        override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-          if (sys.env.contains("SPARK_GRAFT_JOBLOG"))
-            println(f"  [job ${j.jobId}%3d end   t=${j.time % 1000000}%6d]")
-        override def onStageCompleted(
-            s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val info = s.stageInfo
-          val key =
-            if (sys.env.contains("SPARK_GRAFT_STAGEDETAIL"))
-              f"stage ${info.stageId}%4d tasks=${info.numTasks}%3d " +
-                info.name.takeWhile(_ != '(').trim
-            else info.name.takeWhile(_ != '(').trim + " @ " +
-              info.details.linesIterator.toSeq.lift(1).getOrElse("").trim
-          stageTime.merge(key, info.taskMetrics.executorRunTime, (a, b) => a + b)
-        }
-      })
-      for (rep <- 0 until 2; nm <- names) {
-        jobs.set(0); stages.set(0); stageTime.clear()
-        if (rep == 1 && sys.env.contains("SPARK_GRAFT_RULETIME"))
-          org.apache.spark.sql.catalyst.rules.RuleExecutor.resetMetrics()
-        if (sys.env.contains("SPARK_GRAFT_PHASES")) {
-          var t = System.nanoTime()
-          def lap(label: String): Unit = {
-            val now = System.nanoTime()
-            println(f"    phase $label: ${(now - t) / 1e9}%.2f s")
-            t = now
-          }
-          val df = qs(nm)(spark, d); lap("construct")
-          df.queryExecution.optimizedPlan; lap("analyze+optimize")
-          df.queryExecution.executedPlan; lap("physical-plan")
-          df.write.format("noop").mode("overwrite").save(); lap("execute")
-        }
-        val t0 = System.nanoTime()
-        val dfq = qs(nm)(spark, d)
-        dfq.write.format("noop").mode("overwrite").save()
-        println(f"$nm rep$rep: ${(System.nanoTime() - t0) / 1e9}%.2f s  " +
-          s"jobs=${jobs.get} stages=${stages.get}")
-        if (rep == 1 && sys.env.contains("SPARK_GRAFT_FINALPLAN")) {
-          val s = dfq.queryExecution.executedPlan.toString
-          println(s"  finalplan: reused=${s.linesIterator.count(_.contains("ReusedExchange"))} " +
-            s"exchanges=${s.linesIterator.count(l => l.contains("Exchange") && !l.contains("Reused"))}")
-          java.nio.file.Files.write(java.nio.file.Paths.get(s"/tmp/finalplan_$nm.txt"),
-            s.getBytes)
-        }
-        if (rep == 1) {
-          import scala.jdk.CollectionConverters._
-          stageTime.asScala.toSeq.sortBy(-_._2).take(12).foreach { case (k, ms) =>
-            println(f"    ${ms / 1000.0}%7.1f task-s  $k")
-          }
-          if (sys.env.contains("SPARK_GRAFT_RULETIME")) {
-            val dump = org.apache.spark.sql.catalyst.rules.RuleExecutor.dumpTimeSpent()
-            println("  --- top rules by effective time ---")
-            dump.linesIterator.toSeq
-              .filter(_.contains("org.apache.spark"))
-              .map { l =>
-                val parts = l.trim.split("\\s+")
-                (parts.headOption.getOrElse(""), parts.lift(1).map(_.toDouble).getOrElse(0.0))
-              }
-              .sortBy(-_._2).take(15)
-              .foreach { case (r, t) => println(f"    ${t / 1e6}%8.1f ms  $r") }
-          }
-        }
+  /** Per-call timings of the JDK codec fixture encoders and
+    * decoders (the mm_real_codecs hot loop), no Spark session. */
+  private def codec(n: Int, threads: Int): Unit = {
+    def time(tag: String)(f: Int => Unit): Unit = {
+      val t0 = System.nanoTime()
+      val ts = (0 until threads).map { _ =>
+        val th = new Thread(() => {
+          var i = 0
+          while (i < n) { f(i); i += 1 }
+        })
+        th.start(); th
       }
-      spark.stop()
+      ts.foreach(_.join())
+      println(f"$tag%12s ${(System.nanoTime() - t0) / 1e6 / n}%8.3f ms/call (x$threads threads)")
     }
+    val C = graft.multimodal.Multimodal.JdkCodec
+    (1 to 50).foreach { _ =>
+      C.encodePng(64, 48); C.encodeWav(800); C.encodeMp4(1920, 1080, 5000)
+      C.imageDims(C.encodePng(64, 48)); C.audioDurationMs(C.encodeWav(800))
+    }
+    val png = C.encodePng(64, 48)
+    val wav = C.encodeWav(800)
+    time("png")(i => C.encodePng((i % 64) + 1, (i % 48) + 1))
+    time("wav")(i => C.encodeWav((i % 800) + 8))
+    time("mp4")(i => C.encodeMp4((i % 3840) + 16, (i % 2160) + 16, i % 10000 + 40))
+    time("dec-png")(_ => C.imageDims(png))
+    time("dec-wav")(_ => C.audioDurationMs(wav))
   }
 }

@@ -1,35 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.obs.Json
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // large-plan workload tuning: constraint propagation is
-      // quadratic in plan width and cost the annotate pipeline ~2 s
-      // of driver time per invocation (optimizer + AQE re-planning);
-      // every gate query is oracle-verified under this setting
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      // with 32 reduce partitions the bypass-merge shuffle writer
-      // opens one file per (map task x partition) — ~45 executor-
-      // seconds of file handling per annotate run at bench scale
-      // (stack-sampled: DiskBlockObjectWriter.open + KeyLock
-      // contention + NIO concat). Threshold 0 selects the
-      // tungsten-sort writer: one spill file per map task
-      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-      // suite-sized codegen compile cache (see Bench.scala note):
-      // the default 100 entries evicted the annotate family's >100
-      // generated classes between queries, recompiling per run
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.obs.Session(4, "WARN")
     new java.io.File(outDir).mkdirs()
     // local-iteration subset knob (same contract as Bench); unset = all
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
@@ -47,20 +24,8 @@ object Verify {
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.q(k)}: ${Json.q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

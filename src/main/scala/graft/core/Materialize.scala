@@ -32,7 +32,8 @@ object Materialize {
 
   /** Materialize eagerly and return the persisted RDD for explicit
     * release (`rdd.unpersist(false)` — safe once superseded, i.e. the
-    * RDD is never read again). Checkpoint rather than a plain
+    * RDD is never read again) and the row count the materializing job
+    * computed. Checkpoint rather than a plain
     * persist: it truncates the RDD LINEAGE too, so iterative callers
     * don't grow task binaries linearly with the round count (each
     * round's shuffle-dependency chain would otherwise reference the
@@ -46,9 +47,9 @@ object Materialize {
     * loudly): executor loss recovers by re-reading the files, and a
     * superseded generation's `unpersist` releases only the block
     * cache, never the durable copy. */
-  def handle(df: DataFrame, reliable: Boolean = false): (DataFrame, RDD[Row]) = {
+  def handle(df: DataFrame, reliable: Boolean = false): (DataFrame, RDD[Row], Long) = {
     val rdd = df.rdd
-    if (reliable) {
+    val n = if (reliable) {
       require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
         "reliable materialization needs sc.setCheckpointDir(<durable fs path>)")
       // persist first so the checkpoint job reads the computed blocks
@@ -60,6 +61,6 @@ object Materialize {
       rdd.localCheckpoint()
       rdd.count()
     }
-    (df.sparkSession.createDataFrame(rdd, df.schema), rdd)
+    (df.sparkSession.createDataFrame(rdd, df.schema), rdd, n)
   }
 }

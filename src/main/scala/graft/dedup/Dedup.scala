@@ -157,7 +157,7 @@ object Dedup {
       .where(col("hamming") <= maxHamming)
       // the distinct shuffles BEFORE it aggregates: a map-side partial
       // distinct held a task's whole candidate expansion in one hash map
-      // (116 MB peak task memory on the 16-bit SkewProbe corpus; 52 MB
+      // (116 MB peak task memory on the 16-bit skew-probe corpus; 52 MB
       // with this exchange). No explicit width here: AQE coalesces the
       // pairs to a few partitions when they are few, and consumers that
       // keep the partitioning (duplicateClusters) pay per task.
@@ -365,11 +365,10 @@ object Dedup {
     // and SQL's null === null is null — a null-id vertex would
     // silently vanish after the first hop rather than cluster, so the
     // documented contract is "every vertex of a fully non-null pair".
-    val (p0, p0Rdd) = graft.core.Materialize.handle(
+    val (p0, _, nPairs) = graft.core.Materialize.handle(
       pairs.select(col("id1").cast("long").as("a"), col("id2").cast("long").as("b"))
         .where(col("a").isNotNull && col("b").isNotNull),
       reliable)
-    val sym = p0.unionByName(p0.select(col("b").as("a"), col("a").as("b")))
     // SELF-LOOPS fold the min(own, neighbors) step into the
     // neighborhood aggregate itself, so a propagation hop is ONE join
     // + ONE aggregate instead of join + groupBy + join-back (round 16:
@@ -387,11 +386,17 @@ object Dedup {
     // taskSec ~0.2 of a 1.2 s wall). Derive the width from the edge
     // count instead: ~64k 16-byte edge rows per partition stays far
     // below spill territory, and any cluster-scale edge list saturates
-    // the session's full parallelism. The count job is free — the
-    // materialization above already computed and cached the blocks.
+    // the session's full parallelism. The count is free — the
+    // materialization above computed it. Every pre-loop stage runs at
+    // this width too: the materialized pairs keep the CALLER's
+    // partition count (33-partition SimHash pairs gave three 66-task
+    // stages over ~600 edges), so they coalesce to `w` before the
+    // symmetric edge list and the initial labels read them.
     val w = math.min(
       pairs.sparkSession.sparkContext.defaultParallelism.toLong,
-      p0Rdd.count() / 65536L + 1L).toInt
+      nPairs / 65536L + 1L).toInt
+    val pw = p0.coalesce(w)
+    val sym = pw.unionByName(pw.select(col("b").as("a"), col("a").as("b")))
     val edges = sym
       .unionByName(sym.select(col("a")).distinct()
         .select(col("a"), col("a").as("b")))
@@ -409,7 +414,7 @@ object Dedup {
     // durable RDD.checkpoint (sc.setCheckpointDir required): on a real
     // cluster a local checkpoint dies WITH a lost executor — and its
     // truncated lineage cannot recompute — killing the whole loop.
-    var (labels, labelsRdd) = graft.core.Materialize.handle(
+    var (labels, labelsRdd, _) = graft.core.Materialize.handle(
       sym.select(col("a").as("id")).distinct().withColumn("lbl", col("id")),
       reliable)
     // what the round's hops READ: the previous round's labels composed
@@ -456,7 +461,7 @@ object Dedup {
             min(when(col("b") === col("a"), col("lbl"))).as("lbl0")))
           .withColumnRenamed("a", "id")
       }
-      val (mat, matRdd) = graft.core.Materialize.handle(
+      val (mat, matRdd, _) = graft.core.Materialize.handle(
         next.select(col("id"), col("lbl"), col("lbl0")), reliable)
       changed = mat.where(col("lbl") =!= col("lbl0")).count()
       labelsRdd.unpersist(false)

@@ -331,7 +331,7 @@ case class BroadcastIntervalJoinExec(
 }
 
 /** Session-extensions entry point:
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
+  * `SparkSession.Builder.withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.plans.GraftExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   def apply(e: SparkSessionExtensions): Unit =

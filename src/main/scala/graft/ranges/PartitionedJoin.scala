@@ -62,7 +62,7 @@ object PartitionedJoin {
   private val SampleRowCap = 1 << 16
   private val DefaultMinSliceRows = 131072L
 
-  /** The auto decision, exposed for [[graft.SaltProbe]] and the
+  /** The auto decision, exposed for the `salt` case of [[graft.Probe]] and the
     * decision spec; see the conf scaladoc above. */
   private[graft] def decideSalt(
       build: DataFrame, probe: DataFrame, contigCol: String): Int = {

@@ -35,7 +35,7 @@ object IntervalStreams {
     // executeCollect keeps the build rows as InternalRows: the
     // Dataset.collect() external-Row decode (one GenericRow + boxed
     // Long pair + String per interval) was ~half the static-index
-    // phase of the s8 gate (round 18, StreamProbe: idx 0.7 s warm of
+    // phase of the s8 gate (round 18, stream probe: idx 0.7 s warm of
     // a 1.8 s wall). Only the contig key materializes as a String.
     val rows = intervals.select(
       col(cols.contig).cast("string"), col(cols.start).cast("long"),

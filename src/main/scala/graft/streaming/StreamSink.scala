@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.StructType
   * DRIVER (one LocalTableScan copy that lives for the session), so a
   * gate emitting ~150k annotated rows paid a driver-side round trip
   * inside `addBatch` and re-served the result from a single-threaded
-  * local scan (StreamProbe, s8 shape warm: addBatch 0.92 s / read
+  * local scan (stream probe, s8 shape warm: addBatch 0.92 s / read
   * 0.26 s with the memory sink vs 0.59 / 0.11 through foreachBatch).
   * A foreachBatch sink is exactly as real a streaming sink — the
   * micro-batch engine, offset/commit logs, watermarks and state

@@ -96,7 +96,7 @@ class BamGoldenSuite extends SparkSpec {
     // IDENTICAL in every layout (no lost, duplicated, or torn records).
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(
       spark.sessionState.newHadoopConf()).getRawFileSystem
-    val tmp = "/tmp/graft_test_bam_split"
+    val tmp = tempDir("bam_split")
     fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
     fs.mkdirs(new org.apache.hadoop.fs.Path(tmp))
     for (f <- Seq("ovl.bam", "overlapping-pairs.bam"))
@@ -178,7 +178,7 @@ class BamGoldenSuite extends SparkSpec {
       both(0).getMap[String, String](2)("MD") == "Z:42")
     // this library's own BAMs store no bases: seq/qual read back null
     val own = {
-      val tmp = "/tmp/graft_test_bam_noseq"
+      val tmp = tempDir("bam_noseq")
       import spark.implicits._
       val refs = Seq(("MT", 16569))
       graft.sources.Bam.writeShards(
@@ -197,7 +197,7 @@ class BamGoldenSuite extends SparkSpec {
     // the mismatch and the planner scans the file whole instead.
     val hconf = spark.sessionState.newHadoopConf()
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(hconf).getRawFileSystem
-    val tmp = "/tmp/graft_test_bam_stale"
+    val tmp = tempDir("bam_stale")
     fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
     fs.mkdirs(new org.apache.hadoop.fs.Path(tmp))
     org.apache.hadoop.fs.FileUtil.copy(

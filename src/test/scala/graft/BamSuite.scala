@@ -111,7 +111,7 @@ class BamSuite extends SparkSpec {
       ("chr2", 300L, 0, "8M", 10, "c"),
     ).toDF("chrom", "start", "flags", "cigar", "mapping_quality", "read_name")
       .repartition(2)
-    val dir = sys.props("java.io.tmpdir") + "/graft_bam_suite"
+    val dir = tempDir("bam_suite")
     Bam.writeShards(df, dir, Seq(("chr1", 1000000), ("chr2", 1000000)))
     val back = spark.read.format("graft.sources.BamDataSource")
       .option("path", dir).load()

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.sources.PositionCache
@@ -16,7 +14,7 @@ import graft.vep.CacheBuilder
 class CacheBuilderSuite extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(tag: String) = Files.createTempDirectory(s"graft_cb_$tag").toString
+  private def tmp(tag: String) = tempDir(s"cb_$tag")
 
   test("positional entity: main chroms shard individually, other contigs pool, chroms go bare") {
     val out = tmp("layout")

@@ -86,7 +86,7 @@ class CoordPropagationSuite extends SparkSpec {
   }
 
   test("the tag survives collection to parquet and back") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_coord_rt").toString
+    val dir = tempDir("coord_rt")
     Ranges.merge(iv(marked = true)).write.mode("overwrite").parquet(dir)
     assert(Coord.isZeroBased(spark.read.parquet(dir), "pos_start"))
   }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.vep.Annotate
@@ -17,7 +15,7 @@ class DimCacheSuite extends SparkSpec {
   import spark.implicits._
 
   private def writeDir(tag: String): String = {
-    val dir = Files.createTempDirectory(s"graft_dim_$tag").toString
+    val dir = tempDir(s"dim_$tag")
     Seq((tag, 1L), (tag + "_b", 2L)).toDF("name", "value")
       .write.mode("overwrite").parquet(dir)
     dir

@@ -377,7 +377,7 @@ class MlSuite extends SparkSpec {
       }
       assert(e.getMessage.contains("setCheckpointDir"))
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val dir = tempDir("ckpt")
     spark.sparkContext.setCheckpointDir(dir)
     val expected = Dedup.duplicateClusters(pairs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -398,6 +398,23 @@ class MlSuite extends SparkSpec {
     val pairs = (1L until 100L).map(i => (i, i + 1)).toDF("id1", "id2")
     val got = Dedup.duplicateClusters(pairs, maxRounds = 8).collect()
     assert(got.length == 100 && got.forall(_.getLong(1) == 1L))
+  }
+
+  test("duplicate clusters: pre-loop stages run at the loop width, not the input's") {
+    import graft.dedup.Dedup
+    // 100 pairs in 64 partitions: ten stars, hub 1000 + k over leaves
+    // k, k + 10, ..., k + 90
+    val pairs = spark.range(0, 100, 1, 64)
+      .select(col("id").as("id1"), (col("id") % 10 + 1000).as("id2"))
+    val (got, p) = graft.obs.Profiler.measure(spark)(Dedup.duplicateClusters(pairs).collect())
+    assert(got.map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      ((0L until 100L).map(i => i -> i % 10) ++ (0L until 10L).map(k => (1000 + k) -> k)).toMap)
+    // only the input materialization (the first stage) runs at the
+    // input's 64 partitions; every later stage fits the session width
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val wide = p.stageList.filter(_.tasks > width)
+    assert(wide.map(s => (s.id, s.tasks)) == Seq((p.stageList.head.id, 64)),
+      s"stages wider than $width: ${wide.map(s => s"${s.id}:${s.tasks} ${s.name}")}")
   }
 
   test("duplicate clusters: runaway guard fails loudly") {

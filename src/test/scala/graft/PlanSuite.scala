@@ -1,7 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.core.Parallelism
 import graft.pileup.Pileup
 import graft.ranges.Ranges
@@ -44,22 +42,13 @@ class PlanSuite extends SparkSpec {
     }
   }
 
-  /** Jobs started while `body` runs, counted by a listener between two
-    * bus drains so no earlier job's event lands in the count. */
-  private def jobsStarted(body: => Any): Int = {
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    drainListenerBus()
-    spark.sparkContext.addSparkListener(listener)
-    try { body; drainListenerBus(); n.get }
-    finally spark.sparkContext.removeSparkListener(listener)
-  }
+  /** Jobs `body` ran, from the query profile scoped to it. */
+  private def jobsStarted(body: => Any): Int =
+    graft.obs.Profiler.measure(spark)(body)._2.jobs
 
   test("Parallelism.ensure decides from the plan: building a pipeline runs no job") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("plan_jobs").toString
+    val dir = tempDir("plan_jobs")
     (0 until 400).map(i => ("c" + (i % 2), 1L + (i * 7L) % 3000, 0, "30M5D20M", 60))
       .toDF("chrom", "start", "flags", "cigar", "mapping_quality")
       .coalesce(1).write.parquet(dir + "/reads")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,7 +14,7 @@ import graft.vep.{Annotate, VepOptions}
   * directory, the SQL confs, the options — must miss instead. */
 class PlanTemplateSuite extends SparkSpec {
 
-  private val root = Files.createTempDirectory("graft_tpl").toString
+  private val root = tempDir("tpl")
 
   /** A context in the shape the fixture tables derive from. `salt`
     * moves the transcript, regulatory and motif keys, so two contexts

@@ -104,7 +104,7 @@ class PropertySuite extends SparkSpec {
     // 90% of probe rows on one contig. At spec scale the round-17
     // auto trigger (bytes-ratio gate + per-salt work floor) correctly
     // picks S = 1 — salting 500 rows never pays; SaltDecisionSuite
-    // pins the S > 1 decision with a lowered floor and graft.SaltProbe
+    // pins the S > 1 decision with a lowered floor and `graft.Probe salt`
     // pins it at real scale. This test pins RESULT equality of the
     // auto path against the broadcast path on a skewed fixture.
     val hotRows = (0 until 500).map { i =>
@@ -267,7 +267,7 @@ class PropertySuite extends SparkSpec {
       val s = 1L + r.nextInt(3200)
       ("c" + r.nextInt(2), s, s + r.nextInt(400), i.toLong)
     }
-    val dir = java.nio.file.Files.createTempDirectory("depth_targets").toString
+    val dir = tempDir("depth_targets")
     readRows.toDF("chrom", "start", "flags", "cigar", "mapping_quality")
       .coalesce(1).write.parquet(dir + "/reads")
     targetRows.toDF("contig", "pos_start", "pos_end", "id").coalesce(1).write.parquet(dir + "/targets")

@@ -9,7 +9,7 @@ import graft.ranges.PartitionedJoin
   * regressed in round 16, S > 1 on the hot-contig shape the salt
   * lever exists for. The per-salt work floor is lowered via
   * `spark.bio.partitioned.saltMinSliceRows` so the shapes fit in a
-  * unit test; `graft.SaltProbe` pins the same decisions at the
+  * unit test; `graft.Probe salt` pins the same decisions at the
   * default floor on real-scale fixtures. */
 class SaltDecisionSuite extends SparkSpec {
 

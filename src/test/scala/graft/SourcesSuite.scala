@@ -20,7 +20,7 @@ class SourcesSuite extends SparkSpec {
   }
 
   test("DSv2 VCF source reads written lines with the declared schema") {
-    val path = "/tmp/graft_test_vcf_dsv2"
+    val path = tempDir("vcf_dsv2")
     writeVcf(path)
     val back = spark.read.format("graft.sources.VcfDataSource")
       .option("path", path).load()
@@ -42,7 +42,7 @@ class SourcesSuite extends SparkSpec {
       ("0", 200L, 200L, "rs2", "C/T", 0.1),
       ("1", 100L, 100L, "rs3", "G/A", 0.9))
       .toDF("chrom", "start", "end", "variation_name", "allele_string", "af")
-    val path = "/tmp/graft_test_kvcache"
+    val path = tempDir("kvcache")
     PositionCache.write(cache, path)
     val hit = PositionCache.lookup(PositionCache.open(spark, path), "chr0", 200L)
     assert(hit.collect().map(_.getAs[String]("variation_name")).toSeq == Seq("rs2"))
@@ -62,7 +62,7 @@ class SourcesSuite extends SparkSpec {
     val df = (1 to 500).map(i => ("1", i.toLong, i.toLong, s"v$i", "A", "G"))
       .toDF("chrom", "start", "end", "id", "ref", "alt")
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    val path = "/tmp/graft_test_vcf_progress"
+    val path = tempDir("vcf_progress")
     val total = Vep.writeVcf(
       Vep.toVcfLines(df.repartition(4), Seq()), path,
       Vep.vcfHeader(Seq()), onProgress = seen.add(_), pollMs = 10)
@@ -131,7 +131,7 @@ class SourcesSuite extends SparkSpec {
       ("chr7", 100L, "rs10"),
       ("12", 200L, "rs11"))
       .toDF("chrom", "start", "variation_name")
-    val path = "/tmp/graft_test_kvcache_chr"
+    val path = tempDir("kvcache_chr")
     PositionCache.write(cache, path)
     val stored = PositionCache.open(spark, path)
     assert(stored.select("chrom").distinct().collect().map(_.getString(0)).toSet
@@ -144,7 +144,7 @@ class SourcesSuite extends SparkSpec {
   }
 
   test("chrom equality pushes into the reader (PushedFilters visible)") {
-    val path = "/tmp/graft_test_vcf_dsv2"
+    val path = tempDir("vcf_dsv2")
     writeVcf(path)
     val filtered = spark.read.format("graft.sources.VcfDataSource")
       .option("path", path).load()
@@ -159,7 +159,7 @@ class SourcesSuite extends SparkSpec {
     // only ONE chrom equality may be claimed as pushed; the second must
     // survive as a residual filter Spark re-applies, or this query
     // wrongly returns the chr0 rows (round-2/3 ADVICE)
-    val path = "/tmp/graft_test_vcf_dsv2"
+    val path = tempDir("vcf_dsv2")
     writeVcf(path)
     val df = spark.read.format("graft.sources.VcfDataSource")
       .option("path", path).load()
@@ -178,7 +178,7 @@ class SourcesSuite extends SparkSpec {
   }
 
   test("chrom IN list pushes into the reader; extra predicates stay residual") {
-    val path = "/tmp/graft_test_vcf_dsv2"
+    val path = tempDir("vcf_dsv2")
     writeVcf(path)
     val df = spark.read.format("graft.sources.VcfDataSource")
       .option("path", path).load()

@@ -1,10 +1,12 @@
 package graft
 
+import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Shared local SparkSession for all specs. */
+/** Shared local SparkSession for all specs, and one place for their
+  * on-disk fixtures. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def rows(df: DataFrame): Seq[Seq[Any]] =
@@ -15,10 +17,35 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Blocks until every event posted so far reached the listeners. */
   def drainListenerBus(): Unit =
     org.apache.spark.sql.GraftExecBridge.drainListenerBus(spark.sparkContext)
+
+  private lazy val suiteRoot = SparkSpec.runRoot.resolve(getClass.getSimpleName)
+
+  /** A fresh empty directory for one fixture, under this suite's
+    * folder of the run's temp root; afterAll deletes the folder. */
+  def tempDir(tag: String): String =
+    Files.createTempDirectory(Files.createDirectories(suiteRoot), tag + "_").toString
+
+  override def afterAll(): Unit =
+    try SparkSpec.deleteTree(suiteRoot)
+    finally super.afterAll()
 }
 
 object SparkSpec {
   private var live: SparkSession = _
+
+  /** The run's temp root. Each suite deletes its own folder, then the
+    * root once it is empty, so a run leaves nothing behind. */
+  lazy val runRoot: Path = Files.createTempDirectory("graft_spec_")
+
+  private def deleteTree(p: Path): Unit = {
+    if (Files.exists(p)) {
+      val walk = Files.walk(p)
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
+      finally walk.close()
+    }
+    try Files.deleteIfExists(runRoot)
+    catch { case _: java.nio.file.DirectoryNotEmptyException => }
+  }
 
   /** The shared session, rebuilt when a spec stopped the previous one
     * (the stopped-session eviction specs must stop a real context). */

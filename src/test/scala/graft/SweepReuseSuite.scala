@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import graft.ranges.Ranges
 
 /** Runtime regression guard for the hierarchical island sweep's
@@ -18,31 +17,15 @@ class SweepReuseSuite extends SparkSpec {
 
   test("merge materializes the full-data window once; cluster twice") {
     val n = 60000
-    val dir = java.nio.file.Files
-      .createTempDirectory("sweep_reuse").toString + "/iv"
+    val dir = tempDir("sweep_reuse") + "/iv"
     (0 until n).map { i =>
       ("c" + (i % 3), (i * 37L) % 500000L, (i * 37L) % 500000L + 40L)
     }.toDF("contig", "pos_start", "pos_end")
       .write.mode("overwrite").parquet(dir)
     val in = spark.read.parquet(dir)
-    val lock = new Object
-    var full = 0
-    val listener = new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        lock.synchronized {
-          if (e.stageInfo.taskMetrics.shuffleReadMetrics.recordsRead >= n)
-            full += 1
-        }
-    }
-    def fullStages(df: org.apache.spark.sql.DataFrame): Int = {
-      lock.synchronized { full = 0 }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        df.write.format("noop").mode("overwrite").save()
-        drainListenerBus()
-        lock.synchronized(full)
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
+    def fullStages(df: org.apache.spark.sql.DataFrame): Int =
+      graft.obs.Profiler.measure(spark)(df.write.format("noop").mode("overwrite").save())
+        ._2.stageList.count(_.shuffleRows >= n)
     val mergeStages = fullStages(Ranges.merge(in))
     assert(mergeStages == 1,
       s"merge ran $mergeStages full-data stages (hull exchange reuse lost)")

@@ -1,20 +1,26 @@
 package graft
 
+import java.util.SplittableRandom
 import scala.util.Random
-import graft.index.NearestIndex
+import graft.index.{IntervalIndexFactory, IntervalStabber, NearestIndex}
+import graft.obs.Json
 
 /** Scratch micro-benchmarks (not part of the library surface), no
   * query execution; per-query timings are [[Profile]]'s job.
   *
-  * Usage: graft.Micro                          nearest-index kernel, synthetic
-  *        graft.Micro realprobe <sfDir>        the same kernel over sf intervals
+  * Usage: graft.Micro                          nearest-index kernel, then every
+  *                                             interval-join algorithm name over
+  *                                             the uniform, longtail and hot layouts
+  *        graft.Micro realprobe <sfDir>        the same kernels over sf intervals
   *        graft.Micro codec [n=1000] [threads=1]  JDK codec fixture encoders */
 object Micro {
   def main(args: Array[String]): Unit = args.headOption match {
     case Some("realprobe") => realprobe(args(1))
     case Some("codec") =>
       codec(args.lift(1).map(_.toInt).getOrElse(1000), args.lift(2).map(_.toInt).getOrElse(1))
-    case _ => kernel()
+    case _ =>
+      kernel()
+      for (l <- Seq("uniform", "longtail", "hot")) stabbers(l, Seq(layout(l, new SplittableRandom(7))))
   }
 
   private def kernel(): Unit = {
@@ -57,6 +63,75 @@ object Micro {
       }
       println(f"realprobe pass $pass: ${(System.nanoTime() - t0) / 1e6}%.1f ms for ${b.length} probes, $calls emits (sink=$sink)")
     }
+    val probesBy = b.groupBy(_._1)
+    stabbers(new java.io.File(d).getName, a.groupBy(_._1).toSeq.sortBy(_._1).map { case (c, rows) =>
+      val q = probesBy.getOrElse(c, Array.empty)
+      Contig(rows.map(_._2), rows.map(_._3), q.map(_._2), q.map(_._3))
+    })
+  }
+
+  /** One contig's intervals `[s, e]` and probes `[qs, qe]`. */
+  private final case class Contig(s: Array[Long], e: Array[Long], qs: Array[Long], qe: Array[Long])
+
+  /** One contig of the benchmark's ranges shape: 12,500 intervals over
+    * 25 Mb and 3,750 read-like probes (100-300 bp) around 2,500 cluster
+    * centres. `uniform` intervals are 100-3,000 bp; `longtail` draws 20%
+    * of them from a Pareto tail (alpha 1.1, 1 kb up to 2 Mb); `hot` is
+    * `longtail` with 1% of the intervals spanning half the contig. */
+  private def layout(kind: String, rnd: SplittableRandom): Contig = {
+    val len = 25000000L; val n = 12500; val nq = 3750
+    val s = new Array[Long](n); val e = new Array[Long](n)
+    for (i <- 0 until n) {
+      if (kind == "hot" && rnd.nextDouble() < 0.01) {
+        s(i) = (rnd.nextDouble() * len / 2).toLong; e(i) = s(i) + len / 2
+      } else {
+        s(i) = (rnd.nextDouble() * len).toLong
+        e(i) = s(i) + (if (kind == "uniform" || rnd.nextDouble() >= 0.2) 100 + (rnd.nextDouble() * 2900).toLong
+          else math.min(2000000L, (1000.0 / math.pow(1.0 - rnd.nextDouble(), 1.0 / 1.1)).toLong))
+      }
+    }
+    val centres = Array.fill(2500)(5000 + (rnd.nextDouble() * (len - 10000)).toLong)
+    val qs = Array.fill(nq)(math.max(1L, centres(rnd.nextInt(centres.length)) +
+      ((rnd.nextDouble() + rnd.nextDouble() + rnd.nextDouble() - 1.5) * 4000).toLong))
+    Contig(s, e, qs, qs.map(_ + 100 + rnd.nextInt(200)))
+  }
+
+  /** One JSON line per interval-join algorithm name: ns per interval to
+    * build every contig's index, ns per probe to query it, and the match
+    * count, which every name must report alike. */
+  private def stabbers(layout: String, contigs: Seq[Contig]): Unit = {
+    val nIv = contigs.map(_.s.length).sum; val nQ = contigs.map(_.qs.length).sum
+    val payloads = contigs.map(c => Array.range(0, c.s.length))
+    for (algo <- IntervalIndexFactory.Names) {
+      def build(): Seq[IntervalStabber] =
+        contigs.zip(payloads).map { case (c, p) => IntervalIndexFactory.build(algo, c.s, c.e, p) }
+      def matches(ix: Seq[IntervalStabber]): Long = {
+        var m = 0L
+        for ((c, x) <- contigs.zip(ix)) {
+          var i = 0
+          while (i < c.qs.length) { x.query(c.qs(i), c.qe(i))(_ => m += 1); i += 1 }
+        }
+        m
+      }
+      val ix = build()
+      Json.line("micro" -> "stabber", "layout" -> layout, "algo" -> algo,
+        "intervals" -> nIv, "probes" -> nQ,
+        "build_ns_per_iv" -> meanNs(build().length.toLong) / nIv,
+        "probe_ns" -> meanNs(matches(ix)) / nQ, "matches" -> matches(ix))
+    }
+  }
+
+  @volatile private var sink = 0L
+
+  /** Mean ns of one `body` call: three warm-up calls, then repeats for
+    * at least 200 ms. */
+  private def meanNs(body: => Long): Double = {
+    for (_ <- 0 until 3) sink += body
+    var reps = 0
+    val t0 = System.nanoTime()
+    var t = t0
+    while (t - t0 < 200000000L || reps < 2) { sink += body; reps += 1; t = System.nanoTime() }
+    (t - t0).toDouble / reps
   }
 
   /** Per-call timings of the JDK codec fixture encoders and

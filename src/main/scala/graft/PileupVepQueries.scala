@@ -59,8 +59,7 @@ object PileupVepQueries {
     // against an independent engine.
     "s2_bam_depth" -> ((s, d) => {
       val refs = (0 to 3).map(i => (s"chr$i", 600000))
-      val tmp = sys.props("java.io.tmpdir") +
-        s"/graft_bam_${Integer.toHexString(d.hashCode)}"
+      val tmp = graft.core.Scratch.dir(s"bam_${Integer.toHexString(d.hashCode)}")
       graft.sources.Bam.writeShards(Tables.reads(s, d), tmp, refs)
       val back = s.read.format("graft.sources.BamDataSource")
         .option("path", tmp).load()
@@ -123,7 +122,7 @@ object PileupVepQueries {
     // proves the layout round-trip; pruning evidence in SourcesSuite.
     "s4_kv_lookup" -> ((s, d) => {
       import graft.sources.PositionCache
-      val path = s"/tmp/graft_kvcache_${math.abs(d.hashCode).toString}"
+      val path = graft.core.Scratch.dir(s"kvcache_${math.abs(d.hashCode)}")
       PositionCache.write(Tables.vepCache(s, d), path)
       val keys = Tables.vcf(s, d).where("id % 50 = 0").select(
         col("chrom"),
@@ -138,7 +137,7 @@ object PileupVepQueries {
     // chrom-equality pushdown available (exercised in SourcesSuite).
     "s3_vcf_dsv2" -> ((s, d) => {
       val df = Tables.vcf(s, d).withColumn("vid", col("id"))
-      val path = s"/tmp/graft_vcf_dsv2_${math.abs(d.hashCode).toString}"
+      val path = graft.core.Scratch.dir(s"vcf_dsv2_${math.abs(d.hashCode)}")
       Vep.toVcfLines(df, Seq("vid")).coalesce(4)
         .write.mode("overwrite").text(path)
       s.read.format("graft.sources.VcfDataSource").option("path", path).load()
@@ -153,7 +152,7 @@ object PileupVepQueries {
     // writer's blocks must be standards-conformant gzip).
     "s3_vcf_bgz" -> ((s, d) => {
       val df = Tables.vcf(s, d).withColumn("vid", col("id"))
-      val path = s"/tmp/graft_vcf_bgz_${math.abs(d.hashCode).toString}"
+      val path = graft.core.Scratch.dir(s"vcf_bgz_${math.abs(d.hashCode)}")
       val lines = Vep.toVcfLines(df, Seq("vid"))
       val hconf = new graft.sources.SerializableHadoopConf(
         s.sessionState.newHadoopConf())
@@ -175,7 +174,7 @@ object PileupVepQueries {
     }),
     "s6_vcf_roundtrip" -> ((s, d) => {
       val df = Tables.vcf(s, d).withColumn("vid", col("id"))
-      val path = s"/tmp/graft_vcf_roundtrip_${math.abs(d.hashCode).toString}"
+      val path = graft.core.Scratch.dir(s"vcf_roundtrip_${math.abs(d.hashCode)}")
       // the progress-callback sink (S6's last reference-surface piece:
       // vcf_sink.rs rows-written hook) — gate-covered here; the header
       // lines it writes are filtered by the '#' predicate below, so

@@ -7,11 +7,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
+import graft.core.{GraftConf, Scratch}
 import graft.obs.{Host, Json, Profiler, QueryProfile, Session}
 
 /** Scale and skew probes: one main, one JSON line per (case, pass) plus
   * a summary line. Every case reads `SPARK_GRAFT_SF_DIR` (default sf0.1),
-  * builds its fixture as parquet under /tmp and reads it back (a k-branch
+  * builds its fixture as parquet under the JVM's scratch root
+  * ([[graft.core.Scratch]]) and reads it back (a k-branch
   * union scan would re-pay the task binary per mini-scan), and takes its
   * executor counts from [[graft.obs.Profiler]].
   *
@@ -83,7 +85,8 @@ object Probe {
   private def profile(spark: SparkSession)(df: => DataFrame): QueryProfile =
     Profiler.measure(spark)(noop(df))._2
 
-  private def fixture(spark: SparkSession, path: String)(df: DataFrame): DataFrame = {
+  private def fixture(spark: SparkSession, name: String)(df: DataFrame): DataFrame = {
+    val path = Scratch.dir(name)
     df.write.mode("overwrite").parquet(path)
     spark.read.parquet(path)
   }
@@ -111,17 +114,17 @@ object Probe {
     }
     val hot = spark.range(hotN).select((col("id") + 10000000L).as("doc_id"),
       lit("the quick brown fox jumps over the lazy dog again and again tonight").as("text"))
-    val corpus = fixture(spark, "/tmp/graft_skew_corpus")(
+    val corpus = fixture(spark, "skew_corpus")(
       Tables.load(spark, sfDir, "documents").select("doc_id", "text").unionByName(hot))
     val nDocs = corpus.count()
     // right side: hotRight rows in grid bucket 0 of one contig plus a
     // uniform spread, so the bucket is SKEWED, not merely the only key
-    val rightP = fixture(spark, "/tmp/graft_skew_right")(spark.range(hotRight.toLong).select(
+    val rightP = fixture(spark, "skew_right")(spark.range(hotRight.toLong).select(
         lit("chr1").as("contig"), (col("id") % 900 + 1).as("pos_start"),
         (col("id") % 900 + 51).as("pos_end"))
       .unionByName(spark.range(hotRight.toLong / 10).select(lit("chr1").as("contig"),
         (col("id") * 1000 + 1).as("pos_start"), (col("id") * 1000 + 51).as("pos_end"))))
-    val leftP = fixture(spark, "/tmp/graft_skew_left")(spark.range(200).select(
+    val leftP = fixture(spark, "skew_left")(spark.range(200).select(
       lit("chr1").as("contig"), (col("id") % 900 + 1).as("pos_start"),
       (col("id") % 900 + 31).as("pos_end")))
     val cases = Seq[(String, () => DataFrame, Seq[(String, Any)])](
@@ -148,7 +151,7 @@ object Probe {
     val base = Tables.load(spark, sfDir, "documents").select("doc_id", "text")
     // disjoint per-copy vocabulary: suffix every word (HOF rule: the
     // split binds to its own projection)
-    def scaled(k: Int) = fixture(spark, s"/tmp/graft_dedup_probe_${k}x")((0 until k).map { i =>
+    def scaled(k: Int) = fixture(spark, s"dedup_probe_${k}x")((0 until k).map { i =>
       base.select((col("doc_id") + lit(i * 1000000L)).as("doc_id"),
           split(col("text"), " ").as("_w"))
         .select(col("doc_id"),
@@ -180,15 +183,14 @@ object Probe {
 
   private def salt(spark: SparkSession, factor: Int, passes: Int): Unit = {
     import graft.ranges.PartitionedJoin
-    val saltKey = "spark.bio.partitioned.saltFactor"
     // skewed probe: 15/16 of rows on contig "hot"; modest build side
     val probe = spark.range(200000L * factor).select(
       when(col("id") % 16 === 0, concat(lit("c"), col("id") % 8))
         .otherwise(lit("hot")).as("contig"),
       (col("id") * 37 % (1000000L * factor)).as("pos_start"),
       (col("id") * 37 % (1000000L * factor) + 150).as("pos_end"), col("id"))
-    val pr = fixture(spark, "/tmp/graft_salt_probe_p")(probe)
-    val bd = fixture(spark, "/tmp/graft_salt_probe_b")(spark.range(20000).select(
+    val pr = fixture(spark, "salt_probe_p")(probe)
+    val bd = fixture(spark, "salt_probe_b")(spark.range(20000).select(
         concat(lit("c"), col("id") % 8).as("contig"),
         (col("id") * 211 % (1000000L * factor)).as("pos_start"),
         (col("id") * 211 % (1000000L * factor) + 400).as("pos_end"), col("id"))
@@ -196,7 +198,7 @@ object Probe {
         col("pos_start"), (col("pos_end") + 250).as("pos_end"), col("id"))))
     val ic = graft.core.IntervalCols.default
     def run(mode: String, pass: Int): Long = {
-      if (mode == "auto") spark.conf.unset(saltKey) else spark.conf.set(saltKey, mode)
+      if (mode == "auto") spark.conf.unset(GraftConf.SaltFactor) else spark.conf.set(GraftConf.SaltFactor, mode)
       val (rows, p) = Profiler.measure(spark)(PartitionedJoin.nearestPartitioned(
         bd, pr, ic, ic, graft.core.FilterOp.Weak, 1,
         includeOverlaps = true, computeDistance = true, tieBreakCol = "id").count())
@@ -209,7 +211,7 @@ object Probe {
       rows
     }
     val rows = (for (p <- 1 to passes; mode <- Seq("1", "auto")) yield run(mode, p)).toSet
-    spark.conf.unset(saltKey)
+    spark.conf.unset(GraftConf.SaltFactor)
     require(rows.size == 1, s"row counts diverged across modes: $rows")
     // decision pinning at both extremes
     def decided(name: String, build: DataFrame, p: DataFrame, expect: String): Int = {
@@ -220,9 +222,9 @@ object Probe {
     val sHot = decided("hot_contig", bd, pr, "S>1")
     // f4 shape: small sampled probe vs large build — bytes gate, no job
     val sF4 = decided("noskew_small_probe", pr,
-      fixture(spark, "/tmp/graft_salt_probe_f4")(pr.where("id % 512 = 0")), "S=1")
+      fixture(spark, "salt_probe_f4")(pr.where("id % 512 = 0")), "S=1")
     // f8 shape: large even-contig probe, per-contig share under the floor
-    val sF8 = decided("noskew_even_4contig", bd, fixture(spark, "/tmp/graft_salt_probe_f8")(
+    val sF8 = decided("noskew_even_4contig", bd, fixture(spark, "salt_probe_f8")(
       spark.range(600000).select(concat(lit("c"), col("id") % 4).as("contig"),
         (col("id") * 37 % 1000000L).as("pos_start"),
         (col("id") * 37 % 1000000L + 150).as("pos_end"), col("id"))), "S=1")
@@ -238,7 +240,7 @@ object Probe {
     // id-shifted copies: doc ids stay unique and the id span (packing's
     // bucket domain) scales with volume
     val base = Tables.load(spark, sfDir, "documents").select("doc_id", "text")
-    def scaled(k: Int) = fixture(spark, s"/tmp/graft_text_probe_${k}x")((0 until k).map { i =>
+    def scaled(k: Int) = fixture(spark, s"text_probe_${k}x")((0 until k).map { i =>
       base.select((col("doc_id") + lit(i * 1000000L)).as("doc_id"), col("text"))
     }.reduce(_ unionByName _))
     val small = scaled(1)
@@ -259,11 +261,11 @@ object Probe {
     // forced-small width with AQE coalescing off (it folds the tiny
     // bucket frame to one partition whatever the plan): the carry
     // stages' task count then reflects the PLAN's parallelism
-    spark.conf.set("spark.bio.pack.idBucketWidth", "64")
+    spark.conf.set(GraftConf.PackIdBucketWidth, "64")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     val carry = try profile(spark)(Packing.packSequences(big, "text", "doc_id", 256L))
       finally {
-        spark.conf.unset("spark.bio.pack.idBucketWidth")
+        spark.conf.unset(GraftConf.PackIdBucketWidth)
         spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
       }
     val nDocs = big.count()
@@ -285,19 +287,14 @@ object Probe {
   private def scale(spark: SparkSession, d: String, factor: Int, passes: Int): Unit = {
     val host = new Host(spark)
     noop(SparkEntry.entry(spark))
-    // the k x table, materialized once: jittered ids/positions keep
-    // per-variant join selectivity comparable to 1x; the path carries a
-    // fingerprint of the source dir, its mtime and the jitter formula, so
-    // no stale artifact of older base data feeds a timed pass
+    // the k x table, materialized once per run: jittered ids/positions
+    // keep per-variant join selectivity comparable to 1x
     def vcfAt(k: Int): DataFrame = {
       val base = Tables.vcf(spark, d)
         .select(col("chrom"), col("start"), col("end"), col("id"), col("ref"), col("alt"))
       if (k == 1) base
       else {
-        val srcFp = java.lang.Long.toHexString((d + "|" +
-          new java.io.File(s"$d/lineitem.parquet").lastModified +
-          "|jitter=i*13%97,id+i*1e7").hashCode.toLong & 0xffffffffL)
-        val path = s"/tmp/graft_scaleprobe_${k}x_$srcFp.parquet"
+        val path = Scratch.dir(s"scaleprobe_${k}x.parquet")
         if (!new java.io.File(path).exists())
           (0 until k).map { i =>
             base.select(col("chrom"), (col("start") + lit(i.toLong * 13 % 97)).as("start"),
@@ -387,7 +384,7 @@ object Probe {
         .withColumn("end", col("end") + lit(i.toLong * 1000000000L))
     }.reduce(_ unionByName _)
     def timed(f: => Unit): Double = { val s = System.nanoTime(); f; (System.nanoTime() - s) / 1e9 }
-    val path = s"/tmp/graft_kvprobe_cache_${factor}x"
+    val path = Scratch.dir(s"kvprobe_cache_${factor}x")
     val writeSec = timed(PositionCache.write(cache, path))
     val stored = PositionCache.open(spark, path)
     // exact-hit keys drawn from the cache itself (the 95–98% case)
@@ -450,15 +447,15 @@ object Probe {
     // SPAN scales with volume (the bucketing lever is span x coverage)
     val (base, contig, shifted, span, key, ops) = kind match {
       case "depth" => (Tables.reads(spark, sfDir), "chrom", Seq("start"), 500000L,
-        "spark.bio.depth.posBucketWidth",
+        GraftConf.DepthPosBucketWidth,
         Seq[(String, DataFrame => DataFrame)]("depth" -> (df => graft.pileup.Pileup.depth(df))))
       case "sweep" => (Tables.ivA(spark, sfDir), "contig", Seq("pos_start", "pos_end"), 1000000L,
-        "spark.bio.sweep.posBucketWidth",
+        GraftConf.SweepPosBucketWidth,
         Seq[(String, DataFrame => DataFrame)]("merge" -> (df => Ranges.merge(df)),
           "cluster" -> (df => Ranges.cluster(df)), "complement" -> (df => Ranges.complement(df))))
       case other => throw new IllegalArgumentException(s"width probe: depth|sweep, not '$other'")
     }
-    val table = fixture(spark, s"/tmp/graft_${kind}_probe_${factor}x")((0 until factor).map { i =>
+    val table = fixture(spark, s"${kind}_probe_${factor}x")((0 until factor).map { i =>
       shifted.foldLeft(base)((df, c) =>
         df.withColumn(c, col(c) + lit(i * span).cast(df.schema(c).dataType)))
     }.reduce(_ unionByName _))

@@ -15,7 +15,7 @@ object RangesQueries {
   private def B(s: SparkSession, d: String) = Tables.ivB(s, d)
 
   /** The reference's shipped real-parquet coverage fixtures (read-only). */
-  val GoldenRangesDir = "/root/reference/testing/data/ranges"
+  val GoldenRangesDir = Tables.referenceFixture("testing/data/ranges")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "f1_overlap_join" -> ((s, d) =>

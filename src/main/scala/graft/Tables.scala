@@ -15,6 +15,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
 
+  /** Root of the reference snapshot. Its third-party fixtures (real
+    * exome parquet, samtools-produced BAMs) are read in place, never
+    * copied into this repository. */
+  val ReferenceRoot = "/root/reference"
+
+  /** The reference fixture directory at `rel` below [[ReferenceRoot]]. */
+  def referenceFixture(rel: String): String = s"$ReferenceRoot/$rel"
+
+  /** The one message for a reference fixture that is not there. */
+  def fixtureAbsent(dir: String): String = s"fixture absent at $dir"
+
   /** Inferred-schema memo per parquet path: footer inference costs a
     * driver job per spark.read.parquet call, and a multi-table query
     * pays it once per table per INVOCATION (8 jobs ~= 0.9 s of the

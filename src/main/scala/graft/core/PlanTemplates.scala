@@ -23,7 +23,7 @@ import org.apache.spark.sql.sources.BaseRelation
   * The key holds everything construction reads:
   *   - the entry tag (operator, options);
   *   - the session's SQL confs (ANSI mode, case sensitivity and
-  *     `spark.graft.broadcast_build_limit` all shape construction);
+  *     `spark.bio.broadcast_build_limit` all shape construction);
   *   - each input's canonicalized analyzed plan, untruncated, and
   *     which leaves share one relation;
   *   - each input's schema — names, types, nullability and field

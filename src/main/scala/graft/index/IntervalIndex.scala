@@ -6,12 +6,36 @@ import scala.collection.mutable.ArrayBuffer
   * the reference keeps 7 algorithms behind a single
   * `get(key,start,end,f)` (interval_join.rs:849-901, selected via
   * `SET bio.interval_join_algorithm`); here the algorithm is chosen
-  * per session with `spark.graft.intervalJoin.algorithm`
+  * per session with `spark.bio.intervalJoin.algorithm`
   * (see [[IntervalIndexFactory]]). */
 trait IntervalStabber extends Serializable {
   /** Visit payloads of all intervals overlapping [qs, qe] (closed),
     * in deterministic (start, end, rank) order. */
   def query(qs: Long, qe: Long)(f: Int => Unit): Unit
+}
+
+/** The binary searches every index in this package runs over an
+  * ascending array. */
+private[index] object Bounds {
+  /** first index with arr(i) > key */
+  def upperBound(arr: Array[Long], key: Long): Int = {
+    var lo = 0; var hi = arr.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (arr(mid) <= key) lo = mid + 1 else hi = mid
+    }
+    lo
+  }
+
+  /** first index with arr(i) >= key */
+  def lowerBound(arr: Array[Long], key: Long): Int = {
+    var lo = 0; var hi = arr.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (arr(mid) < key) lo = mid + 1 else hi = mid
+    }
+    lo
+  }
 }
 
 /** Per-contig interval stabbing index: intervals sorted by
@@ -48,7 +72,7 @@ final class ContigIntervalIndex(
     // NOTE: a strict-adjusted query may have qs = qe + 2 (point probe);
     // the predicate `start <= qe && end >= qs` then selects intervals
     // STRICTLY containing the point — do not early-return on qs > qe.
-    var i = upperBound(starts, qe) - 1
+    var i = Bounds.upperBound(starts, qe) - 1
     // collect backwards, then emit forwards for deterministic order
     var lo = i
     while (lo >= 0 && maxEnds(lo) >= qs) lo -= 1
@@ -63,16 +87,6 @@ final class ContigIntervalIndex(
     var n = 0L
     query(qs, qe)(_ => n += 1)
     n
-  }
-
-  /** first index with arr(i) > key */
-  @inline private def upperBound(arr: Array[Long], key: Long): Int = {
-    var lo = 0; var hi = arr.length
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (arr(mid) <= key) lo = mid + 1 else hi = mid
-    }
-    lo
   }
 }
 
@@ -120,209 +134,6 @@ final class LinearIntervalIndex(
   }
 }
 
-/** Eytzinger-layout stabber: the canonical sorted-arrays layout of
-  * [[ContigIntervalIndex]], but the upper-bound search over `starts`
-  * walks a BFS-ordered (eytzinger) copy — one branchless comparison
-  * per level with the next cache line prefetchable, the layout the
-  * reference offers as its cache-friendly algorithm alternative
-  * (interval_join.rs:849-901 keeps 7 such impls behind one dispatch).
-  * Emission order and results are identical to superintervals; only
-  * the search memory-access pattern differs. */
-final class EytzingerIntervalIndex(
-    val starts: Array[Long], val ends: Array[Long], val maxEnds: Array[Long],
-    val payload: Array[Int],
-    /** 1-based BFS-ordered copy of `starts` */
-    val eyt: Array[Long],
-    /** sorted-array position of each eytzinger slot */
-    val eytPos: Array[Int]) extends IntervalStabber {
-
-  private val n = starts.length
-
-  /** first sorted index with starts(i) > key, via branchless
-    * eytzinger descent: each level appends a comparison bit (1 = went
-    * right, node value <= key); the predecessor is the node of the
-    * LAST right turn, recovered by shifting past the trailing left
-    * turns and that right turn (k >> (ntz(k) + 1)). k = 0 means no
-    * element <= key. */
-  @inline private def upperBound(key: Long): Int = {
-    var k = 1
-    while (k <= n) k = 2 * k + (if (eyt(k) <= key) 1 else 0)
-    k >>= (Integer.numberOfTrailingZeros(k) + 1)
-    if (k == 0) 0 else eytPos(k) + 1
-  }
-
-  def query(qs: Long, qe: Long)(f: Int => Unit): Unit = {
-    val i = upperBound(qe) - 1
-    var lo = i
-    while (lo >= 0 && maxEnds(lo) >= qs) lo -= 1
-    var j = lo + 1
-    while (j <= i) {
-      if (ends(j) >= qs) f(payload(j))
-      j += 1
-    }
-  }
-}
-
-object EytzingerIntervalIndex {
-  def build(s: Array[Long], e: Array[Long], payload: Array[Int]): EytzingerIntervalIndex = {
-    val c = ContigIntervalIndex.build(s, e, payload)
-    val n = c.starts.length
-    val eyt = new Array[Long](n + 1)
-    val pos = new Array[Int](n + 1)
-    // in-order fill of the BFS tree yields the sorted sequence
-    var next = 0
-    def fill(k: Int): Unit = if (k <= n) {
-      fill(2 * k)
-      eyt(k) = c.starts(next); pos(k) = next; next += 1
-      fill(2 * k + 1)
-    }
-    fill(1)
-    new EytzingerIntervalIndex(c.starts, c.ends, c.maxEnds, c.payload, eyt, pos)
-  }
-}
-
-/** Lapper-layout stabber (the rust-lapper / nim-lapper algorithm
-  * family several of the reference's index impls derive from):
-  * intervals sorted by start, the query backs off by the MAXIMUM
-  * interval length to find the scan window's left edge, then scans
-  * forward while `start <= qe`. Degrades when one huge interval
-  * inflates the back-off (the known lapper weakness the prefix-max-end
-  * layout fixes) but is branch-simple and append-friendly. Emission
-  * order matches the canonical sorted order. */
-final class LapperIntervalIndex(
-    val starts: Array[Long], val ends: Array[Long],
-    val payload: Array[Int], val maxLen: Long) extends IntervalStabber {
-  def query(qs: Long, qe: Long)(f: Int => Unit): Unit = {
-    var j = lowerBound(starts, qs - maxLen)
-    while (j < starts.length && starts(j) <= qe) {
-      if (ends(j) >= qs) f(payload(j))
-      j += 1
-    }
-  }
-  /** first index with arr(i) >= key */
-  @inline private def lowerBound(arr: Array[Long], key: Long): Int = {
-    var lo = 0; var hi = arr.length
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (arr(mid) < key) lo = mid + 1 else hi = mid
-    }
-    lo
-  }
-}
-
-object LapperIntervalIndex {
-  def build(s: Array[Long], e: Array[Long], payload: Array[Int]): LapperIntervalIndex = {
-    val c = ContigIntervalIndex.build(s, e, payload)
-    var ml = 0L
-    var i = 0
-    while (i < c.starts.length) {
-      val len = c.ends(i) - c.starts(i)
-      if (len > ml) ml = len
-      i += 1
-    }
-    new LapperIntervalIndex(c.starts, c.ends, c.payload, ml)
-  }
-}
-
-/** One component of an [[AiListIntervalIndex]]: a start-sorted slice
-  * with its own running max-end and each interval's position in the
-  * CANONICAL (start, end, rank) order, so matches can be re-emitted in
-  * the shared deterministic order. */
-final class AiListComponent(
-    val starts: Array[Long], val ends: Array[Long],
-    val maxEnds: Array[Long], val canon: Array[Int]) extends Serializable {
-  /** Collect canonical positions of intervals overlapping [qs, qe]. */
-  def collect(qs: Long, qe: Long, out: ArrayBuffer[Int]): Unit = {
-    var i = {
-      var lo = 0; var hi = starts.length
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (starts(mid) <= qe) lo = mid + 1 else hi = mid
-      }
-      lo - 1
-    }
-    while (i >= 0 && maxEnds(i) >= qs) {
-      if (ends(i) >= qs) out += canon(i)
-      i -= 1
-    }
-  }
-}
-
-/** AIList stabber (Augmented Interval List — Feng, Ratan & Sheffield
-  * 2019, doi:10.1093/bioinformatics/btz407; one of the reference's
-  * interchangeable layout alternatives, interval_join.rs:849-901):
-  * the start-sorted list is decomposed into a few components by
-  * repeatedly EXTRACTING intervals that cover many of their
-  * successors — the long intervals that make a plain backward
-  * max-end scan degenerate. Each component keeps its own running
-  * max-end, so every per-component backward scan terminates quickly
-  * regardless of length skew. Matches are gathered across components
-  * and emitted in the canonical (start, end, rank) order shared by
-  * every other layout. */
-final class AiListIntervalIndex(
-    val comps: Array[AiListComponent],
-    val payload: Array[Int]) extends IntervalStabber {
-  def query(qs: Long, qe: Long)(f: Int => Unit): Unit = {
-    val hits = new ArrayBuffer[Int](16)
-    var c = 0
-    while (c < comps.length) { comps(c).collect(qs, qe, hits); c += 1 }
-    val a = hits.toArray
-    java.util.Arrays.sort(a)
-    var i = 0
-    while (i < a.length) { f(payload(a(i))); i += 1 }
-  }
-}
-
-object AiListIntervalIndex {
-  /** Paper defaults: an interval is extracted when it covers at least
-    * `MinCover` of its next `Lookahead` successors; at most `MaxComps`
-    * components, and decomposition stops once a slice is small. */
-  private val Lookahead = 20
-  private val MinCover = 10
-  private val MaxComps = 10
-  private val MinSize = 64
-
-  def build(s: Array[Long], e: Array[Long], payload: Array[Int]): AiListIntervalIndex = {
-    val c = ContigIntervalIndex.build(s, e, payload)
-    val comps = ArrayBuffer.empty[AiListComponent]
-    var idx = Array.range(0, c.starts.length) // canonical positions, start-sorted
-    while (idx.nonEmpty) {
-      val last = comps.length == MaxComps - 1 || idx.length < MinSize
-      val keep = ArrayBuffer.empty[Int]
-      val extracted = ArrayBuffer.empty[Int]
-      var i = 0
-      while (i < idx.length) {
-        if (last) keep += idx(i)
-        else {
-          var cov = 0
-          var j = i + 1
-          val lim = math.min(idx.length, i + 1 + Lookahead)
-          while (j < lim) {
-            if (c.ends(idx(j)) <= c.ends(idx(i))) cov += 1
-            j += 1
-          }
-          if (cov >= MinCover) extracted += idx(i) else keep += idx(i)
-        }
-        i += 1
-      }
-      val ks = keep.toArray
-      val cs = new Array[Long](ks.length); val ce = new Array[Long](ks.length)
-      val mx = new Array[Long](ks.length)
-      var running = Long.MinValue
-      var k = 0
-      while (k < ks.length) {
-        cs(k) = c.starts(ks(k)); ce(k) = c.ends(ks(k))
-        if (ce(k) > running) running = ce(k)
-        mx(k) = running
-        k += 1
-      }
-      comps += new AiListComponent(cs, ce, mx, ks)
-      idx = extracted.toArray
-    }
-    new AiListIntervalIndex(comps.toArray, c.payload)
-  }
-}
-
 /** COITrees-style implicit augmented interval tree (the reference's
   * DEFAULT layout, session_context.rs:60-101 `Algorithm::Coitrees`;
   * cgranges lineage): the canonical (start, end, rank)-sorted array
@@ -353,8 +164,8 @@ final class CoitreesIntervalIndex(
 }
 
 object CoitreesIntervalIndex {
-  def build(s: Array[Long], e: Array[Long], payload: Array[Int]): CoitreesIntervalIndex = {
-    val c = ContigIntervalIndex.build(s, e, payload)
+  /** Adds the subtree-max-end augmentation to the canonical layout. */
+  def build(c: ContigIntervalIndex): CoitreesIntervalIndex = {
     val subMax = new Array[Long](c.starts.length)
     def fill(lo: Int, hi: Int): Long = {
       if (lo > hi) return Long.MinValue
@@ -369,81 +180,34 @@ object CoitreesIntervalIndex {
 }
 
 /** J3 algorithm selection: one factory keyed by the session config
-  * `spark.graft.intervalJoin.algorithm` —
-  * `superintervals` (default, sorted arrays + prefix-max-end),
-  * `eytzinger` (same layout, branchless BFS-ordered search),
-  * `lapper` (start-sorted + max-length back-off),
-  * `ailist` (augmented interval list, skew-robust decomposition),
-  * `coitrees` (implicit augmented interval tree — the reference's
-  * default), or `linear` (naive scan, for verification). */
-/** Implicit-BST stabber over the canonical sorted arrays — rust-bio's
-  * `ArrayBackedIntervalTree`, the reference's `arrayintervaltree`
-  * algorithm (session_context.rs:61-70, interval_join.rs:703-814): the
-  * sorted interval array is viewed as a balanced BST by recursive
-  * midpoint, each node annotated with its subtree's max end. A query
-  * prunes a subtree when its max end < qs and skips the right child
-  * when the node's start > qe; in-order descent emits hits in the
-  * canonical (start, end, rank) order. O(log n + k) per probe, no
-  * pointer chasing — the same flat-array idea as coitrees but with
-  * midpoint topology instead of van Emde Boas layout. */
-final class ArrayTreeIntervalIndex(
-    val starts: Array[Long], val ends: Array[Long],
-    val payload: Array[Int],
-    /** subtreeMax(mid) = max end over the subtree rooted at the
-      * midpoint node of its range */
-    val subtreeMax: Array[Long]) extends IntervalStabber {
-
-  def query(qs: Long, qe: Long)(f: Int => Unit): Unit = {
-    def rec(lo: Int, hi: Int): Unit = {
-      if (lo >= hi) return
-      val mid = (lo + hi) >>> 1
-      if (subtreeMax(mid) < qs) return
-      rec(lo, mid)
-      if (starts(mid) <= qe) {
-        if (ends(mid) >= qs) f(payload(mid))
-        rec(mid + 1, hi)
-      }
-    }
-    rec(0, starts.length)
-  }
-}
-
-object ArrayTreeIntervalIndex {
-  def build(s: Array[Long], e: Array[Long], payload: Array[Int]): ArrayTreeIntervalIndex = {
-    // canonical (start, end, rank) order shared by every layout
-    val c = ContigIntervalIndex.build(s, e, payload)
-    val n = c.starts.length
-    val subMax = new Array[Long](n)
-    def rec(lo: Int, hi: Int): Long = {
-      if (lo >= hi) return Long.MinValue
-      val mid = (lo + hi) >>> 1
-      val m = math.max(c.ends(mid), math.max(rec(lo, mid), rec(mid + 1, hi)))
-      subMax(mid) = m
-      m
-    }
-    rec(0, n)
-    new ArrayTreeIntervalIndex(c.starts, c.ends, c.payload, subMax)
-  }
-}
-
+  * `spark.bio.intervalJoin.algorithm` ([[graft.core.GraftConf]]) over
+  * three kernels — `superintervals` (the default: sorted arrays +
+  * prefix-max-end), `coitrees` (implicit augmented interval tree, the
+  * reference's default; holds up under length skew) and `linear` (naive
+  * scan, the verifier). The other accepted names select a kept kernel:
+  * `eytzinger` (the same sorted layout with another search) and `lapper`
+  * (a start-sorted scan that degrades on long intervals) select
+  * `superintervals`; `arrayintervaltree` (the same midpoint implicit
+  * tree) and `ailist` (skew-robust, no faster than coitrees) select
+  * `coitrees`. Every kernel emits in the canonical (start, end, rank)
+  * order, so a name never changes a result. */
 object IntervalIndexFactory {
-  val ConfKey = "spark.graft.intervalJoin.algorithm"
+  private val superintervals: ContigIntervalIndex => IntervalStabber = identity
+  private val coitrees: ContigIntervalIndex => IntervalStabber = CoitreesIntervalIndex.build
+  private val kernels: Seq[(String, ContigIntervalIndex => IntervalStabber)] = Seq(
+    "superintervals" -> superintervals, "eytzinger" -> superintervals, "lapper" -> superintervals,
+    "ailist" -> coitrees, "coitrees" -> coitrees, "arrayintervaltree" -> coitrees,
+    "linear" -> (c => new LinearIntervalIndex(c.starts, c.ends, c.payload)))
+  private val byName = (kernels :+ ("" -> superintervals)).toMap
 
-  def build(algo: String, s: Array[Long], e: Array[Long], payload: Array[Int]): IntervalStabber =
-    algo match {
-      case "linear" =>
-        // reuse the canonical sort so emission order matches
-        val c = ContigIntervalIndex.build(s, e, payload)
-        new LinearIntervalIndex(c.starts, c.ends, c.payload)
-      case "eytzinger" => EytzingerIntervalIndex.build(s, e, payload)
-      case "lapper" => LapperIntervalIndex.build(s, e, payload)
-      case "ailist" => AiListIntervalIndex.build(s, e, payload)
-      case "coitrees" => CoitreesIntervalIndex.build(s, e, payload)
-      case "arrayintervaltree" => ArrayTreeIntervalIndex.build(s, e, payload)
-      case "superintervals" | "" => ContigIntervalIndex.build(s, e, payload)
-      case other => throw new IllegalArgumentException(
-        s"unknown interval-join algorithm '$other' (superintervals | eytzinger | lapper | ailist | coitrees | arrayintervaltree | linear)")
-    }
+  /** Every accepted algorithm name; `""` also selects the default. */
+  val Names: Seq[String] = kernels.map(_._1)
+
+  def build(algo: String, s: Array[Long], e: Array[Long], payload: Array[Int]): IntervalStabber = {
+    val kernel = byName.getOrElse(algo, throw new IllegalArgumentException(
+      s"unknown interval-join algorithm '$algo' (${Names.mkString(" | ")})"))
+    kernel(ContigIntervalIndex.build(s, e, payload))
+  }
 }
 
 /** A per-contig index answering a stabbing query with one Long —
@@ -464,6 +228,7 @@ final class CountOverlapIndex(
     /** sorted positions of point intervals (start == end) — needed to
       * correct inverted strict-adjusted queries, see [[count]] */
     val sortedPointPos: Array[Long]) extends ScalarIndex {
+  import Bounds._
 
   def valueOf(qs: Long, qe: Long): Long = count(qs, qe)
 
@@ -480,23 +245,6 @@ final class CountOverlapIndex(
     }
   }
 
-  @inline private def upperBound(arr: Array[Long], key: Long): Int = {
-    var lo = 0; var hi = arr.length
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (arr(mid) <= key) lo = mid + 1 else hi = mid
-    }
-    lo
-  }
-  /** first index with arr(i) >= key */
-  @inline private def lowerBound(arr: Array[Long], key: Long): Int = {
-    var lo = 0; var hi = arr.length
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (arr(mid) < key) lo = mid + 1 else hi = mid
-    }
-    lo
-  }
 }
 
 object CountOverlapIndex {
@@ -529,6 +277,7 @@ final class CoverageIndex(
     val me: Array[Long], // merged ends
     val prefixLen: Array[Long],
     val prefixPts: Array[Int]) extends ScalarIndex {
+  import Bounds._
 
   def valueOf(qs: Long, qe: Long): Long = coverage(qs, qe)
 
@@ -585,22 +334,6 @@ final class CoverageIndex(
     total
   }
 
-  @inline private def upperBound(arr: Array[Long], key: Long): Int = {
-    var lo = 0; var hi = arr.length
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (arr(mid) <= key) lo = mid + 1 else hi = mid
-    }
-    lo
-  }
-  @inline private def lowerBound(arr: Array[Long], key: Long): Int = {
-    var lo = 0; var hi = arr.length
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (arr(mid) < key) lo = mid + 1 else hi = mid
-    }
-    lo
-  }
 }
 
 object CoverageIndex {

@@ -51,8 +51,8 @@ final class NearestIndex(
     // taken whole, merged across sides, and sorted by (s, e, rank) so
     // the reference's global (dist, start, end, position) order holds.
     val n = beEnds.length
-    var li = upperBoundEnds(qs - 1) - 1 // last index with end <= qs-1
-    var ri = lowerBoundStarts(qe + 1)   // first byStart index with start >= qe+1
+    var li = Bounds.upperBound(beEnds, qs - 1) - 1     // last index with end <= qs-1
+    var ri = Bounds.lowerBound(byStart.starts, qe + 1) // first byStart index with start >= qe+1
     val ss = byStart.starts; val ee = byStart.ends
     val pp = byStart.payload; val rr = byStart.rank
     val buf = new ArrayBuffer[(Long, Long, Long, Long, Int)]() // (dist, s, e, rank, payload)
@@ -93,26 +93,6 @@ final class NearestIndex(
     val ld = if (li >= 0) qs - beEnds(li) else Long.MaxValue
     val rd = if (ri < byStart.size) byStart.starts(ri) - qe else Long.MaxValue
     math.min(ld, rd)
-  }
-
-  /** first index in beEnds with end > key */
-  private def upperBoundEnds(key: Long): Int = {
-    var lo = 0; var hi = beEnds.length
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (beEnds(mid) <= key) lo = mid + 1 else hi = mid
-    }
-    lo
-  }
-  /** first index in byStart.starts with start >= key */
-  private def lowerBoundStarts(key: Long): Int = {
-    val arr = byStart.starts
-    var lo = 0; var hi = arr.length
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (arr(mid) < key) lo = mid + 1 else hi = mid
-    }
-    lo
   }
 }
 

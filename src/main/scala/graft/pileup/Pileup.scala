@@ -1,8 +1,9 @@
 package graft.pileup
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.GraftConf
 
 /** F9 `depth()` — depth-of-coverage from an alignment-reads table
   * (FIXTURES.md §3 contract: chrom, start, flags, cigar,
@@ -90,35 +91,6 @@ object Pileup {
       .toDF("chrom", "pos", "delta")
   }
 
-  /** Block-mode depth. `zeroBased` mirrors the reference UDTF's second
-    * argument (pileup/src/table_function.rs:97-109, default false =
-    * 1-based): a 0-based run is the 1-based run with BOTH boundaries
-    * down one (the reference's block boundaries derive from read
-    * starts, which its provider shifts at the source —
-    * coverage.rs:25-64 emits `[block_start, pos-1]` in whichever
-    * system the reads arrived). The output's `pos_start` field carries
-    * the `bio.coordinate_system_zero_based` tag either way, exactly
-    * like the reference's output schema (pileup/src/schema.rs:28-44). */
-  /** Position-bucket width for the prefix-sum window stage — each
-    * (chrom, pos DIV width) slice runs as its own window partition, so
-    * parallelism scales with data span instead of capping at #contigs
-    * (a human genome has ~25 real ones; a 1000-executor cluster would
-    * idle 97% of its slots on a per-chrom window). Default 2^17
-    * (~131 kbp; round 17, same fix as the sweep width — the old 2^26
-    * serialized a megabase-scale input's window onto ONE task per
-    * contig; 2^17 gives chr1 ~1.9k slices and a genome ~24k, ahead of
-    * any executor count, with the per-bucket fix-up frame still
-    * metadata-scale). Overridable via `spark.bio.depth.posBucketWidth`
-    * (the partition-invariance spec sweeps it). */
-  private val DefaultPosBucketWidth = 1L << 17
-
-  private def posBucketWidth(spark: SparkSession): Long = {
-    val w = spark.conf.getOption("spark.bio.depth.posBucketWidth")
-      .map(_.toLong).getOrElse(DefaultPosBucketWidth)
-    require(w > 0, s"spark.bio.depth.posBucketWidth must be positive, got $w")
-    w
-  }
-
   /** Broadcast hint for the per-bucket fix-up frames, guarded by the
     * bucket width exactly like the sweeps' carry (ADVICE r15 class):
     * at or above the floor the frame is ≤ span/width rows per contig —
@@ -130,6 +102,15 @@ object Pileup {
   private def fixupBroadcast(f: DataFrame, width: Long): DataFrame =
     if (width >= FixupBroadcastMinWidth) broadcast(f) else f
 
+  /** Block-mode depth. `zeroBased` mirrors the reference UDTF's second
+    * argument (pileup/src/table_function.rs:97-109, default false =
+    * 1-based): a 0-based run is the 1-based run with BOTH boundaries
+    * down one (the reference's block boundaries derive from read
+    * starts, which its provider shifts at the source —
+    * coverage.rs:25-64 emits `[block_start, pos-1]` in whichever
+    * system the reads arrived). The output's `pos_start` field carries
+    * the `bio.coordinate_system_zero_based` tag either way, exactly
+    * like the reference's output schema (pileup/src/schema.rs:28-44). */
   def depth(reads: DataFrame, filterFlag: Int = 1796, minMapq: Int = 0,
       zeroBased: Boolean = false): DataFrame = {
     val ev = events(reads, filterFlag, minMapq)
@@ -145,7 +126,7 @@ object Pileup {
     // aggregate exchange, so Catalyst's ReuseExchange runs the CIGAR
     // walk once; the fix-up frame joins back broadcast-hinted under
     // the width floor (≤ span/width rows — metadata-scale).
-    val width = posBucketWidth(reads.sparkSession)
+    val width = GraftConf.depthPosBucketWidth(reads.sparkSession)
     val bucketed = ev.withColumn("_bkt", expr(s"pos DIV $width"))
     val wb = Window.partitionBy(col("chrom"), col("_bkt")).orderBy(col("pos"))
     val local = bucketed
@@ -228,7 +209,7 @@ object Pileup {
     // pos_start-ordered, so the only cross-bucket dependency is the
     // previous non-empty bucket's LAST block end — one aggregate row
     // per bucket, broadcast back
-    val width = posBucketWidth(reads.sparkSession)
+    val width = GraftConf.depthPosBucketWidth(reads.sparkSession)
     val blocksB = blocks.withColumn("_bkt", expr(s"pos_start DIV $width"))
     val wB = Window.partitionBy(col("contig"), col("_bkt")).orderBy(col("pos_start"))
     val wcB = Window.partitionBy(col("contig")).orderBy(col("_bkt"))

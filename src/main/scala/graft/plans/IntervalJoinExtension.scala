@@ -10,6 +10,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.types.{IntegerType, LongType, ShortType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+import graft.core.GraftConf
 
 /** Transparent interval-join rewrite (SURVEY.md §2 J1-J3/J5, §3.1):
   * an ordinary SQL join whose condition is
@@ -40,13 +41,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * stock planning proceeds untouched.
   */
 object IntervalJoinStrategy extends SparkStrategy with PredicateHelper {
-
-  /** Size cap for the CollectLeft build side (bytes of plan stats) —
-    * configurable via spark.graft.broadcast_build_limit (shared with
-    * the Ranges API guard, [[graft.ranges.BuildGuard]]). */
-  private def maxBuildBytes: Long =
-    SparkSession.active.conf.getOption(graft.ranges.BuildGuard.ConfKey)
-      .map(_.toLong).getOrElse(graft.ranges.BuildGuard.DefaultBytes)
 
   private case class Extracted(
       contigs: Option[(Expression, Expression)], // (left, right)
@@ -106,7 +100,10 @@ object IntervalJoinStrategy extends SparkStrategy with PredicateHelper {
 
   def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case j @ Join(l, r, jt, Some(_), _)
-        if SparkSession.active.conf.get("spark.graft.intervalJoin.enabled", "true") == "true" =>
+        if GraftConf.intervalJoinEnabled(SparkSession.active) =>
+      // the CollectLeft build-side cap, shared with the Ranges API guard
+      // (graft.ranges.BuildGuard)
+      val maxBuildBytes = GraftConf.broadcastBuildLimit(SparkSession.active)
       def fits(p: LogicalPlan) = p.stats.sizeInBytes <= maxBuildBytes
       // Which side to collect+index: Inner takes whichever fits (left
       // preferred); the one-sided types are pinned to the preserved /
@@ -123,8 +120,7 @@ object IntervalJoinStrategy extends SparkStrategy with PredicateHelper {
           BroadcastIntervalJoinExec(
             x.contigs, x.lStart, x.lEnd, x.rStart, x.rEnd, x.strictLe, x.strictGe,
             x.residual.reduceOption(And),
-            SparkSession.active.conf.get(
-              graft.index.IntervalIndexFactory.ConfKey, "superintervals"),
+            GraftConf.intervalJoinAlgorithm(SparkSession.active),
             jt, bl, planLater(l), planLater(r)) :: Nil
         case _ => Nil
       }

@@ -1,6 +1,7 @@
 package graft.ranges
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
+import graft.core.GraftConf
 
 /** Build-side size guard for every CollectLeft-style operator (the
   * broadcast interval joins, the variant-lookup probes, the static
@@ -13,7 +14,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * bounded by driver heap. The reference's planner picks CollectLeft
   * vs Partitioned itself from plan statistics; this guard does the
   * same choice for the [[Ranges]] API: a build side whose Catalyst
-  * size estimate exceeds `spark.graft.broadcast_build_limit` (bytes)
+  * size estimate exceeds `spark.bio.broadcast_build_limit` (bytes)
   * silently fails over to the partitioned grid-bucket path
   * ([[Ranges.overlapPartitioned]] family) — same rows, no driver
   * collect, no memory cap. Operators with no partitioned equivalent
@@ -25,30 +26,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * costs no job. */
 object BuildGuard {
 
-  val ConfKey = "spark.graft.broadcast_build_limit"
-
-  /** Default cap: 1 GiB of estimated build bytes (the planner
-    * strategy's historical constant). */
-  val DefaultBytes: Long = 1L << 30
-
-  def limitBytes(spark: SparkSession): Long =
-    spark.conf.getOption(ConfKey).map(_.toLong).getOrElse(DefaultBytes)
-
   /** Catalyst's size estimate of the optimized plan — no job runs. */
   def estimatedBytes(df: DataFrame): BigInt =
     df.queryExecution.optimizedPlan.stats.sizeInBytes
 
   /** True when the build side fits the configured broadcast cap. */
   def fits(df: DataFrame): Boolean =
-    estimatedBytes(df) <= BigInt(limitBytes(df.sparkSession))
+    estimatedBytes(df) <= BigInt(GraftConf.broadcastBuildLimit(df.sparkSession))
 
   /** Loud failure for CollectLeft operators with no partitioned
     * escape hatch: an oversized build must not reach `collect()`. */
   def requireFits(df: DataFrame, op: String, hint: String): Unit = {
     val est = estimatedBytes(df)
-    val lim = limitBytes(df.sparkSession)
+    val lim = GraftConf.broadcastBuildLimit(df.sparkSession)
     if (est > BigInt(lim)) throw new IllegalArgumentException(
-      s"$op: build side estimated at $est bytes exceeds $ConfKey=$lim. " +
+      s"$op: build side estimated at $est bytes exceeds ${GraftConf.BroadcastBuildLimit}=$lim. " +
         s"The build side is collected to the driver (CollectLeft contract); $hint")
   }
 }

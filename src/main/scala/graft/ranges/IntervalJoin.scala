@@ -4,7 +4,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.core.{FilterOp, IntervalCols}
+import graft.core.{FilterOp, GraftConf, IntervalCols}
 import graft.index._
 
 /** Broadcast interval join machinery.
@@ -32,7 +32,7 @@ import graft.index._
   *    constraint and same typical shape (small annotation set vs huge
   *    reads set) as the reference's CollectLeft mode. The [[Ranges]]
   *    entry points guard this with [[BuildGuard]]
-  *    (spark.graft.broadcast_build_limit) and fail over to the
+  *    (spark.bio.broadcast_build_limit) and fail over to the
   *    partitioned grid-bucket path when the estimate exceeds the cap,
   *    mirroring the reference planner's CollectLeft-vs-Partitioned
   *    choice (interval_join.rs:394-413).
@@ -243,7 +243,7 @@ object IntervalJoin {
 
     val spark = left.sparkSession
     val (groups, leftIdx) = collectBuild(left, lcols)
-    val algo = spark.conf.get(IntervalIndexFactory.ConfKey, "superintervals")
+    val algo = GraftConf.intervalJoinAlgorithm(spark)
     val indexes: Map[String, IntervalStabber] =
       parBuild(groups) { case (s, e, p, _) => IntervalIndexFactory.build(algo, s, e, p) }
     val bc = spark.sparkContext.broadcast(indexes)

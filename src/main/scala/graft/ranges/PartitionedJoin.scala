@@ -4,7 +4,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
-import graft.core.{FilterOp, IntervalCols}
+import graft.core.{FilterOp, GraftConf, IntervalCols}
 import graft.index.{CoverageIndex, NearestIndex}
 
 /** Co-shuffle (Partitioned-mode) nearest and subtract — the scale path
@@ -60,16 +60,13 @@ object PartitionedJoin {
   private val AutoSaltCap = 8
   private val SampledParts = 16
   private val SampleRowCap = 1 << 16
-  private val DefaultMinSliceRows = 131072L
 
   /** The auto decision, exposed for the `salt` case of [[graft.Probe]] and the
     * decision spec; see the conf scaladoc above. */
   private[graft] def decideSalt(
       build: DataFrame, probe: DataFrame, contigCol: String): Int = {
     val sess = probe.sparkSession
-    val minSlice = sess.conf
-      .getOption("spark.bio.partitioned.saltMinSliceRows")
-      .map(_.toLong).getOrElse(DefaultMinSliceRows)
+    val minSlice = GraftConf.saltMinSliceRows(sess)
     def planBytes(df: DataFrame): BigInt =
       df.queryExecution.optimizedPlan.stats.sizeInBytes
     // Stat-less sentinel (VERDICT r17 #3): a checkpointed / RDD-backed
@@ -131,14 +128,7 @@ object PartitionedJoin {
 
   private def saltFactor(
       build: DataFrame, probe: DataFrame, contigCol: String): Int = {
-    val conf = probe.sparkSession.conf
-      .getOption("spark.bio.partitioned.saltFactor").getOrElse("auto")
-    if (conf == "auto") decideSalt(build, probe, contigCol)
-    else {
-      val s = conf.toInt
-      require(s >= 1, s"spark.bio.partitioned.saltFactor must be >= 1, got $s")
-      s
-    }
+    GraftConf.saltFactor(probe.sparkSession).getOrElse(decideSalt(build, probe, contigCol))
   }
 
   /** Co-group two Row sets by contig with optional salting, streaming

@@ -3,7 +3,7 @@ package graft.ranges
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{FilterOp, IntervalCols}
+import graft.core.{FilterOp, GraftConf, IntervalCols}
 
 /** Public interval-algebra surface — the Spark re-expression of the
   * reference's `register_ranges_functions` UDTF family
@@ -36,7 +36,7 @@ object Ranges {
     * (overlap.rs:154-226). `join` output = `left_*` ++ `right_*`.
     *
     * Build-side size guard ([[BuildGuard]],
-    * `spark.graft.broadcast_build_limit`): when the side that would be
+    * `spark.bio.broadcast_build_limit`): when the side that would be
     * collected+broadcast exceeds the cap, the call silently takes the
     * partitioned grid-bucket path instead — same rows, no driver
     * collect — mirroring the reference planner's
@@ -136,7 +136,7 @@ object Ranges {
     }
     // The join condition also carries the interval predicate, so with
     // IntervalJoinStrategy installed and either exploded side under
-    // spark.graft.broadcast_build_limit, the grid join plans as a
+    // spark.bio.broadcast_build_limit, the grid join plans as a
     // BroadcastIntervalJoinExec (the bucket equality becomes a residual
     // on the index probe) and the hints below play no part. Otherwise
     // SHUFFLE_HASH on both sides (guide-class join choice): the grid
@@ -317,29 +317,6 @@ object Ranges {
         throw new IllegalStateException("unreachable")
     }
 
-  /** Position-bucket width for the island-sweep window stage — same
-    * rationale as the depth prefix sum ([[graft.pileup.Pileup]]): a
-    * per-contig window caps at #contigs concurrent tasks (~25 on a
-    * human genome) regardless of cluster size; bucketing by
-    * `(contig, start DIV width)` scales the sweep's parallelism with
-    * data span. Default 2^17 (~131 kbp; round 17 — the old 2^26 left
-    * a megabase-scale input on ONE bucket per contig, serializing the
-    * full-data window onto #contigs tasks; 2^17 gives a human contig
-    * ~1.9k slices and a whole genome ~24k, ahead of any executor
-    * count, while the per-bucket hull/carry frames stay metadata-
-    * scale — ≤ span/width rows, ~24k per genome — and the width
-    * stays at the [[carryBroadcast]] floor where the broadcast hint
-    * is provably safe). Overridable via
-    * `spark.bio.sweep.posBucketWidth` (the invariance spec sweeps it). */
-  private val DefaultSweepBucketWidth = 1L << 17
-
-  private def sweepBucketWidth(df: DataFrame): Long = {
-    val w = df.sparkSession.conf.getOption("spark.bio.sweep.posBucketWidth")
-      .map(_.toLong).getOrElse(DefaultSweepBucketWidth)
-    require(w > 0, s"spark.bio.sweep.posBucketWidth must be positive, got $w")
-    w
-  }
-
   /** Broadcast hint for the per-bucket carry frames, guarded by the
     * bucket width (ADVICE r15: the carry cardinality is bounded by
     * span/width per contig, so a user-set tiny width over a large
@@ -388,7 +365,7 @@ object Ranges {
       df: DataFrame, cols: IntervalCols, minDist: Long, op: FilterOp): DataFrame = {
     val s = col(cols.start).cast("long")
     val e = col(cols.end).cast("long")
-    val width = sweepBucketWidth(df)
+    val width = GraftConf.sweepPosBucketWidth(df.sparkSession)
     // trunc-toward-zero integer DIV is monotone in start, and start
     // ties never split across buckets — so the global (s, e) sort
     // order is bucket-major and a per-bucket sweep sees a contiguous
@@ -467,7 +444,7 @@ object Ranges {
       : (DataFrame, DataFrame) = {
     val (loc, shared) = barrieredHulls(df, cols, minDist, op)
     (loc, chainHulls(shared, cols.contig, minDist, op,
-      sweepBucketWidth(df), needCoff))
+      GraftConf.sweepPosBucketWidth(df.sparkSession), needCoff))
   }
 
   /** Does the start `s` open a NEW global island given the carry —
@@ -664,7 +641,7 @@ object Ranges {
       cols: IntervalCols = IntervalCols.default,
       vcols: IntervalCols = IntervalCols.default,
       op: FilterOp = FilterOp.Weak): DataFrame = {
-    val width = sweepBucketWidth(df)
+    val width = GraftConf.sweepPosBucketWidth(df.sparkSession)
     val (_, hulls) = barrieredHulls(df, cols, 0L, op)
     val wc = Window.partitionBy(col(cols.contig)).orderBy(col("_obkt"))
       .rowsBetween(Window.unboundedPreceding, -1)

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.GraftConf
 
 /** Scale-adaptive state width for the bounded streaming gates.
   *
@@ -47,11 +48,9 @@ object StreamWidth {
   /** Derived state width for an estimated per-batch input volume.
     * `spark.bio.stream.statePartitions` (read from `s`) overrides. */
   def derive(s: SparkSession, estBytes: Long): Int =
-    s.conf.getOption("spark.bio.stream.statePartitions") match {
-      case Some(v) => v.toInt
-      case None =>
-        val cap = math.max(8L * s.sparkContext.defaultParallelism, 4L)
-        math.max(4L, math.min(estBytes / BytesPerPartition, cap)).toInt
+    GraftConf.statePartitions(s).getOrElse {
+      val cap = math.max(8L * s.sparkContext.defaultParallelism, 4L)
+      math.max(4L, math.min(estBytes / BytesPerPartition, cap)).toInt
     }
 
   /** A child session (isolated SQLConf, shared context) with the

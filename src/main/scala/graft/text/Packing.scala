@@ -1,27 +1,14 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.GraftConf
 
 /** Training-batch assembly operators: deterministic sequence packing
   * and hash-based dataset splits — the last mile between a cleaned
   * corpus and a training run. */
 object Packing {
-
-  /** Bucket width (documents per prefix-sum slice) for the packing
-    * cumsum — same rationale as the interval sweeps: a global-order
-    * window is a single-task ceiling; bucketing by `id DIV width`
-    * with a tiny per-bucket carry keeps the plan fully parallel.
-    * Overridable via `spark.bio.pack.idBucketWidth`. */
-  private val DefaultIdBucketWidth = 1L << 16
-
-  private def idBucketWidth(spark: SparkSession): Long = {
-    val w = spark.conf.getOption("spark.bio.pack.idBucketWidth")
-      .map(_.toLong).getOrElse(DefaultIdBucketWidth)
-    require(w > 0, s"spark.bio.pack.idBucketWidth must be positive, got $w")
-    w
-  }
 
   /** Only the LEVEL-2 carry (one row per super-bucket, ≤ idSpan/width²
     * — ~230 rows at 10^12 docs and the default width) is safely
@@ -59,7 +46,7 @@ object Packing {
   def packSequences(
       docs: DataFrame, textCol: String, idCol: String, budget: Long): DataFrame = {
     require(budget > 0, s"token budget must be positive, got $budget")
-    val width = idBucketWidth(docs.sparkSession)
+    val width = GraftConf.packIdBucketWidth(docs.sparkSession)
     val toks = TextFunctions.tokenCount(col(textCol))
     // one shared doc-level exchange (the bucket clustering the window
     // needs anyway): the within-bucket cumsum AND the per-bucket totals

@@ -35,16 +35,17 @@ object CacheBuilder {
     * (cache_builder.rs:53-57 MAIN_CHROMS). */
   val MainChroms: Seq[String] = (1 to 22).map(_.toString) ++ Seq("X", "Y", "MT")
 
-  /** Deterministic scratch dir for round-trip gates, keyed by the
-    * source data dir AND the calling gate (no timestamps — every
-    * build overwrites, so a stale artifact can never feed a later
-    * run; per-GATE so one gate's rebuild can never replace the part
-    * files another gate's already-analyzed plan has pinned — a
-    * shared dir made every re-execution of the first gate fail with
-    * FILE_NOT_EXIST once the second gate rebuilt it). */
+  /** Deterministic dir for round-trip gates under the JVM's
+    * [[graft.core.Scratch]] root, keyed by the source data dir AND the
+    * calling gate (no timestamps — every build overwrites, so a stale
+    * artifact can never feed a later run; per-GATE so one gate's
+    * rebuild can never replace the part files another gate's
+    * already-analyzed plan has pinned — a shared dir made every
+    * re-execution of the first gate fail with FILE_NOT_EXIST once the
+    * second gate rebuilt it). */
   def roundTripDir(sourceDir: String, gate: String): String =
-    "/tmp/graft_built_cache_" +
-      java.lang.Integer.toHexString((sourceDir + "#" + gate).hashCode)
+    graft.core.Scratch.dir("built_cache_" +
+      java.lang.Integer.toHexString((sourceDir + "#" + gate).hashCode))
 
   /** Directory-partition key: `chr{c}` for main chromosomes (bare or
     * already chr-prefixed input), `other` for every other contig —

@@ -18,12 +18,18 @@ import graft.pileup.Pileup
   *   (both mates contribute), which is also this library's model. */
 class BamGoldenSuite extends SparkSpec {
 
-  private val dataDir =
-    "/root/reference/datafusion/bio-function-pileup/tests/data"
+  private val dataDir = Tables.referenceFixture("datafusion/bio-function-pileup/tests/data")
+
+  /** A fixture file's path; a test needing one fails while the
+    * reference tree is absent. */
+  private def fixture(name: String): String = {
+    assert(new java.io.File(dataDir).isDirectory, Tables.fixtureAbsent(dataDir))
+    s"$dataDir/$name"
+  }
 
   private def depthOf(bam: String): Seq[(String, Long, Long, Int)] = {
     val df = spark.read.format("graft.sources.BamDataSource")
-      .option("path", s"$dataDir/$bam").load()
+      .option("path", fixture(bam)).load()
     Pileup.depth(df.select(col("chrom"), col("start"), col("flags"),
         col("cigar"), col("mapping_quality")))
       .orderBy("contig", "pos_start").collect()
@@ -48,9 +54,9 @@ class BamGoldenSuite extends SparkSpec {
     // mosdepth_compat.rs test_per_base_sql: per_base=true emits one
     // row per position of each contig WITH reads, zeros included,
     // length from the header (MT = 16569)
-    val lens = graft.sources.Bam.contigLengths(spark, s"$dataDir/ovl.bam")
+    val lens = graft.sources.Bam.contigLengths(spark, fixture("ovl.bam"))
     val df = spark.read.format("graft.sources.BamDataSource")
-      .option("path", s"$dataDir/ovl.bam").load()
+      .option("path", fixture("ovl.bam")).load()
     val mt = Pileup.depthPerBaseFull(df.select(col("chrom"), col("start"),
         col("flags"), col("cigar"), col("mapping_quality")), lens)
       .where(col("contig") === "MT").orderBy("pos").collect()
@@ -101,7 +107,7 @@ class BamGoldenSuite extends SparkSpec {
     fs.mkdirs(new org.apache.hadoop.fs.Path(tmp))
     for (f <- Seq("ovl.bam", "overlapping-pairs.bam"))
       org.apache.hadoop.fs.FileUtil.copy(
-        new java.io.File(s"$dataDir/$f"),
+        new java.io.File(fixture(f)),
         fs, new org.apache.hadoop.fs.Path(s"$tmp/$f"), false,
         spark.sessionState.newHadoopConf())
     graft.sources.Bam.buildIndex(spark, tmp, every = 1)
@@ -136,7 +142,7 @@ class BamGoldenSuite extends SparkSpec {
     // (32S42M@MT:1 + 74M@MT:7 reproduce blocks (1,6,1),(7,42,2),
     // (43,80,1) exactly)
     val df = spark.read.format("graft.sources.BamDataSource")
-      .option("path", s"$dataDir/ovl.bam").load()
+      .option("path", fixture("ovl.bam")).load()
     val rows = df.select("start", "flags", "read_name", "seq", "qual")
       .orderBy("start").collect()
     assert(rows.length == 2)
@@ -201,7 +207,7 @@ class BamGoldenSuite extends SparkSpec {
     fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
     fs.mkdirs(new org.apache.hadoop.fs.Path(tmp))
     org.apache.hadoop.fs.FileUtil.copy(
-      new java.io.File(s"$dataDir/ovl.bam"),
+      new java.io.File(fixture("ovl.bam")),
       fs, new org.apache.hadoop.fs.Path(s"$tmp/ovl.bam"), false, hconf)
     graft.sources.Bam.buildIndex(spark, tmp, every = 1)
     def partsAt(k: Int) =
@@ -211,7 +217,7 @@ class BamGoldenSuite extends SparkSpec {
     // the recorded #len= no longer matches
     fs.delete(new org.apache.hadoop.fs.Path(s"$tmp/ovl.bam"), false)
     org.apache.hadoop.fs.FileUtil.copy(
-      new java.io.File(s"$dataDir/overlapping-pairs.bam"),
+      new java.io.File(fixture("overlapping-pairs.bam")),
       fs, new org.apache.hadoop.fs.Path(s"$tmp/ovl.bam"), false, hconf)
     val stale = partsAt(4)
     assert(stale.length == 1 &&
@@ -227,7 +233,7 @@ class BamGoldenSuite extends SparkSpec {
   }
 
   test("reference dictionary decodes (MT length 16569 per the header)") {
-    val fs = new java.io.FileInputStream(s"$dataDir/ovl.bam")
+    val fs = new java.io.FileInputStream(fixture("ovl.bam"))
     val (refs, it) = graft.sources.Bam.read(fs)
     try {
       assert(refs.exists { case (n, l) => n == "MT" && l == 16569 })

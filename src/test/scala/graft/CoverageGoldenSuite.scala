@@ -15,7 +15,7 @@ class CoverageGoldenSuite extends SparkSpec {
   private val dir = RangesQueries.GoldenRangesDir
 
   test("strict coverage reproduces the reference's polars-bio golden exactly") {
-    assume(new java.io.File(dir).isDirectory, s"golden fixtures absent at $dir")
+    assume(new java.io.File(dir).isDirectory, Tables.fixtureAbsent(dir))
     val fbrain = spark.read.parquet(s"$dir/fBrain-DS14718")
     val exons = spark.read.parquet(s"$dir/exons")
     val got = Ranges.coverage(fbrain, exons, op = FilterOp.Strict)
@@ -38,7 +38,7 @@ class CoverageGoldenSuite extends SparkSpec {
   }
 
   test("cluster over the real exons parquet reproduces the reference's issue-373 boundaries") {
-    assume(new java.io.File(dir).isDirectory, s"golden fixtures absent at $dir")
+    assume(new java.io.File(dir).isDirectory, Tables.fixtureAbsent(dir))
     // reference integration_test.rs
     // test_cluster_exons_issue_373_target_partitions_preserve_boundaries:
     // five probe intervals with PINNED cluster bounds, invariant under

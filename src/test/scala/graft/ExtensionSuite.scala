@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.GraftConf
 import graft.plans.Graft
 
 /** Transparent SQL interval-join rewrite (planner strategy). */
@@ -35,12 +36,12 @@ class ExtensionSuite extends SparkSpec {
   test("rewritten join returns the same rows as the stock plan") {
     val df = spark.sql(joinSql)
     val got = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    spark.conf.set("spark.graft.intervalJoin.enabled", "false")
+    spark.conf.set(GraftConf.IntervalJoinEnabled, "false")
     val stock = try {
       val d = spark.sql(joinSql)
       assert(!d.queryExecution.executedPlan.toString.contains("BroadcastIntervalJoin"))
       d.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    } finally spark.conf.set("spark.graft.intervalJoin.enabled", "true")
+    } finally spark.conf.set(GraftConf.IntervalJoinEnabled, "true")
     assert(got == stock && got.nonEmpty)
   }
 

@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.GraftConf
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
@@ -515,14 +516,14 @@ class MlSuite extends SparkSpec {
     try {
       for (w <- Seq(3L, 64L, 1L << 62); parts <- Seq("1", "7")) {
         spark.conf.set("spark.sql.shuffle.partitions", parts)
-        spark.conf.set("spark.bio.pack.idBucketWidth", w.toString)
+        spark.conf.set(GraftConf.PackIdBucketWidth, w.toString)
         val got = Packing.packSequences(docsF, "text", "doc_id", 64L)
           .select("doc_id", "n_tokens", "stream_offset", "bin")
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
         assert(got == naive, s"width=$w parts=$parts")
       }
     } finally {
-      spark.conf.unset("spark.bio.pack.idBucketWidth")
+      spark.conf.unset(GraftConf.PackIdBucketWidth)
       spark.conf.set("spark.sql.shuffle.partitions", p0)
     }
     // hash split: deterministic, complete, roughly proportional

@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.GraftConf
 import graft.pileup.{Cigar, Pileup}
 import graft.vep.{Allele, Vep}
 import org.apache.spark.sql.functions.col
@@ -81,10 +82,10 @@ class PileupVepSuite extends SparkSpec {
     ).toDF("chrom", "start", "flags", "cigar", "mapping_quality")
     val lens = Seq(("c1", 600L), ("c2", 40L)).toDF("chrom", "length")
     def run(width: Long): (Seq[Seq[Any]], Seq[Seq[Any]]) = {
-      spark.conf.set("spark.bio.depth.posBucketWidth", width.toString)
+      spark.conf.set(GraftConf.DepthPosBucketWidth, width.toString)
       try (sortedRows(Pileup.depth(reads)),
            sortedRows(Pileup.depthPerBaseFull(reads, lens)))
-      finally spark.conf.unset("spark.bio.depth.posBucketWidth")
+      finally spark.conf.unset(GraftConf.DepthPosBucketWidth)
     }
     val baseline = run(1L << 62)          // one bucket: the old per-chrom window
     assert(baseline._2.size == 640)       // full-contig mode: every position

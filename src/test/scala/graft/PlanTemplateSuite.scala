@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Coord, PlanTemplates}
+import graft.core.{Coord, GraftConf, PlanTemplates}
 import graft.vep.{Annotate, VepOptions}
 
 /** Annotate plan templates ([[PlanTemplates]]) on file-backed inputs:
@@ -143,7 +143,7 @@ class PlanTemplateSuite extends SparkSpec {
         assert(rows == fresh(annotate(vcf(vcfB), ctx, opts)))
       } finally unset()
     }
-    val limit = graft.ranges.BuildGuard.ConfKey
+    val limit = GraftConf.BroadcastBuildLimit
     // a 1-byte broadcast cap keeps every dim out of localization
     missesAndMatches(() => spark.conf.set(limit, "1"), () => spark.conf.unset(limit))
     val ansi = "spark.sql.ansi.enabled"

@@ -2,7 +2,7 @@ package graft
 
 import scala.util.Random
 import org.apache.spark.sql.DataFrame
-import graft.core.FilterOp
+import graft.core.{FilterOp, GraftConf}
 import graft.ranges.Ranges
 
 /** Randomized interval-algebra properties against naive models, plus
@@ -80,7 +80,7 @@ class PropertySuite extends SparkSpec {
     // byte-identical to the un-salted and broadcast paths. "auto"
     // derives S from the probe side's observed per-contig counts.
     for (saltF <- Seq("1", "3", "auto")) {
-      spark.conf.set("spark.bio.partitioned.saltFactor", saltF)
+      spark.conf.set(GraftConf.SaltFactor, saltF)
       try {
         for (k <- Seq(1, 3); ov <- Seq(true, false)) {
           val bc = rowsOf(IntervalJoin.nearest(a, b, ic, ic, FilterOp.Weak, k,
@@ -94,7 +94,7 @@ class PropertySuite extends SparkSpec {
           val pt = rowsOf(PartitionedJoin.subtractPartitioned(a, b, ic, ic, op))
           assert(pt == bc, s"subtract $op salt=$saltF")
         }
-      } finally spark.conf.unset("spark.bio.partitioned.saltFactor")
+      } finally spark.conf.unset(GraftConf.SaltFactor)
     }
   }
 
@@ -116,7 +116,7 @@ class PropertySuite extends SparkSpec {
     def rowsOf(df: DataFrame): Seq[Seq[Any]] =
       df.collect().map(_.toSeq.toList).toSeq.sortBy(_.toString)
     val ic = IntervalCols.default
-    assert(spark.conf.getOption("spark.bio.partitioned.saltFactor").isEmpty)
+    assert(spark.conf.getOption(GraftConf.SaltFactor).isEmpty)
     val bc = rowsOf(IntervalJoin.nearest(b, hot, ic, ic, FilterOp.Weak, 2,
       true, computeDistance = true, tieBreakCol = Some("id")))
     val pt = rowsOf(PartitionedJoin.nearestPartitioned(b, hot, ic, ic,
@@ -243,14 +243,14 @@ class PropertySuite extends SparkSpec {
     try {
       for (width <- Seq(16L, 128L, 1L << 62); p <- Seq("1", "7")) {
         spark.conf.set("spark.sql.shuffle.partitions", p)
-        spark.conf.set("spark.bio.depth.posBucketWidth", width.toString)
+        spark.conf.set(GraftConf.DepthPosBucketWidth, width.toString)
         val got = graft.pileup.Pileup.depthPerBase(reads).collect()
           .map(r2 => (r2.getString(0), r2.getLong(1), r2.getInt(2))).toSet
         assert(got == naive, s"width=$width partitions=$p")
       }
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", p0)
-      spark.conf.unset("spark.bio.depth.posBucketWidth")
+      spark.conf.unset(GraftConf.DepthPosBucketWidth)
     }
   }
 
@@ -290,7 +290,7 @@ class PropertySuite extends SparkSpec {
             greatest($"left_pos_start", $"right_pos_start") + 1)))
         .collect().map(row => row.getLong(0) -> row.getLong(1)).toMap
     graft.plans.Graft.enable(spark)
-    val keys = Seq("spark.sql.adaptive.enabled", "spark.graft.intervalJoin.enabled")
+    val keys = Seq("spark.sql.adaptive.enabled", GraftConf.IntervalJoinEnabled)
     val saved = keys.map(k => k -> spark.conf.getOption(k))
     try {
       for (aqe <- Seq("true", "false"); ij <- Seq("true", "false")) {

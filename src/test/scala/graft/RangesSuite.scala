@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import graft.core.FilterOp
+import graft.core.{FilterOp, GraftConf}
 import graft.ranges.Ranges
 
 /** Per-operator semantics tests on the reference's own fixture rows
@@ -57,29 +57,29 @@ class RangesSuite extends SparkSpec {
   test("J3 algorithm selection: linear index agrees with superintervals") {
     import graft.index.IntervalIndexFactory
     try {
-      spark.conf.set(IntervalIndexFactory.ConfKey, "linear")
+      spark.conf.set(GraftConf.IntervalJoinAlgorithm, "linear")
       val got = Ranges.overlap(reads, targets, mode = "join")
         .select("left_id", "right_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got == naivePairs(FilterOp.Weak))
-    } finally spark.conf.unset(IntervalIndexFactory.ConfKey)
+    } finally spark.conf.unset(GraftConf.IntervalJoinAlgorithm)
     intercept[IllegalArgumentException] {
       IntervalIndexFactory.build("quadtree", Array(1L), Array(2L), Array(0))
     }
   }
 
-  test("J3 eytzinger/lapper/ailist/coitrees/arrayintervaltree indexes: emission parity with superintervals") {
+  test("J3 every algorithm name: emission parity with linear") {
     import graft.index.IntervalIndexFactory
     val rnd = new scala.util.Random(42)
     for (n <- Seq(0, 1, 7, 100, 1023);
-         algo <- Seq("eytzinger", "lapper", "ailist", "coitrees",
-           "arrayintervaltree")) {
+         algo <- Seq("superintervals", "eytzinger", "lapper", "ailist", "coitrees",
+           "arrayintervaltree", "linear", "")) {
       val s = Array.fill(n)(rnd.nextLong(1000))
       // ~10% very long intervals: the length skew that degrades plain
-      // backward scans and drives AIList's component extraction
+      // backward scans and prunes the implicit tree's subtrees
       val e = s.map(x => x + (if (rnd.nextInt(10) == 0) 800L else rnd.nextLong(50)))
       val p = Array.range(0, n)
-      val a = IntervalIndexFactory.build("superintervals", s, e, p)
+      val a = IntervalIndexFactory.build("linear", s, e, p)
       val b = IntervalIndexFactory.build(algo, s, e, p)
       for (_ <- 0 until 200) {
         val qs = rnd.nextLong(1100) - 50
@@ -93,12 +93,12 @@ class RangesSuite extends SparkSpec {
     }
     // end-to-end through the interval strategy
     try {
-      spark.conf.set(IntervalIndexFactory.ConfKey, "eytzinger")
+      spark.conf.set(GraftConf.IntervalJoinAlgorithm, "coitrees")
       val got = Ranges.overlap(reads, targets, mode = "join")
         .select("left_id", "right_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got == naivePairs(FilterOp.Weak))
-    } finally spark.conf.unset(IntervalIndexFactory.ConfKey)
+    } finally spark.conf.unset(GraftConf.IntervalJoinAlgorithm)
   }
 
   test("overlap join output schema is left_*/right_* prefixed") {
@@ -270,7 +270,7 @@ class RangesSuite extends SparkSpec {
     val baseNear = rowsOf(Ranges.nearest(reads, targets, tieBreakCol = Some("id")))
     val baseSub = rowsOf(Ranges.subtract(reads, targets))
     try {
-      spark.conf.set(BuildGuard.ConfKey, "1") // nothing fits
+      spark.conf.set(GraftConf.BroadcastBuildLimit, "1") // nothing fits
       assert(!BuildGuard.fits(reads) && !BuildGuard.fits(targets))
       // identical row sets through the grid-bucket failover
       assert(pairsOf(Ranges.overlap(reads, targets, mode = "join")) == baseJoin)
@@ -301,7 +301,7 @@ class RangesSuite extends SparkSpec {
           Seq(("chr1", 100L, 200L, "T1", 1))
             .toDF("chrom", "start", "end", "transcript_id", "strand"))
       }
-    } finally spark.conf.unset(BuildGuard.ConfKey)
+    } finally spark.conf.unset(GraftConf.BroadcastBuildLimit)
     // with the cap back at default everything broadcasts again
     assert(BuildGuard.fits(reads))
     assert(pairsOf(Ranges.overlap(reads, targets, mode = "join")) == baseJoin)
@@ -365,9 +365,9 @@ class RangesSuite extends SparkSpec {
     assert(pairs(Ranges.overlap(l, r, mode = "join")) == expected)
     import graft.ranges.BuildGuard
     try {
-      spark.conf.set(BuildGuard.ConfKey, "1")
+      spark.conf.set(GraftConf.BroadcastBuildLimit, "1")
       assert(pairs(Ranges.overlap(l, r, mode = "join")) == expected)
-    } finally spark.conf.unset(BuildGuard.ConfKey)
+    } finally spark.conf.unset(GraftConf.BroadcastBuildLimit)
     // nearest across the i32 boundary: distance math stays exact
     val near = Ranges.nearest(l, r, tieBreakCol = Some("id"))
       .select("right_id", "left_id", "distance").collect()
@@ -402,7 +402,7 @@ class RangesSuite extends SparkSpec {
     val p0 = spark.conf.get("spark.sql.shuffle.partitions")
     def run(width: Long, parts: String): Seq[Seq[Seq[Any]]] = {
       spark.conf.set("spark.sql.shuffle.partitions", parts)
-      spark.conf.set("spark.bio.sweep.posBucketWidth", width.toString)
+      spark.conf.set(GraftConf.SweepPosBucketWidth, width.toString)
       try Seq(
         sortedRows(Ranges.merge(in)),
         sortedRows(Ranges.merge(in, minDist = 15L)),
@@ -412,7 +412,7 @@ class RangesSuite extends SparkSpec {
         sortedRows(Ranges.complement(in)),
         sortedRows(Ranges.complement(in, view = Some(vw))))
       finally {
-        spark.conf.unset("spark.bio.sweep.posBucketWidth")
+        spark.conf.unset(GraftConf.SweepPosBucketWidth)
         spark.conf.set("spark.sql.shuffle.partitions", p0)
       }
     }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.GraftConf
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ranges.PartitionedJoin
@@ -20,8 +21,8 @@ class SaltDecisionSuite extends SparkSpec {
   }
 
   private def withFloor[T](floor: Long)(f: => T): T = {
-    spark.conf.set("spark.bio.partitioned.saltMinSliceRows", floor.toString)
-    try f finally spark.conf.unset("spark.bio.partitioned.saltMinSliceRows")
+    spark.conf.set(GraftConf.SaltMinSliceRows, floor.toString)
+    try f finally spark.conf.unset(GraftConf.SaltMinSliceRows)
   }
 
   private val evenSmall = iv((0 until 200).map(i => (s"c${i % 4}", i.toLong)))
@@ -100,13 +101,13 @@ class SaltDecisionSuite extends SparkSpec {
   }
 
   test("explicit saltFactor conf still overrides auto") {
-    spark.conf.set("spark.bio.partitioned.saltFactor", "3")
+    spark.conf.set(GraftConf.SaltFactor, "3")
     try {
       val ic = graft.core.IntervalCols.default
       val out = PartitionedJoin.nearestPartitioned(
         evenSmall, evenBig, ic, ic, graft.core.FilterOp.Weak, 1,
         includeOverlaps = true, computeDistance = false, tieBreakCol = "id")
       assert(out.count() == 8000)
-    } finally spark.conf.unset("spark.bio.partitioned.saltFactor")
+    } finally spark.conf.unset(GraftConf.SaltFactor)
   }
 }

@@ -38,11 +38,7 @@ object SparkSpec {
   lazy val runRoot: Path = Files.createTempDirectory("graft_spec_")
 
   private def deleteTree(p: Path): Unit = {
-    if (Files.exists(p)) {
-      val walk = Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
-      finally walk.close()
-    }
+    graft.core.Scratch.deleteTree(p)
     try Files.deleteIfExists(runRoot)
     catch { case _: java.nio.file.DirectoryNotEmptyException => }
   }

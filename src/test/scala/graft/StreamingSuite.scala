@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.GraftConf
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.streaming.{EventStreams, IntervalStreams}
@@ -326,7 +327,7 @@ class StreamingSuite extends SparkSpec {
     assert(graft.streaming.StreamWidth.derive(s, Long.MaxValue) <= 8 * dp)
     // explicit conf wins outright
     val ns = s.newSession()
-    ns.conf.set("spark.bio.stream.statePartitions", "7")
+    ns.conf.set(GraftConf.StatePartitions, "7")
     assert(graft.streaming.StreamWidth.derive(ns, 4L << 30) == 7)
     // scoped() isolates the width from the parent session's conf
     val scoped = graft.streaming.StreamWidth.scoped(s, 4L << 30)

@@ -98,39 +98,54 @@ object Micro {
 
   /** One JSON line per interval-join algorithm name: ns per interval to
     * build every contig's index, ns per probe to query it, and the match
-    * count, which every name must report alike. */
+    * count, which every name must report alike. The names are timed in
+    * seven rounds, each starting one name later than the last, and
+    * each figure is the median of the per-round figures: a name's place
+    * in the run (JIT and heap state) then biases no name more than
+    * another, so two names that select one kernel read alike. */
   private def stabbers(layout: String, contigs: Seq[Contig]): Unit = {
+    val rounds = 7
     val nIv = contigs.map(_.s.length).sum; val nQ = contigs.map(_.qs.length).sum
     val payloads = contigs.map(c => Array.range(0, c.s.length))
-    for (algo <- IntervalIndexFactory.Names) {
-      def build(): Seq[IntervalStabber] =
-        contigs.zip(payloads).map { case (c, p) => IntervalIndexFactory.build(algo, c.s, c.e, p) }
-      def matches(ix: Seq[IntervalStabber]): Long = {
-        var m = 0L
-        for ((c, x) <- contigs.zip(ix)) {
-          var i = 0
-          while (i < c.qs.length) { x.query(c.qs(i), c.qe(i))(_ => m += 1); i += 1 }
-        }
-        m
+    val names = IntervalIndexFactory.Names
+    def build(algo: String): Seq[IntervalStabber] =
+      contigs.zip(payloads).map { case (c, p) => IntervalIndexFactory.build(algo, c.s, c.e, p) }
+    def matches(ix: Seq[IntervalStabber]): Long = {
+      var m = 0L
+      for ((c, x) <- contigs.zip(ix)) {
+        var i = 0
+        while (i < c.qs.length) { x.query(c.qs(i), c.qe(i))(_ => m += 1); i += 1 }
       }
-      val ix = build()
-      Json.line("micro" -> "stabber", "layout" -> layout, "algo" -> algo,
-        "intervals" -> nIv, "probes" -> nQ,
-        "build_ns_per_iv" -> meanNs(build().length.toLong) / nIv,
-        "probe_ns" -> meanNs(matches(ix)) / nQ, "matches" -> matches(ix))
+      m
     }
+    val ix = names.map(a => a -> build(a)).toMap
+    val buildNs = names.map(_ -> Array.newBuilder[Double]).toMap
+    val probeNs = names.map(_ -> Array.newBuilder[Double]).toMap
+    for (r <- 0 until rounds; algo <- names.drop(r % names.size) ++ names.take(r % names.size)) {
+      buildNs(algo) += meanNs(build(algo).length.toLong) / nIv
+      probeNs(algo) += meanNs(matches(ix(algo))) / nQ
+    }
+    def median(b: scala.collection.mutable.ArrayBuilder[Double]): Double = {
+      val xs = b.result().sorted
+      (xs((xs.length - 1) / 2) + xs(xs.length / 2)) / 2
+    }
+    for (algo <- names)
+      Json.line("micro" -> "stabber", "layout" -> layout, "algo" -> algo,
+        "intervals" -> nIv, "probes" -> nQ, "rounds" -> rounds,
+        "build_ns_per_iv" -> median(buildNs(algo)),
+        "probe_ns" -> median(probeNs(algo)), "matches" -> matches(ix(algo)))
   }
 
   @volatile private var sink = 0L
 
   /** Mean ns of one `body` call: three warm-up calls, then repeats for
-    * at least 200 ms. */
+    * at least 50 ms. */
   private def meanNs(body: => Long): Double = {
     for (_ <- 0 until 3) sink += body
     var reps = 0
     val t0 = System.nanoTime()
     var t = t0
-    while (t - t0 < 200000000L || reps < 2) { sink += body; reps += 1; t = System.nanoTime() }
+    while (t - t0 < 50000000L || reps < 2) { sink += body; reps += 1; t = System.nanoTime() }
     (t - t0).toDouble / reps
   }
 

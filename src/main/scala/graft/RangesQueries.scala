@@ -143,7 +143,6 @@ object RangesQueries {
     // map-only, so append mode needs no watermark. The oracle is the
     // batch count_overlaps SQL.
     "s8_stream_count_overlaps" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
       val schema = Tables.load(s, d, "orders").schema
       val bStream = s.readStream.schema(schema)
         .option("pathGlobFilter", "orders.parquet").parquet(d)

@@ -327,7 +327,6 @@ object VepSpliceQueries {
     // window-join classification.
     "s9_stream_annotate_tx" -> ((s, d) => {
       import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.streaming.Trigger
       val schema = Tables.load(s, d, "part").schema
       val vcfStream = s.readStream.schema(schema)
         .option("pathGlobFilter", "part.parquet").parquet(d)

@@ -40,7 +40,7 @@ final class SessionCache[K, V <: AnyRef](capacity: Int) {
     bySession.computeIfAbsent(s, _ =>
       new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
         override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
-          size() > capacity
+          this.size() > capacity
       })
   }
 }

@@ -72,7 +72,7 @@ final class ContigIntervalIndex(
     // NOTE: a strict-adjusted query may have qs = qe + 2 (point probe);
     // the predicate `start <= qe && end >= qs` then selects intervals
     // STRICTLY containing the point — do not early-return on qs > qe.
-    var i = Bounds.upperBound(starts, qe) - 1
+    val i = Bounds.upperBound(starts, qe) - 1
     // collect backwards, then emit forwards for deterministic order
     var lo = i
     while (lo >= 0 && maxEnds(lo) >= qs) lo -= 1
@@ -221,39 +221,52 @@ trait ScalarIndex extends Serializable {
 /** Two-sorted-arrays overlap counter — the reference's
   * `CountOverlapIndex` (interval_tree.rs:20-50):
   * `count = #(starts <= qe) − #(ends < qs)`, each via binary search.
-  * O(log n) per probe, no enumeration. */
+  * O(log n) per probe, no enumeration.
+  *
+  * The formula assumes `start <= end` and `qs <= qe + 1`; it is made
+  * exact, against the overlap predicate `start <= qe && end >= qs`
+  * (the join's answer), in two ways:
+  *  - an inverted query (`qs > qe + 1`: a strict point probe, or an
+  *    inverted probe row) subtracts the intervals lying inside the
+  *    open window `(qe, qs)` without ever counting them; they are
+  *    added back by a scan of the starts inside the window;
+  *  - an inverted interval (start > end) lying across the query would
+  *    likewise be subtracted uncounted, so inverted intervals are kept
+  *    out of the arrays and counted in their own stabbing index. */
 final class CountOverlapIndex(
     val sortedStarts: Array[Long],
+    /** the ends in `sortedStarts` order */
+    val endsByStart: Array[Long],
     val sortedEnds: Array[Long],
-    /** sorted positions of point intervals (start == end) — needed to
-      * correct inverted strict-adjusted queries, see [[count]] */
-    val sortedPointPos: Array[Long]) extends ScalarIndex {
+    /** the inverted intervals, or null when there are none */
+    val inverted: ContigIntervalIndex) extends ScalarIndex {
   import Bounds._
 
   def valueOf(qs: Long, qe: Long): Long = count(qs, qe)
 
   def count(qs: Long, qe: Long): Long = {
-    val base = (upperBound(sortedStarts, qe) - lowerBound(sortedEnds, qs)).toLong
-    if (qs <= qe + 1) base
-    else {
-      // Inverted strict-adjusted query (point probe): intervals lying
-      // entirely inside the open window (qe, qs) — exactly the point
-      // intervals at qe+1, since FilterOp inverts by at most 2 — are
-      // subtracted via sortedEnds without ever being counted in
-      // sortedStarts. Add them back for an exact count.
-      base + (upperBound(sortedPointPos, qs - 1) - lowerBound(sortedPointPos, qe + 1)).toLong
+    val first = upperBound(sortedStarts, qe)
+    var n = (first - lowerBound(sortedEnds, qs)).toLong
+    if (qs > qe + 1) {
+      var i = first
+      while (i < sortedStarts.length && sortedStarts(i) < qs) {
+        if (endsByStart(i) < qs) n += 1
+        i += 1
+      }
     }
+    if (inverted == null) n else n + inverted.countOverlaps(qs, qe)
   }
-
 }
 
 object CountOverlapIndex {
   def build(s: Array[Long], e: Array[Long]): CountOverlapIndex = {
-    val ss = s.clone(); val ee = e.clone()
-    java.util.Arrays.sort(ss); java.util.Arrays.sort(ee)
-    val pts = s.indices.collect { case i if s(i) == e(i) => s(i) }.toArray
-    java.util.Arrays.sort(pts)
-    new CountOverlapIndex(ss, ee, pts)
+    val (ok, inv) = Array.range(0, s.length).partition(i => s(i) <= e(i))
+    val byStart = ok.sortBy(i => s(i))
+    val ee = ok.map(i => e(i))
+    java.util.Arrays.sort(ee)
+    new CountOverlapIndex(byStart.map(i => s(i)), byStart.map(i => e(i)), ee,
+      if (inv.isEmpty) null
+      else ContigIntervalIndex.build(inv.map(i => s(i)), inv.map(i => e(i)), inv))
   }
 }
 
@@ -344,11 +357,13 @@ object CoverageIndex {
     * (`s < curEnd` required to join) — the convention strict subtract
     * needs: a touching pair merged weakly would qualify as a strict
     * overlap candidate that neither member is, swallowing point
-    * fragments at the shared boundary. */
+    * fragments at the shared boundary. An inverted interval
+    * (start > end) covers no base and is left out. */
   def build(s: Array[Long], e: Array[Long], strictMerge: Boolean = false): CoverageIndex = {
-    val n = s.length
+    val kept = Array.range(0, s.length).filter(i => s(i) <= e(i))
+    val n = kept.length
     if (n == 0) return new CoverageIndex(Array.empty, Array.empty, Array(0L), Array(0))
-    val order = Array.range(0, n).sortInPlaceWith { (a, b) =>
+    val order = kept.sortInPlaceWith { (a, b) =>
       if (s(a) != s(b)) s(a) < s(b) else e(a) < e(b)
     }
     val mss = new ArrayBuffer[Long](); val mes = new ArrayBuffer[Long]()

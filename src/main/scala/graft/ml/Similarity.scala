@@ -76,14 +76,11 @@ object Similarity {
       .select(col("q_id"), col("n_id"), col("rank"))
   }
 
-  /** Random-hyperplane LSH bucket signature: `planes` sign bits, where
-    * hyperplane h's component i is derived from md5 (deterministic,
+  /** Random-hyperplane LSH bucket signature of an already-quantized
+    * component array: `planes` sign bits, where hyperplane h's
+    * component i is derived from md5 (deterministic,
     * engine-independent): digit = hex(md5(h||'_'||i)) mod 16 - 7.5,
     * realized as integer votes (2*digit - 15) to stay exact. */
-  def lshBucket(v: Column, planes: Int, dim: Int): Column =
-    lshBucketPre(quant(v), planes, dim)
-
-  /** [[lshBucket]] over an already-quantized component array. */
   private def lshBucketPre(vq: Column, planes: Int, dim: Int): Column = {
     val bits = sequence(lit(0), lit(planes - 1))
     transform(bits, h => {

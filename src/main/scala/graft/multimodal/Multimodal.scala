@@ -2,7 +2,6 @@ package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal-column plumbing: image/audio/video payloads ride as
   * opaque `binary` columns with typed metadata; decode/feature steps
@@ -21,16 +20,6 @@ import org.apache.spark.sql.types._
   * etc.) and replaces only that body.
   */
 object Multimodal {
-
-  /** Feature row produced per asset. */
-  val featureSchema: StructType = StructType(Seq(
-    StructField("asset_id", LongType, nullable = false),
-    StructField("media_type", StringType, nullable = false),
-    StructField("byte_length", LongType, nullable = false),
-    StructField("width", IntegerType, nullable = true),
-    StructField("height", IntegerType, nullable = true),
-    StructField("duration_ms", LongType, nullable = true),
-    StructField("checksum", StringType, nullable = false)))
 
   /** Synthetic-header parser — the VIDEO stand-in (the JDK ships no
     * video codec) and the fallback for unrecognized image/audio

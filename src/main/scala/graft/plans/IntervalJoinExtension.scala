@@ -11,6 +11,7 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.types.{IntegerType, LongType, ShortType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.core.GraftConf
+import graft.ranges.IntervalBuild
 
 /** Transparent interval-join rewrite (SURVEY.md §2 J1-J3/J5, §3.1):
   * an ordinary SQL join whose condition is
@@ -160,71 +161,29 @@ case class BroadcastIntervalJoinExec(
       newLeft: SparkPlan, newRight: SparkPlan): SparkPlan =
     copy(left = newLeft, right = newRight)
 
-  /** Null coordinates follow SQL comparison semantics: a null bound
-    * can never satisfy the join condition, so a build row with a null
-    * coordinate is simply not indexed and a probe row with one matches
-    * nothing (null-extended under outer types) — NOT an error. */
-  private def asLong(v: Any): Long = v match {
-    case l: Long => l
-    case i: Int => i.toLong
-    case s: Short => s.toLong
-    case other => throw new IllegalArgumentException(
-      s"non-integral interval coordinate in interval join: $other")
-  }
-
-  /** CollectLeft build (collect + per-contig index + broadcasts),
-    * started ASYNCHRONOUSLY at [[doPrepare]] time on the shared build
-    * pool with the submitting query's thread-locals captured
-    * (execution id, job group) — exactly BroadcastExchangeExec's
-    * pattern. `prepare()` walks the whole tree before any
-    * `doExecute()`, so a multi-probe query's several interval builds
-    * overlap instead of serializing (~0.8 s of back-to-back
-    * collect+build segments in the annotate e2e timeline). */
+  /** CollectLeft build ([[graft.ranges.IntervalBuild]]: collect,
+    * per-contig index, one broadcast), started ASYNCHRONOUSLY at
+    * [[doPrepare]] time on the shared build pool with the submitting
+    * query's thread-locals captured (execution id, job group) — exactly
+    * BroadcastExchangeExec's pattern. `prepare()` walks the whole tree
+    * before any `doExecute()`, so a multi-probe query's several
+    * interval builds overlap instead of serializing (~0.8 s of
+    * back-to-back collect+build segments in the annotate e2e
+    * timeline). A build row with a null contig or coordinate can never
+    * satisfy the condition (SQL null comparison) and is not indexed. */
   @transient private lazy val buildFuture
       : java.util.concurrent.CompletableFuture[
         org.apache.spark.broadcast.Broadcast[
           (graft.core.RowBlock, Map[UTF8String, graft.index.IntervalStabber])]] =
     org.apache.spark.sql.GraftExecBridge.async {
-      val (buildPlan, _) = if (buildLeft) (left, right) else (right, left)
-      val (bStartE, bEndE) = if (buildLeft) (lStart, lEnd) else (rStart, rEnd)
-      val bc0 = contigs.map(c => BindReferences.bindReference(
-        if (buildLeft) c._1 else c._2, buildPlan.output))
-      val bs = BindReferences.bindReference(bStartE, buildPlan.output)
-      val be = BindReferences.bindReference(bEndE, buildPlan.output)
+      val buildPlan = if (buildLeft) left else right
+      def bind(e: Expression) = BindReferences.bindReference(e, buildPlan.output)
       val rows = buildPlan.executeCollect()
-
-      val groups = mutable.HashMap.empty[UTF8String,
-        (mutable.ArrayBuffer[Long], mutable.ArrayBuffer[Long], mutable.ArrayBuffer[Int])]
-      var i = 0
-      while (i < rows.length) {
-        val row = rows(i)
-        val key0 = bc0 match {
-          case Some(b) => b.eval(row).asInstanceOf[UTF8String]
-          case None => UTF8String.EMPTY_UTF8
-        }
-        val sv = bs.eval(row); val ev = be.eval(row)
-        // null contig / coordinate: the condition can never hold (SQL
-        // null comparison) — leave the row out of the index
-        if (key0 != null && sv != null && ev != null) {
-          val g = groups.getOrElseUpdate(key0.copy(),
-            (mutable.ArrayBuffer.empty, mutable.ArrayBuffer.empty, mutable.ArrayBuffer.empty))
-          g._1 += asLong(sv); g._2 += asLong(ev); g._3 += i
-        }
-        i += 1
-      }
-      // per-contig builds run CONCURRENTLY (round 18, the same move as
-      // IntervalJoin.parBuild): each build is an independent sort, and
-      // the serial loop sat on the single-join critical path
-      val indexes: Map[UTF8String, graft.index.IntervalStabber] = {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.DurationInt
-        implicit val ec: ExecutionContext = ExecutionContext.global
-        Await.result(
-          Future.sequence(groups.map { case (k, (s, e, p)) =>
-            Future(k -> graft.index.IntervalIndexFactory.build(
-              algorithm, s.toArray, e.toArray, p.toArray))
-          }), 10.minutes).toMap
-      }
+      val groups = IntervalBuild.group(rows,
+        contigs.map(c => bind(if (buildLeft) c._1 else c._2)),
+        bind(if (buildLeft) lStart else rStart), bind(if (buildLeft) lEnd else rEnd))
+      val indexes = IntervalBuild.index(groups)(g =>
+        graft.index.IntervalIndexFactory.build(algorithm, g.starts, g.ends, g.rowIdx))
       // ONE broadcast of (packed row block, index map) — the packed
       // block serializes at memcpy speed instead of per-row
       // Externalizable writes, and the single torrent round halves the
@@ -301,8 +260,8 @@ case class BroadcastIntervalJoinExec(
         // comparison): outer types null-extend, inner/semi drop, anti keeps
         if (key != null && qsv != null && qev != null)
           idxMap.get(key).foreach { idx =>
-            val qs = asLong(qsv) + addQs
-            val qe = asLong(qev) - subQe
+            val qs = IntervalBuild.asLong(qsv, "interval coordinate") + addQs
+            val qe = IntervalBuild.asLong(qev, "interval coordinate") - subQe
             pred match {
               case Some(p) =>
                 idx.query(qs, qe)(h => if (p.eval(pair(buildRows(h), prow))) hits += h)

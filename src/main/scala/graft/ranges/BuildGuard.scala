@@ -15,15 +15,22 @@ import graft.core.GraftConf
   * vs Partitioned itself from plan statistics; this guard does the
   * same choice for the [[Ranges]] API: a build side whose Catalyst
   * size estimate exceeds `spark.bio.broadcast_build_limit` (bytes)
-  * silently fails over to the partitioned grid-bucket path
-  * ([[Ranges.overlapPartitioned]] family) — same rows, no driver
-  * collect, no memory cap. Operators with no partitioned equivalent
-  * ([[Ranges.nearest]], [[Ranges.subtract]], the streaming probes)
-  * use [[requireFits]] and fail loudly instead of OOMing mid-collect.
+  * silently fails over to the partitioned path (the
+  * [[Ranges.overlapPartitioned]] family, [[PartitionedJoin]]) — same
+  * rows, no driver collect, no memory cap. Operators with no
+  * partitioned equivalent ([[Ranges.nearest]] without a tie-break
+  * column, the streaming probes) use [[requireFits]] and fail loudly
+  * instead of OOMing mid-collect.
   *
   * The estimate is `optimizedPlan.stats.sizeInBytes` — the same
   * statistic Spark's own autoBroadcastJoinThreshold consults; it
-  * costs no job. */
+  * costs no job.
+  *
+  * Which side of the guard a call lands on never changes its rows:
+  * both paths follow SQL's null rule ([[IntervalBuild]]) — a row with
+  * a null contig, start or end takes part in no overlap, so a null
+  * build row is not indexed and a null probe row gets its mode's
+  * no-match result. */
 object BuildGuard {
 
   /** Catalyst's size estimate of the optimized plan — no job runs. */

@@ -1,7 +1,7 @@
 package graft.ranges
 
 import scala.collection.mutable
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import graft.core.{FilterOp, GraftConf, IntervalCols}
@@ -23,6 +23,7 @@ import graft.index.{CoverageIndex, NearestIndex}
   * The probe side streams through the iterator — only the build side
   * of each co-group materializes. */
 object PartitionedJoin {
+  import IntervalBuild.asLong
 
   /** Contig-key skew lever (`spark.bio.partitioned.saltFactor`,
     * default `auto`): with factor S the PROBE side of a co-group
@@ -160,15 +161,10 @@ object PartitionedJoin {
     }
   }
 
-  private def asLong(v: Any, colName: String): Long = v match {
-    case l: Long  => l
-    case i: Int   => i.toLong
-    case s: Short => s.toLong
-    case null => throw new IllegalArgumentException(
-      s"null coordinate in column '$colName' (reference treats null positions as an execution error)")
-    case other => throw new IllegalArgumentException(
-      s"column '$colName' must be integral, got ${other.getClass.getSimpleName}")
-  }
+  /** SQL's null rule, the broadcast paths' rule ([[IntervalBuild]]):
+    * a row whose contig, start or end is null overlaps nothing. */
+  private def complete(cols: IntervalCols): Column =
+    col(cols.contig).isNotNull && col(cols.start).isNotNull && col(cols.end).isNotNull
 
   /** F4 nearest, Partitioned mode. Output identical to
     * [[IntervalJoin.nearest]]: `left_*` (build) ++ `right_*` (probe)
@@ -196,13 +192,12 @@ object PartitionedJoin {
     val psi = pSchema.fieldIndex(pcols.start)
     val pei = pSchema.fieldIndex(pcols.end)
     val nb = bSchema.length
-    // SQL null semantics, matching the broadcast path: null-contig
-    // build rows are never indexed; null-contig probe rows match
-    // nothing and emit the no-candidate (null-left) row
+    // build rows with a null contig or bound are never indexed; such
+    // probe rows match nothing and emit the no-candidate (null-left) row
     val salt = saltFactor(build, probe, pcols.contig)
     val ds = cogroupByContig(
-      build.where(col(bcols.contig).isNotNull),
-      probe.where(col(pcols.contig).isNotNull),
+      build.where(complete(bcols)),
+      probe.where(complete(pcols)),
       bci, pci, salt,
       pr => (((asLong(pr.get(psi), pcols.start) % salt) + salt) % salt).toInt,
       outSchema) { (bIt: Iterator[Row], pIt: Iterator[Row]) =>
@@ -239,10 +234,10 @@ object PartitionedJoin {
         out.iterator
       }
     }
-    // null-contig probes ride a (usually empty) side branch — no
+    // null-input probes ride a (usually empty) side branch — no
     // construction-time action to test for them
     val nullLeft2: Seq[Any] = Seq.fill(nb)(null)
-    val extra = probe.where(col(pcols.contig).isNull).map { pr =>
+    val extra = probe.where(!complete(pcols)).map { pr =>
       Row.fromSeq(nullLeft2 ++ pr.toSeq ++
         (if (computeDistance) Seq(null) else Nil))
     }(Encoders.row(outSchema))
@@ -275,13 +270,13 @@ object PartitionedJoin {
     val rsi = rSchema.fieldIndex(rcols.start)
     val rei = rSchema.fieldIndex(rcols.end)
     val strict = op.isStrict
-    // null-contig subtrahend rows never merge into the index; a
-    // null-contig left row overlaps nothing and passes through whole
-    // (coords Long-cast like every fragment row)
+    // subtrahend rows with a null contig or bound never merge into the
+    // index; such a left row overlaps nothing and passes through whole
+    // (coords Long-cast like every fragment row, nulls kept)
     val salt = saltFactor(right, left, lcols.contig)
     val ds = cogroupByContig(
-      right.where(col(rcols.contig).isNotNull),
-      left.where(col(lcols.contig).isNotNull),
+      right.where(complete(rcols)),
+      left.where(complete(lcols)),
       rci, lci, salt,
       lr => (((asLong(lr.get(lsi), lcols.start) % salt) + salt) % salt).toInt,
       outSchema) { (rIt: Iterator[Row], lIt: Iterator[Row]) =>
@@ -307,10 +302,9 @@ object PartitionedJoin {
         out.iterator
       }
     }
-    val extra = left.where(col(lcols.contig).isNull).map { lr =>
+    val extra = left.where(!complete(lcols)).map { lr =>
       Row.fromSeq(lr.toSeq.zipWithIndex.map {
-        case (v, i) if i == lsi || i == lei => asLong(v,
-          if (i == lsi) lcols.start else lcols.end)
+        case (v, i) if (i == lsi || i == lei) && v != null => asLong(v, "interval coordinate")
         case (v, _) => v
       })
     }(Encoders.row(outSchema))

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.{DataOutputStream, EOFException, InputStream, OutputStream}
+import java.io.{EOFException, InputStream, OutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -229,8 +229,8 @@ object Bam {
     * (no duplication, no loss). `wantSeq` decodes seq/qual (otherwise
     * skipped bytewise with the tags). */
   private def records(in: LeReader, blockIn: Bgzf.BlockInputStream,
-      endVirtual: Long, wantSeq: Boolean = false,
-      wantTags: Boolean = false): Iterator[BamRecord] = new Iterator[BamRecord] {
+      endVirtual: Long, wantSeq: Boolean,
+      wantTags: Boolean): Iterator[BamRecord] = new Iterator[BamRecord] {
     private var nextRec: BamRecord = _
     private var fetched = false
     private def fetch(): Unit = {
@@ -675,7 +675,7 @@ class BamReaderFactory(chromFilter: Option[Set[String]], hadoopConf: Serializabl
         case Some(set) =>
           val mask = names.map(set.contains)
           id => id >= 0 && id < mask.length && mask(id)
-        case None => id => true
+        case None => _ => true
       }
       // one evaluator per REQUIRED column, in the pruned schema's
       // field order (Spark passes the prune result in table order)

@@ -213,19 +213,6 @@ object Annotate {
   private def f(c: Column): Column =
     coalesce(stripCtl(c.cast("string")), lit(""))
 
-  /** VEP's CSQ value escaping (annotate_provider.rs:1931-1961
-    * csq_escape): a lone '-' renders empty; ','/'|' -> '&',
-    * ';' -> '%3B', whitespace -> '_'. Whitespace matches the regex \s
-    * class vs the reference's full Unicode is_whitespace — documented
-    * deviation, invisible on real cache values. */
-  private def csqEscape(c: Column): Column = {
-    def rep(x: Column, from: String, to: String): Column =
-      call_function("replace", x, lit(from), lit(to))
-    when(c === "-", lit("")).otherwise(
-      regexp_replace(rep(rep(rep(c, ",", "&"), "|", "&"), ";", "%3B"),
-        "\\s", "_"))
-  }
-
   /** CSQ frequency-slot order of `--everything` (CSQ field name ->
     * cache column), exactly the reference's AF_COLUMNS emission order
     * (annotate_provider.rs:811-1006, golden_benchmark.rs
@@ -365,17 +352,10 @@ object Annotate {
     ("variation_name" +: afCsq.map(_._2)) ++
       Seq("clin_sig", "clin_sig_allele", "somatic", "pheno", "pubmed")
 
-  /** Deterministic fixed-width decimal rendering of a frequency (or
-    * prediction-score) column for the CSQ string: both engines print
-    * DECIMAL with identical trailing-zero behavior, unlike raw DOUBLE
-    * casts (Java vs DuckDB shortest-roundtrip forms diverge). The
-    * reference prints the cache's raw text (its cache stores AF as
-    * strings); this engine's cache column family is numeric, so the
-    * CSQ renders a fixed 4-decimal form — documented deviation. */
-  private def dec4(c: Column): Column =
-    c.cast(org.apache.spark.sql.types.DecimalType(5, 4)).cast("string")
-
-  /** [[dec4]] at 2 decimals (motif PWM score delta), '' when null. */
+  /** Deterministic 2-decimal rendering of the motif PWM score delta
+    * for the CSQ string, '' when null: both engines print DECIMAL with
+    * identical trailing-zero behavior, unlike raw DOUBLE casts (Java vs
+    * DuckDB shortest-roundtrip forms diverge). */
   private def dec2(c: Column): Column =
     coalesce(c.cast(org.apache.spark.sql.types.DecimalType(3, 2)).cast("string"),
       lit(""))
@@ -937,7 +917,8 @@ object Annotate {
     *     value '1' (the reference's cache stores an int; this
     *     library's column family is string '0'/'1');
     *   - PUBMED ids ','-split across entries, '&'-joined;
-    *   - CLIN_SIG/PUBMED pass [[csqEscape]].
+    *   - CLIN_SIG/PUBMED pass VEP's CSQ value escaping
+    *     (annotate_provider.rs:1931-1961 csq_escape).
     *
     * Also emits the variant-level lookup columns the reference
     * derives from the same assembly (annotate_provider.rs:5023-5056):

@@ -407,7 +407,7 @@ object Hgvsp {
   private def aa3X(D: CodonLogic.Dialect, x: String): String =
     s"(CASE WHEN ($x) = 'X' THEN 'Xaa' ELSE ${Splice.aa3Sql(D, x)} END)"
   /** genomic exonic position -> 1-based cDNA index; NULL if intronic. */
-  private def cdSql(D: CodonLogic.Dialect, p: String): String = {
+  private def cdSql(p: String): String = {
     val idx = "list_position(list_transform(generate_series(1, CAST(length(xes) AS INT)), " +
       s"j -> ($p) BETWEEN xes[j] AND xee[j]), true)"
     s"(CASE WHEN $idx = 0 THEN NULL " +
@@ -500,8 +500,8 @@ object Hgvsp {
        |   JOIN xcb b ON b.cb_tid = t.transcript_id
        |  WHERE t.biotype IN ('protein_coding', 'nonsense_mediated_decay')),
        |hc2 AS MATERIALIZED (SELECT hcand.*,
-       |   ${cdSql(D, "p0")} AS cdp0, ${cdSql(D, "p1")} AS cdp1,
-       |   ${cdSql(D, "p1 + 1")} AS cdp1n FROM hcand),
+       |   ${cdSql("p0")} AS cdp0, ${cdSql("p1")} AS cdp1,
+       |   ${cdSql("p1 + 1")} AS cdp1n FROM hcand),
        |hst1 AS MATERIALIZED (SELECT hc2.*,
        |   CASE WHEN kind IN ('del', 'delins')
        |     THEN greatest(cdp0, cdp1) - least(cdp0, cdp1) + 1
@@ -565,7 +565,7 @@ object Hgvsp {
     * clipping, event-type reclassification, bounded peptide 3'-shift,
     * peptide duplication detection. Trailing comma included so the
     * caller can splice it before `hform`. */
-  private def inframeSql(D: CodonLogic.Dialect, shift: Boolean = true): String = {
+  private def inframeSql(D: CodonLogic.Dialect, shift: Boolean): String = {
     def aaC(c: String): String = aaN(D, sOrigCodon(D, c))
     s"""pep1 AS MATERIALIZED (SELECT hst5.*,
        |   CASE WHEN kind IN ('del', 'delins') THEN (e + bigk - 1) // 3 - c0 + 1

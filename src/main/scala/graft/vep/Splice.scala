@@ -291,11 +291,6 @@ object Splice {
         (col("_cum") + 1).as("_r_cs"), (col("_cum") + len).as("_r_ce"))
   }
 
-  /** Genomic position of cDNA index `ci` after joining exonCdnaRanges. */
-  private def cdnaToGenomic(ci: Column): Column =
-    when(col("_r_strand") === 1, col("_r_es") + (ci - col("_r_cs")))
-      .otherwise(col("_r_ee") - (ci - col("_r_cs")))
-
   /** Spliced-codon consequence + HGVSp for coding exonic SNVs: the
     * codon is read base-by-base through the cDNA->genomic inverse map
     * (codons spanning exon boundaries read correctly across the

@@ -25,7 +25,7 @@ class SpliceSuite extends SparkSpec {
     ("T-", 100L, 199L), ("T-", 300L, 399L), ("T-", 500L, 599L))
     .toDF("transcript_id", "start", "end")
 
-  private def vcf(pos: Long, ref: String = "A", alt: String = "G") =
+  private def vcf(pos: Long, ref: String, alt: String) =
     Seq(("c1", pos, pos, 1L, ref, alt)).toDF("chrom", "start", "end", "id", "ref", "alt")
 
   private def annotate(pos: Long, ref: String = "A", alt: String = "G") =

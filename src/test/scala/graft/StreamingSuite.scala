@@ -70,6 +70,26 @@ class StreamingSuite extends SparkSpec {
     } finally q.stop()
   }
 
+  test("streaming transcript-context probe never indexes a null-bound transcript") {
+    implicit val sqlCtx = spark.sqlContext
+    val tx = Seq[(Option[String], Option[Long], Option[Long], String, Int)](
+      (Some("c1"), Some(1000L), Some(2000L), "T1", 1),
+      (Some("c1"), None, Some(2000L), "T_NULL_START", 1),
+      (Some("c1"), Some(3000L), None, "T_NULL_END", 1),
+      (None, Some(1000L), Some(2000L), "T_NULL_CHROM", 1),
+    ).toDF("chrom", "start", "end", "transcript_id", "strand")
+    val input = MemoryStream[Iv]
+    val q = IntervalStreams.annotateTranscripts(input.toDF(), tx)
+      .writeStream.format("memory").queryName("txnull").outputMode("append").start()
+    try {
+      input.addData(Iv("c1", 1500, 1500, 1), Iv("c1", 100, 100, 2))
+      q.processAllAvailable()
+      val got = spark.table("txnull").collect()
+        .map(r => (r.getLong(3), r.getString(4), r.getString(5), r.getLong(6))).toSet
+      assert(got == Set((1L, "T1", "overlap", 0L), (2L, "T1", "upstream", 900L)))
+    } finally q.stop()
+  }
+
   test("streaming semi-join filter keeps only overlapping rows") {
     implicit val sqlCtx = spark.sqlContext
     val statics = Seq(Iv("c1", 100, 200, 1)).toDF("contig", "pos_start", "pos_end", "id")

@@ -218,6 +218,14 @@ trait ScalarIndex extends Serializable {
   def valueOf(qs: Long, qe: Long): Long
 }
 
+object ScalarIndex {
+  /** One contig's overlap counter, or its coverage index when
+    * `coverage` — the kernel both the broadcast and the partitioned
+    * count/coverage paths build. */
+  def build(s: Array[Long], e: Array[Long], coverage: Boolean): ScalarIndex =
+    if (coverage) CoverageIndex.build(s, e) else CountOverlapIndex.build(s, e)
+}
+
 /** Two-sorted-arrays overlap counter — the reference's
   * `CountOverlapIndex` (interval_tree.rs:20-50):
   * `count = #(starts <= qe) − #(ends < qs)`, each via binary search.

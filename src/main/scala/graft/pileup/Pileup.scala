@@ -3,7 +3,7 @@ package graft.pileup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.GraftConf
+import graft.core.{CarryBroadcast, GraftConf}
 
 /** F9 `depth()` — depth-of-coverage from an alignment-reads table
   * (FIXTURES.md §3 contract: chrom, start, flags, cigar,
@@ -91,17 +91,6 @@ object Pileup {
       .toDF("chrom", "pos", "delta")
   }
 
-  /** Broadcast hint for the per-bucket fix-up frames, guarded by the
-    * bucket width exactly like the sweeps' carry (ADVICE r15 class):
-    * at or above the floor the frame is ≤ span/width rows per contig —
-    * metadata-scale by construction — and the hint is safe; below it a
-    * user-set tiny width over a large span could force an arbitrarily
-    * large broadcast, so the hint is dropped and AQE decides from
-    * observed sizes. */
-  private val FixupBroadcastMinWidth = 1L << 16
-  private def fixupBroadcast(f: DataFrame, width: Long): DataFrame =
-    if (width >= FixupBroadcastMinWidth) broadcast(f) else f
-
   /** Block-mode depth. `zeroBased` mirrors the reference UDTF's second
     * argument (pileup/src/table_function.rs:97-109, default false =
     * 1-based): a 0-based run is the 1-based run with BOTH boundaries
@@ -142,7 +131,9 @@ object Pileup {
           .as("_carry"),
         lead(col("_bfirst"), 1).over(wc).as("_nextfirst"))
     val shift = if (zeroBased) 1L else 0L
-    val out = local.join(fixupBroadcast(fixup, width), Seq("chrom", "_bkt"))
+    // the fix-up frame is one row per (chrom, bucket): ≤ span/width
+    // rows per contig, guarded exactly like the sweeps' carry
+    val out = local.join(CarryBroadcast(fixup, width), Seq("chrom", "_bkt"))
       .withColumn("coverage", col("_lcov") + col("_carry"))
       .withColumn("next_pos", coalesce(col("_lnext"), col("_nextfirst")))
       .where(col("coverage") =!= 0 && col("next_pos").isNotNull)
@@ -218,7 +209,8 @@ object Pileup {
       .select(col("contig"), col("_bkt"),
         lag(col("_bend"), 1).over(wcB).as("_prevEnd"))
     val gapLo = coalesce(lag(col("pos_end"), 1).over(wB), col("_prevEnd"), lit(0L)) + 1
-    val headGaps = blocksB.join(fixupBroadcast(carry, width), Seq("contig", "_bkt"))
+    // one row per (contig, bucket), like the fix-up frame above
+    val headGaps = blocksB.join(CarryBroadcast(carry, width), Seq("contig", "_bkt"))
       .select(col("contig"), gapLo.as("pos_start"),
         (col("pos_start") - 1).as("pos_end"))
       .where(col("pos_start") <= col("pos_end"))

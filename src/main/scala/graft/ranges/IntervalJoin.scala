@@ -1,6 +1,6 @@
 package graft.ranges
 
-import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, JoinedRow, UnsafeProjection}
 import org.apache.spark.sql.functions._
@@ -24,26 +24,21 @@ import graft.plans.{NearestProbe, ScalarIndexProbe, SubtractProbe}
   * here: it is an ordinary join that the interval strategy plans as
   * [[graft.plans.BroadcastIntervalJoinExec]] ([[Ranges.overlapViaStrategy]]).
   *
+  * Each mode's index kernel (graft.index) is the one its partitioned
+  * twin in [[PartitionedJoin]] builds per contig co-group, so the two
+  * paths answer alike by construction.
+  *
   * Scale notes:
   *  - The build side must fit in driver and executor memory — the
   *    reference's CollectLeft constraint. The [[Ranges]] entry points
   *    guard this with [[BuildGuard]] (spark.bio.broadcast_build_limit)
-  *    and fail over to the partitioned paths when the estimate exceeds
-  *    the cap.
+  *    and fail over to [[PartitionedJoin]] when the estimate exceeds
+  *    the cap (the `join` mode to [[Ranges.overlapPartitioned]]).
   *  - Each probe costs O(log n + hits): no per-contig cross product
   *    (BASELINE.md bar #3).
   *  - The probe side never shuffles; AQE/codegen apply end-to-end.
   */
 object IntervalJoin {
-
-  /** Deterministic dense row index (the broadcast-join key). RDD
-    * zipWithIndex is stable for a deterministic input plan, unlike
-    * monotonically_increasing_id across retries (SURVEY.md §7.4). */
-  def withRowIndex(df: DataFrame): DataFrame = {
-    val schema2 = StructType(df.schema.fields :+ StructField("_lidx", IntegerType, nullable = false))
-    val rdd = df.rdd.zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ i.toInt) }
-    df.sparkSession.createDataFrame(rdd, schema2)
-  }
 
   /** Round-robin repartition of the probe side up to the session's
     * default parallelism when the scan would otherwise
@@ -72,32 +67,13 @@ object IntervalJoin {
       build: DataFrame, bcols: IntervalCols, pcols: IntervalCols,
       op: FilterOp, coverage: Boolean): Column = {
     val idx: Map[UTF8String, ScalarIndex] =
-      IntervalBuild.indexes(build, bcols) { g =>
-        if (coverage) CoverageIndex.build(g.starts, g.ends)
-        else CountOverlapIndex.build(g.starts, g.ends)
-      }
+      IntervalBuild.indexes(build, bcols)(g => ScalarIndex.build(g.starts, g.ends, coverage))
     val bc = build.sparkSession.sparkContext.broadcast(idx)
     probeColumn(pcols)(ScalarIndexProbe(_, _, _, bc, op))
   }
 
-  /** "left" / "left_distinct" modes of F1 (overlap.rs:183-226): emit
-    * each probe row once per overlap (multiplicity) or once if any.
-    * Pure codegen: a count-probe expression + conditional
-    * sequence-explode. */
-  def overlapExistence(
-      probe: DataFrame, other: DataFrame,
-      pcols: IntervalCols, ocols: IntervalCols,
-      op: FilterOp, distinct: Boolean): DataFrame = {
-    val hits = parallelizeProbe(probe)
-      .withColumn("_n", countColumn(other, ocols, pcols, op, coverage = false))
-      .where(col("_n") > 0)
-    val result =
-      if (distinct) hits
-      else hits.withColumn("_rep", explode(sequence(lit(1L), col("_n"))))
-    result.select(probe.columns.toSeq.map(col): _*)
-  }
-
-  /** F2 count_overlaps / F3 coverage: probe rows + one Long column. */
+  /** F2 count_overlaps / F3 coverage (and the per-row count behind
+    * `overlap` left/left_distinct): probe rows + one Long column. */
   def annotateCount(
       build: DataFrame, probe: DataFrame,
       bcols: IntervalCols, pcols: IntervalCols,

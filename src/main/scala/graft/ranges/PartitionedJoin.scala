@@ -5,23 +5,27 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import graft.core.{FilterOp, GraftConf, IntervalCols}
-import graft.index.{CoverageIndex, NearestIndex}
+import graft.index.{CoverageIndex, NearestIndex, ScalarIndex}
 
-/** Co-shuffle (Partitioned-mode) nearest and subtract — the scale path
-  * when the build side exceeds the CollectLeft cap, mirroring the
-  * reference's `PartitionMode::Partitioned`
+/** The Partitioned (co-shuffle) probe modes — count, coverage, the
+  * per-row count behind `overlap` left/left_distinct, nearest and
+  * subtract — the scale path when the build side exceeds the
+  * CollectLeft cap, mirroring the reference's `PartitionMode::Partitioned`
   * (interval_join.rs:393-406: `Distribution::HashPartitioned` on the
   * contig key for BOTH sides, per-partition index build, local probe).
   *
   * Spark expression: `Dataset.groupByKey(contig).cogroup` — Catalyst
   * plans one hash shuffle per side keyed on contig and streams each
-  * co-partition through the SAME index kernels the broadcast paths
-  * use ([[graft.index.NearestIndex]], [[graft.index.CoverageIndex]]),
-  * so the two modes cannot diverge semantically. Memory bound: one
-  * contig's build rows on one task (the reference's Partitioned bound
-  * too); contig-key skew is the documented residual (SURVEY §7.4).
-  * The probe side streams through the iterator — only the build side
-  * of each co-group materializes. */
+  * co-partition through the SAME index kernel the broadcast path of
+  * the mode builds ([[graft.index.ScalarIndex]] for count, coverage
+  * and the left modes, [[graft.index.NearestIndex]],
+  * [[graft.index.CoverageIndex]] runs for subtract), so the two paths
+  * cannot diverge semantically. Memory bound: one contig's build rows
+  * per salt on one task (the reference's Partitioned bound too);
+  * contig-key skew is what the salt below splits (SURVEY §7.4). The
+  * probe side streams through the iterator — only the build side of
+  * each co-group materializes. The join mode keeps its grid
+  * ([[Ranges.overlapPartitioned]]). */
 object PartitionedJoin {
   import IntervalBuild.asLong
 
@@ -45,8 +49,9 @@ object PartitionedJoin {
     *     S = 1 with no probe pass at all — the common small-query-set
     *     vs large-annotation shape never pays a probe scan.
     *  2. BOUNDED per-contig estimate (one job over <= 16 strided
-    *     partitions, <= 64k single-column rows each — never a full
-    *     pass over what is by definition the big side):
+    *     partitions of one pruned column; each tallies the keys of its
+    *     first 64k rows, counts the rest and scales its tally by the
+    *     count):
     *     `S = clamp(min(ceil(maxContigRows × parallelism / totalRows),
     *     maxContigRows / minSliceRows, bytesRatio), 1, 8)`. The first
     *     term is the parallelism-deficit target (hot contig brought
@@ -90,7 +95,7 @@ object PartitionedJoin {
       return 1
     // bounded sample: strided partitions, one pruned column (cast to
     // string so non-string contig keys — ints, chrom codes — read the
-    // same way; ADVICE r17), row-capped. Caveat: the first-rows cap
+    // same way; ADVICE r17), key tallies row-capped. Caveat: the first-rows cap
     // over-represents the leading key on contig-SORTED partitions, so
     // on a clustered layout the estimate can over-salt — bounded by
     // ratioCap / AutoSaltCap, and replication cost is the only
@@ -104,20 +109,22 @@ object PartitionedJoin {
       else (0 until SampledParts).map(i => (i.toLong * n / SampledParts).toInt)
     val maps = sess.sparkContext.runJob(rdd, (it: Iterator[Row]) => {
       val m = mutable.HashMap.empty[String, Long]
-      var k = 0
+      var k = 0L
       while (it.hasNext && k < SampleRowCap) {
         val c = it.next().getString(0)
         m.update(c, m.getOrElse(c, 0L) + 1L)
         k += 1
       }
-      m
+      // past the cap the keys go untallied but the rows are counted:
+      // the tally stands for the whole partition, not its first 64k
+      var rows = k
+      while (it.hasNext) { it.next(); rows += 1 }
+      m.map { case (c, v) => c -> v.toDouble * rows / k }
     }, picks)
-    val merged = mutable.HashMap.empty[String, Long]
+    val merged = mutable.HashMap.empty[String, Double]
     maps.foreach(_.foreach { case (c, v) =>
-      merged.update(c, merged.getOrElse(c, 0L) + v) })
+      merged.update(c, merged.getOrElse(c, 0.0) + v) })
     if (merged.isEmpty) return 1
-    // row-cap and stride both UNDERestimate — biases toward S = 1,
-    // the side that is never wrong (just unsalted)
     val scale = n.toDouble / picks.size
     val estMax = merged.values.max * scale
     val estTotal = merged.values.sum * scale
@@ -132,39 +139,78 @@ object PartitionedJoin {
     GraftConf.saltFactor(probe.sparkSession).getOrElse(decideSalt(build, probe, contigCol))
   }
 
-  /** Co-group two Row sets by contig with optional salting, streaming
-    * each co-partition through `kernel`. Salted mode wraps rows as
-    * (salt, row) so the kernel sees plain Rows either way. */
-  private def cogroupByContig(
-      build: DataFrame, probe: DataFrame, bci: Int, pci: Int,
-      salt: Int, probeSaltOf: Row => Int,
-      outSchema: StructType)(
-      kernel: (Iterator[Row], Iterator[Row]) => Iterator[Row])
-      : org.apache.spark.sql.Dataset[Row] = {
-    if (salt == 1) {
-      val kvB = build.groupByKey(_.getString(bci))(Encoders.STRING)
-      val kvP = probe.groupByKey(_.getString(pci))(Encoders.STRING)
-      kvB.cogroup(kvP) { (_: String, b: Iterator[Row], p: Iterator[Row]) =>
-        kernel(b, p)
-      }(Encoders.row(outSchema))
-    } else {
-      val keyEnc = Encoders.tuple(Encoders.STRING, Encoders.scalaInt)
-      val bEnc = Encoders.tuple(Encoders.scalaInt, Encoders.row(build.schema))
-      val pEnc = Encoders.tuple(Encoders.scalaInt, Encoders.row(probe.schema))
-      val s = salt
-      val kvB = build.flatMap(r => Iterator.range(0, s).map(i => (i, r)))(bEnc)
-        .groupByKey { case (i, r) => (r.getString(bci), i) }(keyEnc)
-      val kvP = probe.map(r => (probeSaltOf(r), r))(pEnc)
-        .groupByKey { case (i, r) => (r.getString(pci), i) }(keyEnc)
-      kvB.cogroup(kvP) { (_, b, p) => kernel(b.map(_._2), p.map(_._2)) }(
-        Encoders.row(outSchema))
-    }
-  }
-
   /** SQL's null rule, the broadcast paths' rule ([[IntervalBuild]]):
     * a row whose contig, start or end is null overlaps nothing. */
   private def complete(cols: IntervalCols): Column =
     col(cols.contig).isNotNull && col(cols.start).isNotNull && col(cols.end).isNotNull
+
+  /** Co-group the complete build and probe rows by contig, salted by
+    * [[saltFactor]] (a probe row's salt is its start modulo S; the
+    * build replicates into every salt), and stream each co-partition
+    * through `kernel` as plain Rows. A probe row with a null contig or
+    * bound skips the shuffle and is emitted as `noMatch` of it, on a
+    * (usually empty) side branch. */
+  private def cogroupByContig(
+      build: DataFrame, probe: DataFrame,
+      bcols: IntervalCols, pcols: IntervalCols,
+      outSchema: StructType, noMatch: Row => Row)(
+      kernel: (Iterator[Row], Iterator[Row]) => Iterator[Row]): DataFrame = {
+    val bci = build.schema.fieldIndex(bcols.contig)
+    val pci = probe.schema.fieldIndex(pcols.contig)
+    val psi = probe.schema.fieldIndex(pcols.start)
+    val s = saltFactor(build, probe, pcols.contig)
+    val b = build.where(complete(bcols))
+    val p = probe.where(complete(pcols))
+    val outEnc = Encoders.row(outSchema)
+    val ds =
+      if (s == 1) {
+        val kvB = b.groupByKey(_.getString(bci))(Encoders.STRING)
+        val kvP = p.groupByKey(_.getString(pci))(Encoders.STRING)
+        kvB.cogroup(kvP) { (_: String, bIt: Iterator[Row], pIt: Iterator[Row]) =>
+          kernel(bIt, pIt)
+        }(outEnc)
+      } else {
+        val keyEnc = Encoders.tuple(Encoders.STRING, Encoders.scalaInt)
+        val bEnc = Encoders.tuple(Encoders.scalaInt, Encoders.row(build.schema))
+        val pEnc = Encoders.tuple(Encoders.scalaInt, Encoders.row(probe.schema))
+        val kvB = b.flatMap(r => Iterator.range(0, s).map(i => (i, r)))(bEnc)
+          .groupByKey { case (i, r) => (r.getString(bci), i) }(keyEnc)
+        val kvP = p.map(r => ((((asLong(r.get(psi), pcols.start) % s) + s) % s).toInt, r))(pEnc)
+          .groupByKey { case (i, r) => (r.getString(pci), i) }(keyEnc)
+        kvB.cogroup(kvP) { (_, bIt, pIt) => kernel(bIt.map(_._2), pIt.map(_._2)) }(outEnc)
+      }
+    ds.toDF().unionByName(probe.where(!complete(pcols)).map(noMatch)(outEnc).toDF())
+  }
+
+  /** F2 count / F3 coverage, and the per-row overlap count behind
+    * `overlap` left/left_distinct, Partitioned mode. Output identical
+    * to [[IntervalJoin.annotateCount]]: the probe rows + one Long column
+    * `outName`, from the same [[graft.index.ScalarIndex]] kernel, built
+    * per co-group from the build side's coordinates only (the
+    * broadcast path collects the same three columns). A probe row
+    * with a null contig or bound reads 0. */
+  def annotateCount(
+      build: DataFrame, probe: DataFrame,
+      bcols: IntervalCols, pcols: IntervalCols,
+      op: FilterOp, coverage: Boolean, outName: String): DataFrame = {
+    val coords = build.select(col(bcols.contig).cast("string").as(bcols.contig),
+      col(bcols.start).cast("long").as(bcols.start), col(bcols.end).cast("long").as(bcols.end))
+    val psi = probe.schema.fieldIndex(pcols.start)
+    val pei = probe.schema.fieldIndex(pcols.end)
+    cogroupByContig(coords, probe, bcols, pcols,
+        probe.schema.add(StructField(outName, LongType, nullable = false)),
+        pr => Row.fromSeq(pr.toSeq :+ 0L)) { (bIt: Iterator[Row], pIt: Iterator[Row]) =>
+      val ss = new mutable.ArrayBuilder.ofLong
+      val ee = new mutable.ArrayBuilder.ofLong
+      bIt.foreach { r => ss += r.getLong(1); ee += r.getLong(2) }
+      val idx = ScalarIndex.build(ss.result(), ee.result(), coverage)
+      pIt.map { pr =>
+        val (qs, qe) = op.adjustQuery(
+          asLong(pr.get(psi), pcols.start), asLong(pr.get(pei), pcols.end))
+        Row.fromSeq(pr.toSeq :+ idx.valueOf(qs, qe))
+      }
+    }
+  }
 
   /** F4 nearest, Partitioned mode. Output identical to
     * [[IntervalJoin.nearest]]: `left_*` (build) ++ `right_*` (probe)
@@ -184,23 +230,17 @@ object PartitionedJoin {
       bSchema.fields.map(f => StructField("left_" + f.name, f.dataType, nullable = true)).toSeq ++
       pSchema.fields.map(f => StructField("right_" + f.name, f.dataType, f.nullable)) ++
       (if (computeDistance) Seq(StructField("distance", LongType, nullable = true)) else Nil))
-    val bci = bSchema.fieldIndex(bcols.contig)
     val bsi = bSchema.fieldIndex(bcols.start)
     val bei = bSchema.fieldIndex(bcols.end)
     val bti = bSchema.fieldIndex(tieBreakCol)
-    val pci = pSchema.fieldIndex(pcols.contig)
     val psi = pSchema.fieldIndex(pcols.start)
     val pei = pSchema.fieldIndex(pcols.end)
-    val nb = bSchema.length
-    // build rows with a null contig or bound are never indexed; such
-    // probe rows match nothing and emit the no-candidate (null-left) row
-    val salt = saltFactor(build, probe, pcols.contig)
-    val ds = cogroupByContig(
-      build.where(complete(bcols)),
-      probe.where(complete(pcols)),
-      bci, pci, salt,
-      pr => (((asLong(pr.get(psi), pcols.start) % salt) + salt) % salt).toInt,
-      outSchema) { (bIt: Iterator[Row], pIt: Iterator[Row]) =>
+    val nullLeft: Seq[Any] = Seq.fill(bSchema.length)(null)
+    // no candidate: null build columns (and distance)
+    val noMatch = (pr: Row) => Row.fromSeq(nullLeft ++ pr.toSeq ++
+      (if (computeDistance) Seq(null) else Nil))
+    cogroupByContig(build, probe, bcols, pcols,
+        outSchema, noMatch) { (bIt: Iterator[Row], pIt: Iterator[Row]) =>
       val bRows = bIt.toArray
       val idx =
         if (bRows.isEmpty) null
@@ -217,7 +257,6 @@ object PartitionedJoin {
           }
           NearestIndex.build(s, e, r, p)
         }
-      val nullLeft: Seq[Any] = Seq.fill(nb)(null)
       pIt.flatMap { pr =>
         val pVals = pr.toSeq
         val (qs, qe) = op.adjustQuery(
@@ -228,20 +267,10 @@ object PartitionedJoin {
             out += Row.fromSeq(bRows(pay).toSeq ++ pVals ++
               (if (computeDistance) Seq(dist) else Nil))
           }
-        if (out.isEmpty)
-          out += Row.fromSeq(nullLeft ++ pVals ++
-            (if (computeDistance) Seq(null) else Nil))
+        if (out.isEmpty) out += noMatch(pr)
         out.iterator
       }
     }
-    // null-input probes ride a (usually empty) side branch — no
-    // construction-time action to test for them
-    val nullLeft2: Seq[Any] = Seq.fill(nb)(null)
-    val extra = probe.where(!complete(pcols)).map { pr =>
-      Row.fromSeq(nullLeft2 ++ pr.toSeq ++
-        (if (computeDistance) Seq(null) else Nil))
-    }(Encoders.row(outSchema))
-    ds.toDF().unionByName(extra.toDF())
   }
 
   /** F8 subtract, Partitioned mode. Output identical to
@@ -263,23 +292,19 @@ object PartitionedJoin {
         StructField(f.name, LongType, f.nullable)
       else f
     })
-    val lci = lSchema.fieldIndex(lcols.contig)
     val lsi = lSchema.fieldIndex(lcols.start)
     val lei = lSchema.fieldIndex(lcols.end)
-    val rci = rSchema.fieldIndex(rcols.contig)
     val rsi = rSchema.fieldIndex(rcols.start)
     val rei = rSchema.fieldIndex(rcols.end)
     val strict = op.isStrict
-    // subtrahend rows with a null contig or bound never merge into the
-    // index; such a left row overlaps nothing and passes through whole
-    // (coords Long-cast like every fragment row, nulls kept)
-    val salt = saltFactor(right, left, lcols.contig)
-    val ds = cogroupByContig(
-      right.where(complete(rcols)),
-      left.where(complete(lcols)),
-      rci, lci, salt,
-      lr => (((asLong(lr.get(lsi), lcols.start) % salt) + salt) % salt).toInt,
-      outSchema) { (rIt: Iterator[Row], lIt: Iterator[Row]) =>
+    // overlaps nothing: the row whole, coords Long-cast like every
+    // fragment row, nulls kept
+    val whole = (lr: Row) => Row.fromSeq(lr.toSeq.zipWithIndex.map {
+      case (v, i) if (i == lsi || i == lei) && v != null => asLong(v, "interval coordinate")
+      case (v, _) => v
+    })
+    cogroupByContig(right, left, rcols, lcols,
+        outSchema, whole) { (rIt: Iterator[Row], lIt: Iterator[Row]) =>
       val ss = mutable.ArrayBuffer.empty[Long]
       val ee = mutable.ArrayBuffer.empty[Long]
       rIt.foreach { rr =>
@@ -302,12 +327,5 @@ object PartitionedJoin {
         out.iterator
       }
     }
-    val extra = left.where(!complete(lcols)).map { lr =>
-      Row.fromSeq(lr.toSeq.zipWithIndex.map {
-        case (v, i) if (i == lsi || i == lei) && v != null => asLong(v, "interval coordinate")
-        case (v, _) => v
-      })
-    }(Encoders.row(outSchema))
-    ds.toDF().unionByName(extra.toDF())
   }
 }

@@ -3,7 +3,7 @@ package graft.ranges
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{FilterOp, GraftConf, IntervalCols}
+import graft.core.{CarryBroadcast, FilterOp, GraftConf, IntervalCols}
 
 /** Public interval-algebra surface — the Spark re-expression of the
   * reference's `register_ranges_functions` UDTF family
@@ -16,8 +16,13 @@ import graft.core.{FilterOp, GraftConf, IntervalCols}
   * spillable, partition-parallel aggregations — the reference's
   * `ClusterIdCoordinator` cross-partition barrier (cluster.rs:305-447)
   * falls out of a tiny per-contig offset join instead. Probe-style
-  * operators (overlap / count / coverage / nearest) use the broadcast
-  * per-contig index in [[IntervalJoin]].
+  * operators (overlap left/left_distinct, count, coverage, nearest,
+  * subtract) run one index kernel per mode (graft.index) on either of
+  * two paths: broadcast per-contig indexes ([[IntervalJoin]]) when the
+  * build side fits `spark.bio.broadcast_build_limit`, else the same
+  * kernel per contig co-partition ([[PartitionedJoin]], one contig's
+  * build rows per salt on a task). Only the pair-emitting `join` mode
+  * has a grid co-shuffle of its own ([[overlapPartitioned]]).
   */
 object Ranges {
 
@@ -37,10 +42,14 @@ object Ranges {
     *
     * Build-side size guard ([[BuildGuard]],
     * `spark.bio.broadcast_build_limit`): when the side that would be
-    * collected+broadcast exceeds the cap, the call silently takes the
-    * partitioned grid-bucket path instead — same rows, no driver
-    * collect — mirroring the reference planner's
-    * CollectLeft-vs-Partitioned choice (interval_join.rs:394-413). */
+    * collected+broadcast exceeds the cap, the call silently takes a
+    * partitioned path instead — same rows, no driver collect —
+    * mirroring the reference planner's CollectLeft-vs-Partitioned
+    * choice (interval_join.rs:394-413): the grid join for `join`, the
+    * contig co-partition for `left`/`left_distinct`. Those two emit
+    * each left row once per overlapping right row, or once if any:
+    * both paths compute the per-row count `_n` and share the filter
+    * and the repeat after it. */
   def overlap(
       left: DataFrame, right: DataFrame,
       lcols: IntervalCols = IntervalCols.default,
@@ -54,28 +63,13 @@ object Ranges {
       if (BuildGuard.fits(left) || BuildGuard.fits(right))
         overlapViaStrategy(left, right, lcols, rcols, op)
       else overlapPartitioned(left, right, lcols, rcols, op)
-    case "left" =>
-      if (BuildGuard.fits(right))
-        IntervalJoin.overlapExistence(left, right, lcols, rcols, op, distinct = false)
-      else {
-        // partitioned pairs with LEFT as the probe side: one output
-        // row per (left row, overlap) = exactly the 'left' mode
-        // multiplicity; project the probe columns back
-        val pairs = overlapPartitioned(right, left, rcols, lcols, op)
-        pairs.select(left.columns.toSeq.map(c => col("right_" + c).as(c)): _*)
-      }
-    case "left_distinct" =>
-      if (BuildGuard.fits(right))
-        IntervalJoin.overlapExistence(left, right, lcols, rcols, op, distinct = true)
-      else {
-        // dedup per PROBE ROW IDENTITY (not per value tuple — equal
-        // rows must both survive): a deterministic dense row index
-        // carries identity through the pair join
-        val withId = IntervalJoin.withRowIndex(left)
-        val pairs = overlapPartitioned(right, withId, rcols, lcols, op)
-        pairs.select((left.columns.toSeq :+ "_lidx").map(c => col("right_" + c).as(c)): _*)
-          .dropDuplicates("_lidx").drop("_lidx")
-      }
+    case "left" | "left_distinct" =>
+      val hits = annotate(right, left, rcols, lcols, op, coverage = false, "_n")
+        .where(col("_n") > 0)
+      val rows =
+        if (mode == "left") hits.withColumn("_rep", explode(sequence(lit(1L), col("_n"))))
+        else hits
+      rows.select(left.columns.toSeq.map(col): _*)
     case other => throw new IllegalArgumentException(s"unknown overlap mode '$other'")
   }
 
@@ -158,136 +152,59 @@ object Ranges {
       .drop("_bucket")
   }
 
-  /** Partitioned F2: per-right-row overlap counts via the grid-bucket
-    * co-shuffle join — the scale path when the LEFT side is too large
-    * to broadcast-index (the broadcast variant's CollectLeft memory
-    * contract). Unmatched right rows keep count 0 via the left-restore
-    * join. `idCol` must uniquely identify right rows. */
-  def countOverlapsPartitioned(
-      left: DataFrame, right: DataFrame,
-      lcols: IntervalCols = IntervalCols.default,
-      rcols: IntervalCols = IntervalCols.default,
-      op: FilterOp = FilterOp.Weak,
-      bucketWidth: Long = 1000L,
-      idCol: String = "id"): DataFrame = {
-    val pairs = overlapPartitioned(left, right, lcols, rcols, op, bucketWidth)
-    val counts = pairs.groupBy(col("right_" + idCol))
-      .agg(count(lit(1)).as("_n"))
-    // SHUFFLE_HASH on the aggregated side (round 18): the count-restore
-    // left join has no downstream sort-order consumer, so sort-merge
-    // paid two full sorts; the per-id count table is the bounded side
-    right.join(counts.hint("shuffle_hash"),
-        right(idCol) === counts("right_" + idCol), "left")
-      .select(right.columns.toSeq.map(col) :+
-        coalesce(col("_n"), lit(0L)).as("count"): _*)
-  }
-
-  /** Partitioned F3: per-right-row coverage, the co-shuffle scale
-    * path, computing EXACTLY the reference's `get_coverage` formula
-    * (interval_tree.rs:145-152): per (probe, merged-run) pair with the
-    * run overlapping the strict-adjusted query closed-style, the
-    * contribution is `max(1, closedLen(run ∩ expandedQuery) - 1)`
-    * where expandedQuery = the adjusted query widened by 1 each side.
-    * Both sides explode onto the bucket grid as bucket-CLIPPED
-    * fragments `[max(s, b*W), min(e, (b+1)*W - 1)]` — each base
-    * belongs to exactly one bucket, so per-pair piece sums ARE the
-    * pair's closed intersection length; runs are disjoint per contig,
-    * so `(contig, runStart)` is a pair key with no extra shuffle
-    * state. Two-level aggregation: pieces → pair length → clamped
-    * contribution → per-probe sum. Handles weak AND strict (strict
-    * shrinks the query ±1; the formula is then identical). */
-  def coveragePartitioned(
-      left: DataFrame, right: DataFrame,
-      lcols: IntervalCols = IntervalCols.default,
-      rcols: IntervalCols = IntervalCols.default,
-      op: FilterOp = FilterOp.Weak,
-      bucketWidth: Long = 1000L,
-      idCol: String = "id"): DataFrame = {
-    val w = bucketWidth
-    // merged runs over raw coords (weak convention — the reference
-    // merges before indexing regardless of op, interval_tree.rs:104)
-    // SQL's null rule, and an inverted run (start > end) covers no
-    // base: the broadcast CoverageIndex keeps neither
-    val covering = left.where(col(lcols.contig).isNotNull &&
-      col(lcols.start).cast("long") <= col(lcols.end).cast("long"))
-    val merged = merge(covering, lcols, 0L, FilterOp.Weak)
-      .select(col(lcols.contig).as("_mc"),
-        col(lcols.start).cast("long").as("_ms"),
-        col(lcols.end).cast("long").as("_me"))
-    val runFrags = merged
-      .withColumn("_b", explode(sequence(
-        floor(col("_ms") / w).cast("long"), floor(col("_me") / w).cast("long"))))
-      .withColumn("_fs", greatest(col("_ms"), col("_b") * w))
-      .withColumn("_fe", least(col("_me"), (col("_b") + 1) * w - 1))
-    // probes carry adjusted bounds (_aqs/_aqe; strict shrinks inward,
-    // possibly inverted for point probes) and the expanded window
-    // (_xs/_xe = adjusted ±1, never inverted) that fragments explode on
-    val shift = if (op.isStrict) 1L else 0L
-    val pr = graft.core.Parallelism.ensure(right).select(
-        col(rcols.contig).as("_pc"), col(idCol).as("_rid"),
-        (col(rcols.start).cast("long") + shift).as("_aqs"),
-        (col(rcols.end).cast("long") - shift).as("_aqe"))
-      .withColumn("_xs", col("_aqs") - 1)
-      .withColumn("_xe", col("_aqe") + 1)
-      .withColumn("_pb", explode(sequence(
-        floor(col("_xs") / w).cast("long"), floor(col("_xe") / w).cast("long"))))
-      .withColumn("_ps", greatest(col("_xs"), col("_pb") * w))
-      .withColumn("_pe", least(col("_xe"), (col("_pb") + 1) * w - 1))
-    val piece = least(col("_fe"), col("_pe")) - greatest(col("_fs"), col("_ps")) + 1
-    // same SHUFFLE_HASH choice as overlapPartitioned: equi-keys
-    // (contig, bucket), no downstream sort-order consumer
-    val pairs = runFrags.hint("shuffle_hash").join(pr.hint("shuffle_hash"),
-        col("_mc") === col("_pc") && col("_b") === col("_pb") &&
-        // the run must overlap the ADJUSTED query (reference predicate);
-        // piece bounds intersect within the expanded window
-        col("_ms") <= col("_aqe") && col("_me") >= col("_aqs") &&
-        col("_fs") <= col("_pe") && col("_fe") >= col("_ps"))
-      .groupBy(col("_rid"), col("_mc"), col("_ms"))
-      .agg(sum(piece).as("_plen"))
-    val sums = pairs
-      .select(col("_rid"), greatest(lit(1L), col("_plen") - 1).as("_contrib"))
-      .groupBy(col("_rid")).agg(sum(col("_contrib")).as("_cov"))
-    // SHUFFLE_HASH: same rationale as the count-restore join above
-    right.join(sums.hint("shuffle_hash"), right(idCol) === sums("_rid"), "left")
-      .select(right.columns.toSeq.map(col) :+
-        coalesce(col("_cov"), lit(0L)).as("coverage"): _*)
-  }
+  /** Probe rows + one Long column `outName`: the overlap count (or
+    * the coverage formula) of `build`'s intervals per probe row, by one
+    * [[graft.index.ScalarIndex]] kernel — broadcast when the build side
+    * fits the cap ([[IntervalJoin.annotateCount]]), else per contig
+    * co-partition ([[PartitionedJoin.annotateCount]]). */
+  private def annotate(
+      build: DataFrame, probe: DataFrame,
+      bcols: IntervalCols, pcols: IntervalCols,
+      op: FilterOp, coverage: Boolean, outName: String): DataFrame =
+    if (BuildGuard.fits(build))
+      IntervalJoin.annotateCount(build, probe, bcols, pcols, op, coverage, outName)
+    else PartitionedJoin.annotateCount(build, probe, bcols, pcols, op, coverage, outName)
 
   /** F2 `count_overlaps`: right rows + `count` = number of left
-    * intervals overlapping each (count_overlaps.rs:60-66).
-    * An over-cap left side fails over to
-    * [[countOverlapsPartitioned]] with a synthesized row identity
-    * (no unique-id assumption on the right side). */
+    * intervals overlapping each (count_overlaps.rs:60-66). An over-cap
+    * left side fails over to [[countOverlapsPartitioned]]. */
   def countOverlaps(
       left: DataFrame, right: DataFrame,
       lcols: IntervalCols = IntervalCols.default,
       rcols: IntervalCols = IntervalCols.default,
       op: FilterOp = FilterOp.Weak): DataFrame =
-    if (BuildGuard.fits(left))
-      IntervalJoin.annotateCount(left, right, lcols, rcols, op, coverage = false, "count")
-    else {
-      val withId = IntervalJoin.withRowIndex(right)
-      countOverlapsPartitioned(left, withId, lcols, rcols, op, idCol = "_lidx")
-        .drop("_lidx")
-    }
+    annotate(left, right, lcols, rcols, op, coverage = false, "count")
+
+  /** F2 on the contig co-partition whatever the left side's size — the
+    * scale path [[countOverlaps]] takes past the cap, with the same
+    * counter ([[graft.index.CountOverlapIndex]]) and the same rows. */
+  def countOverlapsPartitioned(
+      left: DataFrame, right: DataFrame,
+      lcols: IntervalCols = IntervalCols.default,
+      rcols: IntervalCols = IntervalCols.default,
+      op: FilterOp = FilterOp.Weak): DataFrame =
+    PartitionedJoin.annotateCount(left, right, lcols, rcols, op, coverage = false, "count")
 
   /** F3 `coverage`: right rows + `coverage` per the reference's
     * `get_coverage` formula (see [[graft.index.CoverageIndex]] — NOT
     * plain covered-basepair length). An over-cap left side fails over
-    * to [[coveragePartitioned]], which implements the identical
-    * formula for both ops. */
+    * to [[coveragePartitioned]]. */
   def coverage(
       left: DataFrame, right: DataFrame,
       lcols: IntervalCols = IntervalCols.default,
       rcols: IntervalCols = IntervalCols.default,
       op: FilterOp = FilterOp.Weak): DataFrame =
-    if (BuildGuard.fits(left))
-      IntervalJoin.annotateCount(left, right, lcols, rcols, op, coverage = true, "coverage")
-    else {
-      val withId = IntervalJoin.withRowIndex(right)
-      coveragePartitioned(left, withId, lcols, rcols, op, idCol = "_lidx")
-        .drop("_lidx")
-    }
+    annotate(left, right, lcols, rcols, op, coverage = true, "coverage")
+
+  /** F3 on the contig co-partition whatever the left side's size — the
+    * scale path [[coverage]] takes past the cap, with the same
+    * [[graft.index.CoverageIndex]] and the same rows. */
+  def coveragePartitioned(
+      left: DataFrame, right: DataFrame,
+      lcols: IntervalCols = IntervalCols.default,
+      rcols: IntervalCols = IntervalCols.default,
+      op: FilterOp = FilterOp.Weak): DataFrame =
+    PartitionedJoin.annotateCount(left, right, lcols, rcols, op, coverage = true, "coverage")
 
   /** F4 `nearest` — see [[IntervalJoin.nearest]]. An over-cap build
     * side fails over to the contig co-shuffle Partitioned mode
@@ -317,19 +234,6 @@ object Ranges {
             "pre-filter the build side, or raise the limit")
         throw new IllegalStateException("unreachable")
     }
-
-  /** Broadcast hint for the per-bucket carry frames, guarded by the
-    * bucket width (ADVICE r15: the carry cardinality is bounded by
-    * span/width per contig, so a user-set tiny width over a large
-    * coordinate span could force an arbitrarily large broadcast past
-    * the auto threshold and OOM the driver). At or above the floor
-    * the frame is metadata-scale by construction (a 2^32 genomic span
-    * at width 2^16 is ≤65k rows per contig) and the hint is safe;
-    * below it the hint is dropped and the planner/AQE choose the join
-    * strategy from observed sizes instead. */
-  private val CarryBroadcastMinWidth = 1L << 16
-  private def carryBroadcast(f: DataFrame, width: Long): DataFrame =
-    if (width >= CarryBroadcastMinWidth) broadcast(f) else f
 
   /** See [[graft.core.SharedExchange]] — the multi-consumer
     * materialization barrier the sweeps hang their hull frames on. */
@@ -535,7 +439,9 @@ object Ranges {
       .select(col(contig).as("_cc"), col("_obkt").as("_cb"),
         col("_carryMax"), col("_goff"), col("_coff"))
     val wb = Window.partitionBy(col(contig), col("_obkt")).orderBy(s, col("_ie"))
-    hulls.join(carryBroadcast(perBucket, width),
+    // the per-bucket frame is one row per non-empty (contig, bucket):
+    // span/width rows per contig
+    hulls.join(CarryBroadcast(perBucket, width),
         col(contig) <=> col("_cc") && col("_obkt") <=> col("_cb"))
       .withColumn("_flag", newIslandFlag(col("_carryMax"), s, minDist, op))
       .withColumn("_gid", sum(col("_flag")).over(wb) + col("_goff"))
@@ -656,7 +562,7 @@ object Ranges {
     // M = max end over all earlier hulls: cross-bucket carry joined
     // once, within-bucket prefix from the window (greatest skips nulls;
     // null M marks the contig's first hull)
-    val withM = hulls.join(carryBroadcast(carry, width),
+    val withM = hulls.join(CarryBroadcast(carry, width),
         col(cols.contig) <=> col("_cc") && col("_obkt") <=> col("_cb"))
       .withColumn("_M", greatest(max(col("_ie")).over(wbPrev), col("_carryMax")))
     val opensIsland =

@@ -3,25 +3,12 @@ package graft.text
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.GraftConf
+import graft.core.{CarryBroadcast, GraftConf}
 
 /** Training-batch assembly operators: deterministic sequence packing
   * and hash-based dataset splits — the last mile between a cleaned
   * corpus and a training run. */
 object Packing {
-
-  /** Only the LEVEL-2 carry (one row per super-bucket, ≤ idSpan/width²
-    * — ~230 rows at 10^12 docs and the default width) is safely
-    * metadata-scale, and only at widths where that bound holds
-    * (ADVICE r15: a tiny user width over a large id span could force
-    * an arbitrarily large broadcast). The LEVEL-1 carry's cardinality
-    * is ≤ idSpan/width, which width alone does NOT bound (~15M rows at
-    * 10^12 docs — ADVICE r16), so it carries no hint at all: AQE picks
-    * broadcast from its OBSERVED size at gate scale and falls back to
-    * a shuffle join when it is genuinely large. */
-  private val CarryBroadcastMinWidth = 1L << 16
-  private def carryBroadcast(f: DataFrame, width: Long): DataFrame =
-    if (width >= CarryBroadcastMinWidth) broadcast(f) else f
 
   /** Contiguous greedy sequence packing: documents in `idCol` order
     * are laid head-to-tail into a token stream and assigned to the
@@ -77,7 +64,16 @@ object Packing {
     val carry2 = bkts.groupBy(col("_sbkt")).agg(sum(col("_btoks")).as("_stoks"))
       .select(col("_sbkt").as("_cs"),
         coalesce(sum(col("_stoks")).over(wg2), lit(0L)).as("_c2"))
-    val carry = l2.join(carryBroadcast(carry2, width), col("_sbkt") === col("_cs"))
+    // Only the LEVEL-2 carry (one row per super-bucket, ≤ idSpan/width²
+    // — ~230 rows at 10^12 docs and the default width) is safely
+    // metadata-scale, and only at widths where that bound holds
+    // (ADVICE r15: a tiny user width over a large id span could force
+    // an arbitrarily large broadcast). The LEVEL-1 carry's cardinality
+    // is ≤ idSpan/width, which width alone does NOT bound (~15M rows at
+    // 10^12 docs — ADVICE r16), so it carries no hint at all: AQE picks
+    // broadcast from its OBSERVED size at gate scale and falls back to
+    // a shuffle join when it is genuinely large.
+    val carry = l2.join(CarryBroadcast(carry2, width), col("_sbkt") === col("_cs"))
       .select(col("_bkt").as("_cb"), (col("_l2") + col("_c2")).as("_carry"))
     local.join(carry, col("_bkt") === col("_cb"))
       .withColumn("stream_offset", col("_lsum") + col("_carry"))

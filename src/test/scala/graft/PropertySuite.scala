@@ -79,6 +79,12 @@ class PropertySuite extends SparkSpec {
     // co-groups with the build side replicated — results must be
     // byte-identical to the un-salted and broadcast paths. "auto"
     // derives S from the probe side's observed per-contig counts.
+    // Count, coverage and the left modes run the same co-partition.
+    def partitioned(df: => DataFrame): Seq[Seq[Any]] =
+      try {
+        spark.conf.set(GraftConf.BroadcastBuildLimit, "0")
+        rowsOf(df)
+      } finally spark.conf.unset(GraftConf.BroadcastBuildLimit)
     for (saltF <- Seq("1", "3", "auto")) {
       spark.conf.set(GraftConf.SaltFactor, saltF)
       try {
@@ -93,6 +99,17 @@ class PropertySuite extends SparkSpec {
           val bc = rowsOf(IntervalJoin.subtractFragments(a, b, ic, ic, op))
           val pt = rowsOf(PartitionedJoin.subtractPartitioned(a, b, ic, ic, op))
           assert(pt == bc, s"subtract $op salt=$saltF")
+          val cntB = rowsOf(Ranges.countOverlaps(a, b, op = op))
+          assert(rowsOf(Ranges.countOverlapsPartitioned(a, b, op = op)) == cntB,
+            s"count $op salt=$saltF")
+          val covB = rowsOf(Ranges.coverage(a, b, op = op))
+          assert(rowsOf(Ranges.coveragePartitioned(a, b, op = op)) == covB,
+            s"coverage $op salt=$saltF")
+          for (mode <- Seq("left", "left_distinct")) {
+            val lB = rowsOf(Ranges.overlap(b, a, mode = mode, op = op))
+            assert(partitioned(Ranges.overlap(b, a, mode = mode, op = op)) == lB,
+              s"$mode $op salt=$saltF")
+          }
         }
       } finally spark.conf.unset(GraftConf.SaltFactor)
     }

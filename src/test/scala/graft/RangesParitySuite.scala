@@ -116,26 +116,44 @@ class RangesParitySuite extends SparkSpec {
     }
   }
 
+  /** The reference's get_coverage formula over the weakly merged
+    * complete, non-inverted rows of `build`. */
+  private def coverageModel(build: Seq[Iv])(p: Iv, op: FilterOp): Long =
+    if (!complete(p)) 0L
+    else {
+      val (qs, qe) = op.adjustQuery(p._2.get, p._3.get)
+      val runs = build.filter(b => complete(b) && b._1 == p._1 && b._2.get <= b._3.get)
+        .map(b => (b._2.get, b._3.get)).sorted
+        .foldLeft(List.empty[(Long, Long)]) {
+          case ((s, e) :: rest, (bs, be)) if bs <= e => (s, math.max(e, be)) :: rest
+          case (acc, r) => r :: acc
+        }
+      runs.filter { case (s, e) => s <= qe && e >= qs }
+        .map { case (s, e) => math.max(1L, math.min(qe + 1, e) - math.max(qs - 1, s)) }.sum
+    }
+
   test("coverage: same values on both paths, 0 for null inputs") {
-    // the reference's get_coverage formula over the weakly merged
-    // complete, non-inverted build rows
-    def model(p: Iv, op: FilterOp): Long =
-      if (!complete(p)) 0L
-      else {
-        val (qs, qe) = op.adjustQuery(p._2.get, p._3.get)
-        val runs = buildRows.filter(b => complete(b) && b._1 == p._1 && b._2.get <= b._3.get)
-          .map(b => (b._2.get, b._3.get)).sorted
-          .foldLeft(List.empty[(Long, Long)]) {
-            case ((s, e) :: rest, (bs, be)) if bs <= e => (s, math.max(e, be)) :: rest
-            case (acc, r) => r :: acc
-          }
-        runs.filter { case (s, e) => s <= qe && e >= qs }
-          .map { case (s, e) => math.max(1L, math.min(qe + 1, e) - math.max(qs - 1, s)) }.sum
-      }
+    val model = coverageModel(buildRows) _
     for (op <- ops) {
       val got = parity(s"coverage $op")(Ranges.coverage(build, probe, op = op))
         .map(r => r(3) -> r(4)).toMap
       assert(got == probeRows.map(p => p._4 -> model(p, op)).toMap, s"coverage $op")
+    }
+  }
+
+  test("coverage of an inverted probe: same value on both paths, the get_coverage formula") {
+    // a run spanning the whole inverted window: the formula's clamp
+    // reads 1 for both probes, weak and strict
+    val covering: Seq[Iv] = Seq((Some("chr1"), Some(100L), Some(3000L), 1L))
+    val inverted: Seq[Iv] = Seq(
+      (Some("chr1"), Some(2500L), Some(500L), 201L),
+      (Some("chr1"), Some(160L), Some(150L), 202L))
+    for (op <- ops) {
+      val got = parity(s"inverted coverage $op")(
+        Ranges.coverage(df(covering), df(inverted), op = op)).map(r => r(3) -> r(4)).toMap
+      val want = inverted.map(p => p._4 -> coverageModel(covering)(p, op)).toMap
+      assert(want == Map(201L -> 1L, 202L -> 1L), s"model $op")
+      assert(got == want, s"inverted coverage $op")
     }
   }
 

@@ -67,6 +67,18 @@ class SaltDecisionSuite extends SparkSpec {
     }
   }
 
+  test("partitions past the 64k-row sample cap are scaled by their row count") {
+    // 3 partitions of 100k rows, 15 in 16 on one contig, at the
+    // default 131,072-row floor: the hot contig holds 281,250 rows
+    // (two floor slices), but its first-64k tallies sum to 184,320
+    // (one slice). Scaling each partition's tally by its row count
+    // reads the contig at its size; the deficit target is 4, so S = 2.
+    val big = spark.range(0L, 300000L, 1L, 3)
+      .select(when(col("id") % 16 === 0, lit("cold")).otherwise(lit("hot")).as("contig"),
+        col("id").as("pos_start"), (col("id") + 100L).as("pos_end"), col("id"))
+    assert(PartitionedJoin.decideSalt(evenSmall, big, "contig") == 2)
+  }
+
   test("even spread with contigs >= parallelism decides S=1 at any size") {
     withFloor(10) {
       val many = iv((0 until 8000).map(i => (s"c${i % 64}", i.toLong)))

@@ -160,11 +160,13 @@ object AnalyticsQueries {
       // (round 19, [[graft.streaming.StreamWidth]]): width derives
       // from the source volume instead of the round-18 static 4, and
       // the child session replaces the shared-conf save/restore.
-      // Tables.load runs against ns too so session-level source flags
-      // (nanosAsLong) land on the session the stream plans under.
+      // The schema comes from the frame loaded on the parent; scoped
+      // carries its nanosAsLong flag to the child, so no second
+      // footer inference runs on the child.
+      val batch = Tables.load(s, d, "events")
       val ns = graft.streaming.StreamWidth.scoped(s,
-        graft.streaming.StreamWidth.estimatedBytes(Tables.load(s, d, "events")))
-      val schema = Tables.load(ns, d, "events").schema
+        graft.streaming.StreamWidth.estimatedBytes(batch))
+      val schema = batch.schema
       // the file stream source wants a DIRECTORY; the glob filter
       // scopes it to the events table within the shared testdata dir
       val stream = ns.readStream.schema(schema)

@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** Dumps formatted physical plans for the load-bearing operators —
   * the evidence that filters/pruning reach the scans, joins broadcast
-  * where intended, and probes stay inside WholeStageCodegen. */
+  * where intended, and probes stay inside WholeStageCodegen.
+  * Usage: `graft.Explain [sfDir [gate...]]`; gate names after the
+  * directory select the dump, the load-bearing list is the default. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.001")
@@ -15,7 +17,10 @@ object Explain {
         org.apache.spark.sql.execution.FormattedMode))
     }
     val all = SparkEntry.queries
-    Seq("f1_overlap_join", "f1_overlap_join_part", "j1_sql_rewrite",
+    val gates = args.drop(1).toSeq
+    val unknown = gates.filterNot(all.contains)
+    require(unknown.isEmpty, s"unknown gate(s): ${unknown.mkString(", ")}")
+    val loadBearing = Seq("f1_overlap_join", "f1_overlap_join_part", "j1_sql_rewrite",
         "f2_count_overlaps", "f5_merge", "f9_depth_blocks",
         "f10_lookup_variants", "f10_lookup_extended", "f11_cdna_hgvs",
         "f11_spliced_codon", "f11_csq", "f11_miss_worklist",
@@ -24,7 +29,7 @@ object Explain {
         "f11_existing_multi", "f11_transcript_selection",
         "s4_kv_lookup", "s2_bam_depth", "d_lsh_pairs", "d_embed_dups",
         "d_simhash64_pairs", "ann_topk", "ann_ivf_topk", "a_q3_top_orders")
-      .foreach(n => dump(n, all(n)))
+    (if (gates.nonEmpty) gates else loadBearing).foreach(n => dump(n, all(n)))
     spark.stop()
   }
 }

@@ -67,7 +67,6 @@ object MlQueries {
       // round-18 save/restore on the shared session conf
       val ns = graft.streaming.StreamWidth.scoped(s,
         2L * graft.streaming.StreamWidth.estimatedBytes(batch))
-      Tables.load(ns, d, "documents") // source flags onto the stream's session
       def src = ns.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet").parquet(d)
       val doubled = src.unionByName(src)
@@ -98,7 +97,6 @@ object MlQueries {
       // batch-0 planning reads the width off a conf nobody mutates
       val ns = graft.streaming.StreamWidth.scoped(s,
         graft.streaming.StreamWidth.estimatedBytes(batch))
-      Tables.load(ns, d, "documents") // source flags onto the stream's session
       val src = ns.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet").parquet(d)
       val pairs = graft.streaming.StreamLsh.candidatePairs(

@@ -688,7 +688,7 @@ object VepSpliceQueries {
       THEN ${ov("ien - 1", "ien")} OR ${ip("ien", "ien")}
       ELSE ${ov("ist", "ist + 1")} OR ${ip("ist + 1", "ist + 1")} END"""
     // PPT include gate (intron yes / exon no) + the frameshift-intron
-    // 12 bp exon stretch — mirrors Splice.spliceTermsOf
+    // 12 bp exon stretch — mirrors graft.plans.SpliceScan
     val insIn = "(vs > ist AND vs <= ien)"
     val deep = """(CASE WHEN isins THEN vs > ist + 11 AND vs < ien - 10
       ELSE vs > ist + 11 AND ve < ien - 11 END)"""

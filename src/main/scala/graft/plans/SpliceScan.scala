@@ -7,25 +7,23 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Rank-prefixed splice-term vocabulary for [[SpliceScan]]. */
+/** Splice-term vocabulary for [[SpliceScan]]: rank-prefixed in the
+  * annotate entry streams, plain in the standalone splice operator. */
 final case class SpliceScanConf(
     acceptor: String, donor: String, donor5: String,
     region: String, donorRegion: String, ppt: String)
 
 /** The six per-intron splice windows + the frameshift-intron and
   * intron-body predicates as ONE tight-loop codegen expression over
-  * the per-transcript exon arrays — a 1:1 port of the array-lambda
-  * formulation in [[graft.vep.Splice.spliceTermsOf]] /
-  * [[graft.vep.Splice.inFrameshiftIntron]] /
-  * [[graft.vep.Splice.hitsIntronBody]] (semantics documented there;
-  * reference traceability: transcript_consequence.rs splice windows,
-  * 2552-2576 frameshift introns, 8123-8143 intron body). Those
-  * higher-order-function expressions are CodegenFallback in Spark —
-  * every candidate row interpreted `intronArr` (two array_sorts + a
-  * transform + filter) plus three lambda scans over it; this
-  * expression derives the introns and evaluates every window in one
-  * JVM pass. The DuckDB oracle keeps the SQL formulation
-  * (VepSpliceQueries), so the engines cross-check.
+  * the per-transcript exon arrays: the one implementation behind both
+  * [[graft.vep.Splice.spliceTerms]] (which documents the windows) and
+  * the integrated annotate operator. Reference traceability:
+  * transcript_consequence.rs:2670-2955 splice windows, 2552-2576
+  * frameshift introns, 8123-8143 intron body. The expression derives
+  * the introns (gaps between the sorted starts and the sorted ends)
+  * and evaluates every window in one JVM pass. The DuckDB oracle
+  * keeps an independent SQL formulation (VepSpliceQueries), so the
+  * engines cross-check.
   *
   * children = (esArr, eeArr, vs, ve, isins, strand). Null exon
   * arrays or coordinates yield null (matching the lambda chain's

@@ -36,6 +36,8 @@ import graft.core.GraftConf
   */
 object StreamWidth {
 
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
   /** Bytes-per-state-partition target for the derivation. */
   private val BytesPerPartition = 4L << 20
 
@@ -56,13 +58,16 @@ object StreamWidth {
   /** A child session (isolated SQLConf, shared context) with the
     * derived width set — build the stream AND its sink on this
     * session so batch-0 planning deterministically sees the width
-    * without mutating the caller's conf. `noDataMicroBatches`
+    * without mutating the caller's conf. The parent's parquet
+    * nanos-as-long source flag carries over, so a schema read on the
+    * parent describes the child's stream too. `noDataMicroBatches`
     * optionally pinned for gates whose expiry points are explicit
     * tick batches. */
   def scoped(s: SparkSession, estBytes: Long,
       noDataMicroBatches: Option[Boolean] = None): SparkSession = {
     val ns = s.newSession()
     ns.conf.set("spark.sql.shuffle.partitions", derive(s, estBytes).toString)
+    s.conf.getOption(NanosAsLong).foreach(ns.conf.set(NanosAsLong, _))
     noDataMicroBatches.foreach(b =>
       ns.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", b.toString))
     ns

@@ -1339,7 +1339,8 @@ object Annotate {
     // staging survives optimization.
     val snvStaged = snvJoined.select(col("*"),
       Splice.spliceScan(col("_xa_es"), col("_xa_ee"),
-        col("_vp"), col("_vp"), lit(false), col("_strand")).as("_sscan"))
+        col("_vp"), col("_vp"), lit(false), col("_strand"),
+        Splice.rankedSpliceNames).as("_sscan"))
     val snvFsIntron = coalesce(col("_sscan").getField("fs"), lit(false))
     val snvTerm =
       when(col("region") === "intronic",
@@ -1430,9 +1431,9 @@ object Annotate {
     // two (id, transcript_id) joins per run — pure stage-count
     // overhead, since all three consume the same (indel variant ×
     // overlapping transcript) candidates. The standalone operators
-    // remain the public per-layer surface (and their own gates);
-    // their rendering logic is reproduced 1:1 below on the shared
-    // aggregate. Only geometry-overlapping pairs emit entries (pairs
+    // remain the public per-layer surface (and their own gates) and
+    // share this branch's renderers (Splice.indelHgvsC,
+    // Hgvsp.formUdf). Only geometry-overlapping pairs emit entries (pairs
     // reachable solely through the 3'-shifted coordinates were
     // dropped by the igeo-driven left joins before, and still are).
     // no Parallelism.ensure here: the indel side is the PROBE of the
@@ -1560,14 +1561,14 @@ object Annotate {
     // and yields NO entry; deletions use the trimmed span.
     val geomOkT = when(isins, iP > col("_i_ts") && iP <= col("_i_te"))
       .otherwise(col("_i_nvs") <= col("_i_te") && col("_i_nve") >= col("_i_ts"))
-    // HGVSc validity — 1:1 with Splice.indelHgvs: both shifted anchors
-    // inside this transcript AND inside exons
+    // HGVSc validity — Splice.indelHgvs's candidacy: both shifted
+    // anchors inside this transcript AND inside exons
     val hokT = col("_i_p0") >= col("_i_ts") && col("_i_p1") <= col("_i_te") &&
       col("_in0") === 1 && col("_in1") === 1
     val ist1 = igeo.select(col("*"),
       Splice.spliceScan(col("_xa_es"), col("_xa_ee"),
-        col("_i_nvs"), col("_i_nve"), col("_i_isins"), col("_i_strand"))
-        .as("_iscan"),
+        col("_i_nvs"), col("_i_nve"), col("_i_isins"), col("_i_strand"),
+        Splice.rankedSpliceNames).as("_iscan"),
       cdsOv.as("_icdsov"),
       leftFlank.as("_ilf"),
       geomOkT.as("_igok"),
@@ -1660,29 +1661,15 @@ object Annotate {
     // exon-spanning deletion reaching >= 2 bp into an intron carries
     // BOTH its exon term and intron_variant, like the reference)
     val iBody = coalesce(col("_iscan").getField("body"), lit(false))
-    // HGVSc rendering on the fused aggregate — 1:1 with
-    // Splice.indelHgvs's formatting over its own aggregate: valid only
-    // when both shifted anchors lie inside this transcript AND inside
-    // exons (the standalone operator's candidate condition + its
-    // _in0/_in1 filter, staged as `_ihok`); NULL otherwise, exactly
-    // like the left join it replaces.
+    // HGVSc: Splice.indelHgvs's renderer over the fused aggregate,
+    // valid only when both shifted anchors lie inside this transcript
+    // AND inside exons (the standalone operator's candidate condition
+    // + its _in0/_in1 filter, staged as `_ihok`); NULL otherwise.
     val hok = col("_ihok")
-    def ifmtC(x: Column): Column =
-      when(!iCoding, x.cast("string"))
-        .when(x < col("_ccs"), concat(lit("-"), (col("_ccs") - x).cast("string")))
-        .when(x > col("_cce"), concat(lit("*"), (x - col("_cce")).cast("string")))
-        .otherwise((x - col("_ccs") + 1).cast("string"))
     val ilo = col("_ilo")
     val ihi = col("_ihi")
-    val icoords = when(ilo === ihi, ifmtC(ilo))
-      .otherwise(concat(ifmtC(ilo), lit("_"), ifmtC(ihi)))
-    val ialtAdj = when(col("_i_strand") === 1, col("_i_va"))
-      .otherwise(reverse(translate(col("_i_va"), "ACGT", "TGCA")))
-    val iprefix = concat(col("_i_tid"), lit(":"),
-      when(iCoding, lit("c.")).otherwise(lit("n.")))
-    val ihgvsC = when(col("_i_kind") === "del" || col("_i_kind") === "dup",
-        concat(iprefix, icoords, col("_i_kind")))
-      .otherwise(concat(iprefix, icoords, col("_i_kind"), ialtAdj))
+    val ihgvsC = Splice.indelHgvsC(col("_i_tid"), iCoding, col("_i_strand"),
+      col("_i_kind"), col("_i_va"), ilo, ihi)
     // protein forms (fsTer/extTer/aligned del-ins-dup) — 1:1 with
     // Hgvsp.hgvspIndel: coding transcripts whose span overlaps the
     // shifted event; the renderer returns NULL where no form applies

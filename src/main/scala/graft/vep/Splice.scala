@@ -1,7 +1,6 @@
 package graft.vep
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Intron-aware cDNA mapping + HGVS notation — the round-2 slice of
@@ -104,7 +103,8 @@ object Splice {
   /** Shared per-(SNV variant, overlapping transcript) aggregate:
     * cDNA index, exon membership, intron anchors, coding bounds.
     * Columns: _vid _tid _strand _bt _vref _valt _vp _vc _in_exon
-    * _cdna _prev_ee _next_es _ccs _cce. */
+    * _cdna _prev_ee _next_es _nprev _nex _wb _ts _te, then the
+    * [[codingBounds]] columns. */
   private[vep] def snvTranscriptAgg(
       vcf: DataFrame, transcripts: DataFrame, exons: DataFrame,
       cb: Option[DataFrame] = None): DataFrame = {
@@ -115,7 +115,7 @@ object Splice {
     // transcript probe) and rides the aggregate to every candidate
     // pair; only spliced codon bases (outside the window after the
     // cDNA->genomic map) fall back to the inline md5 expression in
-    // [[splicedCodonFrom]]. At 100 TB the window is computed in the
+    // [[snvFusedFrom]]. At 100 TB the window is computed in the
     // probe-side scan once per variant instead of 3 md5 per
     // (variant × overlapping transcript) pair in the codon stage.
     val winExprs = (-2 to 2).map { o =>
@@ -137,16 +137,6 @@ object Splice {
     graft.plans.Graft.enable(vcf.sparkSession)
     val cand = t.join(v,
       col("_tc") === col("_vc") && col("_vp").between(col("_ts"), col("_te")))
-    snvTranscriptAggFrom(cand, transcripts, exons, cb)
-  }
-
-  /** [[snvTranscriptAgg]]'s exon aggregation over a PRE-JOINED
-    * candidate set carrying the probe columns (_vc,_vp,_vid,_vref,
-    * _valt,_wb × _tc,_ts,_te,_tid,_strand,_bt) — lets the integrated
-    * operator feed one shared transcript probe into this layer. */
-  private[vep] def snvTranscriptAggFrom(
-      cand: DataFrame, transcripts: DataFrame, exons: DataFrame,
-      cb: Option[DataFrame] = None): DataFrame = {
     val ex = exons.select(col("transcript_id").as("_etid"),
       col("start").cast("long").as("_es"), col("end").cast("long").as("_ee"))
     val p = col("_vp")
@@ -178,56 +168,91 @@ object Splice {
   }
 
   /** Intron-aware cDNA/CDS/protein coordinates + HGVSc for SNVs
-    * against a transcript/exon context. One output row per
-    * (variant, overlapping transcript):
-    * (id, transcript_id, region, cdna_pos, cds_pos, protein_pos,
-    * hgvs_c). `region` ∈ exonic | intronic. */
+    * against a transcript/exon context: [[cdnaColumns]] over
+    * [[snvTranscriptAgg]], one output row per (variant, overlapping
+    * transcript). */
   def cdnaAnnotate(vcf: DataFrame, transcripts: DataFrame, exons: DataFrame): DataFrame =
-    cdnaAnnotateFrom(snvTranscriptAgg(vcf, transcripts, exons))
+    snvTranscriptAgg(vcf, transcripts, exons)
+      .select(cdnaColumns(snvCdsPos, snvProteinPos(snvCdsPos)): _*)
 
-  /** [[cdnaAnnotate]] body over a prebuilt [[snvTranscriptAgg]] — lets
-    * [[csqAssemble]] share ONE cached aggregate between the cDNA and
-    * codon layers instead of running the candidate join + exon
-    * aggregation twice. */
-  private[vep] def cdnaAnnotateFrom(agg: DataFrame): DataFrame = {
+  /** An [[snvTranscriptAgg]] row lies in the CDS: exonic, on a coding
+    * transcript, between the coding cDNA bounds. */
+  private def snvInCds: Column =
+    col("_in_exon") === 1 && isCodingBt(col("_bt")) &&
+      col("_cdna") >= col("_ccs") && col("_cdna") <= col("_cce")
+
+  /** CDS position of an [[snvTranscriptAgg]] row; null outside the CDS. */
+  private def snvCdsPos: Column = when(snvInCds, col("_cdna") - col("_ccs") + 1)
+
+  /** Protein position of CDS position `cdsPos`; null outside the CDS. */
+  private def snvProteinPos(cdsPos: Column): Column =
+    when(snvInCds, floor((cdsPos - 1) / lit(3)) + 1).cast("long")
+
+  /** The SNV cDNA layer, defined once over [[snvTranscriptAgg]]'s
+    * columns: (id, transcript_id, region, cdna_pos, cds_pos,
+    * protein_pos, hgvs_c, exon, intron), `region` ∈ exonic | intronic.
+    * `cdsPos`/`proteinPos` are [[snvCdsPos]]/[[snvProteinPos]], inline
+    * or staged by the caller ([[snvFusedFrom]] stages them for its
+    * codon addressing). */
+  private def cdnaColumns(cdsPos: Column, proteinPos: Column): Seq[Column] = {
     val p = col("_vp")
+    val inExon = col("_in_exon") === 1
     val strandP = col("_strand") === 1
     val dPlus = when(strandP, p - col("_prev_ee")).otherwise(col("_next_es") - p)
     val dMinus = when(strandP, col("_next_es") - p).otherwise(p - col("_prev_ee"))
     val coding = isCodingBt(col("_bt"))
     val cdna = col("_cdna")
-    // cds-relative rendering of a cDNA index (UTR forms included)
-    def fmtC(x: Column): Column =
-      when(!coding, x.cast("string"))
-        .when(x < col("_ccs"), concat(lit("-"), (col("_ccs") - x).cast("string")))
-        .when(x > col("_cce"), concat(lit("*"), (x - col("_cce")).cast("string")))
-        .otherwise((x - col("_ccs") + 1).cast("string"))
     val refAdj = when(strandP, col("_vref")).otherwise(complement(col("_vref")))
     val altAdj = when(strandP, col("_valt")).otherwise(complement(col("_valt")))
-    val prefix = concat(col("_tid"), lit(":"), when(coding, lit("c.")).otherwise(lit("n.")))
+    val prefix = hgvsPrefix(col("_tid"), coding)
     val change = concat(refAdj, lit(">"), altAdj)
     // intron side choice: nearer exonic anchor wins, tie -> '+'
     // (donor side), missing side falls back to the other
     val usePlus = col("_next_es").isNull ||
       (col("_prev_ee").isNotNull && dPlus <= dMinus)
     val hgvs =
-      when(col("_in_exon") === 1, concat(prefix, fmtC(cdna), change))
+      when(inExon, concat(prefix, fmtC(cdna, coding), change))
         .otherwise(when(usePlus,
-            concat(prefix, fmtC(cdna), lit("+"), dPlus.cast("string"), change))
+            concat(prefix, fmtC(cdna, coding), lit("+"), dPlus.cast("string"), change))
           .otherwise(
-            concat(prefix, fmtC(cdna + 1), lit("-"), dMinus.cast("string"), change)))
-    val inCds = col("_in_exon") === 1 && coding &&
-      cdna >= col("_ccs") && cdna <= col("_cce")
-    val cdsPos = when(inCds, cdna - col("_ccs") + 1)
-    agg.select(
-      col("_vid").as("id"), col("_tid").as("transcript_id"),
-      when(col("_in_exon") === 1, lit("exonic")).otherwise(lit("intronic")).as("region"),
-      when(col("_in_exon") === 1, cdna).as("cdna_pos"),
+            concat(prefix, fmtC(cdna + 1, coding), lit("-"), dMinus.cast("string"), change)))
+    Seq(col("_vid").as("id"), col("_tid").as("transcript_id"),
+      when(inExon, lit("exonic")).otherwise(lit("intronic")).as("region"),
+      when(inExon, cdna).as("cdna_pos"),
       cdsPos.as("cds_pos"),
-      when(inCds, floor((cdsPos - 1) / lit(3)) + 1).cast("long").as("protein_pos"),
+      proteinPos.as("protein_pos"),
       hgvs.as("hgvs_c"),
-      exonRank(col("_in_exon") === 1, col("_strand"), col("_nprev"), col("_nex")).as("exon"),
-      intronRank(col("_in_exon") === 1, col("_strand"), col("_nprev"), col("_nex")).as("intron"))
+      exonRank(inExon, col("_strand"), col("_nprev"), col("_nex")).as("exon"),
+      intronRank(inExon, col("_strand"), col("_nprev"), col("_nex")).as("intron"))
+  }
+
+  /** "T:c." on coding transcripts, "T:n." otherwise. */
+  private def hgvsPrefix(tid: Column, coding: Column): Column =
+    concat(tid, lit(":"), when(coding, lit("c.")).otherwise(lit("n.")))
+
+  /** The one cDNA-coordinate formatter: CDS-relative rendering of
+    * cDNA index `x` against the `_ccs`/`_cce` coding bounds in scope,
+    * UTR forms included (`-N` 5', `*N` 3'); plain `x` on non-coding
+    * transcripts. */
+  private def fmtC(x: Column, coding: Column): Column =
+    when(!coding, x.cast("string"))
+      .when(x < col("_ccs"), concat(lit("-"), (col("_ccs") - x).cast("string")))
+      .when(x > col("_cce"), concat(lit("*"), (x - col("_cce")).cast("string")))
+      .otherwise((x - col("_ccs") + 1).cast("string"))
+
+  /** HGVSc of an exonic non-SNV event ([[indelHgvs]]'s notation):
+    * `kind` ∈ del | dup | ins | delins, `va` the inserted/deleted
+    * allele (reverse-complemented on '-'), `lo`/`hi` the
+    * transcript-orientation cDNA indexes of the affected range. */
+  private[vep] def indelHgvsC(tid: Column, coding: Column, strand: Column,
+      kind: Column, va: Column, lo: Column, hi: Column): Column = {
+    val coords = when(lo === hi, fmtC(lo, coding))
+      .otherwise(concat(fmtC(lo, coding), lit("_"), fmtC(hi, coding)))
+    val altAdj = when(strand === 1, va)
+      .otherwise(reverse(translate(va, "ACGT", "TGCA")))
+    val prefix = hgvsPrefix(tid, coding)
+    when(kind === "del" || kind === "dup", concat(prefix, coords, kind))
+      .otherwise(concat(prefix, coords, kind, altAdj))
   }
 
   /** VEP's EXON CSQ field ("rank/total" in TRANSCRIPT orientation) for
@@ -274,163 +299,40 @@ object Splice {
     }
   }
 
-  /** Per-exon cDNA ranges for the inverse (cDNA -> genomic) mapping:
-    * (tid, es, ee, strand, cdna range [cs, ce]). Window over exons in
-    * transcript orientation — a tiny broadcastable table. */
-  private def exonCdnaRanges(transcripts: DataFrame, exons: DataFrame): DataFrame = {
-    val t = transcripts.select(col("transcript_id").as("_xt"), col("strand").as("_r_strand"))
-    val ex = exons.select(col("transcript_id").as("_r_tid"),
-      col("start").cast("long").as("_r_es"), col("end").cast("long").as("_r_ee"))
-    val len = col("_r_ee") - col("_r_es") + 1
-    val w = Window.partitionBy(col("_r_tid"))
-      .orderBy(when(col("_r_strand") === 1, col("_r_es")).otherwise(-col("_r_es")))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    ex.join(t, col("_r_tid") === col("_xt"))
-      .withColumn("_cum", coalesce(sum(len).over(w), lit(0L)))
-      .select(col("_r_tid"), col("_r_es"), col("_r_ee"), col("_r_strand"),
-        (col("_cum") + 1).as("_r_cs"), (col("_cum") + len).as("_r_ce"))
-  }
-
-  /** Spliced-codon consequence + HGVSp for coding exonic SNVs: the
-    * codon is read base-by-base through the cDNA->genomic inverse map
-    * (codons spanning exon boundaries read correctly across the
-    * splice), bases come from the derived md5 reference sequence
-    * (CodonLogic.seq), '-'-strand bases are complemented (cDNA order
-    * is already handled by the map). Output per (variant, transcript):
-    * (id, transcript_id, cds_pos, protein_pos, ref_codon, alt_codon,
-    * aa_ref, aa_alt, consequence, hgvs_p).
-    *
-    * Codons truncated by the coding end (cce-ccs+1 not a multiple of
-    * 3) are excluded — both engines apply the same guard. */
+  /** Spliced-codon consequence + HGVSp for coding exonic SNVs:
+    * [[snvFusedFrom]]'s in-CDS rows. The codon is read base-by-base
+    * through the cDNA->genomic inverse map (codons spanning exon
+    * boundaries read correctly across the splice), bases come from the
+    * derived md5 reference sequence (CodonLogic.seq), '-'-strand bases
+    * are complemented. Output per (variant, transcript): (id,
+    * transcript_id, cds_pos, protein_pos, ref_codon, alt_codon, aa_ref,
+    * aa_alt, consequence, hgvs_p). Codons truncated by the coding end
+    * (cce-ccs+1 not a multiple of 3) read
+    * `incomplete_terminal_codon_variant` with null sequence columns. */
   def splicedCodon(vcf: DataFrame, transcripts: DataFrame, exons: DataFrame): DataFrame =
-    splicedCodonFrom(snvTranscriptAgg(vcf, transcripts, exons), transcripts, exons)
-
-  /** [[splicedCodon]] body over a prebuilt [[snvTranscriptAgg]]. */
-  private[vep] def splicedCodonFrom(
-      agg: DataFrame, transcripts: DataFrame, exons: DataFrame): DataFrame = {
-    val codingAll = agg.where(col("_in_exon") === 1 && isCodingBt(col("_bt")) &&
-      col("_cdna") >= col("_ccs") && col("_cdna") <= col("_cce"))
-      .withColumn("_cds_pos", col("_cdna") - col("_ccs") + 1)
-      .withColumn("_codon0", col("_ccs") + floor((col("_cds_pos") - 1) / lit(3)).cast("long") * 3)
-      .withColumn("_coff", ((col("_cds_pos") - 1) % 3).cast("int"))
-    val coding = codingAll.where(col("_codon0") + 2 <= col("_cce"))
-    // ONE broadcast range-join maps all three codon bases cDNA ->
-    // genomic: the probe keys on the segment containing _codon0, and
-    // the two lookahead segments (window lead over the per-transcript
-    // ranges) cover codon bases that spill past an exon boundary — a
-    // codon's 3 bases span at most 3 segments, so two leads always
-    // suffice. (Three separate per-base joins cost two extra broadcast
-    // builds + query stages per run — pure scheduling overhead at any
-    // scale, since the per-base join keys are identical.)
-    val ranges = exonCdnaRanges(transcripts, exons)
-    val w = Window.partitionBy(col("_r_tid")).orderBy(col("_r_cs"))
-    val r = ranges
-      .withColumn("_n1_es", lead(col("_r_es"), 1).over(w))
-      .withColumn("_n1_ee", lead(col("_r_ee"), 1).over(w))
-      .withColumn("_n1_cs", lead(col("_r_cs"), 1).over(w))
-      .withColumn("_n1_ce", lead(col("_r_ce"), 1).over(w))
-      .withColumn("_n2_es", lead(col("_r_es"), 2).over(w))
-      .withColumn("_n2_ee", lead(col("_r_ee"), 2).over(w))
-      .withColumn("_n2_cs", lead(col("_r_cs"), 2).over(w))
-      .drop("_r_strand")
-    val joined = coding.join(broadcast(r),
-      col("_tid") === col("_r_tid") &&
-        col("_codon0").between(col("_r_cs"), col("_r_ce")))
-    // genomic position of cDNA index ci through whichever segment holds
-    // it (strand is the transcript's own _strand; all segments share it)
-    def gOf(ci: Column): Column = {
-      def m(es: Column, ee: Column, cs: Column): Column =
-        when(col("_strand") === 1, es + (ci - cs)).otherwise(ee - (ci - cs))
-      when(ci <= col("_r_ce"), m(col("_r_es"), col("_r_ee"), col("_r_cs")))
-        .when(ci <= col("_n1_ce"), m(col("_n1_es"), col("_n1_ee"), col("_n1_cs")))
-        .otherwise(m(col("_n2_es"), col("_n2_ee"), col("_n2_cs")))
-    }
-    val withBases = (0 to 2).foldLeft(joined) { (df, k) =>
-      df.withColumn(s"_g$k", gOf(col("_codon0") + k))
-        .withColumn(s"_b$k", {
-          val g = col(s"_g$k")
-          val raw = when(g.between(col("_vp") - 2, col("_vp") + 2),
-              element_at(col("_wb"), (g - col("_vp") + 3).cast("int")))
-            .otherwise(expr(CodonLogic.seq(CodonLogic.SparkD, "_vc", s"_g$k")))
-          when(col("_strand") === 1, raw).otherwise(translate(raw, "ACGT", "TGCA"))
-        })
-    }
-    val altAdj = when(col("_strand") === 1, col("_valt")).otherwise(translate(col("_valt"), "ACGT", "TGCA"))
-    val refCodon = concat(col("_b0"), col("_b1"), col("_b2"))
-    val altCodon = concat(
-      when(col("_coff") === 0, altAdj).otherwise(col("_b0")),
-      when(col("_coff") === 1, altAdj).otherwise(col("_b1")),
-      when(col("_coff") === 2, altAdj).otherwise(col("_b2")))
-    val staged = withBases
-      .withColumn("_refcodon", refCodon)
-      .withColumn("_altcodon", altCodon)
-      .withColumn("_aaref", expr(CodonLogic.aa(CodonLogic.SparkD, "_refcodon")))
-      .withColumn("_aaalt", expr(CodonLogic.aa(CodonLogic.SparkD, "_altcodon")))
-      .withColumn("_ppos", (floor((col("_cds_pos") - 1) / lit(3)) + 1).cast("long"))
-    // codon-position terms beyond the base four: stop_retained (both
-    // residues '*'), start_lost / start_retained at protein position 1
-    // (VEP's peptide-level start checks,
-    // transcript_consequence.rs:2138-2180 — the derived genome has no
-    // guaranteed ATG, so "start codon altered" reduces to "first-codon
-    // residue changed")
-    val consequence =
-      when(col("_aaalt") === "*" && col("_aaref") =!= "*", lit("stop_gained"))
-        .when(col("_aaref") === "*" && col("_aaalt") =!= "*", lit("stop_lost"))
-        .when(col("_aaref") === "*" && col("_aaalt") === "*", lit("stop_retained_variant"))
-        .when(col("_ppos") === 1 && col("_aaref") =!= col("_aaalt"), lit("start_lost"))
-        .when(col("_ppos") === 1, lit("start_retained_variant"))
-        .when(col("_aaref") === col("_aaalt"), lit("synonymous_variant"))
-        .otherwise(lit("missense_variant"))
-    val hgvsP = concat(col("_tid"), lit(":p."),
-      expr(aa3Sql(CodonLogic.SparkD, "_aaref")), col("_ppos").cast("string"),
-      when(col("_aaref") === col("_aaalt"), lit("="))
-        .otherwise(expr(aa3Sql(CodonLogic.SparkD, "_aaalt"))))
-    val full = staged.select(
-      col("_vid").as("id"), col("_tid").as("transcript_id"),
-      col("_cds_pos").as("cds_pos"), col("_ppos").as("protein_pos"),
-      col("_refcodon").as("ref_codon"), col("_altcodon").as("alt_codon"),
-      col("_aaref").as("aa_ref"), col("_aaalt").as("aa_alt"),
-      consequence.as("consequence"), hgvsP.as("hgvs_p"))
-    // codons truncated by the coding end: VEP's partial_codon predicate
-    // (transcript_consequence.rs:1939-1976) — no translatable codon, so
-    // the sequence columns stay NULL
-    val nullStr = lit(null).cast("string")
-    val truncated = codingAll.where(col("_codon0") + 2 > col("_cce"))
-      .select(col("_vid").as("id"), col("_tid").as("transcript_id"),
-        col("_cds_pos").as("cds_pos"),
-        (floor((col("_cds_pos") - 1) / lit(3)) + 1).cast("long").as("protein_pos"),
-        nullStr.as("ref_codon"), nullStr.as("alt_codon"),
-        nullStr.as("aa_ref"), nullStr.as("aa_alt"),
-        lit("incomplete_terminal_codon_variant").as("consequence"),
-        nullStr.as("hgvs_p"))
-    full.unionByName(truncated)
-  }
+    snvFusedFrom(snvTranscriptAgg(vcf, transcripts, exons), transcripts, exons)
+      .where(col("cds_pos").isNotNull)
+      .select(col("id"), col("transcript_id"), col("cds_pos"), col("protein_pos"),
+        col("ref_codon"), col("alt_codon"), col("aa_ref"), col("aa_alt"),
+        col("codon_consequence").as("consequence"), col("hgvs_p"))
 
   /** FUSED cDNA + spliced-codon stream over a prebuilt
-    * [[snvTranscriptAgg]]: every column [[cdnaAnnotateFrom]] emits plus
-    * the codon layer's ([[splicedCodonFrom]]) — computed in ONE
-    * projection pass with the codon-range lookahead join as a LEFT
-    * broadcast probe, instead of two derived streams re-joined on
-    * (id, transcript_id). That join cost two shuffles + a sort-merge
-    * per run at any scale, for rows that were never apart: the codon
-    * columns are a guarded refinement of the same aggregate row.
-    * Codon columns are null exactly where the standalone layer had no
-    * row (the left join it replaces). Passthrough columns (_bt,
-    * _strand, _ts, _te, _vp, _vc, _valt) let the integrated operator
-    * render entries without re-joining transcript metadata or the
-    * variant side. */
+    * [[snvTranscriptAgg]]: [[cdnaColumns]] plus the codon layer's
+    * columns, computed in ONE projection pass with the codon-range
+    * lookahead join as a LEFT broadcast probe. Codon columns are null
+    * outside the CDS ([[splicedCodon]] keeps the rest). Passthrough
+    * columns (_bt, _strand, _ts, _te, _vp, _vc, _gcs, _gce) let the
+    * integrated operator render entries without re-joining transcript
+    * metadata or the variant side. */
   private[vep] def snvFusedFrom(
       agg: DataFrame, transcripts: DataFrame, exons: DataFrame,
       xa: Option[DataFrame] = None): DataFrame = {
-    val coding = isCodingBt(col("_bt"))
-    val cdna = col("_cdna")
-    val inCds = col("_in_exon") === 1 && coding &&
-      cdna >= col("_ccs") && cdna <= col("_cce")
+    val inCds = snvInCds
     // ---- codon addressing (null outside the CDS: the join misses).
     // One select per dependency layer — every withColumn is a full
     // eager analyzer pass over the whole subtree, and this plan is
     // wide enough that chained passes dominate driver latency ----
-    val cdsPosE = when(inCds, cdna - col("_ccs") + 1)
+    val cdsPosE = snvCdsPos
     val s0 = agg.select(col("*"),
       cdsPosE.as("_cds_pos"),
       (col("_ccs") + floor((cdsPosE - 1) / lit(3)).cast("long") * 3).as("_codon0"),
@@ -475,10 +377,16 @@ object Splice {
       .select(col("*"),
         when(isFull, refCodon).as("_refcodon"),
         when(isFull, altCodon).as("_altcodon"),
-        when(inCds, floor((col("_cds_pos") - 1) / lit(3)) + 1).cast("long").as("_ppos"))
+        snvProteinPos(col("_cds_pos")).as("_ppos"))
       .select(col("*"),
         expr(CodonLogic.aa(CodonLogic.SparkD, "_refcodon")).as("_aaref"),
         expr(CodonLogic.aa(CodonLogic.SparkD, "_altcodon")).as("_aaalt"))
+    // codon-position terms beyond the base four: stop_retained (both
+    // residues '*'), start_lost / start_retained at protein position 1
+    // (VEP's peptide-level start checks,
+    // transcript_consequence.rs:2138-2180 — the derived genome has no
+    // guaranteed ATG, so "start codon altered" reduces to "first-codon
+    // residue changed")
     val codonConsequence =
       when(isFull,
         when(col("_aaalt") === "*" && col("_aaref") =!= "*", lit("stop_gained"))
@@ -495,54 +403,25 @@ object Splice {
       expr(aa3Sql(CodonLogic.SparkD, "_aaref")), col("_ppos").cast("string"),
       when(col("_aaref") === col("_aaalt"), lit("="))
         .otherwise(expr(aa3Sql(CodonLogic.SparkD, "_aaalt")))))
-    // ---- cdna/HGVSc layer (cdnaAnnotateFrom 1:1) ----
-    val p = col("_vp")
-    val strandP = col("_strand") === 1
-    val dPlus = when(strandP, p - col("_prev_ee")).otherwise(col("_next_es") - p)
-    val dMinus = when(strandP, col("_next_es") - p).otherwise(p - col("_prev_ee"))
-    def fmtC(x: Column): Column =
-      when(!coding, x.cast("string"))
-        .when(x < col("_ccs"), concat(lit("-"), (col("_ccs") - x).cast("string")))
-        .when(x > col("_cce"), concat(lit("*"), (x - col("_cce")).cast("string")))
-        .otherwise((x - col("_ccs") + 1).cast("string"))
-    val refAdj = when(strandP, col("_vref")).otherwise(complement(col("_vref")))
-    val altAdjC = when(strandP, col("_valt")).otherwise(complement(col("_valt")))
-    val prefix = concat(col("_tid"), lit(":"), when(coding, lit("c.")).otherwise(lit("n.")))
-    val change = concat(refAdj, lit(">"), altAdjC)
-    val usePlus = col("_next_es").isNull ||
-      (col("_prev_ee").isNotNull && dPlus <= dMinus)
-    val hgvsC =
-      when(col("_in_exon") === 1, concat(prefix, fmtC(cdna), change))
-        .otherwise(when(usePlus,
-            concat(prefix, fmtC(cdna), lit("+"), dPlus.cast("string"), change))
-          .otherwise(
-            concat(prefix, fmtC(cdna + 1), lit("-"), dMinus.cast("string"), change)))
-    staged.select(
-      col("_vid").as("id"), col("_tid").as("transcript_id"),
-      when(col("_in_exon") === 1, lit("exonic")).otherwise(lit("intronic")).as("region"),
-      when(col("_in_exon") === 1, cdna).as("cdna_pos"),
-      col("_cds_pos").as("cds_pos"),
-      col("_ppos").as("protein_pos"),
-      hgvsC.as("hgvs_c"),
-      exonRank(col("_in_exon") === 1, col("_strand"), col("_nprev"), col("_nex")).as("exon"),
-      intronRank(col("_in_exon") === 1, col("_strand"), col("_nprev"), col("_nex")).as("intron"),
+    staged.select(cdnaColumns(col("_cds_pos"), col("_ppos")) ++ Seq(
       codonConsequence.as("codon_consequence"),
       hgvsP.as("hgvs_p"),
       col("_refcodon").as("ref_codon"), col("_altcodon").as("alt_codon"),
       when(isFull, col("_aaref")).as("aa_ref"),
       when(isFull, col("_aaalt")).as("aa_alt"),
       col("_bt"), col("_strand"), col("_ts"), col("_te"),
-      col("_vp"), col("_vc"), col("_gcs"), col("_gce"))
+      col("_vp"), col("_vc"), col("_gcs"), col("_gce")): _*)
   }
 
-  /** The codon-range lookahead build ([[exonCdnaRanges]] + the two
-    * window leads) derived from the per-transcript exon arrays
-    * ([[Hgvsp.exonArrays]], transcript orientation) instead of a
-    * second shuffle: the cumulative cDNA offsets are array folds and
-    * the "leads" are simply elements k+1 / k+2 (null past the last
-    * exon, like the window leads). Lets the integrated operator share
-    * ONE per-transcript exon aggregation across the codon, protein
-    * and splice layers. */
+  /** The codon-range lookahead build derived from the per-transcript
+    * exon arrays ([[Hgvsp.exonArrays]], transcript orientation), the
+    * one cDNA-range build: per exon segment its genomic span and cDNA
+    * range [cs, ce] plus the next two segments' (elements k+1 / k+2,
+    * null past the last exon): a codon's three bases span at most three
+    * segments, so two lookaheads always suffice. The cumulative cDNA
+    * offsets are array
+    * folds, so the integrated operator shares ONE per-transcript exon
+    * aggregation across the codon, protein and splice layers. */
   private[vep] def codonRangesFromArrays(xa: DataFrame): DataFrame =
     xa.withColumn("_l", expr("zip_with(_xa_es, _xa_ee, (s, e) -> e - s + 1)"))
       .withColumn("_c", expr(
@@ -563,21 +442,16 @@ object Splice {
         "try_element_at(_ee, _k + 2) AS _n2_ee",
         "try_element_at(_c, _k + 2) + 1 AS _n2_cs")
 
-  /** Intron array derived from a transcript's sorted exon start/end
-    * arrays, GENOMIC order: `[ee[k]+1, es[k+1]-1]` for consecutive
-    * exons, touching/overlapping pairs dropped — [[introns]] without
-    * the shuffle (the caller already holds the per-transcript exon
-    * arrays, broadcast). */
   /** The six splice windows + the frameshift-intron, intron-body and
     * complex-indel predicates in ONE codegen pass over the exon
-    * arrays ([[graft.plans.SpliceScan]], where each window's
-    * semantics and reference traceability are documented; the DuckDB
-    * oracle in VepSpliceQueries keeps the independent SQL
-    * formulation — the former per-predicate array-lambda expressions
-    * were CodegenFallback and are retired). Returns
-    * struct<terms, fs, body, longov>; null when any input is null. */
+    * arrays ([[graft.plans.SpliceScan]]; the windows are documented on
+    * [[spliceTerms]], and the DuckDB oracle in VepSpliceQueries keeps
+    * an independent SQL formulation). `names` is the term vocabulary
+    * ([[spliceNames]]). Returns struct<terms, fs, body, longov>; null
+    * when any input is null. */
   private[vep] def spliceScan(es: Column, ee: Column, vs: Column,
-      ve: Column, isins: Column, strand: Column): Column = {
+      ve: Column, isins: Column, strand: Column,
+      names: graft.plans.SpliceScanConf): Column = {
     import org.apache.spark.sql.GraftColumnBridge
     // explicit casts: the expression's eval/codegen read primitive
     // long/int/boolean slots, so a user-supplied frame with e.g. a
@@ -590,38 +464,22 @@ object Splice {
         vs.cast("bigint"), ve.cast("bigint"),
         isins.cast("boolean"), strand.cast("int"))
         .map(GraftColumnBridge.expression),
-      spliceScanConf))
+      names))
   }
 
-  private lazy val spliceScanConf = graft.plans.SpliceScanConf(
-    Annotate.rk("splice_acceptor_variant"),
-    Annotate.rk("splice_donor_variant"),
-    Annotate.rk("splice_donor_5th_base_variant"),
-    Annotate.rk("splice_region_variant"),
-    Annotate.rk("splice_donor_region_variant"),
-    Annotate.rk("splice_polypyrimidine_tract_variant"))
+  /** The splice-term vocabulary of [[spliceScan]]: rank-prefixed
+    * ([[Annotate.rk]]) for annotate's entry streams, plain for
+    * [[spliceTerms]]. */
+  private def spliceNames(name: String => String) = graft.plans.SpliceScanConf(
+    name("splice_acceptor_variant"),
+    name("splice_donor_variant"),
+    name("splice_donor_5th_base_variant"),
+    name("splice_region_variant"),
+    name("splice_donor_region_variant"),
+    name("splice_polypyrimidine_tract_variant"))
+  private[vep] lazy val rankedSpliceNames = spliceNames(Annotate.rk)
+  private lazy val plainSpliceNames = spliceNames(identity)
 
-  /** HGVS notation for exonic non-SNV events — the hgvs.rs /
-    * `format_hgvs_string` small-variant forms (hgvs.rs:1163-1192,
-    * itself Ensembl `Sequence::format_hgvs_string`):
-    *
-    *   deletion   T:c.{lo}del / T:c.{lo}_{hi}del    (no sequence suffix)
-    *   insertion  T:c.{n}_{n+1}ins{SEQ}
-    *   delins     T:c.{lo}[_{hi}]delins{SEQ}        (MNVs, replacements)
-    *   dup        T:c.{lo}[_{hi}]dup — an insertion whose allele equals
-    *              the derived-genome bases immediately 5' of the
-    *              (shifted) insertion point (hgvs.rs:987-1016
-    *              apply_shifted_insertion_duplication, 5'-context arm)
-    *
-    * Single-base ins/del alleles are 3'-SHIFTED first (the Vep.shift3
-    * scan — the reference shifts before rendering, hgvs.rs:185-248);
-    * multi-base alleles render unshifted. `lo`/`hi` are the
-    * transcript-orientation cDNA indexes of the affected range (del),
-    * its 5' context (dup), the flanking pair (ins), or the replaced
-    * range (delins); SEQ is reverse-complemented on '-'. Exonic sites
-    * only (both anchor points inside exons). Output per
-    * (variant, transcript): (id, transcript_id, kind, cdna_pos, hgvs_c)
-    * with cdna_pos = lo. */
   /** Per-variant indel classification: VEP-normalize, 3'-shift single
     * base ins/del over the derived genome, detect duplications from the
     * 5' context, and emit the affected genomic range (p0, p1) for each
@@ -676,6 +534,29 @@ object Splice {
       else ("delins", va, ns, ne, sh)
   }.asNonNullable()
 
+  /** HGVS notation for exonic non-SNV events — the hgvs.rs /
+    * `format_hgvs_string` small-variant forms (hgvs.rs:1163-1192,
+    * itself Ensembl `Sequence::format_hgvs_string`):
+    *
+    *   deletion   T:c.{lo}del / T:c.{lo}_{hi}del    (no sequence suffix)
+    *   insertion  T:c.{n}_{n+1}ins{SEQ}
+    *   delins     T:c.{lo}[_{hi}]delins{SEQ}        (MNVs, replacements)
+    *   dup        T:c.{lo}[_{hi}]dup — an insertion whose allele equals
+    *              the derived-genome bases immediately 5' of the
+    *              (shifted) insertion point (hgvs.rs:987-1016
+    *              apply_shifted_insertion_duplication, 5'-context arm)
+    *
+    * Single-base ins/del alleles are 3'-SHIFTED first (the Vep.shift3
+    * scan — the reference shifts before rendering, hgvs.rs:185-248);
+    * multi-base alleles render unshifted. `lo`/`hi` are the
+    * transcript-orientation cDNA indexes of the affected range (del),
+    * its 5' context (dup), the flanking pair (ins), or the replaced
+    * range (delins); SEQ is reverse-complemented on '-'. Exonic sites
+    * only (both anchor points inside exons). Output per
+    * (variant, transcript): (id, transcript_id, kind, cdna_pos,
+    * cdna_end, hgvs_c, hgvs_offset) with cdna_pos = lo, cdna_end = hi;
+    * the string is [[indelHgvsC]], which annotate's indel branch
+    * renders too. */
   def indelHgvs(
       vcf: DataFrame, transcripts: DataFrame, exons: DataFrame,
       maxShift: Int = 16): DataFrame = {
@@ -710,43 +591,18 @@ object Splice {
         sum(contribution(col("_p1"), col("_es"), col("_ee"), col("_strand"))).as("_cdna1"))
       .join(broadcast(codingBounds(transcripts, exons)), col("_tid") === col("_cb_tid"), "left")
     val coding = isCodingBt(col("_bt"))
-    def fmtC(x: Column): Column =
-      when(!coding, x.cast("string"))
-        .when(x < col("_ccs"), concat(lit("-"), (col("_ccs") - x).cast("string")))
-        .when(x > col("_cce"), concat(lit("*"), (x - col("_cce")).cast("string")))
-        .otherwise((x - col("_ccs") + 1).cast("string"))
-    val strandP = col("_strand") === 1
     val lo = least(col("_cdna0"), col("_cdna1"))
     val hi = greatest(col("_cdna0"), col("_cdna1"))
-    val coords = when(lo === hi, fmtC(lo))
-      .otherwise(concat(fmtC(lo), lit("_"), fmtC(hi)))
-    val altAdj = when(strandP, col("_va"))
-      .otherwise(reverse(translate(col("_va"), "ACGT", "TGCA")))
-    val prefix = concat(col("_tid"), lit(":"), when(coding, lit("c.")).otherwise(lit("n.")))
-    val hgvs = when(col("_kind") === "del" || col("_kind") === "dup",
-        concat(prefix, coords, col("_kind")))
-      .otherwise(concat(prefix, coords, col("_kind"), altAdj))
     agg.where(col("_in0") === 1 && col("_in1") === 1)
       .select(col("_vid").as("id"), col("_tid").as("transcript_id"),
         col("_kind").as("kind"), lo.as("cdna_pos"), hi.as("cdna_end"),
-        hgvs.as("hgvs_c"),
+        indelHgvsC(col("_tid"), coding, col("_strand"), col("_kind"), col("_va"), lo, hi)
+          .as("hgvs_c"),
         // HGVS_OFFSET (hgvs.rs:326-344): the applied genomic 3'-shift,
         // signed transcript-ward ('-' strand negates), only when an
         // actual shift happened
         when(col("_sh") > 0,
-          when(strandP, col("_sh")).otherwise(-col("_sh"))).as("hgvs_offset"))
-  }
-
-  /** Introns per transcript from consecutive exons in genomic order:
-    * `[prev exon end + 1, next exon start - 1]`. Touching/overlapping
-    * exons yield no intron. Output: (_i_tid, _is, _ie). */
-  def introns(exons: DataFrame): DataFrame = {
-    val ex = exons.select(col("transcript_id").as("_i_tid"),
-      col("start").cast("long").as("_i_es"), col("end").cast("long").as("_i_ee"))
-    val w = Window.partitionBy(col("_i_tid")).orderBy(col("_i_es"))
-    ex.withColumn("_nx", lead(col("_i_es"), 1).over(w))
-      .where(col("_nx").isNotNull && col("_nx") > col("_i_ee") + 1)
-      .select(col("_i_tid"), (col("_i_ee") + 1).as("_is"), (col("_nx") - 1).as("_ie"))
+          when(col("_strand") === 1, col("_sh")).otherwise(-col("_sh"))).as("hgvs_offset"))
   }
 
   /** Splice-site consequence terms — the reference's per-intron splice
@@ -776,20 +632,20 @@ object Splice {
     *   [ie+2,ie+3] or P ∈ {is, ie+1, is+2, ie-1} (the explicit
     *   boundary checks of `_intron_overlap`); mirrored on '-'.
     *
-    * Output: one row per (variant, transcript, term), deduplicated
-    * across introns. Candidate generation runs through the interval
-    * strategy (transcripts = build side), introns broadcast per
-    * transcript — no per-contig cross product. */
-  def spliceTerms(vcf: DataFrame, transcripts: DataFrame, exons: DataFrame): DataFrame =
-    spliceTermsRaw(vcf, transcripts, exons).distinct()
-
-  /** [[spliceTerms]] WITHOUT the final distinct — for consumers that
-    * immediately re-aggregate with a deduping collector (collect_set
-    * in [[Annotate]]'s fusion), where the distinct's extra shuffle
-    * buys nothing. May emit the same (id, transcript, term) from
-    * multiple introns. */
-  private[vep] def spliceTermsRaw(
-      vcf: DataFrame, transcripts: DataFrame, exons: DataFrame): DataFrame = {
+    * Frameshift introns (`ie - is <= 12`, transcript_consequence.rs
+    * 2552-2576): a variant overlapping one's body gets no terms from
+    * it, and on a transcript that has one, PPT fires only more than
+    * 11 bp inside both intron ends.
+    *
+    * Output: one row per (variant, transcript, term). Candidate
+    * generation runs on the trimmed event through the interval
+    * strategy (transcripts = build side); the windows are the
+    * [[spliceScan]] expression annotate evaluates, over the broadcast
+    * per-transcript exon arrays ([[Hgvsp.exonArrays]]). Introns are
+    * the gaps between the sorted exon starts and the sorted exon
+    * ends, so nested or overlapping exons never open an intron inside
+    * an exon. */
+  def spliceTerms(vcf: DataFrame, transcripts: DataFrame, exons: DataFrame): DataFrame = {
     graft.plans.Graft.enable(vcf.sparkSession)
     val v = vcf
       .withColumn("_vs", Vep.vepNormStartUdf(col("start").cast("long"), col("ref"), col("alt")))
@@ -810,67 +666,12 @@ object Splice {
         col("_ts") <= col("_hi") && col("_te") >= col("_lo") &&
         when(col("_isins"), col("_vs") > col("_ts") && col("_vs") <= col("_te"))
           .otherwise(col("_vs") <= col("_te") && col("_ve") >= col("_ts")))
-    val intronDf = introns(exons)
-    // per-transcript frameshift-intron presence (PPT's 12 bp exon
-    // stretch — see [[spliceTermsOf]])
-    val fsFlag = intronDf
-      .groupBy(col("_i_tid").as("_fs_tid"))
-      .agg(max(when(col("_ie") - col("_is") <= 12, 1).otherwise(0)).as("_hasfs"))
-    val joined = cand.join(broadcast(intronDf),
-      col("_tid") === col("_i_tid") &&
-        col("_lo") <= col("_ie") + 3 && col("_hi") >= col("_is") - 3)
-      .join(broadcast(fsFlag), col("_tid") === col("_fs_tid"), "left")
-    val is_ = col("_is"); val ie_ = col("_ie")
-    val plus = col("_strand") === 1
-    val p = col("_vs") // insertion point (norm start; ins has vs = ve+1)
-    def ov(x: Column, y: Column) = !col("_isins") && col("_vs") <= y && col("_ve") >= x
-    def ip(x: Column, y: Column) = col("_isins") && p.between(x, y)
-    val donor = when(plus, ov(is_, is_ + 1) || ip(is_ + 1, is_ + 1))
-      .otherwise(ov(ie_ - 1, ie_) || ip(ie_, ie_))
-    val donor5 = when(plus, ov(is_ + 4, is_ + 4)).otherwise(ov(ie_ - 4, ie_ - 4))
-    val donorRegion = when(plus, ov(is_ + 2, is_ + 5) || ip(is_ + 3, is_ + 5))
-      .otherwise(ov(ie_ - 5, ie_ - 2) || ip(ie_ - 4, ie_ - 2))
-    val acceptor = when(plus, ov(ie_ - 1, ie_) || ip(ie_, ie_))
-      .otherwise(ov(is_, is_ + 1) || ip(is_ + 1, is_ + 1))
-    val withinIntron = !col("_isins") && col("_vs") >= is_ && col("_ve") <= ie_
-    // PPT include gate + frameshift-intron exon stretch — see
-    // [[spliceTermsOf]]'s twin
-    val insIn = p > is_ && p <= ie_
-    val hasFs = coalesce(col("_hasfs"), lit(0)) === 1
-    val pptRaw = when(plus,
-        (withinIntron && ov(ie_ - 16, ie_ - 2)) ||
-          (ip(ie_ - 16, ie_ - 1) && insIn))
-      .otherwise(
-        (withinIntron && ov(is_ + 2, is_ + 16)) ||
-          (ip(is_ + 2, is_ + 17) && insIn))
-    val deep = when(col("_isins"), p > is_ + 11 && p < ie_ - 10)
-      .otherwise(col("_vs") > is_ + 11 && col("_ve") < ie_ - 11)
-    val ppt = pptRaw && (!hasFs || deep)
-    val spliceRegion =
-      ov(is_ + 2, is_ + 7) || ov(ie_ - 7, ie_ - 2) ||
-      ov(is_ - 3, is_ - 1) || ov(ie_ + 1, ie_ + 3) ||
-      ip(is_ + 3, is_ + 7) || ip(ie_ - 6, ie_ - 2) ||
-      ip(is_ - 2, is_ - 1) || ip(ie_ + 2, ie_ + 3) ||
-      (col("_isins") &&
-        (p === is_ || p === ie_ + 1 || p === is_ + 2 || p === ie_ - 1))
-    val entries = Seq(
-      "splice_acceptor_variant" -> acceptor,
-      "splice_donor_variant" -> donor,
-      "splice_donor_5th_base_variant" -> donor5,
-      "splice_region_variant" -> spliceRegion,
-      "splice_donor_region_variant" -> donorRegion,
-      "splice_polypyrimidine_tract_variant" -> ppt)
-    // frameshift-intron skip (see [[spliceTermsOf]]): no splice terms
-    // from a <= 13 bp intron when the variant overlaps its body
-    val fsSkip = (ie_ - is_ <= 12) &&
-      when(col("_isins"), p > is_ && p <= ie_)
-        .otherwise(col("_vs") <= ie_ && col("_ve") >= is_)
-    joined
-      .where(!fsSkip)
+    cand.join(broadcast(Hgvsp.exonArrays(transcripts, exons)), col("_tid") === col("_xa_tid"))
       .select(col("_vid").as("id"), col("_tid").as("transcript_id"),
-        explode(array(entries.map { case (n, c) => when(c, lit(n)) }: _*)).as("consequence"))
-      .where(col("consequence").isNotNull)
-
+        explode(spliceScan(col("_xa_es"), col("_xa_ee"), col("_vs"), col("_ve"),
+          col("_isins"), col("_strand"), plainSpliceNames).getField("terms"))
+          .as("consequence"))
+      .distinct()
   }
 
   /** CSQ output assembly (annotate_provider.rs:795-1000 role): fuse

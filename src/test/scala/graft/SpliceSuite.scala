@@ -142,6 +142,73 @@ class SpliceSuite extends SparkSpec {
     assert(m("T+") == Set("splice_acceptor_variant"))
   }
 
+  test("nested exons: introns are the gaps between sorted exon starts and ends") {
+    // [100,300] contains [200,250]; the one intron is [301,399].
+    // Pairing exons by start would open [251,399] inside the first exon
+    // and read 255 as its donor 5th base.
+    val tn = Seq(("c1", 100L, 500L, "Tn", 1, "protein_coding", 120L, 480L))
+      .toDF("chrom", "start", "end", "transcript_id", "strand", "biotype",
+        "cds_start", "cds_end")
+    val exn = Seq(("Tn", 100L, 300L), ("Tn", 200L, 250L), ("Tn", 400L, 500L))
+      .toDF("transcript_id", "start", "end")
+    def at(pos: Long) =
+      Splice.spliceTerms(vcf(pos, "A", "G"), tn, exn).collect().map(_.getString(2)).toSet
+    assert(at(255).isEmpty)
+    assert(at(258).isEmpty)
+    // exonic splice region [is-3, is-1] of the intron [301,399]
+    assert(at(299) == Set("splice_region_variant"))
+  }
+
+  test("layer operators render the HGVS strings annotate renders") {
+    import graft.vep.Annotate
+    // SNVs: 5' UTR, CDS ends, exon edges, intron, 3' UTR; indels: del,
+    // ins, delins inside exon 2 (cDNA 101-200 on '+')
+    val v = Seq(
+      (120L, "A", "G"), (150L, "A", "G"), (199L, "A", "G"), (210L, "A", "G"),
+      (300L, "A", "G"), (350L, "A", "G"), (505L, "A", "G"), (549L, "A", "G"),
+      (580L, "A", "G"), (350L, "AC", "A"), (360L, "A", "AG"), (370L, "AC", "GT"))
+      .zipWithIndex.map { case ((p, r, a), i) => ("c1", p, p + r.length - 1, i + 1L, r, a) }
+      .toDF("chrom", "start", "end", "id", "ref", "alt")
+    val cache = Seq.empty[(String, Long, Long, String, String)]
+      .toDF("chrom", "start", "end", "variation_name", "allele_string")
+      .selectExpr(Seq("*") ++ Annotate.afCsq.map(c => s"CAST(NULL AS DOUBLE) AS ${c._2}") ++
+        Seq("'0' AS somatic", "'0' AS pheno",
+          "CAST(NULL AS STRING) AS pubmed", "CAST(NULL AS STRING) AS clin_sig"): _*)
+    val tx = transcripts.selectExpr("*", "'G1' AS gene_id", "'SYM1' AS symbol",
+      "'YES' AS canonical", "'' AS flags", "'' AS mane_select",
+      "'' AS mane_plus_clinical", "1 AS tsl", "'' AS appris", "'' AS ccds",
+      "'' AS swissprot", "'' AS trembl", "'' AS uniparc", "'' AS uniprot_isoform",
+      "'0' AS gene_pheno", "'' AS domains", "'' AS mirna")
+    val sift = Seq.empty[(String, Long, String, Double)]
+      .toDF("transcript_id", "protein_pos", "aa", "sift_score")
+    val pp = Seq.empty[(String, Long, String, Double)]
+      .toDF("transcript_id", "protein_pos", "aa", "polyphen_score")
+    val reg = Seq.empty[(String, Long, Long, String)]
+      .toDF("chrom", "start", "end", "feature_id")
+    val mot = Seq.empty[(String, Long, Long, String, String, Double)]
+      .toDF("chrom", "start", "end", "motif_id", "tf_name", "score_change")
+    def opt(s: String) = Option(s).filter(_.nonEmpty)
+    // (id, transcript) -> (HGVSc, HGVSp) of annotate's transcript entries
+    val ann = Annotate.annotateTyped(v, cache, tx, exons, sift, pp, reg, mot)
+      .collect().flatMap { r =>
+        val id = r.getLong(r.fieldIndex("id"))
+        val t = r.getSeq[String](r.fieldIndex("transcript_ids"))
+        val c = r.getSeq[String](r.fieldIndex("hgvs_c"))
+        val p = r.getSeq[String](r.fieldIndex("hgvs_p"))
+        t.indices.map(i => (id, t(i)) -> (opt(c(i)), opt(p(i))))
+      }.toMap
+    def layer(df: org.apache.spark.sql.DataFrame, field: String) =
+      df.collect().map(r => (r.getLong(0), r.getString(1)) ->
+        opt(r.getString(r.fieldIndex(field)))).toMap
+    val cdna = layer(Splice.cdnaAnnotate(v, transcripts, exons), "hgvs_c")
+    val indel = layer(Splice.indelHgvs(v, transcripts, exons), "hgvs_c")
+    val codon = layer(Splice.splicedCodon(v, transcripts, exons), "hgvs_p")
+    assert(cdna.size == 18 && indel.size == 6 && codon.size == 12,
+      s"${cdna.size} / ${indel.size} / ${codon.size}")
+    for ((k, c) <- cdna ++ indel) assert(ann.get(k).map(_._1) == Some(c), s"hgvs_c $k")
+    for ((k, p) <- codon) assert(ann.get(k).map(_._2) == Some(p), s"hgvs_p $k")
+  }
+
   // ---- dup-vs-ins detection (Splice.indelHgvs) ----
 
   private def indel(pos: Long, ref: String, alt: String) =

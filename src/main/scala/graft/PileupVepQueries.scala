@@ -67,12 +67,10 @@ object PileupVepQueries {
         col("cigar"), col("mapping_quality")))
     }),
     "f10_vep_allele" -> ((s, d) =>
-      Tables.vcf(s, d).select(
-        col("id"),
-        Vep.vepRefUdf(col("ref"), col("alt")).as("vep_ref"),
-        Vep.vepAltUdf(col("ref"), col("alt")).as("vep_alt"),
-        Vep.vepNormStartUdf(col("start"), col("ref"), col("alt")).as("norm_start"),
-        Vep.vepNormEndUdf(col("start"), col("ref"), col("alt")).as("norm_end"))),
+      Tables.vcf(s, d)
+        .select(col("id"), Vep.vepEvent(col("start"), col("ref"), col("alt")).as("_ev"))
+        .select(col("id"), col("_ev.vep_ref"), col("_ev.vep_alt"),
+          col("_ev.norm_start"), col("_ev.norm_end"))),
     "f10_lookup_variants" -> ((s, d) =>
       Vep.lookupVariants(Tables.vcf(s, d), Tables.vepCache(s, d))),
     // cache_builder round trip (the writer half of the reference's
@@ -126,7 +124,8 @@ object PileupVepQueries {
       PositionCache.write(Tables.vepCache(s, d), path)
       val keys = Tables.vcf(s, d).where("id % 50 = 0").select(
         col("chrom"),
-        Vep.vepNormStartUdf(col("start").cast("long"), col("ref"), col("alt")).as("start"))
+        Vep.vepEvent(col("start").cast("long"), col("ref"), col("alt"))
+          .getField("norm_start").as("start"))
       PositionCache.lookupBatch(PositionCache.open(s, path), keys)
         .select(col("chrom"), col("start"), col("end"), col("variation_name"),
           col("allele_string"), col("af"), col("clin_sig"))

@@ -538,10 +538,10 @@ object VepSpliceQueries {
 
   /** 3'-shift oracle: the Oracle.vcf CTE precomputes norm_start /
     * vep_ref / vep_alt; the scan fragment is shared via
-    * Splice.shiftScanSql (DuckD dialect). */
+    * Splice.shiftScanSql. */
   private val shift3Sql: String = {
-    import graft.vep.{CodonLogic, Splice}
-    val scan = Splice.shiftScanSql(CodonLogic.DuckD, "chrom", "anchor", "allele", 16)
+    import graft.vep.Splice
+    val scan = Splice.shiftScanSql("chrom", "anchor", "allele", 16)
     s"""WITH ${Oracle.vcf},
        |ind AS (SELECT id, chrom, norm_start,
        |   CASE WHEN vep_ref = '-' THEN 'ins' ELSE 'del' END AS kind,
@@ -604,7 +604,7 @@ object VepSpliceQueries {
          | WHEN $x < ccs THEN concat('-', CAST(ccs - $x AS VARCHAR))
          | WHEN $x > cce THEN concat('*', CAST($x - cce AS VARCHAR))
          | ELSE CAST($x - ccs + 1 AS VARCHAR) END""".stripMargin.replace("\n", " ")
-    val scan = Splice.shiftScanSql(D, "chrom", "anchor", "allele", 16)
+    val scan = Splice.shiftScanSql("chrom", "anchor", "allele", 16)
     val ctxBase = CodonLogic.seq(D, "chrom", "j")
     val coords = s"""CASE WHEN lo = hi THEN ${fmtC("lo")}
        ELSE concat(${fmtC("lo")}, '_', ${fmtC("hi")}) END"""

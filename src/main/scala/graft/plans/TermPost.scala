@@ -120,12 +120,15 @@ case class TermPost(child: Expression, conf: TermPostConf)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("graftTermPost", this, classOf[TermPost].getName)
     val cls = classOf[TermPostResult].getName
+    // fresh local names: two TermPost columns may share one method
+    val r = ctx.freshName("termPost")
+    val row = ctx.freshName("termPostRow")
     nullSafeCodeGen(ctx, ev, c =>
-      s"""$cls r = $ref.post($c);
-         |org.apache.spark.sql.catalyst.expressions.GenericInternalRow row =
+      s"""$cls $r = $ref.post($c);
+         |org.apache.spark.sql.catalyst.expressions.GenericInternalRow $row =
          |  new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(3);
-         |row.update(0, r.t2()); row.update(1, r.ts()); row.setInt(2, r.b());
-         |${ev.value} = row;""".stripMargin)
+         |$row.update(0, $r.t2()); $row.update(1, $r.ts()); $row.setInt(2, $r.b());
+         |${ev.value} = $row;""".stripMargin)
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

@@ -17,6 +17,15 @@ package graft.vep
   *    against a "REF/ALT1/ALT2" cache allele string, left-first
   *    trimmed, with a right-first-trim fallback per cache allele
   *    (allele.rs:391-460).
+  *
+  * Each VCF record is trimmed ONCE: [[event]] runs the one
+  * prefix/suffix scan and returns the whole trimmed event —
+  * [[Event]] (norm_start, norm_end, vep_ref, vep_alt). On the Spark
+  * side it is the one UDF [[Vep.vepEvent]], a struct column that every
+  * consumer (lookup keys, the transcript probe, splice candidacy,
+  * 3'-shift, VARIANT_CLASS allele) stages once per site and reads by
+  * field. An SNV is the trivial event: norm_start = norm_end = pos,
+  * alleles untouched, never an insertion (vep_ref = "-" marks one).
   */
 object Allele {
 
@@ -37,6 +46,18 @@ object Allele {
   }
 
   private def dash(s: String): String = if (s.isEmpty) "-" else s
+
+  /** A VCF record's trimmed VEP event: normalized 1-based span
+    * (norm_start > norm_end for insertions) and minimal alleles. */
+  final case class Event(norm_start: Long, norm_end: Long, vep_ref: String, vep_alt: String)
+
+  /** The trimmed event of (pos, ref, alt) from one prefix/suffix scan
+    * (allele.rs:283-330, 751-773). */
+  def event(pos: Long, ref: String, alt: String): Event = {
+    val (p, s) = prefixSuffixLen(ref, alt)
+    Event(pos + p, pos + ref.length - 1 - s,
+      dash(ref.substring(p, ref.length - s)), dash(alt.substring(p, alt.length - s)))
+  }
 
   /** Minimal VEP (ref, alt) pair (allele.rs:283-330). */
   def vcfToVepAllele(ref: String, alt: String): (String, String) = {

@@ -58,11 +58,12 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: every candidate generator runs through the interval
   * strategy's broadcast index probes (transcripts on the build side);
-  * the shared SNV aggregate is persisted once and feeds both the cDNA
-  * and codon layers; splice/indel/updown layers are independent probe
-  * joins over the same broadcast index; the only wide shuffles are the
-  * per-(variant,transcript) and per-variant aggregations, both keyed
-  * on high-cardinality ids. The cache-miss worklist
+  * SNVs and indels are one trimmed-event stream — ONE transcript probe
+  * and ONE (variant, transcript) exon aggregate feed the cDNA, codon,
+  * indel-geometry, HGVS and splice layers; up/downstream, regulatory
+  * and motif entries are independent probe joins; the only wide
+  * shuffles are that aggregate and the per-variant aggregation, both
+  * keyed on high-cardinality ids. The cache-miss worklist
   * ([[Vep.missWorklist]]) stays a side channel — the reference uses it
   * to FETCH missing context before this pipeline, not as row output.
   */
@@ -344,10 +345,10 @@ object Annotate {
     }
 
   /** All cache columns the integrated operator reads per matched
-    * variant (lookup projection + colocated-family aggregation).
-    * `clin_sig_allele` is optional on the cache (the reference models
-    * it as Option — annotate_provider.rs:1645) and is null-filled by
-    * [[lookedDf]] when absent. */
+    * variant (lookup projection + colocated-family aggregation). All
+    * but variation_name are optional on the cache (the reference
+    * models `clin_sig_allele` as Option — annotate_provider.rs:1645)
+    * and are null-filled by [[lookedDf]] when absent. */
   private val lookedCols: Seq[String] =
     ("variation_name" +: afCsq.map(_._2)) ++
       Seq("clin_sig", "clin_sig_allele", "somatic", "pheno", "pubmed")
@@ -612,44 +613,15 @@ object Annotate {
     * (clinvar_id/cosmic_id/dbsnp_id) — one-element lists. When
     * multiple cache entries match, the lexicographically least
     * (variation_name, xref tuple) wins, deterministically on both
-    * engines. */
+    * engines. The tuple and its rendering are the ones the folded
+    * typed frame uses ([[lookedDf]] `_xr`, [[xrefOutputCols]]). */
   def existingXrefs(vcf: DataFrame, cache: DataFrame): DataFrame = {
-    // every xref column is OPTIONAL on the cache, exactly like the
-    // reference's schema.index_of(...).ok() reads — absent columns
-    // read as all-NULL
-    val want = Seq("variation_name", "clin_sig_allele", "clinical_impact",
-      "minor_allele", "minor_allele_freq", "clinvar_id", "cosmic_id",
-      "dbsnp_id")
-    val present = want.filter(cache.columns.contains)
-    val looked0 = Vep.lookupVariants(vcf, cache, columns = present)
-    val looked = want.filterNot(present.contains).foldLeft(looked0) {
-      (df, n) =>
-        df.withColumn(s"cache_$n", lit(null).cast(
-          if (n == "minor_allele_freq") "double" else "string"))
-    }
-    val agg = looked.groupBy(col("id"))
-      .agg(min(struct(
-        col("cache_variation_name").as("vn"),
-        col("cache_clin_sig_allele").as("csa"),
-        col("cache_clinical_impact").as("ci"),
-        col("cache_minor_allele").as("ma"),
-        col("cache_minor_allele_freq").as("maf"),
-        col("cache_clinvar_id").as("cv"),
-        col("cache_cosmic_id").as("co"),
-        col("cache_dbsnp_id").as("db"))).as("x"))
-    def splitList(c: Column, sep: String): Column =
-      when(c.isNull || c === "", lit(null).cast("array<string>"))
-        .otherwise(transform(split(c, sep), x => trim(x)))
-    def ne(c: Column): Column =
-      when(c === "", lit(null).cast("string")).otherwise(c)
-    agg.select(col("id"),
-      splitList(col("x.csa"), "[;]").as("clin_sig_allele"),
-      ne(col("x.ci")).as("clinical_impact"),
-      ne(col("x.ma")).as("minor_allele"),
-      col("x.maf").cast("double").as("minor_allele_freq"),
-      splitList(col("x.cv"), "[,]").as("clinvar_ids"),
-      splitList(col("x.co"), "[,]").as("cosmic_ids"),
-      splitList(col("x.db"), "[,]").as("dbsnp_ids"))
+    val xr = lookedDf(vcf, cache, withXrefs = true).select(col("id"), col("_xr"))
+    // one row per input variant: an unmatched id's MIN reads NULL
+    vcf.select(col("id"), lit(null).cast(xr.schema("_xr").dataType).as("_xr"))
+      .unionByName(xr)
+      .groupBy(col("id")).agg(min(col("_xr")).as("_xr"))
+      .select(col("id") +: xrefOutputCols: _*)
   }
 
   /** The reference's PRIMARY output shape: the full typed annotation
@@ -796,26 +768,17 @@ object Annotate {
     * like J6. Output: one row per (variant, colocated cache entry). */
   def colocated(vcf: DataFrame, cache: DataFrame): DataFrame = {
     SchemaContract.validateVariationCache(cache)
-    val v = vcf
-      .withColumn("_norm_start",
-        Vep.vepNormStartUdf(col("start").cast("long"), col("ref"), col("alt")))
-      .withColumn("_norm_end",
-        Vep.vepNormEndUdf(col("start").cast("long"), col("ref"), col("alt")))
-      .withColumn("_bare_chrom", Vep.bareChrom(col("chrom")))
-    // cache chrom probed RAW — only the VCF side normalizes
+    // the lookup's own keys (1-based starts, failed rows skipped — VEP
+    // leaves failed variants out of colocated checks by default); the
+    // cache chrom is probed RAW, only the VCF side normalizes
     // ([[Vep.bareChrom]]; variant_lookup_exec.rs strips vcf rows only)
-    val c = cache.select(col("chrom").as("_c_chrom"),
-      col("start").cast("long").as("_c_start"), col("end").cast("long").as("_c_end"),
-      col("allele_string").as("_c_as"), col("variation_name").as("_c_vn"),
-      col("af").as("_c_af"))
-    v.join(c,
-        v("_bare_chrom") === col("_c_chrom") &&
-        col("_norm_start") === col("_c_start") &&
-        col("_norm_end") === col("_c_end") &&
-        !Vep.matchAlleleUdf(v("ref"), v("alt"), col("_c_as")))
-      .select(v("id"), col("_c_vn").as("colocated_name"),
-        col("_c_as").as("colocated_allele_string"),
-        col("_c_af").as("colocated_af"))
+    val v = Vep.lookupVcfKeys(vcf)
+    val c = Vep.lookupCacheKeys(cache, Seq("variation_name", "af"))
+    v.join(c, Vep.lookupKeysMatch &&
+        !Vep.matchAlleleUdf(v("ref"), v("alt"), col("_c_allele_string")))
+      .select(v("id"), col("_c_out_variation_name").as("colocated_name"),
+        col("_c_allele_string").as("colocated_allele_string"),
+        col("_c_out_af").as("colocated_af"))
   }
 
   /** Per-variant known-variant lookup: one row per (variant, matched
@@ -828,44 +791,35 @@ object Annotate {
     * the round-6 shared persist is gone with the second consumer. */
   private def lookedDf(vcf: DataFrame, cache: DataFrame,
       withXrefs: Boolean = false): DataFrame = {
-    val c =
-      if (cache.columns.contains("clin_sig_allele")) cache
-      else cache.withColumn("clin_sig_allele", lit(null).cast("string"))
     // xref fold (round 19): the FULL typed frame's 7 cache-only xref
-    // columns used to come from a SECOND lookupVariants pass
-    // ([[existingXrefs]]) — a duplicated cache scan + probe join + its
-    // own SortAggregate + a sort-merge attach join, ~5 extra stages on
-    // the two heaviest annotate gates. The lookup's match set does not
-    // depend on the requested column list, so one pass carries both
-    // column families; the xref tuple rides the variant union-aggregate
-    // as a MIN(struct) — the exact aggregate [[existingXrefs]] ran.
-    val extras =
-      if (withXrefs) xrefExtraCols.filter(c.columns.contains) else Nil
+    // columns used to come from a SECOND lookupVariants pass — a
+    // duplicated cache scan + probe join + its own SortAggregate + a
+    // sort-merge attach join, ~5 extra stages on the two heaviest
+    // annotate gates. The lookup's match set does not depend on the
+    // requested column list, so one pass carries both column
+    // families; the xref tuple rides the variant union-aggregate as a
+    // MIN(struct), the aggregate [[existingXrefs]] runs standalone.
+    val wanted = lookedCols ++ (if (withXrefs) xrefExtraCols else Nil)
+    // every looked column but variation_name is OPTIONAL on the cache
+    // (the reference's schema.index_of(...).ok() reads, Option-typed
+    // clin_sig_allele) — absent columns read as NULL
+    val c = wanted.filterNot(cache.columns.contains).foldLeft(cache) { (df, n) =>
+      df.withColumn(n, lit(null).cast(
+        if (n == "minor_allele_freq" || afCsq.exists(_._2 == n)) "double" else "string"))
+    }
     // allele_string is non-null on every MATCHED row (the allele
     // matcher cannot return true on a null) and null on every
-    // left-join miss — the exact matched/miss discriminator, used
-    // below to keep miss rows out of the union-aggregate
-    val matchTag = if (withXrefs) Seq("allele_string") else Nil
-    val lookedAll = Vep.lookupVariants(vcf, c,
-      columns = (lookedCols ++ extras) ++ matchTag)
-    // drop the left-join MISS rows (one per unmatched variant — the
-    // bulk of the vcf at selective caches): an unmatched id's folded
-    // xref MIN aggregates over nothing and yields a NULL struct, whose
-    // field reads are null — byte-identical output to existingXrefs'
-    // min over the single all-null miss row. Matched rows (including
-    // empty-variation_name ones, which the colocated fold skips but
-    // the xref min must see) all survive this filter.
-    val looked0 =
+    // left-join miss — the exact matched/miss discriminator. With
+    // xrefs, the MISS rows (one per unmatched variant — the bulk of
+    // the vcf at selective caches) stay out of the union-aggregate: an
+    // unmatched id's folded xref MIN aggregates over nothing and reads
+    // NULL. Matched rows (including empty-variation_name ones, which
+    // the colocated fold skips but the xref min must see) all survive.
+    val lookedAll = Vep.lookupKeyed(vcf, c,
+      columns = wanted ++ (if (withXrefs) Seq("allele_string") else Nil))
+    val looked =
       if (withXrefs) lookedAll.where(col("cache_allele_string").isNotNull)
-        .drop("cache_allele_string")
       else lookedAll
-    // every xref column is OPTIONAL on the cache (the reference's
-    // schema.index_of(...).ok() reads) — absent columns read as NULL
-    val looked = (if (withXrefs) xrefExtraCols.filterNot(extras.contains) else Nil)
-      .foldLeft(looked0) { (df, n) =>
-        df.withColumn(s"cache_$n", lit(null).cast(
-          if (n == "minor_allele_freq") "double" else "string"))
-      }
     val xr =
       if (withXrefs) Seq(struct(
         col("cache_variation_name").as("vn"),
@@ -877,8 +831,7 @@ object Annotate {
         col("cache_cosmic_id").as("co"),
         col("cache_dbsnp_id").as("db")).as("_xr"))
       else Nil
-    looked.select(col("id") +:
-      Vep.vepAltUdf(col("ref"), col("alt")).as("_va") +:
+    looked.select(col("id") +: col("_ev.vep_alt").as("_va") +:
       (lookedCols.map(c2 => col(s"cache_$c2").as(c2)) ++ xr): _*)
   }
 
@@ -1147,11 +1100,12 @@ object Annotate {
   /** VEP's VARIANT_CLASS and (first) output Allele, per variant. */
   private def vClassDf(vcf: DataFrame): DataFrame =
     vcf.select(col("id"),
-      when(length(col("ref")) === 1 && length(col("alt")) === 1, lit("SNV"))
+      when(Splice.isSnv(col("ref"), col("alt")), lit("SNV"))
         .when(length(col("ref")) === length(col("alt")), lit("substitution"))
         .when(length(col("alt")) > length(col("ref")), lit("insertion"))
         .otherwise(lit("deletion")).as("_vclass"),
-      coalesce(stripCtl(Vep.vepAltUdf(col("ref"), col("alt"))), lit(""))
+      coalesce(stripCtl(Vep.vepEvent(col("start").cast("long"), col("ref"), col("alt"))
+        .getField("vep_alt")), lit(""))
         .as("_vallele"))
 
 
@@ -1272,80 +1226,123 @@ object Annotate {
     val emptyTerms = expr("CAST(array() AS ARRAY<STRING>)")
     val nullS = lit(null).cast("string"); val nullL = lit(null).cast("long")
 
-    // ---- SNV entries: shared aggregate -> ONE fused projection ----
-    // eagerly materialized (small: one row per variant×overlapping
-    // transcript) so the candidate probe + exon aggregation run ONCE,
-    // with blocks released when the caller drops the result — a
-    // Dataset.persist here leaked across the whole session (round-6
-    // bench drift). Splice.snvFusedFrom computes the cDNA and codon
-    // layers in one pass (the former per-layer streams re-joined on
-    // (id, transcript_id): two shuffles + a sort-merge for rows that
-    // were never apart), carries the transcript span and variant
-    // position through the aggregate (the former tMeta/vPos joins),
-    // and the splice terms attach as intron-array lambdas over the
-    // already-broadcast exon arrays (the former separate probe +
-    // explode + aggregation + full-outer merge: three more exchanges).
-    // NO Materialize here any more: after the layer fusion the
-    // aggregate has exactly ONE consumer (snvFusedFrom), so the eager
-    // materialization was a pure extra action — a serial plan +
-    // count job + RDD barrier on the critical path (the round-8 shape
-    // had two consumers; the fusion removed the second)
-    val agg = Splice.snvTranscriptAgg(vcf, transcripts, exons, Some(cb))
-    // the localized xa serves the codon-range build, the snv splice
-    // lambdas, and the indel protein/splice layers — one computation
-    val fusedSnv = Splice.snvFusedFrom(agg, transcripts, exons, Some(xa))
+    // ---- transcript entries: ONE trimmed-event stream for SNVs and
+    // indels. One candidate probe + one exon aggregate
+    // ([[Splice.transcriptAgg]]) feed every transcript layer: the SNV
+    // cDNA + codon layers in one pass ([[Splice.snvFusedFrom]]; its
+    // codon addressing is null on indel rows), SIFT/PolyPhen, the
+    // indel geometry, HGVSc and protein layers, and the splice scan.
+    // Running [[Splice.indelHgvs]] and [[Hgvsp.hgvspIndel]] as
+    // separate operators here cost two extra interval probes, a second
+    // exon aggregation and two (id, transcript_id) joins per run; they
+    // remain the public per-layer surface (and their own gates) and
+    // share this stream's renderers (Splice.indelHgvsC,
+    // Hgvsp.formUdf). shift_hgvs=false pins the indel anchors unshifted
+    // (maxShift=0 makes the scan a no-op: sh=0, HGVS_OFFSET never
+    // emits). No Parallelism.ensure: the variant side is the PROBE of
+    // the interval exec, which round-robin repartitions an
+    // under-parallelized probe internally. ----
+    val agg = Splice.transcriptAgg(vcf, transcripts, exons, Some(cb),
+      maxShift = if (opts.shiftHgvs) 16 else 0)
+    val fused = Splice.snvFusedFrom(agg, transcripts, exons, Some(xa))
     val siftCtx = sift.select(col("transcript_id").as("_s_tid"),
       col("protein_pos").as("_s_pp"), col("aa").as("_s_aa"), col("sift_score"))
     val ppCtx = polyphen.select(col("transcript_id").as("_q_tid"),
       col("protein_pos").as("_q_pp"), col("aa").as("_q_aa"), col("polyphen_score"))
-    val snvJoined = fusedSnv
+    val joined = fused
       .join(broadcast(siftCtx),
-        fusedSnv("transcript_id") === col("_s_tid") &&
-        fusedSnv("protein_pos") === col("_s_pp") && fusedSnv("aa_alt") === col("_s_aa"),
+        fused("transcript_id") === col("_s_tid") &&
+        fused("protein_pos") === col("_s_pp") && fused("aa_alt") === col("_s_aa"),
         "left")
       .join(broadcast(ppCtx),
-        fusedSnv("transcript_id") === col("_q_tid") &&
-        fusedSnv("protein_pos") === col("_q_pp") && fusedSnv("aa_alt") === col("_q_aa"),
+        fused("transcript_id") === col("_q_tid") &&
+        fused("protein_pos") === col("_q_pp") && fused("aa_alt") === col("_q_aa"),
         "left")
-      .join(broadcast(xa), fusedSnv("transcript_id") === col("_xa_tid"), "left")
+      .join(broadcast(xa), fused("transcript_id") === col("_xa_tid"), "left")
+    val snv = col("_snv")
+    val coding = Splice.isCodingBt(col("_bt"))
+    val isins = col("_isins")
+    val iP = col("_nvs") // insertion point (norm start)
+    val strandPos = col("_strand") === 1
     // mature-miRNA span: derived middle sub-span of the transcript
     // (same stand-in Vep.annotateRegions documents)
     val mStart = col("_ts") + floor((col("_te") - col("_ts")) / 3).cast("long")
     val mEnd = col("_ts") + floor((col("_te") - col("_ts")) / 2).cast("long")
-    // geometry term of the EXON side only: intronic rows carry no
-    // geometry term here — intron_variant is an INDEPENDENT element
-    // gated on the inner-intron-body predicate below (VEP's
-    // variant_hits_intron_body: donor/acceptor-site SNVs at the first/
-    // last two intron bases get their splice term WITHOUT
-    // intron_variant)
+    // overlaps_cds: genomic CDS-span overlap on the trimmed event
+    // (transcript_consequence.rs:1784-1795)
+    val cdsOv = Splice.eventOverlaps(col("_gcs"), col("_gce"))
+    // insertion_left_flank_in_cds (:1813-1833): the padding base sits
+    // in [cds_start, cds_end]; on '-' strand a left flank exactly on
+    // cds_end is the 5' UTR side, excluded
+    val leftFlank = isins && (iP - 1).between(col("_gcs"), col("_gce")) &&
+      !(col("_strand") === -1 && iP - 1 === col("_gce"))
+    // HGVSc validity — Splice.indelHgvs's candidacy: both shifted
+    // anchors inside this transcript AND inside exons
+    val hokT = col("_ic._3") >= col("_ts") && col("_ic._4") <= col("_te") &&
+      col("_in0") === 1 && col("_in1") === 1
+    // STAGED evaluation (plan-size control): the splice-scan struct,
+    // the shared predicates and the geometry term are bound ONCE as
+    // named columns and referenced by attribute downstream. Inlined,
+    // every reference re-embedded the whole subtree in the LOGICAL
+    // plan (the optimizer unifies runtime evaluation via
+    // subexpression elimination, but never plan size), and predicate
+    // pushdown inlined the term construction into the filters again —
+    // the entry projections and filters alone carried ~4.2K of the
+    // plan's ~11K expression nodes, and every AQE stage
+    // materialization re-walks the full logical plan (round-10 PERF).
+    // CollapseProject keeps a staged alias referenced more than once
+    // (non-cheap), so the staging survives optimization. Level 1:
+    // predicates over the aggregate's own columns. The splice scan
+    // reads the trimmed event — for an SNV the position itself, never
+    // an insertion.
+    val st1 = joined.select(col("*"),
+      Splice.isSnv(col("_vref"), col("_valt")).as("_snv"),
+      Splice.spliceScan(col("_xa_es"), col("_xa_ee"),
+        col("_nvs"), col("_nve"), col("_isins"), col("_strand"),
+        Splice.rankedSpliceNames).as("_sscan"),
+      cdsOv.as("_icdsov"),
+      leftFlank.as("_ilf"),
+      // ALL families — geometry, HGVS and splice — evaluate on VEP's
+      // TRIMMED-event transcript candidacy (reference tree-query
+      // filter, transcript_consequence.rs:919-925): an insertion right
+      // before the first or right after the last transcript base is
+      // NOT a candidate and yields NO entry; an SNV's is start in
+      // [ts, te]
+      Splice.eventOverlaps(col("_ts"), col("_te")).as("_igok"),
+      hokT.as("_ihok"),
+      // raw-span overlap: the indel HGVS families' candidacy
+      (col("_ts") <= col("_ve") && col("_te") >= col("_vp")).as("_irawov"),
+      (length(col("_valt")) - length(col("_vref"))).cast("long").as("_ld"),
+      // deletions spanning a CDS/UTR boundary get NO frameshift/
+      // inframe (add_coding_terms:1985-2000) — CSV plus the
+      // UTR-extension terms
+      (!isins && col("_nvs") < col("_gcs")).as("_iutr5"),
+      (!isins && col("_nve") > col("_gce")).as("_iutr3"),
+      least(col("_cdna0"), col("_cdna1")).as("_ilo"),
+      greatest(col("_cdna0"), col("_cdna1")).as("_ihi"))
+    // the indel coding-branch gate (:1283-1291): exon membership OR the
+    // two CDS exon-boundary insertion arms, AND CDS reach — level 2
+    val cbGate = coding &&
+      (col("_in_exon") === 1 || (col("_bend") === 1 && col("_ilf")) ||
+        (col("_bstart") === 1 && col("_icdsov"))) &&
+      (col("_icdsov") || col("_ilf"))
+    val st2 = st1.select(col("*"), cbGate.as("_icb"))
     // frameshift-intron CDS arm: a position in a <= 13 bp intron
-    // within genomic CDS bounds is part of the coding context —
-    // coding_sequence_variant fires (and ONLY it: the mapper gaps
-    // out, so no specific coding predicate can), the intron's splice
+    // within the CDS is part of the coding context —
+    // coding_sequence_variant fires (and ONLY it: the mapper gaps out,
+    // so no specific coding predicate can), the intron's splice
     // windows are skipped, intron_variant never (body excludes
     // frameshift introns)
-    // STAGED evaluation (plan-size control): the splice-scan struct
-    // and the geometry term are computed ONCE as named columns and
-    // referenced by attribute downstream. Inlined, every reference
-    // re-embedded the whole subtree in the LOGICAL plan (the optimizer
-    // unifies runtime evaluation via subexpression elimination, but
-    // never plan size), and predicate pushdown inlined the term
-    // construction into the union filters again — the SNV/indel entry
-    // projections and filters alone carried ~4.2K of the plan's ~11K
-    // expression nodes, and every AQE stage materialization re-walks
-    // the full logical plan (round-10 PERF: the ~2 s constant serial
-    // planning residue scales with plan mass). CollapseProject keeps
-    // a staged alias referenced more than once (non-cheap), so the
-    // staging survives optimization.
-    val snvStaged = snvJoined.select(col("*"),
-      Splice.spliceScan(col("_xa_es"), col("_xa_ee"),
-        col("_vp"), col("_vp"), lit(false), col("_strand"),
-        Splice.rankedSpliceNames).as("_sscan"))
-    val snvFsIntron = coalesce(col("_sscan").getField("fs"), lit(false))
+    val fsIntron = coalesce(col("_sscan").getField("fs"), lit(false))
+    // SNV geometry term, EXON side only: intronic rows carry no
+    // geometry term here — intron_variant is an INDEPENDENT element
+    // gated on the inner-intron-body predicate (VEP's
+    // variant_hits_intron_body: donor/acceptor-site SNVs at the
+    // first/last two intron bases get their splice term WITHOUT
+    // intron_variant)
     val snvTerm =
       when(col("region") === "intronic",
-        when(snvFsIntron && Splice.isCodingBt(col("_bt")) &&
-          col("_vp").between(col("_gcs"), col("_gce")),
+        when(fsIntron && coding && col("_vp").between(col("_gcs"), col("_gce")),
           rkLit("coding_sequence_variant")))
         .when(instr(col("hgvs_c"), ":n.") > 0 && col("_bt") === "miRNA" &&
           col("_vp") <= mEnd && col("_vp") >= mStart, rkLit("mature_miRNA_variant"))
@@ -1354,43 +1351,145 @@ object Annotate {
         .when(instr(col("hgvs_c"), ":c.*") > 0, rkLit("3_prime_UTR_variant"))
         .otherwise(rkCol(
           coalesce(col("codon_consequence"), lit("coding_sequence_variant"))))
-    // SNVs: normalized coords = the position itself, never an insertion
-    val snvBody = coalesce(col("_sscan").getField("body"), lit(false))
-    val snvSterms = coalesce(col("_sscan").getField("terms"), emptyTerms)
+    // complex indel (:1850-1866): a deletion that overlaps an exon AND
+    // reaches the body of a NON-frameshift intron — the CDS change is
+    // undeterminable, only coding_sequence_variant fires
+    val iComplex = !isins && col("_in_exon") === 1 &&
+      coalesce(col("_sscan").getField("longov"), lit(false))
+    val utrExt5 = col("_iutr5")
+    val utrExt3 = col("_iutr3")
+    // indel geometry term (VEP's trimmed-event model)
+    val iTerm =
+      when(col("_icb"),
+        // the CDS/UTR-boundary downgrade fires only for CONTRACTING
+        // events (ref longer than alt — transcript_consequence.rs:1984
+        // gates extends_into_utr on ref_len > alt_len): an expanding
+        // delins spanning the boundary still frameshifts/inframes
+        when(iComplex || ((utrExt5 || utrExt3) && col("_ld") < 0),
+          rkLit("coding_sequence_variant"))
+          .when(col("_ld") % 3 =!= 0, rkLit("frameshift_variant"))
+          .when(col("_ld") > 0, rkLit("inframe_insertion"))
+          .when(col("_ld") < 0, rkLit("inframe_deletion"))
+          .otherwise(rkLit("protein_altering_variant")))
+        .when(col("_in_exon") === 1 && col("_bt") === "miRNA" &&
+          Splice.eventOverlaps(mStart, mEnd), rkLit("mature_miRNA_variant"))
+        .when(col("_in_exon") === 1 && !coding,
+          rkLit("non_coding_transcript_exon_variant"))
+        // coding-exon UTR (utr_term:2343-2381 — insertions use <=/>=
+        // against the CDS bounds, deletions strict inequalities)
+        .when(col("_in_exon") === 1 && coding,
+          when(isins && iP <= col("_gcs"),
+            when(strandPos, rkLit("5_prime_UTR_variant"))
+              .otherwise(rkLit("3_prime_UTR_variant")))
+            .when(isins && iP >= col("_gce"),
+              when(strandPos, rkLit("3_prime_UTR_variant"))
+                .otherwise(rkLit("5_prime_UTR_variant")))
+            .when(!isins && col("_nve") < col("_gcs"),
+              when(strandPos, rkLit("5_prime_UTR_variant"))
+                .otherwise(rkLit("3_prime_UTR_variant")))
+            .when(!isins && col("_nvs") > col("_gce"),
+              when(strandPos, rkLit("3_prime_UTR_variant"))
+                .otherwise(rkLit("5_prime_UTR_variant"))))
+        // _after_coding (:1315-1334 + utr_boundary_insertion_term): an
+        // insertion at an exon boundary (intronic side) outside the
+        // CDS still gets its UTR term
+        .when(isins && coding && col("_in_exon") === 0 &&
+            !(col("_bend") === 1 && col("_ilf")) &&
+            !(col("_bstart") === 1 && col("_icdsov")) &&
+            (col("_bend") === 1 || col("_bstart") === 1),
+          when(strandPos && iP > col("_gce"), rkLit("3_prime_UTR_variant"))
+            .when(strandPos && iP <= col("_gcs"), rkLit("5_prime_UTR_variant"))
+            .when(!strandPos && iP < col("_gcs"), rkLit("3_prime_UTR_variant"))
+            .when(!strandPos && iP > col("_gce"), rkLit("5_prime_UTR_variant")))
+        .when(col("_in_exon") === 0 && coding && fsIntron && col("_icdsov"),
+          rkLit("coding_sequence_variant"))
+    // partial_codon (add_coding_terms:1927-1981): the indel's codon is
+    // the LAST, truncated one of a CDS whose spliced length is not a
+    // multiple of 3 — incomplete_terminal_codon_variant joins the set
+    // BESIDE the indel class term (an SNV's comes from its codon)
+    val iCdsIdx0 = col("_cdna") - col("_ccs")
+    val iIncomplete = !snv && col("_icb") && col("_nloex") === 1 &&
+      col("_cdna").between(col("_ccs"), col("_cce")) &&
+      ((col("_cce") - col("_ccs") + 1) - (iCdsIdx0 - (iCdsIdx0 % 3)))
+        .between(1, 2)
+    // no geometry fallback for intron-only rows: intron_variant is an
+    // independent element on the inner-body predicate (and an
+    // exon-spanning deletion reaching >= 2 bp into an intron carries
+    // BOTH its exon term and intron_variant, like the reference)
+    val body = coalesce(col("_sscan").getField("body"), lit(false))
+    // indel HGVSc: Splice.indelHgvs's renderer, valid only when the
+    // raw span overlaps and both shifted anchors lie inside this
+    // transcript AND inside exons (`_ihok`); NULL otherwise
+    val iHgvs = col("_irawov") && col("_ihok")
+    val ihgvsC = Splice.indelHgvsC(col("_tid"), coding, col("_strand"),
+      col("_ic._1"), col("_ic._2"), col("_ilo"), col("_ihi"))
+    // protein forms (fsTer/extTer/aligned del-ins-dup) — 1:1 with
+    // Hgvsp.hgvspIndel: coding transcripts whose span overlaps the
+    // shifted event; the renderer returns NULL where no form applies
+    val pok = coding && col("_ts") <= col("_ic._4") && col("_te") >= col("_ic._3")
+    val pepForm = if (opts.shiftHgvs) Hgvsp.formUdf else Hgvsp.formUdfNoShift
+    val ihgvsP = when(pok, concat(col("_tid"), lit(":p."),
+      pepForm(col("_vc"), col("_strand"), col("_xa_es"), col("_xa_ee"),
+        col("_ccs"), col("_cce"), col("_ic._1"), col("_ic._2"),
+        col("_ic._3"), col("_ic._4"))))
     // the empty-terms drop (a trimmed event whose candidacy was
-    // raw-span only produces no terms and no CSQ row) runs PER BRANCH,
-    // pinned above the entry projection by [[graft.plans.NoPushdown]]:
-    // pushing `size(_terms) > 0` below the projection re-inlined the
-    // staged term trees into the filter (984/798-node filter copies,
-    // round-11 PERF.md — the single largest plan-mass concentration).
-    // The other entry branches build non-empty term arrays by
-    // construction, so only the snv/indel streams filter at all.
-    val snvEntries = snvStaged
-      .select(col("*"), snvTerm.as("_sterm"))
-      .select(col("id"), col("transcript_id"),
-        // the terms alias is wrapped in [[graft.plans.NoPushdown]]:
-        // a nondeterministic projection field blocks the empty-terms
+    // raw-span only produces no terms and no CSQ row) is pinned above
+    // the entry projection by [[graft.plans.NoPushdown]]: pushing
+    // `size(_terms) > 0` below the projection re-inlined the staged
+    // term trees into the filter (984/798-node filter copies,
+    // round-11 PERF.md). The other entry branches build non-empty
+    // term arrays by construction.
+    val txEntries = st2
+      // level 3: the geometry term and the partial-codon predicate
+      // staged once
+      .select(col("*"), when(snv, snvTerm).otherwise(iTerm).as("_gterm"),
+        iIncomplete.as("_iinc"))
+      .where(col("_igok"))
+      .select(col("_vid").as("id"), col("_tid").as("transcript_id"),
+        // the terms alias is wrapped in [[graft.plans.NoPushdown]]: a
+        // nondeterministic projection field blocks the empty-terms
         // filter below from being pushed through with the whole term
-        // tree substituted into it (see the branch filter note above)
+        // tree substituted into it
         graft.plans.PlanBarrier.noPushdown(concat(
-          filter(array(col("_sterm"),
-            // incomplete_terminal_codon co-occurs WITH its parent
-            // coding_sequence_variant (strip_parent_terms explicitly
-            // excludes it from the CSV-stripping children)
-            when(col("_sterm") === rkLit("incomplete_terminal_codon_variant"),
+          filter(array(col("_gterm"),
+            // an SNV's incomplete_terminal_codon co-occurs WITH its
+            // parent coding_sequence_variant (strip_parent_terms
+            // explicitly excludes it from the CSV-stripping children)
+            when(snv && col("_gterm") === rkLit("incomplete_terminal_codon_variant"),
               rkLit("coding_sequence_variant")),
-            when(snvBody, rkLit("intron_variant")),
+            // a deletion reaching past the CDS into the UTR carries the
+            // UTR term(s) BESIDE its coding term (add_coding_terms'
+            // extends_before/extends_after inserts)
+            when(!snv && col("_icb") && utrExt5,
+              when(strandPos, rkLit("5_prime_UTR_variant"))
+                .otherwise(rkLit("3_prime_UTR_variant"))),
+            when(!snv && col("_icb") && utrExt3,
+              when(strandPos, rkLit("3_prime_UTR_variant"))
+                .otherwise(rkLit("5_prime_UTR_variant"))),
+            when(col("_iinc"), rkLit("incomplete_terminal_codon_variant")),
+            when(body, rkLit("intron_variant")),
             when(col("_bt") === "nonsense_mediated_decay",
               rkLit("NMD_transcript_variant")),
-            when(col("region") === "intronic" && instr(col("hgvs_c"), ":n.") > 0,
+            // a non-coding transcript hit outside its exons; an SNV's
+            // test reads its rendered n. HGVSc, which is null past the
+            // transcript's outermost exon
+            when(when(snv, col("region") === "intronic" && instr(col("hgvs_c"), ":n.") > 0)
+                .otherwise(!coding && col("_in_exon") === 0),
               rkLit("non_coding_transcript_variant"))),
             x => x.isNotNull),
-          coalesce(snvSterms, emptyTerms))).as("_terms"),
-        col("cdna_pos").cast("long").as("_cdna"),
-        col("cdna_pos").cast("long").as("_cdna_end"),
+          coalesce(col("_sscan").getField("terms"), emptyTerms))).as("_terms"),
+        // the indel cDNA span (both endpoints mapped to cDNA): the
+        // reference's mirna_structure_field consumes the "N-M"
+        // cDNA_position RANGE (annotate_provider.rs:4404-4421), so a
+        // multi-base indel spanning a stem/loop boundary must probe
+        // every position in [ilo, ihi], not just the start
+        when(snv, col("cdna_pos")).otherwise(when(iHgvs, col("_ilo"))).cast("long").as("_cdna"),
+        when(snv, col("cdna_pos")).otherwise(when(iHgvs, col("_ihi"))).cast("long")
+          .as("_cdna_end"),
         col("cds_pos").cast("long").as("_cds"),
         col("protein_pos").cast("long").as("_pp"),
-        col("hgvs_c"), col("hgvs_p"),
+        when(snv, col("hgvs_c")).otherwise(when(iHgvs, ihgvsC)).as("hgvs_c"),
+        when(snv, col("hgvs_p")).otherwise(when(col("_irawov"), ihgvsP)).as("hgvs_p"),
         // --everything renders prediction(score)
         // (annotate_provider.rs format_prediction: "deleterious(0.01)");
         // the score prints as fixed DECIMAL(4,3) — see [[dec4]] note
@@ -1416,331 +1515,15 @@ object Annotate {
         concat_ws("/", col("ref_codon"), col("alt_codon")).as("_cod"),
         nullL.as("_dist"),
         lit("Transcript").as("_ftype"),
-        col("exon").as("_exon"), col("intron").as("_intron"),
-        nullL.as("_hoff"),
-        nullS.as("_mname"), nullL.as("_mpos"), nullS.as("_minf"),
-        lit(null).cast("double").as("_mscore"), nullS.as("_fbt"))
-      .where(graft.plans.PlanBarrier.noPushdown(size(col("_terms")) > 0))
-
-    // ---- indel entries: region-term geometry + HGVS forms, FUSED ----
-    // One candidate probe + one exon aggregation serves all three
-    // indel layers (region geometry, HGVSc rendering, protein HGVS):
-    // running [[Splice.indelHgvs]] and [[Hgvsp.hgvspIndel]] as
-    // separate operators here cost two extra interval probes, a
-    // second exon aggregation, a second codingBounds broadcast and
-    // two (id, transcript_id) joins per run — pure stage-count
-    // overhead, since all three consume the same (indel variant ×
-    // overlapping transcript) candidates. The standalone operators
-    // remain the public per-layer surface (and their own gates) and
-    // share this branch's renderers (Splice.indelHgvsC,
-    // Hgvsp.formUdf). Only geometry-overlapping pairs emit entries (pairs
-    // reachable solely through the 3'-shifted coordinates were
-    // dropped by the igeo-driven left joins before, and still are).
-    // no Parallelism.ensure here: the indel side is the PROBE of the
-    // interval exec, which round-robin repartitions an
-    // under-parallelized probe internally (RDD-level, no AQE
-    // materialization) — an explicit repartition would add a full
-    // exchange + query-stage job for the same effect
-    // shift_hgvs=false pins the anchors unshifted (maxShift=0 makes
-    // the scan a no-op: sh=0, HGVS_OFFSET never emits). VEP-normalized
-    // coords + insertion flag feed the fused splice lambdas (the
-    // former separate splice stream's probe keys).
-    // pinnedWhere: pushing this kind-split below the vcf projection
-    // inlines the (possibly derived) ref/alt trees into the scan
-    // filter — hundreds of expression nodes of plan mass for a
-    // predicate no row-group statistic can evaluate anyway
-    val iv = graft.plans.PlanBarrier.pinnedWhere(vcf,
-        !(length(col("ref")) === 1 && length(col("alt")) === 1))
-      .select(col("*"),
-        Splice.indelCoordsUdf(if (opts.shiftHgvs) 16 else 0)(
-          col("chrom"), col("ref"), col("alt"), col("start").cast("long")).as("_ic"),
-        Vep.vepNormStartUdf(col("start").cast("long"), col("ref"), col("alt"))
-          .as("_i_nvs"),
-        Vep.vepNormEndUdf(col("start").cast("long"), col("ref"), col("alt"))
-          .as("_i_nve"))
-      .select(col("chrom").as("_i_vc"), col("start").cast("long").as("_i_vs"),
-        col("end").cast("long").as("_i_ve"), col("id").as("_i_vid"),
-        (length(col("alt")) - length(col("ref"))).cast("long").as("_i_ld"),
-        col("_ic._1").as("_i_kind"), col("_ic._2").as("_i_va"),
-        col("_ic._3").as("_i_p0"), col("_ic._4").as("_i_p1"),
-        col("_ic._5").as("_i_sh"),
-        col("_i_nvs"), col("_i_nve"),
-        (Vep.vepRefUdf(col("ref"), col("alt")) === "-").as("_i_isins"),
-        least(col("_i_nvs"), col("_i_nve")).as("_i_nlo"),
-        greatest(col("_i_nvs"), col("_i_nve")).as("_i_nhi"))
-      .select(col("*"),
-        least(col("_i_vs"), col("_i_nlo")).as("_i_wlo"),
-        greatest(col("_i_ve"), col("_i_nhi")).as("_i_whi"))
-    val it = transcripts.select(col("chrom").as("_i_tc"),
-      col("start").cast("long").as("_i_ts"), col("end").cast("long").as("_i_te"),
-      col("transcript_id").as("_i_tid"), col("strand").as("_i_strand"),
-      col("biotype").as("_i_bt"),
-      col("cds_start").cast("long").as("_i_cs"), col("cds_end").cast("long").as("_i_ce"))
-    // transcripts = build side of the strategy's broadcast index probe.
-    // Candidates = raw-span overlap (the geometry/HGVS families) UNION
-    // norm-span overlap (the splice family's reach — an insertion's
-    // normalized point can sit one past the raw span): the probe folds
-    // the widened envelope, the exact disjunction rides as residual.
-    val rawOv = col("_i_ts") <= col("_i_ve") && col("_i_te") >= col("_i_vs")
-    val normOv = col("_i_ts") <= col("_i_nhi") && col("_i_te") >= col("_i_nlo")
-    val icand = it.join(iv,
-      col("_i_tc") === col("_i_vc") &&
-        col("_i_ts") <= col("_i_whi") && col("_i_te") >= col("_i_wlo") &&
-        (rawOv || normOv))
-    val iex = exons.select(col("transcript_id").as("_i_etid"),
-      col("start").cast("long").as("_i_es"), col("end").cast("long").as("_i_ee"))
-    val igeo = icand.join(broadcast(iex), col("_i_tid") === col("_i_etid"))
-      .groupBy(col("_i_vid"), col("_i_tid"), col("_i_strand"), col("_i_bt"),
-        col("_i_vs"), col("_i_ve"), col("_i_cs"), col("_i_ce"),
-        col("_i_ts"), col("_i_te"), col("_i_ld"),
-        col("_i_vc"), col("_i_kind"), col("_i_va"), col("_i_p0"), col("_i_p1"),
-        col("_i_sh"), col("_i_nvs"), col("_i_nve"), col("_i_isins"),
-        col("_i_nlo"), col("_i_nhi"))
-      .agg(max(when(
-        // VEP evaluates exon membership on the TRIMMED event with
-        // insertion inverted-coordinate semantics: an insertion point
-        // P belongs to an exon when P in (exon_start, exon_end] (an
-        // insertion at the first exon base falls in the intron);
-        // deletions/MNVs use the trimmed [norm_start, norm_end] span
-        when(col("_i_isins"),
-          col("_i_nvs") > col("_i_es") && col("_i_nvs") <= col("_i_ee"))
-          .otherwise(
-            col("_i_nvs") <= col("_i_ee") && col("_i_nve") >= col("_i_es")), 1)
-        .otherwise(0)).as("_i_inex"),
-        // insertion boundary flags: P exactly one past an exon end /
-        // exactly on an exon start (the cds_{end,start}_exon_boundary
-        // and _after_coding arms)
-        max(when(col("_i_isins") && col("_i_nvs") === col("_i_ee") + 1, 1)
-          .otherwise(0)).as("_i_bend"),
-        max(when(col("_i_isins") && col("_i_nvs") === col("_i_es"), 1)
-          .otherwise(0)).as("_i_bstart"),
-        // EXON/INTRON rank inputs keyed on the trimmed event start
-        // (exons entirely before it, per-transcript exon count)
-        sum(when(col("_i_ee") < col("_i_nvs"), 1).otherwise(0)).as("_i_nprev"),
-        count(lit(1)).as("_i_nex"),
-        // partial-codon inputs: exon membership + cDNA index of the
-        // trimmed event's LOWER genomic bound (VEP's partial_codon
-        // uses min(start, end) — the left flank for insertions)
-        max(when(col("_i_nlo").between(col("_i_es"), col("_i_ee")), 1)
-          .otherwise(0)).as("_i_nloex"),
-        sum(Splice.contribution(col("_i_nlo"), col("_i_es"), col("_i_ee"),
-          col("_i_strand"))).as("_i_cdnalo"),
-        // indelHgvs inputs: exon membership + cDNA index of the
-        // shifted event anchors (Splice.indelCoordsUdf contract)
-        max(when(col("_i_p0").between(col("_i_es"), col("_i_ee")), 1).otherwise(0)).as("_in0"),
-        max(when(col("_i_p1").between(col("_i_es"), col("_i_ee")), 1).otherwise(0)).as("_in1"),
-        sum(Splice.contribution(col("_i_p0"), col("_i_es"), col("_i_ee"), col("_i_strand"))).as("_cdna0"),
-        sum(Splice.contribution(col("_i_p1"), col("_i_es"), col("_i_ee"), col("_i_strand"))).as("_cdna1"))
-      .join(broadcast(cb), col("_i_tid") === col("_cb_tid"), "left")
-      .join(broadcast(xa), col("_i_tid") === col("_xa_tid"), "left")
-    val iCoding = Splice.isCodingBt(col("_i_bt"))
-    val isins = col("_i_isins")
-    val iP = col("_i_nvs") // insertion point (norm start)
-    val strandPos = col("_i_strand") === 1
-    // overlaps_cds: genomic CDS-span overlap on the trimmed event;
-    // insertion inverted coords resolve to P in [cds_start+1, cds_end]
-    // (transcript_consequence.rs:1784-1795)
-    val cdsOv = when(isins, iP > col("_i_cs") && iP <= col("_i_ce"))
-      .otherwise(col("_i_nvs") <= col("_i_ce") && col("_i_nve") >= col("_i_cs"))
-    // insertion_left_flank_in_cds (:1813-1833): the padding base sits
-    // in [cds_start, cds_end]; on '-' strand a left flank exactly on
-    // cds_end is the 5' UTR side, excluded
-    val leftFlank = isins && (iP - 1).between(col("_i_cs"), col("_i_ce")) &&
-      !(col("_i_strand") === -1 && iP - 1 === col("_i_ce"))
-    // STAGED evaluation (plan-size control — see the SNV stream's
-    // staging note): the splice-scan struct, the shared predicates and
-    // the geometry term are bound ONCE as named columns, so downstream
-    // references (and pushed-down filters) carry single attributes
-    // instead of re-embedded subtrees. Level 1: predicates over igeo's
-    // own columns.
-    // geomOk: ALL families — geometry, HGVS and splice — evaluate on
-    // VEP's TRIMMED-event transcript candidacy (reference tree-query
-    // filter, transcript_consequence.rs:919-925): insertions require
-    // P in (tx_start, tx_end] — an insertion right before the first or
-    // right after the last transcript base is NOT a candidate in VEP
-    // and yields NO entry; deletions use the trimmed span.
-    val geomOkT = when(isins, iP > col("_i_ts") && iP <= col("_i_te"))
-      .otherwise(col("_i_nvs") <= col("_i_te") && col("_i_nve") >= col("_i_ts"))
-    // HGVSc validity — Splice.indelHgvs's candidacy: both shifted
-    // anchors inside this transcript AND inside exons
-    val hokT = col("_i_p0") >= col("_i_ts") && col("_i_p1") <= col("_i_te") &&
-      col("_in0") === 1 && col("_in1") === 1
-    val ist1 = igeo.select(col("*"),
-      Splice.spliceScan(col("_xa_es"), col("_xa_ee"),
-        col("_i_nvs"), col("_i_nve"), col("_i_isins"), col("_i_strand"),
-        Splice.rankedSpliceNames).as("_iscan"),
-      cdsOv.as("_icdsov"),
-      leftFlank.as("_ilf"),
-      geomOkT.as("_igok"),
-      hokT.as("_ihok"),
-      rawOv.as("_irawov"),
-      // deletions spanning a CDS/UTR boundary get NO frameshift/
-      // inframe (add_coding_terms:1985-2000) — CSV plus the
-      // UTR-extension terms
-      (!isins && col("_i_nvs") < col("_i_cs")).as("_iutr5"),
-      (!isins && col("_i_nve") > col("_i_ce")).as("_iutr3"),
-      least(col("_cdna0"), col("_cdna1")).as("_ilo"),
-      greatest(col("_cdna0"), col("_cdna1")).as("_ihi"))
-    // the coding-branch gate (:1283-1291): exon membership OR the two
-    // CDS exon-boundary insertion arms, AND CDS reach — level 2, over
-    // the staged predicates
-    val cbGate = iCoding &&
-      (col("_i_inex") === 1 || (col("_i_bend") === 1 && col("_ilf")) ||
-        (col("_i_bstart") === 1 && col("_icdsov"))) &&
-      (col("_icdsov") || col("_ilf"))
-    val ist2 = ist1.select(col("*"), cbGate.as("_icb"))
-    // complex indel (:1850-1866): a deletion that overlaps an exon AND
-    // reaches the body of a NON-frameshift intron — the CDS change is
-    // undeterminable, only coding_sequence_variant fires
-    val iComplex = !isins && col("_i_inex") === 1 &&
-      coalesce(col("_iscan").getField("longov"), lit(false))
-    val utrExt5 = col("_iutr5")
-    val utrExt3 = col("_iutr3")
-    val imStart = col("_i_ts") + floor((col("_i_te") - col("_i_ts")) / 3).cast("long")
-    val imEnd = col("_i_ts") + floor((col("_i_te") - col("_i_ts")) / 2).cast("long")
-    val mirnaOv = when(isins, iP > imStart && iP <= imEnd)
-      .otherwise(col("_i_nvs") <= imEnd && col("_i_nve") >= imStart)
-    // frameshift-intron CDS arm (see the SNV stream's twin)
-    val iFsIntron = coalesce(col("_iscan").getField("fs"), lit(false))
-    val iFsCds = col("_icdsov")
-    // partial_codon (add_coding_terms:1927-1981): the event's codon is
-    // the LAST, truncated one of a CDS whose spliced length is not a
-    // multiple of 3 — incomplete_terminal_codon_variant joins the set
-    // BESIDE the indel class term
-    val iCdsIdx0 = col("_i_cdnalo") - col("_ccs")
-    val iIncomplete = col("_icb") && col("_i_nloex") === 1 &&
-      col("_i_cdnalo").between(col("_ccs"), col("_cce")) &&
-      ((col("_cce") - col("_ccs") + 1) - (iCdsIdx0 - (iCdsIdx0 % 3)))
-        .between(1, 2)
-    val iTerm =
-      when(col("_icb"),
-        // the CDS/UTR-boundary downgrade fires only for CONTRACTING
-        // events (ref longer than alt — transcript_consequence.rs:1984
-        // gates extends_into_utr on ref_len > alt_len): an expanding
-        // delins spanning the boundary still frameshifts/inframes
-        when(iComplex || ((utrExt5 || utrExt3) && col("_i_ld") < 0),
-          rkLit("coding_sequence_variant"))
-          .when(col("_i_ld") % 3 =!= 0, rkLit("frameshift_variant"))
-          .when(col("_i_ld") > 0, rkLit("inframe_insertion"))
-          .when(col("_i_ld") < 0, rkLit("inframe_deletion"))
-          .otherwise(rkLit("protein_altering_variant")))
-        .when(col("_i_inex") === 1 && col("_i_bt") === "miRNA" && mirnaOv,
-          rkLit("mature_miRNA_variant"))
-        .when(col("_i_inex") === 1 && !iCoding,
-          rkLit("non_coding_transcript_exon_variant"))
-        // coding-exon UTR (utr_term:2343-2381 — insertions use <=/>=
-        // against the CDS bounds, deletions strict inequalities)
-        .when(col("_i_inex") === 1 && iCoding,
-          when(isins && iP <= col("_i_cs"),
-            when(strandPos, rkLit("5_prime_UTR_variant"))
-              .otherwise(rkLit("3_prime_UTR_variant")))
-            .when(isins && iP >= col("_i_ce"),
-              when(strandPos, rkLit("3_prime_UTR_variant"))
-                .otherwise(rkLit("5_prime_UTR_variant")))
-            .when(!isins && col("_i_nve") < col("_i_cs"),
-              when(strandPos, rkLit("5_prime_UTR_variant"))
-                .otherwise(rkLit("3_prime_UTR_variant")))
-            .when(!isins && col("_i_nvs") > col("_i_ce"),
-              when(strandPos, rkLit("3_prime_UTR_variant"))
-                .otherwise(rkLit("5_prime_UTR_variant"))))
-        // _after_coding (:1315-1334 + utr_boundary_insertion_term): an
-        // insertion at an exon boundary (intronic side) outside the
-        // CDS still gets its UTR term
-        .when(isins && iCoding && col("_i_inex") === 0 &&
-            !(col("_i_bend") === 1 && col("_ilf")) &&
-            !(col("_i_bstart") === 1 && col("_icdsov")) &&
-            (col("_i_bend") === 1 || col("_i_bstart") === 1),
-          when(strandPos && iP > col("_i_ce"), rkLit("3_prime_UTR_variant"))
-            .when(strandPos && iP <= col("_i_cs"), rkLit("5_prime_UTR_variant"))
-            .when(!strandPos && iP < col("_i_cs"), rkLit("3_prime_UTR_variant"))
-            .when(!strandPos && iP > col("_i_ce"), rkLit("5_prime_UTR_variant")))
-        .when(col("_i_inex") === 0 && iCoding && iFsIntron && iFsCds,
-          rkLit("coding_sequence_variant"))
-    // no geometry fallback for intron-only rows: intron_variant is an
-    // independent element on the inner-body predicate (and an
-    // exon-spanning deletion reaching >= 2 bp into an intron carries
-    // BOTH its exon term and intron_variant, like the reference)
-    val iBody = coalesce(col("_iscan").getField("body"), lit(false))
-    // HGVSc: Splice.indelHgvs's renderer over the fused aggregate,
-    // valid only when both shifted anchors lie inside this transcript
-    // AND inside exons (the standalone operator's candidate condition
-    // + its _in0/_in1 filter, staged as `_ihok`); NULL otherwise.
-    val hok = col("_ihok")
-    val ilo = col("_ilo")
-    val ihi = col("_ihi")
-    val ihgvsC = Splice.indelHgvsC(col("_i_tid"), iCoding, col("_i_strand"),
-      col("_i_kind"), col("_i_va"), ilo, ihi)
-    // protein forms (fsTer/extTer/aligned del-ins-dup) — 1:1 with
-    // Hgvsp.hgvspIndel: coding transcripts whose span overlaps the
-    // shifted event; the renderer returns NULL where no form applies
-    // (concat propagates it, like the left join it replaces)
-    val pok = iCoding &&
-      col("_i_ts") <= col("_i_p1") && col("_i_te") >= col("_i_p0")
-    val pepForm = if (opts.shiftHgvs) Hgvsp.formUdf else Hgvsp.formUdfNoShift
-    val ihgvsP = when(pok, concat(col("_i_tid"), lit(":p."),
-      pepForm(col("_i_vc"), col("_i_strand"), col("_xa_es"), col("_xa_ee"),
-        col("_ccs"), col("_cce"), col("_i_kind"), col("_i_va"),
-        col("_i_p0"), col("_i_p1"))))
-    // splice terms via the fused intron-array scan (the former
-    // separate splice stream: probe + explode + aggregation +
-    // full-outer merge = three exchanges + an index build). Gated on
-    // the staged trimmed-event candidacy `_igok` — exactly the old
-    // splice stream's candidate condition — so norm-only reach never
-    // leaks terms for transcripts the old probe would not have paired
-    // (the former norm-reach splice-only arm preserved a pre-fusion
-    // behavior the reference never produces).
-    val geomOk = col("_igok")
-    val iSterms = when(geomOk, coalesce(col("_iscan").getField("terms"),
-      emptyTerms)).otherwise(emptyTerms)
-    // level 3: the geometry term and the partial-codon predicate
-    // staged once (iTerm alone is a ~100-node tree; it appeared twice
-    // in the entry projection and again in the pushed-down filter)
-    val indelEntries = ist2
-      .select(col("*"), iTerm.as("_iterm"), iIncomplete.as("_iinc"),
-        iSterms.as("_sterms"))
-      .where(geomOk)
-      .select(col("_i_vid").as("id"), col("_i_tid").as("transcript_id"),
-        // NoPushdown for the same reason as the snv branch
-        graft.plans.PlanBarrier.noPushdown(concat(
-          filter(array(when(geomOk, col("_iterm")),
-            // deletion reaching past the CDS into the UTR carries the
-            // UTR term(s) BESIDE its coding term (add_coding_terms'
-            // extends_before/extends_after inserts)
-            when(geomOk && col("_icb") && utrExt5,
-              when(strandPos, rkLit("5_prime_UTR_variant"))
-                .otherwise(rkLit("3_prime_UTR_variant"))),
-            when(geomOk && col("_icb") && utrExt3,
-              when(strandPos, rkLit("3_prime_UTR_variant"))
-                .otherwise(rkLit("5_prime_UTR_variant"))),
-            when(geomOk && col("_iinc"),
-              rkLit("incomplete_terminal_codon_variant")),
-            when(geomOk && iBody, rkLit("intron_variant")),
-            when(geomOk && col("_i_bt") === "nonsense_mediated_decay",
-              rkLit("NMD_transcript_variant")),
-            when(geomOk && !iCoding && col("_i_inex") === 0,
-              rkLit("non_coding_transcript_variant"))),
-            x => x.isNotNull),
-          col("_sterms"))).as("_terms"),
-        when(col("_irawov") && hok, ilo).as("_cdna"),
-        // the full cDNA span (both indel endpoints mapped to cDNA):
-        // the reference's mirna_structure_field consumes the "N-M"
-        // cDNA_position RANGE (annotate_provider.rs:4404-4421), so a
-        // multi-base indel spanning a stem/loop boundary must probe
-        // every position in [ilo, ihi], not just the start
-        when(col("_irawov") && hok, ihi).as("_cdna_end"),
-        nullL.as("_cds"), nullL.as("_pp"),
-        when(col("_irawov") && hok, ihgvsC).as("hgvs_c"),
-        when(col("_irawov"), ihgvsP).as("hgvs_p"), nullS.as("_sift"),
-        nullS.as("_polyphen"), nullS.as("_aas"), nullS.as("_cod"), nullL.as("_dist"),
-        lit("Transcript").as("_ftype"),
-        when(geomOk, Splice.exonRank(col("_i_inex") === 1, col("_i_strand"),
-          col("_i_nprev"), col("_i_nex"))).as("_exon"),
-        when(geomOk, Splice.intronRank(col("_i_inex") === 1, col("_i_strand"),
-          col("_i_nprev"), col("_i_nex"))).as("_intron"),
-        // HGVS_OFFSET: emitted with the HGVSc it annotates, signed
-        // transcript-ward (Splice.indelHgvs convention)
-        when(col("_irawov") && hok && col("_i_sh") > 0,
-          when(col("_i_strand") === -1, -col("_i_sh")).otherwise(col("_i_sh")))
+        Splice.exonRank(col("_in_exon") === 1, col("_strand"), col("_nprev"), col("_nex"))
+          .as("_exon"),
+        Splice.intronRank(col("_in_exon") === 1, col("_strand"), col("_nprev"), col("_nex"))
+          .as("_intron"),
+        // HGVS_OFFSET: emitted with the indel HGVSc it annotates,
+        // signed transcript-ward (Splice.indelHgvs convention); null on
+        // SNVs (no shift)
+        when(iHgvs && col("_ic._5") > 0,
+          when(col("_strand") === -1, -col("_ic._5")).otherwise(col("_ic._5")))
           .as("_hoff"),
         nullS.as("_mname"), nullL.as("_mpos"), nullS.as("_minf"),
         lit(null).cast("double").as("_mscore"), nullS.as("_fbt"))
@@ -1802,10 +1585,7 @@ object Annotate {
     val fv = vcf.select(col("chrom").as("_f_vc"), col("start").cast("long").as("_f_vs"),
       col("end").cast("long").as("_f_ve"), col("id").as("_f_vid"),
       (length(col("alt")) - length(col("ref"))).cast("long").as("_f_ld"),
-      Vep.vepNormStartUdf(col("start").cast("long"), col("ref"), col("alt"))
-        .as("_f_nvs"),
-      Vep.vepNormEndUdf(col("start").cast("long"), col("ref"), col("alt"))
-        .as("_f_nve"))
+      Vep.vepEvent(col("start").cast("long"), col("ref"), col("alt")).as("_f_ev"))
     def featureEntries(features: DataFrame, fid: String, term: String,
         ftype: String, motif: Boolean): DataFrame = {
       // regulatory feature_type is the entry's BIOTYPE override
@@ -1837,8 +1617,8 @@ object Annotate {
       val terms: Column =
         if (ftype == "RegulatoryFeature")
           filter(array(
-            when(col("_f_ld") < 0 && col("_f_nvs") <= col("_f_fs") &&
-              col("_f_nve") >= col("_f_fe"),
+            when(col("_f_ld") < 0 && col("_f_ev.norm_start") <= col("_f_fs") &&
+              col("_f_ev.norm_end") >= col("_f_fe"),
               rkLit("regulatory_region_ablation")),
             rkLit(term)), x => x.isNotNull)
         else array(rkLit(term))
@@ -2032,7 +1812,7 @@ object Annotate {
     // the drop is applied inside the snv/indel branches (pinned by
     // NoPushdown, see the snvEntries comment); the remaining branches
     // construct non-empty term arrays unconditionally
-    val unioned0 = snvEntries.unionByName(indelEntries).unionByName(updown)
+    val unioned0 = txEntries.unionByName(updown)
       .unionByName(regEntries).unionByName(motEntries).unionByName(intergenic)
     // flag gating only rewrites columns when a flag is actually off —
     // the default (all on) path adds no projection layer

@@ -358,7 +358,7 @@ object Hgvsp {
     graft.plans.Graft.enable(vcf.sparkSession)
     val v = graft.core.Parallelism.ensure(
         graft.plans.PlanBarrier.pinnedWhere(vcf,
-          !(length(col("ref")) === 1 && length(col("alt")) === 1)))
+          !Splice.isSnv(col("ref"), col("alt"))))
       .withColumn("_ic", Splice.indelCoordsUdf(maxShift)(
         col("chrom"), col("ref"), col("alt"), col("start").cast("long")))
       .select(col("chrom").as("_hc"), col("id").as("_hid"),
@@ -425,7 +425,7 @@ object Hgvsp {
       shift: Boolean = true,
       exCte: String = graft.Oracle.exons): String = {
     val D = CodonLogic.DuckD
-    val scan = Splice.shiftScanSql(D, "chrom", "anchor", "allele", 16)
+    val scan = Splice.shiftScanSql("chrom", "anchor", "allele", 16)
     val ctxBase = CodonLogic.seq(D, "chrom", "j")
     def orig(i: String): String = sOrig(D, i)
     def aa3(x: String): String = aa3X(D, x)

@@ -100,14 +100,51 @@ object Splice {
         col("_bt_cs").as("_gcs"), col("_bt_ce").as("_gce"))
   }
 
-  /** Shared per-(SNV variant, overlapping transcript) aggregate:
-    * cDNA index, exon membership, intron anchors, coding bounds.
-    * Columns: _vid _tid _strand _bt _vref _valt _vp _vc _in_exon
-    * _cdna _prev_ee _next_es _nprev _nex _wb _ts _te, then the
-    * [[codingBounds]] columns. */
-  private[vep] def snvTranscriptAgg(
+  /** An SNV: single-base ref and alt (the trivial trimmed event). */
+  private[vep] def isSnv(ref: Column, alt: Column): Column =
+    length(ref) === 1 && length(alt) === 1
+
+  /** The VCF's SNV records, the split pinned above any derived ref/alt
+    * trees ([[graft.plans.PlanBarrier]] — pushed into the scan filter
+    * they would be inlined there, with no statistic to prune by). */
+  private def snvs(vcf: DataFrame): DataFrame =
+    graft.plans.PlanBarrier.pinnedWhere(vcf, isSnv(col("ref"), col("alt")))
+
+  /** VEP's trimmed-event overlap of the span [a, b]
+    * (transcript_consequence.rs:1160-1335, 919-925): an insertion
+    * point P (`_nvs`) lies in (a, b] — an insertion at a feature's
+    * first base falls outside it, one past its last base inside —
+    * and any other event's trimmed span [`_nvs`, `_nve`] meets [a, b].
+    * Reads `_isins`/`_nvs`/`_nve` ([[Vep.withEvent]]) in scope. */
+  private[vep] def eventOverlaps(a: Column, b: Column): Column =
+    when(col("_isins"), col("_nvs") > a && col("_nvs") <= b)
+      .otherwise(col("_nvs") <= b && col("_nve") >= a)
+
+  /** The one (variant, transcript) exon aggregate — SNVs and indels
+    * alike, each VCF record as its trimmed event ([[Vep.withEvent]]):
+    * ONE candidate probe (transcripts = build side of the interval
+    * strategy's index; a contig-keyed hash join cross-products per
+    * contig) and ONE aggregate over the candidates' exons. Candidates
+    * are raw-span OR trimmed-span overlaps (an insertion's point can
+    * sit one past its raw span); for an SNV that is exactly
+    * start ∈ [ts, te]. Columns:
+    *  - shared: _vid _vc _vp (start) _ve (end) _vref _valt, the event
+    *    _nvs _nve _isins, _tid _strand _bt _ts _te, _in_exon (exon
+    *    membership by [[eventOverlaps]]), _cdna / _nloex (cDNA index /
+    *    exon membership of the event's lower genomic bound), the exon
+    *    rank inputs _nprev _nex, then the [[codingBounds]] columns;
+    *  - SNV: the intron anchors _prev_ee _next_es and the 5-base codon
+    *    window _wb (null on indels);
+    *  - indel: _ic ([[indelCoordsUdf]] at `maxShift`; null on SNVs),
+    *    the insertion boundary flags _bend _bstart, and the shifted
+    *    anchors' exon membership and cDNA index _in0 _in1 _cdna0 _cdna1.
+    * Each kind skips the other's per-variant work: SNVs the shift/dup
+    * scan, indels the window. */
+  private[vep] def transcriptAgg(
       vcf: DataFrame, transcripts: DataFrame, exons: DataFrame,
-      cb: Option[DataFrame] = None): DataFrame = {
+      cb: Option[DataFrame] = None, maxShift: Int = 16): DataFrame = {
+    val snv = isSnv(col("ref"), col("alt"))
+    val start = col("start").cast("long")
     // Derived-genome memoization (per-position sequence dedup): every
     // base of a codon that does NOT span an exon boundary lies within
     // ±2 of the variant position, so the 5-base window is computed
@@ -115,80 +152,86 @@ object Splice {
     // transcript probe) and rides the aggregate to every candidate
     // pair; only spliced codon bases (outside the window after the
     // cDNA->genomic map) fall back to the inline md5 expression in
-    // [[snvFusedFrom]]. At 100 TB the window is computed in the
-    // probe-side scan once per variant instead of 3 md5 per
-    // (variant × overlapping transcript) pair in the codon stage.
-    val winExprs = (-2 to 2).map { o =>
-      expr(CodonLogic.seq(CodonLogic.SparkD, "chrom",
-        s"(CAST(start AS BIGINT) + ($o))"))
-    }
-    // pinnedWhere: see [[graft.plans.PlanBarrier]] — keeps the derived
-    // ref/alt trees out of the scan filter
-    val v = graft.plans.PlanBarrier.pinnedWhere(vcf,
-        length(col("ref")) === 1 && length(col("alt")) === 1)
-      .select(col("chrom").as("_vc"), col("start").cast("long").as("_vp"),
+    // [[snvFusedFrom]].
+    val win = array((-2 to 2).map { o =>
+      expr(CodonLogic.seq(CodonLogic.SparkD, "chrom", s"(CAST(start AS BIGINT) + ($o))"))
+    }: _*)
+    val v = Vep.withEvent(vcf, start)
+      .select(col("chrom").as("_vc"), start.as("_vp"), col("end").cast("long").as("_ve"),
         col("id").as("_vid"), col("ref").as("_vref"), col("alt").as("_valt"),
-        array(winExprs: _*).as("_wb"))
+        col("_nvs"), col("_nve"), col("_isins"),
+        least(col("_nvs"), col("_nve")).as("_nlo"), greatest(col("_nvs"), col("_nve")).as("_nhi"),
+        when(snv, win).as("_wb"),
+        when(!snv, indelCoordsUdf(maxShift)(col("chrom"), col("ref"), col("alt"), start)).as("_ic"))
     val t = transcripts.select(col("chrom").as("_tc"), col("start").cast("long").as("_ts"),
       col("end").cast("long").as("_te"), col("transcript_id").as("_tid"),
       col("strand").as("_strand"), col("biotype").as("_bt"))
-    // transcripts on the LEFT = build side of the interval strategy's
-    // index probe (a contig-keyed hash join cross-products per contig)
     graft.plans.Graft.enable(vcf.sparkSession)
+    // the probe folds the raw ∪ trimmed envelope; the exact
+    // disjunction rides as the join's residual filter
     val cand = t.join(v,
-      col("_tc") === col("_vc") && col("_vp").between(col("_ts"), col("_te")))
+      col("_tc") === col("_vc") &&
+        col("_ts") <= greatest(col("_ve"), col("_nhi")) &&
+        col("_te") >= least(col("_vp"), col("_nlo")) &&
+        ((col("_ts") <= col("_ve") && col("_te") >= col("_vp")) ||
+          (col("_ts") <= col("_nhi") && col("_te") >= col("_nlo"))))
     val ex = exons.select(col("transcript_id").as("_etid"),
       col("start").cast("long").as("_es"), col("end").cast("long").as("_ee"))
-    val p = col("_vp")
+    val p = col("_nvs")
+    def inExon(x: Column) = max(when(x.between(col("_es"), col("_ee")), 1).otherwise(0))
+    def cdnaOf(x: Column) = sum(contribution(x, col("_es"), col("_ee"), col("_strand")))
     cand.join(broadcast(ex), col("_tid") === col("_etid"))
-      .groupBy(col("_vid"), col("_tid"), col("_strand"), col("_bt"),
-        col("_vref"), col("_valt"), col("_vp"), col("_vc"))
+      .groupBy(col("_vid"), col("_vc"), col("_vp"), col("_ve"), col("_vref"), col("_valt"),
+        col("_nvs"), col("_nve"), col("_isins"), col("_wb"), col("_ic"),
+        col("_tid"), col("_strand"), col("_bt"), col("_ts"), col("_te"))
       .agg(
-        max(when(p.between(col("_es"), col("_ee")), 1).otherwise(0)).as("_in_exon"),
-        sum(contribution(p, col("_es"), col("_ee"), col("_strand"))).as("_cdna"),
-        // genomic distance to the nearest exonic base on each side,
-        // in TRANSCRIPT orientation: d_plus measures from the previous
+        max(when(eventOverlaps(col("_es"), col("_ee")), 1).otherwise(0)).as("_in_exon"),
+        // VEP's partial_codon reads min(start, end) — the left flank
+        // for insertions, the position itself for an SNV
+        cdnaOf(col("_nlo")).as("_cdna"),
+        inExon(col("_nlo")).as("_nloex"),
+        // exon/intron rank inputs (VEP's EXON/INTRON CSQ numbering):
+        // exons entirely before the event in GENOMIC order plus the
+        // exon count; the strand flip happens at render time
+        sum(when(col("_ee") < p, 1).otherwise(0)).as("_nprev"),
+        count(lit(1)).as("_nex"),
+        // genomic distance to the nearest exonic base on each side, in
+        // TRANSCRIPT orientation: d_plus measures from the previous
         // exon's last transcribed base, d_minus to the next one
         max(when(col("_ee") < p, col("_ee"))).as("_prev_ee"),
         min(when(col("_es") > p, col("_es"))).as("_next_es"),
-        // exon/intron rank inputs (VEP's EXON/INTRON CSQ numbering):
-        // count of exons entirely before the position in GENOMIC order
-        // plus the per-transcript exon count; the strand flip to
-        // transcript orientation happens at render time
-        sum(when(col("_ee") < p, 1).otherwise(0)).as("_nprev"),
-        count(lit(1)).as("_nex"),
-        // constant within the group (derived from the _vc/_vp keys)
-        first(col("_wb")).as("_wb"),
-        // transcript span (constant per _tid): carried through so
-        // downstream layers (miRNA window, splice lambdas) need no
-        // second transcript join
-        first(col("_ts")).as("_ts"), first(col("_te")).as("_te"))
+        // insertion point exactly one past an exon end / on an exon
+        // start (the cds_{end,start}_exon_boundary and _after_coding arms)
+        max(when(col("_isins") && p === col("_ee") + 1, 1).otherwise(0)).as("_bend"),
+        max(when(col("_isins") && p === col("_es"), 1).otherwise(0)).as("_bstart"),
+        inExon(col("_ic._3")).as("_in0"), inExon(col("_ic._4")).as("_in1"),
+        cdnaOf(col("_ic._3")).as("_cdna0"), cdnaOf(col("_ic._4")).as("_cdna1"))
       .join(broadcast(cb.getOrElse(codingBounds(transcripts, exons))),
         col("_tid") === col("_cb_tid"), "left")
   }
 
   /** Intron-aware cDNA/CDS/protein coordinates + HGVSc for SNVs
     * against a transcript/exon context: [[cdnaColumns]] over
-    * [[snvTranscriptAgg]], one output row per (variant, overlapping
+    * [[transcriptAgg]], one output row per (variant, overlapping
     * transcript). */
   def cdnaAnnotate(vcf: DataFrame, transcripts: DataFrame, exons: DataFrame): DataFrame =
-    snvTranscriptAgg(vcf, transcripts, exons)
+    transcriptAgg(snvs(vcf), transcripts, exons)
       .select(cdnaColumns(snvCdsPos, snvProteinPos(snvCdsPos)): _*)
 
-  /** An [[snvTranscriptAgg]] row lies in the CDS: exonic, on a coding
-    * transcript, between the coding cDNA bounds. */
+  /** A [[transcriptAgg]] row is an SNV in the CDS: exonic, on a
+    * coding transcript, between the coding cDNA bounds. */
   private def snvInCds: Column =
-    col("_in_exon") === 1 && isCodingBt(col("_bt")) &&
+    isSnv(col("_vref"), col("_valt")) && col("_in_exon") === 1 && isCodingBt(col("_bt")) &&
       col("_cdna") >= col("_ccs") && col("_cdna") <= col("_cce")
 
-  /** CDS position of an [[snvTranscriptAgg]] row; null outside the CDS. */
+  /** CDS position of an [[transcriptAgg]] row; null outside the CDS. */
   private def snvCdsPos: Column = when(snvInCds, col("_cdna") - col("_ccs") + 1)
 
   /** Protein position of CDS position `cdsPos`; null outside the CDS. */
   private def snvProteinPos(cdsPos: Column): Column =
     when(snvInCds, floor((cdsPos - 1) / lit(3)) + 1).cast("long")
 
-  /** The SNV cDNA layer, defined once over [[snvTranscriptAgg]]'s
+  /** The SNV cDNA layer, defined once over [[transcriptAgg]]'s
     * columns: (id, transcript_id, region, cdna_pos, cds_pos,
     * protein_pos, hgvs_c, exon, intron), `region` ∈ exonic | intronic.
     * `cdsPos`/`proteinPos` are [[snvCdsPos]]/[[snvProteinPos]], inline
@@ -283,20 +326,16 @@ object Splice {
   /** Bounded right-scan over the derived reference sequence for
     * 3'-shifting (the reference's shift-state ports,
     * variant_lookup_exec.rs; Ensembl shifts indels right while the
-    * next base repeats the indel allele). Returns the 1-based index of
-    * the first position in [anchor, anchor+max) whose base differs
-    * from `allele` — 0 when all `max` positions match (callers cap the
-    * shift there). All arguments are SQL fragments valid in scope. */
-  def shiftScanSql(d: CodonLogic.Dialect, chrom: String, anchor: String,
-      allele: String, max: Int): String = {
-    val base = CodonLogic.seq(d, chrom, s"($anchor + j)")
-    d match {
-      case CodonLogic.SparkD =>
-        s"array_position(transform(sequence(0, ${max - 1}), j -> $base = $allele), false)"
-      case CodonLogic.DuckD =>
-        s"CAST(COALESCE(list_position(list_transform(generate_series(0, ${max - 1})," +
-          s" j -> $base = $allele), false), 0) AS BIGINT)"
-    }
+    * next base repeats the indel allele), as DuckDB SQL — the oracle's
+    * formulation of [[CodonLogic.shiftScan]], which the Spark side
+    * runs. Returns the 1-based index of the first position in
+    * [anchor, anchor+max) whose base differs from `allele` — 0 when
+    * all `max` positions match (callers cap the shift there). All
+    * arguments are SQL fragments valid in scope. */
+  def shiftScanSql(chrom: String, anchor: String, allele: String, max: Int): String = {
+    val base = CodonLogic.seq(CodonLogic.DuckD, chrom, s"($anchor + j)")
+    s"CAST(COALESCE(list_position(list_transform(generate_series(0, ${max - 1})," +
+      s" j -> $base = $allele), false), 0) AS BIGINT)"
   }
 
   /** Spliced-codon consequence + HGVSp for coding exonic SNVs:
@@ -310,20 +349,20 @@ object Splice {
     * (cce-ccs+1 not a multiple of 3) read
     * `incomplete_terminal_codon_variant` with null sequence columns. */
   def splicedCodon(vcf: DataFrame, transcripts: DataFrame, exons: DataFrame): DataFrame =
-    snvFusedFrom(snvTranscriptAgg(vcf, transcripts, exons), transcripts, exons)
+    snvFusedFrom(transcriptAgg(snvs(vcf), transcripts, exons), transcripts, exons)
       .where(col("cds_pos").isNotNull)
       .select(col("id"), col("transcript_id"), col("cds_pos"), col("protein_pos"),
         col("ref_codon"), col("alt_codon"), col("aa_ref"), col("aa_alt"),
         col("codon_consequence").as("consequence"), col("hgvs_p"))
 
   /** FUSED cDNA + spliced-codon stream over a prebuilt
-    * [[snvTranscriptAgg]]: [[cdnaColumns]] plus the codon layer's
+    * [[transcriptAgg]]: [[cdnaColumns]] plus the codon layer's
     * columns, computed in ONE projection pass with the codon-range
     * lookahead join as a LEFT broadcast probe. Codon columns are null
-    * outside the CDS ([[splicedCodon]] keeps the rest). Passthrough
-    * columns (_bt, _strand, _ts, _te, _vp, _vc, _gcs, _gce) let the
-    * integrated operator render entries without re-joining transcript
-    * metadata or the variant side. */
+    * outside the CDS and on indel rows ([[splicedCodon]] keeps the
+    * rest). Every aggregate column passes through, so the integrated
+    * operator renders SNV and indel entries from this one stream
+    * without re-joining transcript metadata or the variant side. */
   private[vep] def snvFusedFrom(
       agg: DataFrame, transcripts: DataFrame, exons: DataFrame,
       xa: Option[DataFrame] = None): DataFrame = {
@@ -403,14 +442,13 @@ object Splice {
       expr(aa3Sql(CodonLogic.SparkD, "_aaref")), col("_ppos").cast("string"),
       when(col("_aaref") === col("_aaalt"), lit("="))
         .otherwise(expr(aa3Sql(CodonLogic.SparkD, "_aaalt")))))
-    staged.select(cdnaColumns(col("_cds_pos"), col("_ppos")) ++ Seq(
+    staged.select(agg.columns.toSeq.map(col) ++
+      cdnaColumns(col("_cds_pos"), col("_ppos")) ++ Seq(
       codonConsequence.as("codon_consequence"),
       hgvsP.as("hgvs_p"),
       col("_refcodon").as("ref_codon"), col("_altcodon").as("alt_codon"),
       when(isFull, col("_aaref")).as("aa_ref"),
-      when(isFull, col("_aaalt")).as("aa_alt"),
-      col("_bt"), col("_strand"), col("_ts"), col("_te"),
-      col("_vp"), col("_vc"), col("_gcs"), col("_gce")): _*)
+      when(isFull, col("_aaalt")).as("aa_alt")): _*)
   }
 
   /** The codon-range lookahead build derived from the per-transcript
@@ -563,7 +601,7 @@ object Splice {
     graft.plans.Graft.enable(vcf.sparkSession)
     val v = graft.core.Parallelism.ensure(
         graft.plans.PlanBarrier.pinnedWhere(vcf,
-          !(length(col("ref")) === 1 && length(col("alt")) === 1)))
+          !isSnv(col("ref"), col("alt"))))
       .withColumn("_ic", indelCoordsUdf(maxShift)(
         col("chrom"), col("ref"), col("alt"), col("start").cast("long")))
       .select(col("chrom").as("_vc"), col("id").as("_vid"),
@@ -647,14 +685,11 @@ object Splice {
     * an exon. */
   def spliceTerms(vcf: DataFrame, transcripts: DataFrame, exons: DataFrame): DataFrame = {
     graft.plans.Graft.enable(vcf.sparkSession)
-    val v = vcf
-      .withColumn("_vs", Vep.vepNormStartUdf(col("start").cast("long"), col("ref"), col("alt")))
-      .withColumn("_ve", Vep.vepNormEndUdf(col("start").cast("long"), col("ref"), col("alt")))
-      .withColumn("_isins", Vep.vepRefUdf(col("ref"), col("alt")) === "-")
+    val v = Vep.withEvent(vcf, col("start").cast("long"))
       .select(col("chrom").as("_vc"), col("id").as("_vid"),
-        col("_vs"), col("_ve"), col("_isins"),
-        least(col("_vs"), col("_ve")).as("_lo"),
-        greatest(col("_vs"), col("_ve")).as("_hi"))
+        col("_nvs"), col("_nve"), col("_isins"),
+        least(col("_nvs"), col("_nve")).as("_lo"),
+        greatest(col("_nvs"), col("_nve")).as("_hi"))
     val t = transcripts.select(col("chrom").as("_tc"),
       col("start").cast("long").as("_ts"), col("end").cast("long").as("_te"),
       col("transcript_id").as("_tid"), col("strand").as("_strand"))
@@ -664,11 +699,10 @@ object Splice {
     val cand = t.join(v,
       col("_tc") === col("_vc") &&
         col("_ts") <= col("_hi") && col("_te") >= col("_lo") &&
-        when(col("_isins"), col("_vs") > col("_ts") && col("_vs") <= col("_te"))
-          .otherwise(col("_vs") <= col("_te") && col("_ve") >= col("_ts")))
+        eventOverlaps(col("_ts"), col("_te")))
     cand.join(broadcast(Hgvsp.exonArrays(transcripts, exons)), col("_tid") === col("_xa_tid"))
       .select(col("_vid").as("id"), col("_tid").as("transcript_id"),
-        explode(spliceScan(col("_xa_es"), col("_xa_ee"), col("_vs"), col("_ve"),
+        explode(spliceScan(col("_xa_es"), col("_xa_ee"), col("_nvs"), col("_nve"),
           col("_isins"), col("_strand"), plainSpliceNames).getField("terms"))
           .as("consequence"))
       .distinct()
@@ -698,7 +732,7 @@ object Splice {
     // never apart, costing two shuffles + a sort-merge per run. With
     // one consumer the former Materialize of the aggregate would be a
     // pure extra action, so the aggregate plans inline.
-    val j = snvFusedFrom(snvTranscriptAgg(vcf, transcripts, exons), transcripts, exons)
+    val j = snvFusedFrom(transcriptAgg(snvs(vcf), transcripts, exons), transcripts, exons)
       .withColumnRenamed("codon_consequence", "consequence")
     val term = when(col("region") === "intronic", lit("intron_variant"))
       .when(instr(col("hgvs_c"), ":n.") > 0, lit("non_coding_transcript_exon_variant"))

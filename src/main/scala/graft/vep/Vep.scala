@@ -23,24 +23,29 @@ import org.apache.spark.sql.functions._
   */
 object Vep {
 
-  /** Spark UDF handles (plain Scala UDFs — same extension point the
-    * reference uses, allele.rs create_udf). All are `asNonNullable`:
-    * they never return null, and advertising that matters — a nullable
-    * UDF output used in a join condition makes
-    * InferFiltersFromConstraints add `isnotnull(derivedCol)` probes
-    * whose pushdown SUBSTITUTES the full derived expression tree
-    * (md5 shift scans, dup-context windows) into a Filter below the
-    * repartition, re-evaluating it per raw row in the single-partition
-    * scan stage (round-3: 8-10 s single-task stages in
-    * f11_indel_hgvs / f11_csq). */
-  val vepNormStartUdf = udf((pos: Long, ref: String, alt: String) =>
-    Allele.vepNormStart(pos, ref, alt)).asNonNullable()
-  val vepNormEndUdf = udf((pos: Long, ref: String, alt: String) =>
-    Allele.vepNormEnd(pos, ref, alt)).asNonNullable()
-  val vepRefUdf = udf((ref: String, alt: String) =>
-    Allele.vcfToVepAllele(ref, alt)._1).asNonNullable()
-  val vepAltUdf = udf((ref: String, alt: String) =>
-    Allele.vcfToVepAllele(ref, alt)._2).asNonNullable()
+  /** The one allele-normalization UDF: each VCF record's trimmed
+    * event ([[Allele.event]]) as a struct<norm_start, norm_end,
+    * vep_ref, vep_alt>, staged once per site and read by field (plain
+    * Scala UDF — the extension point the reference uses, allele.rs
+    * create_udf). `asNonNullable`: it never returns null, and
+    * advertising that matters — a nullable UDF output used in a join
+    * condition makes InferFiltersFromConstraints add
+    * `isnotnull(derivedCol)` probes whose pushdown SUBSTITUTES the
+    * full derived expression tree (md5 shift scans, dup-context
+    * windows) into a Filter below the repartition, re-evaluating it
+    * per raw row in the single-partition scan stage (round-3: 8-10 s
+    * single-task stages in f11_indel_hgvs / f11_csq). */
+  val vepEvent = udf((pos: Long, ref: String, alt: String) =>
+    Allele.event(pos, ref, alt)).asNonNullable()
+
+  /** `df` plus its records' trimmed event (`_ev`, [[vepEvent]] at
+    * `start`) and the event columns every consumer reads: `_nvs`/`_nve`
+    * the normalized span and `_isins` the insertion flag. */
+  private[vep] def withEvent(df: DataFrame, start: Column): DataFrame =
+    df.select(col("*"), vepEvent(start, col("ref"), col("alt")).as("_ev"))
+      .select(col("*"), col("_ev.norm_start").as("_nvs"), col("_ev.norm_end").as("_nve"),
+        (col("_ev.vep_ref") === "-").as("_isins"))
+
   /** The miRNA CSQ field computed from the transcript's ncRNA
     * secondary structure and the variant's cDNA span —
     * annotate_provider.rs:1974-2095 `mirna_structure_field` (itself
@@ -217,10 +222,12 @@ object Vep {
 
   /** Register SQL-callable function names (lib.rs:91-102 equivalents). */
   def registerUdfs(spark: SparkSession): Unit = {
-    spark.udf.register("vep_norm_start", vepNormStartUdf)
-    spark.udf.register("vep_norm_end", vepNormEndUdf)
-    spark.udf.register("vep_ref", vepRefUdf)
-    spark.udf.register("vep_alt", vepAltUdf)
+    spark.udf.register("vep_norm_start",
+      (pos: Long, ref: String, alt: String) => Allele.event(pos, ref, alt).norm_start)
+    spark.udf.register("vep_norm_end",
+      (pos: Long, ref: String, alt: String) => Allele.event(pos, ref, alt).norm_end)
+    spark.udf.register("vep_ref", (ref: String, alt: String) => Allele.vcfToVepAllele(ref, alt)._1)
+    spark.udf.register("vep_alt", (ref: String, alt: String) => Allele.vcfToVepAllele(ref, alt)._2)
     spark.udf.register("match_allele", matchAlleleUdf)
     spark.udf.register("match_allele_relaxed", matchAlleleRelaxedUdf)
   }
@@ -231,26 +238,27 @@ object Vep {
     * insertion shifts right while the base at the insertion point
     * repeats the inserted base; a deletion while the base after the
     * deleted one repeats it. The scan is bounded by `maxShift`
-    * (Splice.shiftScanSql — one codegen'd HOF expression, no UDF/loop).
+    * ([[CodonLogic.shiftScan]], the JVM scan annotate's indel
+    * classification runs; a multi-base allele never shifts).
     * Output: (id, chrom, norm_start, kind ins|del, allele, shift3,
     * shifted_start). */
   def shift3(vcf: DataFrame, maxShift: Int = 16): DataFrame = {
-    val v = vcf.where(length(col("ref")) =!= length(col("alt")))
-      .withColumn("_ns", vepNormStartUdf(col("start").cast("long"), col("ref"), col("alt")))
-      .withColumn("_vr", vepRefUdf(col("ref"), col("alt")))
-      .withColumn("_va", vepAltUdf(col("ref"), col("alt")))
-    val isIns = col("_vr") === "-"
+    val scan = udf((chrom: String, anchor: Long, allele: String) =>
+      if (chrom == null) 0L
+      else if (allele.length == 1) CodonLogic.shiftScan(chrom, anchor, allele.charAt(0), maxShift)
+      else 1L)
+    val v = withEvent(vcf.where(length(col("ref")) =!= length(col("alt"))),
+      col("start").cast("long"))
     val staged = v
-      .withColumn("_allele", when(isIns, col("_va")).otherwise(col("_vr")))
-      .withColumn("_anchor", when(isIns, col("_ns")).otherwise(col("_ns") + 1))
-      .withColumn("_p0", expr(Splice.shiftScanSql(
-        CodonLogic.SparkD, "chrom", "_anchor", "_allele", maxShift)))
+      .withColumn("_allele", when(col("_isins"), col("_ev.vep_alt")).otherwise(col("_ev.vep_ref")))
+      .withColumn("_anchor", when(col("_isins"), col("_nvs")).otherwise(col("_nvs") + 1))
+      .withColumn("_p0", scan(col("chrom"), col("_anchor"), col("_allele")))
     val shift = when(col("_p0") === 0, lit(maxShift.toLong)).otherwise(col("_p0") - 1)
-    staged.select(col("id"), col("chrom"), col("_ns").as("norm_start"),
-      when(isIns, lit("ins")).otherwise(lit("del")).as("kind"),
+    staged.select(col("id"), col("chrom"), col("_nvs").as("norm_start"),
+      when(col("_isins"), lit("ins")).otherwise(lit("del")).as("kind"),
       col("_allele").as("allele"),
       shift.cast("long").as("shift3"),
-      (col("_ns") + shift).cast("long").as("shifted_start"))
+      (col("_nvs") + shift).cast("long").as("shifted_start"))
   }
 
   /** Regulatory-feature overlap annotation (context table 4 of
@@ -355,10 +363,10 @@ object Vep {
     * shuffles only on contig and scales like merge. Output:
     * (contig, pos_start, pos_end, n_intervals). */
   def missWorklist(vcf: DataFrame, cache: DataFrame, gap: Long = 1000L): DataFrame = {
-    val looked = lookupVariants(vcf, cache, columns = Seq("variation_name"))
+    val looked = lookupKeyed(vcf, cache, columns = Seq("variation_name"))
     val miss = looked.where(col("cache_variation_name").isNull)
-      .withColumn("_np", vepNormStartUdf(col("start").cast("long"), col("ref"), col("alt")))
-      .select(col("chrom").as("contig"), col("_np").as("pos_start"), col("_np").as("pos_end"))
+      .select(col("chrom").as("contig"), col("_ev.norm_start").as("pos_start"),
+        col("_ev.norm_start").as("pos_end"))
     graft.ranges.Ranges.merge(miss, minDist = gap)
   }
 
@@ -486,7 +494,7 @@ object Vep {
     val inCodingExon = overlaps && col("_in_exon") === 1 && Splice.isCodingBt(col("_bt"))
     // codon layer: SNVs inside the CDS span get protein-level terms
     // from the derived reference sequence (CodonLogic)
-    val snv = length(col("_vref")) === 1 && length(col("_valt")) === 1
+    val snv = Splice.isSnv(col("_vref"), col("_valt"))
     val inCds = inCodingExon && col("_vs") >= col("_cs") && col("_ve") <= col("_ce")
     val (refCodonSql, altCodonSql) = CodonLogic.codons(
       CodonLogic.SparkD, "_vc", "_vs", "_cs", "_strand", "_valt")
@@ -598,6 +606,49 @@ object Vep {
       columns: Seq[String] = Nil,
       relaxed: Boolean = false,
       extendedWindow: Long = 0L,
+      allowedFailed: Long = 0L): DataFrame =
+    lookupKeyed(vcf, cache, columns, relaxed, extendedWindow, allowedFailed).drop("_ev")
+
+  /** The VCF side of every lookup-shaped join ([[lookupVariants]],
+    * [[missWorklist]], [[Annotate.colocated]]): the trimmed event
+    * ([[withEvent]]) at the 1-BASED start — coordinate-system
+    * alignment (coordinate.rs:34-66 + the lookup_provider metadata
+    * tests): a `bio.coordinate_system_zero_based` tag shifts start up
+    * one, `end` is identical in both conventions ([s, e) == [s+1, e]);
+    * untagged frames are 1-based — plus the bare contig. */
+  private[vep] def lookupVcfKeys(vcf: DataFrame): DataFrame =
+    withEvent(vcf, graft.core.Coord.oneBasedStart(vcf))
+      .withColumn("_bare_chrom", bareChrom(col("chrom")))
+
+  /** The cache side of the same joins: the Ensembl failed-variant
+    * filter (variant_lookup_exec.rs:1210-1221, itself VEP's
+    * filter_variation — entries whose `failed` count exceeds
+    * `allowedFailed` are skipped; a cache without the column skips
+    * nothing), 1-based keys, and the `out` columns as `_c_out_*`. */
+  private[vep] def lookupCacheKeys(cache: DataFrame, out: Seq[String],
+      allowedFailed: Long = 0L): DataFrame = {
+    val kept =
+      if (cache.columns.contains("failed"))
+        cache.where(coalesce(col("failed").cast("long"), lit(0L)) <= allowedFailed)
+      else cache
+    kept.select(
+      (Seq(col("chrom").as("_c_chrom"),
+           graft.core.Coord.oneBasedStart(kept).as("_c_start"),
+           col("end").cast("long").as("_c_end"), col("allele_string").as("_c_allele_string")) ++
+       out.map(n => col(n).as(s"_c_out_$n"))): _*)
+  }
+
+  /** The lookup equi-join keys over [[lookupVcfKeys]] x [[lookupCacheKeys]]. */
+  private[vep] def lookupKeysMatch: Column =
+    col("_bare_chrom") === col("_c_chrom") &&
+      col("_nvs") === col("_c_start") && col("_nve") === col("_c_end")
+
+  /** [[lookupVariants]] keeping each variant's trimmed event (`_ev`). */
+  private[vep] def lookupKeyed(
+      vcf: DataFrame, cache: DataFrame,
+      columns: Seq[String] = Nil,
+      relaxed: Boolean = false,
+      extendedWindow: Long = 0L,
       allowedFailed: Long = 0L): DataFrame = {
     // eager cache-contract checks (schema_contract.rs:10-90): the
     // required column/type set, then any explicitly-requested output
@@ -606,38 +657,13 @@ object Vep {
     SchemaContract.validateRequestedColumns(cache, columns)
     val outCols = if (columns.nonEmpty) columns else defaultCacheCols(cache)
     val matcher = if (relaxed) matchAlleleRelaxedUdf else matchAlleleUdf
-    // coordinate-system alignment (coordinate.rs:34-66 + the
-    // lookup_provider metadata tests): both sides normalize to
-    // 1-BASED starts before matching — a `bio.coordinate_system_zero_
-    // based` tag shifts start up one, `end` is identical in both
-    // conventions ([s, e) == [s+1, e]). Untagged frames are 1-based,
-    // so metadata-free behavior is byte-identical.
-    val v = vcf
-      .withColumn("_norm_start", vepNormStartUdf(graft.core.Coord.oneBasedStart(vcf), col("ref"), col("alt")))
-      .withColumn("_norm_end", vepNormEndUdf(graft.core.Coord.oneBasedStart(vcf), col("ref"), col("alt")))
-      .withColumn("_bare_chrom", bareChrom(col("chrom")))
-    // Ensembl failed-variant filter (variant_lookup_exec.rs:1210-1221,
-    // itself VEP's filter_variation): cache entries whose `failed`
-    // count exceeds `allowedFailed` (default 0) are skipped entirely;
-    // a cache without the column skips nothing
-    val cacheFiltered =
-      if (cache.columns.contains("failed"))
-        cache.where(coalesce(col("failed").cast("long"), lit(0L)) <= allowedFailed)
-      else cache
-    val c = cacheFiltered.select(
-      (Seq(col("chrom").as("_c_chrom"),
-           graft.core.Coord.oneBasedStart(cacheFiltered).as("_c_start"),
-           col("end").cast("long").as("_c_end"), col("allele_string").as("_c_allele_string")) ++
-       outCols.map(n => col(n).as(s"_c_out_$n"))): _*)
-    val out: Seq[Column] =
-      vcf.columns.toSeq.map(col) ++ outCols.map(n => col(s"_c_out_$n").as(s"cache_$n"))
+    val v = lookupVcfKeys(vcf)
+    val c = lookupCacheKeys(cache, outCols, allowedFailed)
+    val out: Seq[Column] = vcf.columns.toSeq.map(col) ++ (col("_ev") +:
+      outCols.map(n => col(s"_c_out_$n").as(s"cache_$n")))
     if (extendedWindow <= 0) {
       val joined = v.join(c,
-        v("_bare_chrom") === c("_c_chrom") &&
-        col("_norm_start") === col("_c_start") &&
-        col("_norm_end") === col("_c_end") &&
-        matcher(v("ref"), v("alt"), col("_c_allele_string")),
-        "left")
+        lookupKeysMatch && matcher(v("ref"), v("alt"), col("_c_allele_string")), "left")
       joined.select(out: _*)
     } else {
       // extended_probes mode (J6 reusing J1's partitioned shape): the
@@ -663,15 +689,15 @@ object Vep {
       // (chrom, 1Mb tile of the normalized start) so no single
       // partition sorts the whole table at scale; the tile joins the
       // row number in a struct to keep ids globally unique.
-      val tile = floor(col("_norm_start") / 1000000L)
+      val tile = floor(col("_nvs") / 1000000L)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(v("chrom"), tile)
-        .orderBy(v.columns.map(col).toSeq: _*)
+        .orderBy(vcf.columns.map(col).toSeq: _*)
       val vr = v.withColumn("_rowid",
         struct(v("chrom"), tile.as("_tile"), row_number().over(w).as("_rn")))
       val vb = vr
-        .withColumn("_lo", col("_norm_start") - extendedWindow)
-        .withColumn("_hi", col("_norm_end") + extendedWindow)
+        .withColumn("_lo", col("_nvs") - extendedWindow)
+        .withColumn("_hi", col("_nve") + extendedWindow)
         .withColumn("_bkt", explode(sequence(
           floor(col("_lo") / bw).cast("long"), floor(col("_hi") / bw).cast("long"))))
       val cb = c.withColumn("_cbkt", explode(sequence(

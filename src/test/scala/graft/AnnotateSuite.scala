@@ -676,4 +676,41 @@ class AnnotateSuite extends SparkSpec {
     // the standalone lookup renders the same columns identically
     assert(byId(Annotate.existingXrefs(vcf, cache)) == folded)
   }
+
+  test("TermPost: two term columns in one projection compile without codegen fallback") {
+    import org.apache.spark.sql.{Column, GraftColumnBridge}
+    import org.apache.spark.sql.functions.{array, col, lit, when}
+    // rank-prefixed vocabulary, the shape annotate's entry streams use
+    val conf = graft.plans.TermPostConf(
+      Seq("12missense_variant"), Seq("02splice_donor_variant"), Seq("03stop_gained"),
+      "22coding_sequence_variant", "13protein_altering_variant",
+      "16splice_donor_region_variant", "15splice_region_variant",
+      "18incomplete_terminal_codon_variant", "14splice_donor_5th_base_variant")
+    def post(c: Column): Column = GraftColumnBridge.column(
+      graft.plans.TermPost(GraftColumnBridge.expression(c), conf))
+    // a Range source keeps the projection in whole-stage codegen (a
+    // local relation would be folded at optimization time); array(...)
+    // is non-nullable, so neither expression wraps its code in a
+    // null-check block and both land in one generated method
+    val df = spark.range(2).select(
+      when(col("id") === 0, lit("12missense_variant"))
+        .otherwise(lit("15splice_region_variant")).as("a"),
+      when(col("id") === 0, lit("22coding_sequence_variant"))
+        .otherwise(lit("02splice_donor_variant")).as("b"), col("id"))
+    val key = "spark.sql.codegen.fallback"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      val got = df.orderBy("id").select(
+          post(array(col("a"), col("b"))).getField("ts"),
+          post(array(col("b"))).getField("ts"))
+        .collect().map(r => (r.getString(0), r.getString(1))).toSeq
+      // parents strip beside their specific children
+      assert(got == Seq(("missense_variant", "coding_sequence_variant"),
+        ("splice_donor_variant", "splice_donor_variant")), got.mkString(";"))
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 }

@@ -328,6 +328,28 @@ class PileupVepSuite extends SparkSpec {
     assert(co.length == 1 && co(0).getString(1) == "rsX")
   }
 
+  test("colocated and missWorklist key on lookupVariants' 1-based starts; failed rows skip") {
+    import graft.core.Coord
+    val vcf = Seq(("chr1", 100L, 100L, 1L, "A", "G"))
+      .toDF("chrom", "start", "end", "id", "ref", "alt")
+    // zero-based half-open cache rows: [99, 100) is 1-based position 100
+    val cache = Coord.mark(Seq(
+      ("1", 99L, 100L, "rsA", "A/T", 0.1, 0L),  // same site, other allele
+      ("1", 99L, 100L, "rsF", "A/C", 0.2, 1L),  // same site, failed
+      ("1", 100L, 101L, "rsN", "A/T", 0.3, 0L)) // 1-based 101: another site
+      .toDF("chrom", "start", "end", "variation_name", "allele_string", "af", "failed"), true)
+    val co = graft.vep.Annotate.colocated(vcf, cache).collect().map(_.getString(1)).toSeq
+    assert(co == Seq("rsA"), co.mkString(","))
+    // the lookup reads the same site: no allele matches, so no hit
+    assert(Vep.lookupVariants(vcf, cache, columns = Seq("variation_name"))
+      .collect().forall(_.isNullAt(6)))
+    // a zero-based-tagged VCF misses at its 1-based position
+    val vcf0 = Coord.mark(Seq(("chr1", 99L, 100L, 1L, "A", "G"))
+      .toDF("chrom", "start", "end", "id", "ref", "alt"), true)
+    val miss = Vep.missWorklist(vcf0, cache).collect()
+    assert(miss.length == 1 && miss.head.getLong(1) == 100L, miss.mkString(";"))
+  }
+
   test("mirnaStructureField reproduces the reference's pinned cases") {
     // annotate_provider.rs mirna_structure_field unit tests
     def f(s: String, bt: String, cs: Long, ce: Long): String =

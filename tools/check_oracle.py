@@ -7,6 +7,9 @@ Registers each testdata parquet as a DuckDB view named after the table,
 runs every oracle_sql.json entry, and compares against the Spark result
 parquet written by graft.Verify: same row count, same column names, and
 identical multiset of rows (values canonicalized column-name-sorted).
+A passing query whose result is empty on both engines prints EMPTY
+instead of OK (its hash check compares two empty sets), and a closing
+line counts them; EMPTY lines pass like OK lines.
 """
 import sys, json, glob, os
 import duckdb
@@ -26,6 +29,7 @@ def canon(v):
     return v
 
 fails = []
+empty = 0
 for name, sql in sorted(oracles.items()):
     spark_path = os.path.join(out_dir, name)
     if not os.path.isdir(spark_path):
@@ -51,8 +55,13 @@ for name, sql in sorted(oracles.items()):
         diff = [(a, b) for a, b in zip(orows, srows) if a != b][:3]
         fails.append((name, f"value mismatch, first diffs: {diff}"))
         continue
-    print(f"OK   {name}  rows={len(srows)}")
+    if srows:
+        print(f"OK   {name}  rows={len(srows)}")
+    else:
+        empty += 1
+        print(f"EMPTY {name}  rows=0 on both engines")
 
 for name, why in fails:
     print(f"FAIL {name}: {why}")
+print(f"{empty} passing queries compare empty results on both engines")
 sys.exit(1 if fails else 0)

@@ -55,40 +55,28 @@ object Pileup {
 
   /** Coverage events (chrom, pos, delta) after read filtering. The
     * CIGAR column may be text ("50M2D8M") or the BAM-packed binary
-    * layout (LE u32 = len<<4 | op) — detected from the schema, the
-    * same dual contract the reference's BAM provider exposes
-    * (pileup/src/events.rs:42-55). */
+    * layout (LE u32 = len<<4 | op) — the same dual contract the
+    * reference's BAM provider exposes (pileup/src/events.rs:42-55).
+    * One [[graft.plans.CigarEvents]] generator walks either form
+    * inside the engine's `Generate`, `chrom` passing through. */
   private def events(reads: DataFrame, filterFlag: Int, minMapq: Int): DataFrame = {
-    val spark = reads.sparkSession
-    import spark.implicits._
     // reference skip rules BEFORE the flag/MAPQ filter
     // (events.rs:114-152): a NULL chrom or start contributes nothing,
     // a text CIGAR of "*" (alignment unavailable per SAM) and an empty
     // binary CIGAR are skipped — none of these are errors
-    val present = col("chrom").isNotNull && col("start").isNotNull &&
-      col("cigar").isNotNull &&
-      (if (reads.schema("cigar").dataType ==
-           org.apache.spark.sql.types.BinaryType) length(col("cigar")) > 0
-       else col("cigar") =!= "*")
-    val filtered = graft.core.Parallelism.ensure(reads)
-      .where(present && expr(s"(flags & $filterFlag) = 0 AND mapping_quality >= $minMapq"))
     val isBinary =
       reads.schema("cigar").dataType == org.apache.spark.sql.types.BinaryType
-    val segs =
-      if (isBinary)
-        filtered.select($"chrom", oneBasedStart(reads).as("start"), $"cigar")
-          .as[(String, Long, Array[Byte])]
-          .flatMap { case (chrom, start, cigar) =>
-            Cigar.coveredSegmentsBinary(start, cigar).map { case (s, e) => (chrom, s, e) }
-          }
-      else
-        filtered.select($"chrom", oneBasedStart(reads).as("start"), $"cigar")
-          .as[(String, Long, String)]
-          .flatMap { case (chrom, start, cigar) =>
-            Cigar.coveredSegments(start, cigar).map { case (s, e) => (chrom, s, e) }
-          }
-    segs.flatMap { case (chrom, s, e) => Seq((chrom, s, 1L), (chrom, e, -1L)) }
-      .toDF("chrom", "pos", "delta")
+    val present = col("chrom").isNotNull && col("start").isNotNull &&
+      col("cigar").isNotNull &&
+      (if (isBinary) length(col("cigar")) > 0 else col("cigar") =!= "*")
+    val cigar = if (isBinary) col("cigar") else col("cigar").cast("string")
+    import org.apache.spark.sql.GraftColumnBridge
+    val walk = GraftColumnBridge.column(graft.plans.CigarEvents(
+      GraftColumnBridge.expression(oneBasedStart(reads)),
+      GraftColumnBridge.expression(cigar)))
+    graft.core.Parallelism.ensure(reads)
+      .where(present && expr(s"(flags & $filterFlag) = 0 AND mapping_quality >= $minMapq"))
+      .select(col("chrom"), walk)
   }
 
   /** Block-mode depth. `zeroBased` mirrors the reference UDTF's second
@@ -112,14 +100,28 @@ object Pileup {
     // coverage = sum of all earlier buckets' deltas, and the bucket's
     // last event takes the NEXT non-empty bucket's first position as
     // its next_pos. Both branches hang off the same (chrom, pos)
-    // aggregate exchange, so Catalyst's ReuseExchange runs the CIGAR
-    // walk once; the fix-up frame joins back broadcast-hinted under
-    // the width floor (≤ span/width rows — metadata-scale).
+    // aggregate exchange. The plan holds two copies of the scan, one
+    // per branch, and ReuseExchange (AQE's stage cache) shares the
+    // exchange only because the copies compare equal: the BAM and VCF
+    // scans are value-equal over what decides their rows
+    // ([[graft.sources.BamScan]]), and a parquet file scan is too. So
+    // each record is decoded and walked once. The fix-up frame joins
+    // back broadcast-hinted under the width floor (≤ span/width rows
+    // — metadata-scale).
     val width = GraftConf.depthPosBucketWidth(reads.sparkSession)
-    val bucketed = ev.withColumn("_bkt", expr(s"pos DIV $width"))
+    // `_bkt` must not be nullable (integral division is): with
+    // constraint propagation on (Spark's default) a nullable join key
+    // makes the optimizer infer `_bkt IS NOT NULL` and push it below
+    // the events aggregate of the local branch only, and the two
+    // branches' exchanges then differ and are not reused
+    val bucketed = ev.withColumn("_bkt", coalesce(expr(s"pos DIV $width"), lit(0L)))
     val wb = Window.partitionBy(col("chrom"), col("_bkt")).orderBy(col("pos"))
+    // after the (chrom, pos) aggregate `pos` is unique in its window
+    // partition, so a ROWS frame sums the same rows as the default
+    // RANGE frame, and bounds each row without comparing order keys
     val local = bucketed
-      .withColumn("_lcov", sum(col("delta")).over(wb))
+      .withColumn("_lcov", sum(col("delta"))
+        .over(wb.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .withColumn("_lnext", lead(col("pos"), 1).over(wb))
     val wc = Window.partitionBy(col("chrom")).orderBy(col("_bkt"))
     val fixup = bucketed

@@ -59,13 +59,14 @@ object Bam {
   /** Reference-consuming span of a packed CIGAR (ops M/D/N/=/X). */
   def refLength(cigarOps: Array[Int]): Int = {
     var i = 0; var n = 0
-    while (i < cigarOps.length) {
-      val op = cigarOps(i) & 0xf
-      if (op == 0 || op == 2 || op == 3 || op == 7 || op == 8)
-        n += (cigarOps(i) >>> 4)
-      i += 1
-    }
+    while (i < cigarOps.length) { n += refSpan(cigarOps(i)); i += 1 }
     n
+  }
+
+  /** Reference bases one packed op consumes (M/D/N/=/X, else 0). */
+  private def refSpan(op: Int): Int = (op & 0xf) match {
+    case 0 | 2 | 3 | 7 | 8 => op >>> 4
+    case _ => 0
   }
 
   private def writeI32(out: OutputStream, v: Int): Unit = {
@@ -117,26 +118,7 @@ object Bam {
   }
 
   private final class LeReader(in: InputStream) {
-    def readFully(buf: Array[Byte], len: Int): Unit = {
-      var o = 0
-      while (o < len) {
-        val n = in.read(buf, o, len - o)
-        if (n < 0) throw new EOFException("truncated BAM stream")
-        o += n
-      }
-    }
-    def i32(): Int = {
-      val b = new Array[Byte](4); readFully(b, 4)
-      (b(0) & 0xff) | ((b(1) & 0xff) << 8) | ((b(2) & 0xff) << 16) | ((b(3) & 0xff) << 24)
-    }
-    def tryI32(): Option[Int] = {
-      val b = new Array[Byte](4)
-      val first = in.read()
-      if (first < 0) return None
-      b(0) = first.toByte; readFully0(b, 1, 3)
-      Some((b(0) & 0xff) | ((b(1) & 0xff) << 8) | ((b(2) & 0xff) << 16) | ((b(3) & 0xff) << 24))
-    }
-    private def readFully0(buf: Array[Byte], off: Int, len: Int): Unit = {
+    def readFully(buf: Array[Byte], off: Int, len: Int): Unit = {
       var o = off
       while (o < off + len) {
         val n = in.read(buf, o, off + len - o)
@@ -144,7 +126,11 @@ object Bam {
         o += n
       }
     }
-    def bytes(len: Int): Array[Byte] = { val b = new Array[Byte](len); readFully(b, len); b }
+    def i32(): Int = {
+      val b = bytes(4)
+      (b(0) & 0xff) | ((b(1) & 0xff) << 8) | ((b(2) & 0xff) << 16) | ((b(3) & 0xff) << 24)
+    }
+    def bytes(len: Int): Array[Byte] = { val b = new Array[Byte](len); readFully(b, 0, len); b }
     def skip(len: Int): Unit = {
       var remaining = len.toLong
       while (remaining > 0) {
@@ -222,107 +208,147 @@ object Bam {
     out.toArray
   }
 
-  /** Record iterator over `in`, stopping BEFORE the record whose
-    * virtual offset (per `blockIn`) reaches `endVirtual` — the ranged
-    * half of intra-file splitting: a split point is always a record
-    * start, so [start, end) ranges partition a file's records exactly
-    * (no duplication, no loss). `wantSeq` decodes seq/qual (otherwise
-    * skipped bytewise with the tags). */
-  private def records(in: LeReader, blockIn: Bgzf.BlockInputStream,
-      endVirtual: Long, wantSeq: Boolean,
-      wantTags: Boolean): Iterator[BamRecord] = new Iterator[BamRecord] {
-    private var nextRec: BamRecord = _
-    private var fetched = false
-    private def fetch(): Unit = {
-      fetched = true
-      nextRec = null
-      if (blockIn.nextVirtualOffset >= endVirtual) return
-      in.tryI32() match {
-        case None => ()
-        case Some(blockSize) =>
-          val refId = in.i32()
-          val pos = in.i32()
-          val lReadName = in.i32() // packs l_read_name(u8), mapq(u8), bin(u16)
-          val lrn = lReadName & 0xff
-          val mapq = (lReadName >> 8) & 0xff
-          val flagNc = in.i32() // n_cigar_op(u16) | flag(u16) << 16
-          val nCigar = flagNc & 0xffff
-          val flag = (flagNc >>> 16) & 0xffff
-          val lSeq = in.i32()
-          in.skip(12) // next_refID, next_pos, tlen
-          val nameB = in.bytes(lrn)
-          val name = new String(nameB, 0, lrn - 1, UTF_8)
-          val ops = new Array[Int](nCigar)
-          var i = 0
-          while (i < nCigar) { ops(i) = in.i32(); i += 1 }
-          val consumed = 32 + lrn + 4 * nCigar
-          val seqQualBytes = (lSeq + 1) / 2 + lSeq
-          val auxBytes = blockSize - consumed - seqQualBytes
-          var seqS: String = null; var qualS: String = null
-          if (wantSeq && lSeq > 0) {
-            // seq: 4-bit codes, high nibble first; qual: raw phred
-            // scores, 0xff in byte 0 = unavailable (SAM '*')
-            val seqB = in.bytes((lSeq + 1) / 2)
-            val seqC = new Array[Char](lSeq)
-            var b = 0
-            while (b < lSeq) {
-              val v = seqB(b >> 1) & 0xff
-              seqC(b) = SeqCodes(if ((b & 1) == 0) v >>> 4 else v & 0xf)
-              b += 1
-            }
-            seqS = new String(seqC)
-            val qualB = in.bytes(lSeq)
-            if ((qualB(0) & 0xff) != 0xff) {
-              val qc = new Array[Char](lSeq)
-              var i = 0
-              while (i < lSeq) { qc(i) = ((qualB(i) & 0xff) + 33).toChar; i += 1 }
-              qualS = new String(qc)
-            }
-          }
-          // stream position: after qual when seq was decoded, else
-          // still before seq — skip to the aux region or past the rest
-          val seqDecoded = wantSeq && lSeq > 0
-          var tags: Array[(String, String)] = null
-          if (wantTags) {
-            if (!seqDecoded) in.skip(seqQualBytes)
-            tags =
-              if (auxBytes > 0) parseAux(in.bytes(auxBytes))
-              else Array.empty[(String, String)]
-          } else {
-            in.skip(auxBytes + (if (seqDecoded) 0 else seqQualBytes))
-          }
-          nextRec = BamRecord(refId, pos, mapq, flag, ops, name, seqS, qualS, tags)
+  /** A record cursor over `blockIn`, stopping BEFORE the record whose
+    * virtual offset reaches `endVirtual` — the ranged half of
+    * intra-file splitting: a split point is always a record start, so
+    * [start, end) ranges partition a file's records exactly (no
+    * duplication, no loss). Each record is read whole into one reused
+    * buffer; the fixed fields decode on access and every
+    * variable-length field (name, CIGAR, seq/qual, tags) only when a
+    * caller asks for it. */
+  private[sources] final class RecordCursor(blockIn: Bgzf.BlockInputStream,
+      endVirtual: Long) {
+    private val in = new LeReader(blockIn)
+    private var buf = new Array[Byte](256)
+    private var size = 0
+
+    /** Load the next record; false at the range end or stream end. */
+    def advance(): Boolean = {
+      if (blockIn.nextVirtualOffset >= endVirtual) return false
+      val first = blockIn.read()
+      if (first < 0) return false
+      buf(0) = first.toByte
+      in.readFully(buf, 1, 3)
+      size = i32(0)
+      if (size > buf.length) buf = new Array[Byte](math.max(size, 2 * buf.length))
+      in.readFully(buf, 0, size)
+      true
+    }
+
+    private def u8(o: Int): Int = buf(o) & 0xff
+    private def u16(o: Int): Int = u8(o) | (u8(o + 1) << 8)
+    private def i32(o: Int): Int = u16(o) | (u16(o + 2) << 16)
+
+    def refId: Int = i32(0)
+    def pos: Int = i32(4)
+    def mapq: Int = u8(9)
+    def flag: Int = u16(14)
+    private def nameLen: Int = u8(8) // NUL included
+    private def nCigar: Int = u16(12)
+    private def lSeq: Int = i32(16)
+    private def cigarOff: Int = 32 + nameLen
+    private def seqOff: Int = cigarOff + 4 * nCigar
+
+    def readName: String = new String(buf, 32, nameLen - 1, UTF_8)
+    def readNameUtf8: UTF8String = UTF8String.fromBytes(buf, 32, nameLen - 1)
+    /** The packed ops as stored: little-endian u32 `len << 4 | op`. */
+    def cigarBytes: Array[Byte] = util.Arrays.copyOfRange(buf, cigarOff, seqOff)
+    def cigarOps: Array[Int] = {
+      val ops = new Array[Int](nCigar)
+      var i = 0
+      while (i < ops.length) { ops(i) = i32(cigarOff + 4 * i); i += 1 }
+      ops
+    }
+    /** Reference-consuming span ([[refLength]]) read off the buffer. */
+    def refLength: Int = {
+      var o = cigarOff; var n = 0
+      while (o < seqOff) { n += refSpan(i32(o)); o += 4 }
+      n
+    }
+
+    /** seq: 4-bit codes, high nibble first; null when none stored. */
+    def seq: String = {
+      val n = lSeq
+      if (n <= 0) return null
+      val c = new Array[Char](n)
+      var b = 0
+      while (b < n) {
+        val v = u8(seqOff + (b >> 1))
+        c(b) = SeqCodes(if ((b & 1) == 0) v >>> 4 else v & 0xf)
+        b += 1
+      }
+      new String(c)
+    }
+    /** qual: raw phred scores rendered +33; null when none stored or
+      * byte 0 is 0xff (SAM '*'). */
+    def qual: String = {
+      val n = lSeq
+      val o = seqOff + (n + 1) / 2
+      if (n <= 0 || u8(o) == 0xff) return null
+      val c = new Array[Char](n)
+      var i = 0
+      while (i < n) { c(i) = (u8(o + i) + 33).toChar; i += 1 }
+      new String(c)
+    }
+    def tags: Array[(String, String)] = {
+      val o = seqOff + (lSeq + 1) / 2 + lSeq
+      if (o < size) parseAux(util.Arrays.copyOfRange(buf, o, size))
+      else Array.empty[(String, String)]
+    }
+
+    /** The records as [[BamRecord]]s; `wantSeq` decodes seq/qual and
+      * `wantTags` the tags (otherwise null). */
+    def records(wantSeq: Boolean, wantTags: Boolean): Iterator[BamRecord] = {
+      val r = this
+      new Iterator[BamRecord] {
+        private var ready = false
+        private var more = false
+        override def hasNext: Boolean = {
+          if (!ready) { more = r.advance(); ready = true }
+          more
+        }
+        override def next(): BamRecord = {
+          if (!hasNext) throw new NoSuchElementException
+          ready = false
+          BamRecord(r.refId, r.pos, r.mapq, r.flag, r.cigarOps, r.readName,
+            if (wantSeq) r.seq else null, if (wantSeq) r.qual else null,
+            if (wantTags) r.tags else null)
+        }
       }
     }
-    override def hasNext: Boolean = { if (!fetched) fetch(); nextRec != null }
-    override def next(): BamRecord = {
-      if (!hasNext) throw new NoSuchElementException
-      fetched = false
-      nextRec
-    }
+  }
+
+  /** Reference dictionary and a record cursor over a whole BAM stream. */
+  private[sources] def open(source: InputStream): (Seq[(String, Int)], RecordCursor) = {
+    val blockIn = new Bgzf.BlockInputStream(source)
+    (readRefs(new LeReader(blockIn)), new RecordCursor(blockIn, Long.MaxValue))
+  }
+
+  /** A record cursor over the virtual-offset range [startVirtual,
+    * endVirtual) of `source`, which MUST already be seeked to
+    * `startVirtual`'s compressed block offset. Both bounds must be
+    * record starts (sidecar split points — [[indexOffsets]]). */
+  private[sources] def openRange(source: InputStream, startVirtual: Long,
+      endVirtual: Long): RecordCursor = {
+    val blockIn = new Bgzf.BlockInputStream(source, startVirtual >>> 16)
+    val inBlock = (startVirtual & 0xffff).toInt
+    if (inBlock > 0) new LeReader(blockIn).skip(inBlock)
+    new RecordCursor(blockIn, endVirtual)
   }
 
   /** Read a BAM stream: (reference dictionary, record iterator). The
-    * iterator decodes lazily; seq/qual/tags are skipped bytewise. */
+    * iterator decodes lazily; seq/qual/tags decode only when asked. */
   def read(source: InputStream, wantSeq: Boolean = false,
       wantTags: Boolean = false): (Seq[(String, Int)], Iterator[BamRecord]) = {
-    val blockIn = new Bgzf.BlockInputStream(source)
-    val in = new LeReader(blockIn)
-    (readRefs(in), records(in, blockIn, Long.MaxValue, wantSeq, wantTags))
+    val (refs, cursor) = open(source)
+    (refs, cursor.records(wantSeq, wantTags))
   }
 
   /** Decode the records of the virtual-offset range [startVirtual,
-    * endVirtual) from `source`, which MUST already be seeked to
-    * `startVirtual`'s compressed block offset. Both bounds must be
-    * record starts (sidecar split points — [[indexFile]]). */
+    * endVirtual) from `source` (see [[openRange]]). */
   def readRange(source: InputStream, startVirtual: Long, endVirtual: Long,
-      wantSeq: Boolean = false, wantTags: Boolean = false): Iterator[BamRecord] = {
-    val blockIn = new Bgzf.BlockInputStream(source, startVirtual >>> 16)
-    val in = new LeReader(blockIn)
-    val inBlock = (startVirtual & 0xffff).toInt
-    if (inBlock > 0) in.skip(inBlock)
-    records(in, blockIn, endVirtual, wantSeq, wantTags)
-  }
+      wantSeq: Boolean = false, wantTags: Boolean = false): Iterator[BamRecord] =
+    openRange(source, startVirtual, endVirtual).records(wantSeq, wantTags)
 
   /** One linear pass over a .bam: the virtual offsets of every
     * `every`-th record start (the first record always included),
@@ -332,20 +358,15 @@ object Bam {
   def indexOffsets(source: InputStream, every: Int): Seq[Long] = {
     require(every >= 1, s"index stride must be >= 1, got $every")
     val blockIn = new Bgzf.BlockInputStream(source)
-    val in = new LeReader(blockIn)
-    readRefs(in)
+    readRefs(new LeReader(blockIn))
+    val cursor = new RecordCursor(blockIn, Long.MaxValue)
     val out = collection.mutable.ArrayBuffer[Long]()
     var n = 0L
     var voff = blockIn.nextVirtualOffset
-    while (voff != Long.MaxValue) {
-      in.tryI32() match {
-        case None => voff = Long.MaxValue
-        case Some(blockSize) =>
-          if (n % every == 0) out += voff
-          in.skip(blockSize)
-          n += 1
-          voff = blockIn.nextVirtualOffset
-      }
+    while (cursor.advance()) {
+      if (n % every == 0) out += voff
+      n += 1
+      voff = blockIn.nextVirtualOffset
     }
     out.toSeq
   }
@@ -577,9 +598,22 @@ class BamScanBuilder(path: String, splits: Option[Int] = None)
   override def build(): Scan = new BamScan(path, chromFilter, splits, required)
 }
 
+/** Equality: two scans are equal when everything that decides their
+  * rows is — the path, the pushed chrom filter, the split count and
+  * the pruned schema. Spark's `BatchScanExec` compares its batch (this
+  * scan) with `equals`, so two copies of one read in a plan (depth's
+  * two prefix-sum branches, any self-join) let ReuseExchange and AQE's
+  * stage cache run their shared exchange once; under reference
+  * equality they never match. */
 class BamScan(path: String, chromFilter: Option[Set[String]],
     splits: Option[Int] = None,
     requiredSchema: StructType = BamDataSource.schema) extends Scan with Batch {
+  private def key = (path, chromFilter, splits, requiredSchema)
+  override def equals(other: Any): Boolean = other match {
+    case o: BamScan => key == o.key
+    case _ => false
+  }
+  override def hashCode(): Int = key.hashCode()
   private val hadoopConf = new SerializableHadoopConf(
     org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
   private val maxPartitionBytes =
@@ -652,71 +686,59 @@ class BamReaderFactory(chromFilter: Option[Set[String]], hadoopConf: Serializabl
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val part = partition.asInstanceOf[BamInputPartition]
     val file = part.file
-    // pruned scan: seq/qual bytes decode only when one of them is
-    // projected; every other column evaluates only into its own slot
-    val wantSeq = requiredSchema.fieldNames.exists(f => f == "seq" || f == "qual")
-    val wantTags = requiredSchema.fieldNames.contains("tags")
     new PartitionReader[InternalRow] {
       private val fs = FileSystem.get(new java.net.URI(file), hadoopConf.value)
       private val stream = fs.open(new Path(file))
-      private val (refs, it) =
-        if (part.startVirtual < 0) Bam.read(stream, wantSeq, wantTags)
+      private val (refs, cursor) =
+        if (part.startVirtual < 0) Bam.open(stream)
         else {
           // ranged scan: decode the header for the dictionary (first
-          // blocks only — the record iterator is never touched), then
-          // seek to the range's compressed block start and decode
-          // records until the end virtual offset
-          val (r, _) = Bam.read(stream)
+          // blocks only — its cursor is never advanced), then seek to
+          // the range's compressed block start and decode records
+          // until the end virtual offset
+          val (r, _) = Bam.open(stream)
           stream.seek(part.startVirtual >>> 16)
-          (r, Bam.readRange(stream, part.startVirtual, part.endVirtual, wantSeq, wantTags))
+          (r, Bam.openRange(stream, part.startVirtual, part.endVirtual))
         }
-      private val names = refs.map(_._1).toArray
+      // one engine string per reference id, shared by its rows
+      private val chroms = refs.map(r => UTF8String.fromString(r._1)).toArray
       private val keep: Int => Boolean = chromFilter match {
         case Some(set) =>
-          val mask = names.map(set.contains)
+          val mask = refs.map(r => set.contains(r._1)).toArray
           id => id >= 0 && id < mask.length && mask(id)
         case None => _ => true
       }
-      // one evaluator per REQUIRED column, in the pruned schema's
-      // field order (Spark passes the prune result in table order)
-      private val evals: Array[BamRecord => Any] =
-        requiredSchema.fieldNames.map[BamRecord => Any] {
+      // pruned scan: one evaluator per REQUIRED column, in the pruned
+      // schema's field order (Spark passes the prune result in table
+      // order); a variable-length field decodes only when projected
+      private val evals: Array[Bam.RecordCursor => Any] =
+        requiredSchema.fieldNames.map[Bam.RecordCursor => Any] {
           case "chrom" => r =>
-            if (r.refId >= 0 && r.refId < names.length)
-              UTF8String.fromString(names(r.refId)) else null
+            val id = r.refId
+            if (id >= 0 && id < chroms.length) chroms(id) else null
           case "start" => r => r.pos.toLong + 1
-          case "end" => r => r.pos.toLong + 1 + math.max(Bam.refLength(r.cigarOps), 1) - 1
+          case "end" => r => r.pos.toLong + 1 + math.max(r.refLength, 1) - 1
           case "flags" => r => r.flag
-          case "cigar" => r => {
-            val bytes = new Array[Byte](4 * r.cigarOps.length)
-            var i = 0
-            while (i < r.cigarOps.length) {
-              val v = r.cigarOps(i)
-              bytes(4 * i) = (v & 0xff).toByte
-              bytes(4 * i + 1) = ((v >> 8) & 0xff).toByte
-              bytes(4 * i + 2) = ((v >> 16) & 0xff).toByte
-              bytes(4 * i + 3) = ((v >> 24) & 0xff).toByte
-              i += 1
-            }
-            bytes
-          }
+          case "cigar" => r => r.cigarBytes
           case "mapping_quality" => r => r.mapq
-          case "read_name" => r => UTF8String.fromString(r.readName)
-          case "seq" => r => if (r.seq == null) null else UTF8String.fromString(r.seq)
-          case "qual" => r => if (r.qual == null) null else UTF8String.fromString(r.qual)
+          case "read_name" => r => r.readNameUtf8
+          case "seq" => r => UTF8String.fromString(r.seq)
+          case "qual" => r => UTF8String.fromString(r.qual)
           case "tags" => r =>
-            if (r.tags == null) null
-            else org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
-              r.tags.map(t => UTF8String.fromString(t._1)),
-              r.tags.map(t => UTF8String.fromString(t._2)))
+            val t = r.tags
+            org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
+              t.map(x => UTF8String.fromString(x._1)),
+              t.map(x => UTF8String.fromString(x._2)))
           case other => throw new IllegalArgumentException(s"unknown BAM column '$other'")
         }
       private var row: InternalRow = _
       override def next(): Boolean = {
-        while (it.hasNext) {
-          val r = it.next()
-          if (keep(r.refId)) {
-            row = InternalRow.fromSeq(evals.map(_(r)).toSeq)
+        while (cursor.advance()) {
+          if (keep(cursor.refId)) {
+            val values = new Array[Any](evals.length)
+            var i = 0
+            while (i < values.length) { values(i) = evals(i)(cursor); i += 1 }
+            row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(values)
             return true
           }
         }

@@ -105,7 +105,17 @@ class SerializableHadoopConf(@transient var value: Configuration) extends Serial
   }
 }
 
+/** Equality: two scans are equal when the path and the pushed chrom
+  * filter are — all that decides their rows (the schema is fixed). As
+  * for [[BamScan]], this lets ReuseExchange share an exchange between
+  * two copies of one read in a plan. */
 class VcfScan(path: String, chromFilter: Option[Set[String]]) extends Scan with Batch {
+  private def key = (path, chromFilter)
+  override def equals(other: Any): Boolean = other match {
+    case o: VcfScan => key == o.key
+    case _ => false
+  }
+  override def hashCode(): Int = key.hashCode()
   // resolved at planning time on the driver, where the session is live
   private val hadoopConf = new SerializableHadoopConf(
     org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())

@@ -139,4 +139,72 @@ class BamSuite extends SparkSpec {
       .orderBy("contig", "pos_start").collect().map(_.toSeq).toSeq
     assert(viaBam == viaText)
   }
+
+  /** A reads frame in BAM shards (text CIGARs kept for comparison). */
+  private def bamReads(tag: String): (org.apache.spark.sql.DataFrame, String) = {
+    val rnd = new scala.util.Random(7)
+    val cig = Seq("40M", "20M3D20M", "10S30M", "15M200N15M", "20M2I18M")
+    val df = (0 until 400).map { i =>
+      (if (i % 3 == 0) "chr2" else "chr1", 1L + rnd.nextInt(5000),
+        if (i % 11 == 0) 1024 else 0, cig(i % cig.length), 30)
+    }.toDF("chrom", "start", "flags", "cigar", "mapping_quality").repartition(4)
+    val dir = tempDir(tag)
+    Bam.writeShards(df, dir, Seq(("chr1", 100000), ("chr2", 100000)), indexEvery = 16)
+    (df, dir)
+  }
+  private def bam(dir: String, splits: Option[Int] = None) = {
+    val r = spark.read.format("graft.sources.BamDataSource").option("path", dir)
+    splits.fold(r)(k => r.option("splits", k.toString)).load()
+  }
+  private def bamScans(df: org.apache.spark.sql.DataFrame) = planNodes(df).collect {
+    case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+        if s.scan.isInstanceOf[graft.sources.BamScan] => s
+  }
+  private def reused(df: org.apache.spark.sql.DataFrame) = planNodes(df).count(
+    _.isInstanceOf[org.apache.spark.sql.execution.exchange.ReusedExchangeExec])
+
+  test("depth over a BAM scan decodes each record once: one scan, one reused exchange") {
+    val (text, dir) = bamReads("bam_depth_reuse")
+    val depth = graft.pileup.Pileup.depth(bam(dir))
+    val got = depth.collect().map(_.toSeq).toSet
+    // the final AQE plan: both prefix-sum branches read the one
+    // (chrom, pos) events exchange, so the BAM is scanned once
+    assert(bamScans(depth).length == 1, depth.queryExecution.executedPlan.toString)
+    assert(reused(depth) == 1, depth.queryExecution.executedPlan.toString)
+    assert(got == graft.pileup.Pileup.depth(text).collect().map(_.toSeq).toSet)
+  }
+
+  test("BAM scans that differ in pruned columns, chrom filter or splits are unequal and do not share") {
+    import graft.sources.BamScan
+    val (_, dir) = bamReads("bam_scan_eq")
+    val schema = graft.sources.BamDataSource.schema
+    val pruned = org.apache.spark.sql.types.StructType(schema.take(2))
+    val base = new BamScan(dir, Some(Set("chr1")), Some(2), pruned)
+    assert(base == new BamScan(dir, Some(Set("chr1")), Some(2), pruned))
+    assert(base.hashCode == new BamScan(dir, Some(Set("chr1")), Some(2), pruned).hashCode)
+    for (other <- Seq(new BamScan(dir, Some(Set("chr1")), Some(2), schema),
+        new BamScan(dir, Some(Set("chr2")), Some(2), pruned),
+        new BamScan(dir, None, Some(2), pruned),
+        new BamScan(dir, Some(Set("chr1")), Some(3), pruned),
+        new BamScan(dir + "_x", Some(Set("chr1")), Some(2), pruned)))
+      assert(base != other, other.description())
+    // in a plan: two reads whose plans differ only in the scan
+    def perFlag(df: org.apache.spark.sql.DataFrame) = df.groupBy("flags").count()
+    val same = perFlag(bam(dir).where($"chrom" === "chr1"))
+      .union(perFlag(bam(dir).where($"chrom" === "chr1")))
+    val n1 = same.collect().map(_.getLong(1)).sum
+    assert(bamScans(same).length == 1 && reused(same) == 1)
+    val byChrom = perFlag(bam(dir).where($"chrom" === "chr1"))
+      .union(perFlag(bam(dir).where($"chrom" === "chr2")))
+    val n2 = byChrom.collect().map(_.getLong(1)).sum
+    assert(bamScans(byChrom).length == 2 && reused(byChrom) == 0)
+    assert(n2 == 400 && n1 == 2 * (400 - 134))
+    val bySplits = perFlag(bam(dir, Some(2))).union(perFlag(bam(dir, Some(3))))
+    assert(bySplits.collect().map(_.getLong(1)).sum == 800)
+    assert(bamScans(bySplits).length == 2 && reused(bySplits) == 0)
+    val byCols = bam(dir).groupBy("chrom").count()
+      .union(bam(dir).groupBy("chrom").agg(org.apache.spark.sql.functions.max("end")))
+    byCols.collect()
+    assert(bamScans(byCols).length == 2 && reused(byCols) == 0)
+  }
 }

@@ -3,7 +3,7 @@ package graft
 import graft.core.GraftConf
 import graft.pileup.{Cigar, Pileup}
 import graft.vep.{Allele, Vep}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 
 class PileupVepSuite extends SparkSpec {
   import spark.implicits._
@@ -444,5 +444,97 @@ class PileupVepSuite extends SparkSpec {
     assert(run(1, shuffleInput = true) == base)
     assert(run(7, shuffleInput = true) == base)
     assert(run(4, shuffleInput = true) == base)
+  }
+
+  /** Run `body` with session confs set, restoring them after. */
+  private def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  private def packedCigar(c: String): Array[Byte] = {
+    val ops = graft.sources.Bam.packCigar(c)
+    val bb = java.nio.ByteBuffer.allocate(4 * ops.length).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    ops.foreach(bb.putInt)
+    bb.array()
+  }
+
+  private def cigarEvents(cigar: org.apache.spark.sql.Column) = {
+    import org.apache.spark.sql.GraftColumnBridge
+    GraftColumnBridge.column(graft.plans.CigarEvents(
+      GraftColumnBridge.expression(col("start")), GraftColumnBridge.expression(cigar)))
+  }
+
+  test("CigarEvents: events equal the coveredSegments model, text and packed, codegen and interpreted") {
+    import org.apache.spark.sql.execution.{GenerateExec, WholeStageCodegenExec}
+    val rnd = new scala.util.Random(20261020)
+    val ops = "MIDNSHP=X"
+    val cases = (0 until 600).map { i =>
+      val cigar = Seq.fill(1 + rnd.nextInt(8))(
+        s"${rnd.nextInt(60)}${ops(rnd.nextInt(ops.length))}").mkString
+      (i.toLong, 1L + rnd.nextInt(1000000), cigar)
+    }
+    val model = cases.map { case (id, s, c) =>
+      id -> Cigar.coveredSegments(s, c).flatMap { case (a, b) => Seq((a, 1L), (b, -1L)) }
+    }.filter(_._2.nonEmpty).toMap
+    // an RDD source keeps the generator in whole-stage codegen
+    val reads = spark.sparkContext.parallelize(
+      cases.map { case (id, s, c) => (id, s, c, packedCigar(c)) }, 4)
+      .toDF("id", "start", "cigar", "packed")
+    def events(cigar: String, codegen: Boolean) = {
+      val df = reads.select(col("id"), cigarEvents(col(cigar)))
+      val got = df.collect().toSeq.map(r => (r.getLong(0), (r.getLong(1), r.getLong(2))))
+      val fused = planNodes(df).exists {
+        case w: WholeStageCodegenExec => w.child.exists(_.isInstanceOf[GenerateExec])
+        case _ => false
+      }
+      assert(fused == codegen, df.queryExecution.executedPlan.toString)
+      got.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
+    }
+    withConf("spark.sql.codegen.fallback" -> "false") {
+      assert(events("cigar", codegen = true) == model)
+      assert(events("packed", codegen = true) == model)
+    }
+    withConf("spark.sql.codegen.wholeStage" -> "false") {
+      assert(events("cigar", codegen = false) == model)
+      assert(events("packed", codegen = false) == model)
+    }
+  }
+
+  test("CigarEvents: null input yields nothing; depth skips null, empty and '*' CIGARs; bad ops throw") {
+    val bin = Seq[(String, java.lang.Long, Array[Byte])](
+      ("c1", 100L, packedCigar("10M")),
+      ("c1", 100L, Array.emptyByteArray),
+      ("c1", 100L, null),
+      ("c1", null, packedCigar("10M")))
+      .toDF("chrom", "start", "cigar")
+      .select(col("chrom"), col("start"), lit(0).as("flags"), col("cigar"),
+        lit(60).as("mapping_quality"))
+    assert(bin.select(cigarEvents(col("cigar"))).collect().map(r => (r.getLong(0), r.getLong(1)))
+      .toSeq == Seq((100L, 1L), (110L, -1L)))
+    assert(Pileup.depth(bin).collect().map(r => (r.getLong(1), r.getLong(2), r.getInt(3)))
+      .toSeq == Seq((100L, 109L, 1)))
+    val text = Seq(("c1", 100L, "*"), ("c1", 100L, null), ("c1", 100L, "4M"))
+      .toDF("chrom", "start", "cigar")
+      .select(col("chrom"), col("start"), lit(0).as("flags"), col("cigar"),
+        lit(60).as("mapping_quality"))
+    assert(Pileup.depth(text).collect().map(r => (r.getLong(1), r.getLong(2), r.getInt(3)))
+      .toSeq == Seq((100L, 103L, 1)))
+    // a bad op letter or op code fails the task with the walker's error
+    def cause(t: Throwable): Throwable =
+      if (t.getCause == null || t.isInstanceOf[IllegalArgumentException]) t else cause(t.getCause)
+    val badText = Seq(("c1", 1L, "5M3Z")).toDF("chrom", "start", "cigar")
+    assert(cause(intercept[Exception](badText.select(cigarEvents(col("cigar"))).collect()))
+      .isInstanceOf[IllegalArgumentException])
+    val badCode = Array[Byte](0x59, 0, 0, 0) // 5 << 4 | 9
+    val badBin = Seq(("c1", 1L, badCode)).toDF("chrom", "start", "cigar")
+    assert(cause(intercept[Exception](badBin.select(cigarEvents(col("cigar"))).collect()))
+      .isInstanceOf[IllegalArgumentException])
+    intercept[IllegalArgumentException](Cigar.coveredSegmentsBinary(0, badCode))
   }
 }

@@ -197,4 +197,28 @@ class SourcesSuite extends SparkSpec {
       case In(a, vs) => (a, vs.toSeq) } == Seq(("chrom", Seq("chr0", "chr1"))))
     assert(residual.toSeq == Seq(EqualTo("chrom", "chr1")))
   }
+
+  test("VCF scans are equal over path and chrom filter: equal ones share an exchange, others do not") {
+    import graft.sources.VcfScan
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    val path = tempDir("vcf_dsv2")
+    writeVcf(path)
+    assert(new VcfScan(path, Some(Set("chr0"))) == new VcfScan(path, Some(Set("chr0"))))
+    assert(new VcfScan(path, Some(Set("chr0"))).hashCode ==
+      new VcfScan(path, Some(Set("chr0"))).hashCode)
+    assert(new VcfScan(path, Some(Set("chr0"))) != new VcfScan(path, Some(Set("chr1"))))
+    assert(new VcfScan(path, Some(Set("chr0"))) != new VcfScan(path, None))
+    assert(new VcfScan(path, None) != new VcfScan(path + "_x", None))
+    def perRef(chrom: String) = spark.read.format("graft.sources.VcfDataSource")
+      .option("path", path).load().where($"chrom" === chrom).groupBy("ref").count()
+    def shape(df: org.apache.spark.sql.DataFrame) = {
+      val n = df.collect().map(_.getLong(1)).sum
+      val nodes = planNodes(df)
+      (n, nodes.count { case s: BatchScanExec => s.scan.isInstanceOf[VcfScan]; case _ => false },
+        nodes.count(_.isInstanceOf[ReusedExchangeExec]))
+    }
+    assert(shape(perRef("chr0").union(perRef("chr0"))) == ((4L, 1, 1)))
+    assert(shape(perRef("chr0").union(perRef("chr1"))) == ((3L, 2, 0)))
+  }
 }

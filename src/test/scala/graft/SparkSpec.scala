@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -13,6 +14,19 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     df.collect().toSeq.map(_.toSeq)
   def sortedRows(df: DataFrame): Seq[Seq[Any]] =
     rows(df).sortBy(_.mkString(""))
+
+  /** Every node of `df`'s executed plan, looking inside AQE's plan
+    * and query stages; after an action that is AQE's final plan, the
+    * only place a `ReusedExchangeExec` shows. */
+  def planNodes(df: DataFrame): Seq[SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => q +: walk(q.plan)
+      case other => other +: (other.children ++ other.subqueries).flatMap(walk)
+    }
+    walk(df.queryExecution.executedPlan)
+  }
 
   /** Blocks until every event posted so far reached the listeners. */
   def drainListenerBus(): Unit =

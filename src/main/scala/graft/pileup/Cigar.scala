@@ -20,7 +20,7 @@ object Cigar {
     * consumes nothing) coalesce; runs split by D/N do not. */
   def coveredSegments(start: Long, cigar: String): Seq[(Long, Long)] = {
     val w = new CigarWalk
-    segments(w, w.walkText(start, cigar))
+    segments(w, w.walkText(start, UTF8String.fromString(cigar)))
   }
 
   /** Binary packed form: little-endian u32 per op, `len<<4 | op`. */
@@ -48,9 +48,9 @@ object Cigar {
   * [[Cigar.coveredSegments]] for the rule) and returns their count,
   * so a caller that walks many reads allocates nothing per read. The
   * packed form decodes its u32 ops in place; the text form parses
-  * digits and op letters (a `String` or the engine's `UTF8String`,
-  * without decoding it). A bad op letter or op code throws
-  * `IllegalArgumentException`. */
+  * digits and op letters off the engine's `UTF8String` bytes without
+  * decoding them (a CIGAR is ASCII, so one byte is one character). A
+  * bad op letter or op code throws `IllegalArgumentException`. */
 final class CigarWalk {
   private var bounds = new Array[Long](4)
   private var n = 0
@@ -71,17 +71,6 @@ final class CigarWalk {
       if (!op(code, v >>> 4))
         throw new IllegalArgumentException(s"bad packed CIGAR op code $code")
       i += 4
-    }
-    finish()
-  }
-
-  def walkText(start: Long, cigar: String): Int = {
-    begin(start)
-    var i = 0
-    while (i < cigar.length) {
-      val c = cigar.charAt(i)
-      if (!textChar(c)) throw new IllegalArgumentException(s"bad CIGAR op '$c' in '$cigar'")
-      i += 1
     }
     finish()
   }

@@ -222,16 +222,26 @@ object Bam {
     private var buf = new Array[Byte](256)
     private var size = 0
 
-    /** Load the next record; false at the range end or stream end. */
+    /** Load the next record; false at the range end or stream end. A
+      * record whose `block_size` cannot hold its fixed fields, or whose
+      * name, CIGAR and seq/qual lengths run past it, throws
+      * `IllegalArgumentException` naming its virtual offset — the
+      * buffer is reused, so decoding it would read the previous
+      * record's bytes. */
     def advance(): Boolean = {
-      if (blockIn.nextVirtualOffset >= endVirtual) return false
+      val at = blockIn.nextVirtualOffset
+      if (at >= endVirtual) return false
       val first = blockIn.read()
       if (first < 0) return false
       buf(0) = first.toByte
       in.readFully(buf, 1, 3)
       size = i32(0)
+      require(size >= 32, s"corrupt BAM record at virtual offset $at: block_size $size < 32")
       if (size > buf.length) buf = new Array[Byte](math.max(size, 2 * buf.length))
       in.readFully(buf, 0, size)
+      require(nameLen >= 1 && lSeq >= 0 && seqOff + (lSeq + 1L) / 2 + lSeq <= size,
+        s"corrupt BAM record at virtual offset $at: l_read_name $nameLen, " +
+          s"n_cigar_op $nCigar and l_seq $lSeq overrun block_size $size")
       true
     }
 
@@ -343,12 +353,6 @@ object Bam {
     val (refs, cursor) = open(source)
     (refs, cursor.records(wantSeq, wantTags))
   }
-
-  /** Decode the records of the virtual-offset range [startVirtual,
-    * endVirtual) from `source` (see [[openRange]]). */
-  def readRange(source: InputStream, startVirtual: Long, endVirtual: Long,
-      wantSeq: Boolean = false, wantTags: Boolean = false): Iterator[BamRecord] =
-    openRange(source, startVirtual, endVirtual).records(wantSeq, wantTags)
 
   /** One linear pass over a .bam: the virtual offsets of every
     * `every`-th record start (the first record always included),
@@ -598,13 +602,16 @@ class BamScanBuilder(path: String, splits: Option[Int] = None)
   override def build(): Scan = new BamScan(path, chromFilter, splits, required)
 }
 
-/** Equality: two scans are equal when everything that decides their
-  * rows is — the path, the pushed chrom filter, the split count and
-  * the pruned schema. Spark's `BatchScanExec` compares its batch (this
-  * scan) with `equals`, so two copies of one read in a plan (depth's
-  * two prefix-sum branches, any self-join) let ReuseExchange and AQE's
-  * stage cache run their shared exchange once; under reference
-  * equality they never match. */
+/** Equality: two scans are equal when their path, pushed chrom filter
+  * and pruned schema — everything that decides their rows — and their
+  * `splits` read option are. Spark's `BatchScanExec` compares its
+  * batch (this scan) with `equals`, so two copies of one read in a
+  * plan (depth's two prefix-sum branches, any self-join) let
+  * ReuseExchange and AQE's stage cache run their shared exchange once;
+  * under reference equality they never match. `splits` decides only
+  * how the rows are partitioned, not which rows there are; it stays in
+  * the key to be conservative, so a read that asks for its own split
+  * count gets its own scan. */
 class BamScan(path: String, chromFilter: Option[Set[String]],
     splits: Option[Int] = None,
     requiredSchema: StructType = BamDataSource.schema) extends Scan with Batch {

@@ -74,6 +74,42 @@ class BamSuite extends SparkSpec {
     assert(Bam.refLength(r.cigarOps) == 9) // 4M + 2D + 3M consume ref
   }
 
+  test("a record whose declared lengths overrun its block_size fails loudly") {
+    // the hand-crafted layout above: one reference, one good 10M
+    // record, then one whose fixed fields may lie. The reader reuses
+    // one record buffer, so decoding past block_size would read the
+    // good record's leftover bytes instead of failing
+    def bamWith(blockSize: Int, nCigar: Int, lSeq: Int): Array[Byte] = {
+      val raw = new ByteArrayOutputStream()
+      raw.write("BAM".getBytes("UTF-8")); raw.write(1)
+      le32(raw, 0); le32(raw, 1)
+      le32(raw, 5); raw.write("chrX".getBytes("UTF-8")); raw.write(0)
+      le32(raw, 1000)
+      def record(blockSize: Int, nCigar: Int, lSeq: Int): Unit = {
+        le32(raw, blockSize); le32(raw, 0); le32(raw, 99)
+        raw.write(6); raw.write(37); le16(raw, 4681)
+        le16(raw, nCigar); le16(raw, 0); le32(raw, lSeq)
+        le32(raw, -1); le32(raw, -1); le32(raw, 0)
+        raw.write("read1".getBytes("UTF-8")); raw.write(0)
+        le32(raw, 10 << 4) // 42 bytes after block_size in all
+      }
+      record(42, 1, 0)
+      record(blockSize, nCigar, lSeq)
+      val data = raw.toByteArray
+      val sink = new ByteArrayOutputStream()
+      sink.write(Bgzf.compressBlock(data, 0, data.length))
+      sink.write(Bgzf.EofMarker)
+      sink.toByteArray
+    }
+    def decode(bytes: Array[Byte]) = Bam.read(new ByteArrayInputStream(bytes))._2.toList
+    assert(decode(bamWith(42, 1, 0)).map(_.cigarOps.toSeq) == List.fill(2)(Seq(10 << 4)))
+    // block_size short of the fixed fields; n_cigar_op and l_seq past it
+    for ((size, nCigar, lSeq) <- Seq((20, 1, 0), (42, 3, 0), (42, 1, 5))) {
+      val e = intercept[IllegalArgumentException](decode(bamWith(size, nCigar, lSeq)))
+      assert(e.getMessage.contains("corrupt BAM record at virtual offset"), e.getMessage)
+    }
+  }
+
   test("write/read round-trip preserves every field; records span BGZF blocks") {
     val rnd = new scala.util.Random(42)
     val refs = Seq(("chr1", 500000), ("chr2", 400000))

@@ -27,8 +27,9 @@ object Explain {
         "f11_annotate_e2e", "f11_annotate_default", "f11_hgvsp_indel",
         "f11_sv_consequence", "f11_colocated", "f11_maxaf",
         "f11_existing_multi", "f11_transcript_selection",
-        "s4_kv_lookup", "s2_bam_depth", "d_lsh_pairs", "d_embed_dups",
-        "d_simhash64_pairs", "ann_topk", "ann_ivf_topk", "a_q3_top_orders")
+        "s4_kv_lookup", "s2_bam_depth", "d_lsh_pairs", "d_jaccard",
+        "d_near_dedup_filter", "d_embed_dups", "d_simhash64_pairs", "ann_topk",
+        "ann_ivf_topk", "a_q3_top_orders")
     (if (gates.nonEmpty) gates else loadBearing).foreach(n => dump(n, all(n)))
     spark.stop()
   }

@@ -324,8 +324,8 @@ object MlQueries {
     "corp AS (SELECT doc_id, text FROM documents UNION ALL " +
     "SELECT doc_id + 100000 AS doc_id, text FROM documents WHERE doc_id % 5 = 0)"
 
-  /** words → 3-shingles → 8-band minhash (md5-hex min), shared by the
-    * LSH/jaccard oracles. */
+  /** words → 3-shingles → 8-band minhash (affine hash of the md5
+    * prefix, minimum per band), shared by the LSH/jaccard oracles. */
   private val shinglesCte =
     s"""w AS (SELECT doc_id, string_split($norm, ' ') AS words FROM documents),
        |sh AS (SELECT doc_id, array_to_string(words[CAST(i AS INT):CAST(i AS INT)+2], ' ') AS sh

@@ -12,9 +12,10 @@ import graft.text.TextFunctions
   * via LSH buckets instead of all-pairs.
   *
   * Hashing is md5-based so results are engine-independent (the DuckDB
-  * oracle reproduces signatures exactly); min-over-hex-strings is the
-  * minhash order. For raw throughput the md5 could be swapped for
-  * xxhash64 — kept md5 for cross-engine verifiability.
+  * oracle reproduces signatures exactly); the minhash order is the
+  * numeric order of an integer affine hash over each shingle's md5
+  * prefix ([[bandSignature]]). For raw throughput the md5 could be
+  * swapped for xxhash64 — kept md5 for cross-engine verifiability.
   */
 object Dedup {
 
@@ -57,41 +58,53 @@ object Dedup {
         i => concat_ws(" ", slice(words, i, lit(k)))))
       .otherwise(array())
 
-  /** Both md5-prefix reductions of each shingle occurrence in one
-    * projection — `hv` (28-bit, minhash base) and `sh60` (60-bit,
-    * Jaccard set key) come from ONE md5 per occurrence, so a pipeline
-    * needing both ([[removeNearDuplicates]]) scans, normalizes,
-    * shingles and hashes the corpus once. The word array is bound to
-    * its own projection so the shingle lambda slices a materialized
-    * array. */
+  /** One row per document, `(id, hv, sh60, carry...)`: `hv` holds the
+    * 28-bit md5 prefix of each shingle occurrence (the minhash base
+    * hash), `sh60` the distinct 60-bit prefixes (the Jaccard set), both
+    * from ONE md5 per shingle. Fewer than k words give empty arrays.
+    * The word array and the md5 array are each bound in their own
+    * projection, so no lambda re-runs the tokenization or the md5.
+    * `carry` columns pass through by name. Starts no job and measures
+    * no plan, so it runs on streaming frames too. */
+  private[graft] def shingleHashes(df: DataFrame, id: Column, text: Column, k: Int,
+      carry: Seq[Column] = Nil): DataFrame = {
+    def prefix(h: Column, hexDigits: Int) = conv(substring(h, 1, hexDigits), 16, 10).cast("long")
+    df.select(Seq(id.as("id"), split(TextFunctions.normalized(text), " ").as("_w")) ++ carry: _*)
+      .select(Seq(col("id"),
+        transform(shinglesOfWords(col("_w"), k), s => md5(s.cast("binary"))).as("_h")) ++ carry: _*)
+      .select(Seq(col("id"), transform(col("_h"), prefix(_, 7)).as("hv"),
+        array_distinct(transform(col("_h"), prefix(_, 15))).as("sh60")) ++ carry: _*)
+  }
+
+  /** [[shingleHashes]] of a batch corpus, widened first when its scan
+    * under-parallelizes. */
   private def hashedShingles(
       df: DataFrame, textCol: String, idCol: String, k: Int): DataFrame =
-    graft.core.Parallelism.ensure(df)
-      .select(col(idCol).as("id"),
-        split(TextFunctions.normalized(col(textCol)), " ").as("_w"))
-      .select(col("id"), explode(shinglesOfWords(col("_w"), k)).as("sh"))
-      .withColumn("_h", md5(col("sh").cast("binary")))
-      .select(col("id"),
-        conv(substring(col("_h"), 1, 7), 16, 10).cast("long").as("hv"),
-        conv(substring(col("_h"), 1, 15), 16, 10).cast("long").as("sh60"))
+    shingleHashes(graft.core.Parallelism.ensure(df), col(idCol), col(textCol), k)
 
-  /** Minhash candidate pairs of hashed shingles: one `(id, band, h)`
-    * row per band, `h` the band's minimum, and documents sharing any
-    * (band, h) become candidates — never all-pairs. The 28-bit `hv` of
-    * each shingle occurrence (one md5) is the base hash; band b applies
-    * the affine universal hash `(2b+1)*H + 7919b + 13 mod 1e9+7`
-    * (integer arithmetic both engines reproduce exactly; an
-    * md5-per-band variant costs 8x the hashing). Not
-    * [[simhashBandedPairs]]: the keys (~1e9 values per band) form tiny
-    * groups, so AQE sizes the exchange, nothing needs verifying, and
-    * the distinct keeps its map-side partial aggregate, which drops a
-    * pair's per-band copies before they shuffle. No star guard: equal
-    * minhash vectors do not imply equal shingle sets. SHUFFLE_HASH: no
-    * sort order is needed downstream. Output: distinct (id1 < id2). */
+  /** The minhash band signature of a document's `hv` array, as a
+    * generator of `(band, h)` rows: band b's `h` is the minimum of the
+    * affine universal hash `(2b+1)*hv + 7919b + 13 mod 1e9+7` (integer
+    * arithmetic both engines reproduce exactly; an md5-per-band variant
+    * costs 8x the hashing). Map-only, so it runs upstream of streaming
+    * state as well as in batch. An empty `hv` (fewer than k words)
+    * yields no rows. */
+  def bandSignature(hv: Column, bands: Int): Column =
+    inline(when(size(hv) > 0, transform(sequence(lit(0), lit(bands - 1)), b =>
+      struct(b.as("band"),
+        array_min(transform(hv, h => ((b * 2 + 1) * h + b * 7919 + 13) % 1000000007L)).as("h")))))
+
+  /** Minhash candidate pairs of [[shingleHashes]] rows: documents
+    * sharing any [[bandSignature]] `(band, h)` become candidates —
+    * never all-pairs. Not [[simhashBandedPairs]]: the keys (~1e9
+    * values per band) form tiny groups, so AQE sizes the exchange,
+    * nothing needs verifying, and the distinct keeps its map-side
+    * partial aggregate, which drops a pair's per-band copies before
+    * they shuffle. No star guard: equal minhash vectors do not imply
+    * equal shingle sets. SHUFFLE_HASH: no sort order is needed
+    * downstream. Output: distinct (id1 < id2). */
   private def minhashPairs(hs: DataFrame, bands: Int): DataFrame = {
-    val sig = hs.select(col("id"), explode(sequence(lit(0), lit(bands - 1))).as("band"), col("hv"))
-      .groupBy(col("id"), col("band"))
-      .agg(min(((col("band") * 2 + 1) * col("hv") + col("band") * 7919 + 13) % 1000000007L).as("h"))
+    val sig = hs.select(col("id"), bandSignature(col("hv"), bands))
     val a = sig.as("a"); val b = sig.hint("shuffle_hash").as("b")
     a.join(b, col("a.band") === col("b.band") && col("a.h") === col("b.h") &&
       col("a.id") < col("b.id"))
@@ -173,31 +186,31 @@ object Dedup {
     minhashPairs(hashedShingles(df, textCol, idCol, k), bands)
 
   /** n-gram Jaccard similarity for candidate pairs:
-    * |A∩B| / |A∪B| over distinct k-shingles. Pure joins + aggregates —
-    * spills, scales, no driver state. Shingles are reduced to 60-bit
-    * md5-prefix keys AT THE SCAN so the intersection joins shuffle
-    * 8-byte longs, never raw shingle text (a 100-word document's
-    * shingle text is ~20x its size; the hash collision odds at 2^60
-    * are negligible and the set algebra is unchanged). */
+    * |A∩B| / |A∪B| over distinct k-shingles, one output row per input
+    * pair (a repeated pair repeats). A pair is dropped when an id is
+    * absent from `df` or a side has no shingle (fewer than k words).
+    * Shingles are 60-bit md5-prefix keys (the collision odds at 2^60
+    * are negligible and the set algebra is unchanged); ids are assumed
+    * unique in `df`. */
   def ngramJaccard(
       df: DataFrame, pairs: DataFrame, textCol: String, idCol: String,
       k: Int = 3): DataFrame =
     jaccardOfHashes(hashedShingles(df, textCol, idCol, k), pairs)
 
+  /** Each pair meets its two documents' `sh60` arrays by id — two joins
+    * on the id, no shingle-level rows — and the set algebra runs on the
+    * arrays. The empty-side drop references BOTH sides on purpose: a
+    * one-sided predicate on a hash array is pushed below the input's
+    * round-robin repartition and runs the whole normalize/shingle/md5
+    * pipeline on the scan's few tasks. */
   private def jaccardOfHashes(hs: DataFrame, pairs: DataFrame): DataFrame = {
-    val sh = hs.select(col("id"), col("sh60").as("sh")).distinct()
-    val counts = sh.groupBy(col("id")).agg(count(lit(1)).as("n"))
-    val inter = pairs
-      .join(sh.as("s1"), col("id1") === col("s1.id"))
-      .join(sh.as("s2"), col("id2") === col("s2.id") && col("s1.sh") === col("s2.sh"))
-      .groupBy(col("id1"), col("id2")).agg(count(lit(1)).as("inter"))
-    pairs
-      .join(inter, Seq("id1", "id2"), "left")
-      .join(counts.select(col("id").as("id1"), col("n").as("n1")), Seq("id1"))
-      .join(counts.select(col("id").as("id2"), col("n").as("n2")), Seq("id2"))
+    def side(i: Int) = hs.select(col("id").as(s"id$i"), col("sh60").as(s"_s$i"))
+    val (a, b) = (col("_s1"), col("_s2"))
+    val inter = size(array_intersect(a, b))
+    pairs.join(side(1), "id1").join(side(2), "id2")
+      .where(least(size(a), size(b)) > 0)
       .select(col("id1"), col("id2"),
-        round(coalesce(col("inter"), lit(0L)).cast("double") /
-          (col("n1") + col("n2") - coalesce(col("inter"), lit(0L))).cast("double"), 6)
+        round(inter.cast("double") / (size(a) + size(b) - inter).cast("double"), 6)
           .as("jaccard"))
   }
 
@@ -239,8 +252,8 @@ object Dedup {
     require(threshold >= 0.0 && threshold <= 1.0,
       s"jaccard threshold must be in [0, 1], got $threshold")
     keepClusterMinima(df, idCol, "removeNearDuplicates") {
-      // ONE corpus scan: the hashed-shingle frame (both md5 prefixes
-      // from one md5 per occurrence) is RDD-materialized once, so the
+      // ONE corpus scan: the per-document hash frame (both arrays from
+      // one md5 per shingle) is RDD-materialized once, so the
       // minhash and Jaccard branches read cached partitions instead of
       // re-scanning + re-normalizing + re-hashing the corpus. An
       // exchange barrier here coalesces to a handful of tasks at gate

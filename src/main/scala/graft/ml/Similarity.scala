@@ -23,39 +23,28 @@ object Similarity {
   private def quant(v: Column): Column =
     transform(v, x => floor(x.cast("double") * Scale).cast("long"))
 
-  /** Exact integer dot product of two quantized vectors. */
-  private def qdot(a: Column, b: Column): Column =
-    aggregate(zip_with(quant(a), quant(b), (x, y) => x * y), lit(0L), (acc, v) => acc + v)
-
-  private def qnorm2(a: Column): Column =
-    aggregate(transform(quant(a), x => x * x), lit(0L), (acc, v) => acc + v)
-
-  /** Deterministic cosine similarity (see class note). */
-  def cosine(a: Column, b: Column): Column =
-    qdot(a, b).cast("double") / sqrt(qnorm2(a).cast("double")) / sqrt(qnorm2(b).cast("double"))
-
-  // ---- precomputed-side variants: every candidate join below scores
-  // O(pairs); norms and quantization are per-VECTOR facts, so they are
-  // projected once per row BEFORE the join (the projection stays below
+  // Norms and quantization are per-VECTOR facts, so they are projected
+  // once per row BEFORE a candidate join (the projection stays below
   // the join in the physical plan) and each pair pays only the single
-  // O(dim) dot product. Arithmetic is identical to [[cosine]] —
-  // exact integer sums — so results are bit-for-bit unchanged. ----
+  // O(dim) dot product over exact integer sums.
 
   /** Dot product of two ALREADY-quantized vectors. */
-  private def qdotPre(aq: Column, bq: Column): Column =
+  private def qdot(aq: Column, bq: Column): Column =
     aggregate(zip_with(aq, bq, (x, y) => x * y), lit(0L), (acc, v) => acc + v)
 
-  private def qnorm2Pre(aq: Column): Column =
+  private def qnorm2(aq: Column): Column =
     aggregate(transform(aq, x => x * x), lit(0L), (acc, v) => acc + v)
 
-  /** Cosine from prequantized vectors + precomputed squared norms. */
-  private def cosinePre(aq: Column, an2: Column, bq: Column, bn2: Column): Column =
-    qdotPre(aq, bq).cast("double") / sqrt(an2.cast("double")) / sqrt(bn2.cast("double"))
+  /** Cosine of the prepared vectors prefixed `a` and `b` (see [[prep]]),
+    * rounded to 9 places. */
+  private def cosine(a: String, b: String): Column =
+    round(qdot(col(a + "_q"), col(b + "_q")).cast("double") /
+      sqrt(col(a + "_n2").cast("double")) / sqrt(col(b + "_n2").cast("double")), 9)
 
   /** Projection prefix-`p`: (p_id, p_q quantized array, p_n2 norm). */
   private def prep(df: DataFrame, idCol: String, vecCol: String, p: String): DataFrame =
     df.select(col(idCol).as(p + "_id"), quant(col(vecCol)).as(p + "_q"))
-      .withColumn(p + "_n2", qnorm2Pre(col(p + "_q")))
+      .withColumn(p + "_n2", qnorm2(col(p + "_q")))
 
   /** Brute-force cosine top-k: for each query vector, the k nearest
     * corpus vectors (excluding itself), ranked by (cosine desc, id).
@@ -67,12 +56,16 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val q = prep(queries, idCol, vecCol, "q")
     val c = prep(graft.core.Parallelism.ensure(corpus), idCol, vecCol, "n")
-    val scored = c.crossJoin(broadcast(q))
-      .where(col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id"),
-        round(cosinePre(col("q_q"), col("q_n2"), col("n_q"), col("n_n2")), 9).as("cos"))
+    topK(c.crossJoin(broadcast(q)).where(col("q_id") =!= col("n_id")), k)
+  }
+
+  /** The rank tail of every top-k search: each candidate `(q_*, n_*)`
+    * row is scored, and each query keeps its k best by (cosine desc,
+    * id). Output (q_id, n_id, rank). */
+  private def topK(candidates: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
+    candidates.select(col("q_id"), col("n_id"), cosine("q", "n").as("cos"))
+      .withColumn("rank", row_number().over(w)).where(col("rank") <= k)
       .select(col("q_id"), col("n_id"), col("rank"))
   }
 
@@ -95,9 +88,11 @@ object Similarity {
     })
   }
 
-  /** LSH-bucketed ANN: candidates share a bucket signature; top-k by
-    * cosine within bucket. Trades recall for a corpus-sized shuffle-free
-    * probe (buckets are the shuffle key, not vectors). */
+  /** [[prep]] plus the `planes`-bit bucket signature `p_sig`. */
+  private def signed(df: DataFrame, idCol: String, vecCol: String, p: String,
+      planes: Int, dim: Int): DataFrame =
+    prep(df, idCol, vecCol, p).withColumn(p + "_sig", lshBucketPre(col(p + "_q"), planes, dim))
+
   /** Embedding-cosine near-duplicate pairs: candidates collide in an
     * LSH hyperplane bucket (high-cosine vectors agree on all sign
     * bits with high probability), then the exact cosine filters at
@@ -108,12 +103,10 @@ object Similarity {
       corpus: DataFrame, threshold: Double, planes: Int, dim: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val base = graft.core.Parallelism.ensure(corpus)
-    val sig = (p: String) => prep(base, idCol, vecCol, p)
-      .withColumn(p + "_sig", lshBucketPre(col(p + "_q"), planes, dim))
+    val sig = (p: String) => signed(base, idCol, vecCol, p, planes, dim)
     sig("a").join(sig("b"),
         col("a_sig") === col("b_sig") && col("a_id") < col("b_id"))
-      .select(col("a_id").as("id1"), col("b_id").as("id2"),
-        round(cosinePre(col("a_q"), col("a_n2"), col("b_q"), col("b_n2")), 9).as("cos"))
+      .select(col("a_id").as("id1"), col("b_id").as("id2"), cosine("a", "b").as("cos"))
       .where(col("cos") >= threshold)
   }
 
@@ -139,40 +132,27 @@ object Similarity {
     val wA = Window.partitionBy(col("n_id"))
       .orderBy(col("_sim").desc, col("c_id"))
     val inverted = c.crossJoin(broadcast(cent))
-      .select(col("n_id"), col("n_q"), col("n_n2"), col("c_id"),
-        round(cosinePre(col("n_q"), col("n_n2"), col("c_q"), col("c_n2")), 9).as("_sim"))
+      .select(col("n_id"), col("n_q"), col("n_n2"), col("c_id"), cosine("n", "c").as("_sim"))
       .withColumn("_r", row_number().over(wA)).where(col("_r") === 1)
       .select(col("n_id"), col("n_q"), col("n_n2"), col("c_id").as("_cell"))
     val q = prep(queries, idCol, vecCol, "q")
     val wQ = Window.partitionBy(col("q_id"))
       .orderBy(col("_qsim").desc, col("c_id"))
     val probes = q.crossJoin(broadcast(cent))
-      .select(col("q_id"), col("q_q"), col("q_n2"), col("c_id"),
-        round(cosinePre(col("q_q"), col("q_n2"), col("c_q"), col("c_n2")), 9).as("_qsim"))
+      .select(col("q_id"), col("q_q"), col("q_n2"), col("c_id"), cosine("q", "c").as("_qsim"))
       .withColumn("_r", row_number().over(wQ)).where(col("_r") <= nprobe)
       .select(col("q_id"), col("q_q"), col("q_n2"), col("c_id").as("_cell"))
-    val scored = inverted.join(broadcast(probes), Seq("_cell"))
-      .where(col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id"),
-        round(cosinePre(col("q_q"), col("q_n2"), col("n_q"), col("n_n2")), 9).as("cos"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("rank"))
+    topK(inverted.join(broadcast(probes), Seq("_cell")).where(col("q_id") =!= col("n_id")), k)
   }
 
+  /** LSH-bucketed ANN: candidates share a bucket signature; top-k by
+    * cosine within bucket. Trades recall for a corpus-sized shuffle-free
+    * probe (buckets are the shuffle key, not vectors). */
   def lshTopK(
       corpus: DataFrame, queries: DataFrame, k: Int, planes: Int, dim: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val sig = (df: DataFrame, p: String) => prep(df, idCol, vecCol, p)
-      .withColumn(p + "_sig", lshBucketPre(col(p + "_q"), planes, dim))
-    val q = sig(queries, "q")
-    val c = sig(graft.core.Parallelism.ensure(corpus), "n")
-    val scored = c.join(broadcast(q),
-        col("q_sig") === col("n_sig") && col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id"),
-        round(cosinePre(col("q_q"), col("q_n2"), col("n_q"), col("n_n2")), 9).as("cos"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("rank"))
+    val q = signed(queries, idCol, vecCol, "q", planes, dim)
+    val c = signed(graft.core.Parallelism.ensure(corpus), idCol, vecCol, "n", planes, dim)
+    topK(c.join(broadcast(q), col("q_sig") === col("n_sig") && col("q_id") =!= col("n_id")), k)
   }
 }

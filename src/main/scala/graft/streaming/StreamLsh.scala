@@ -4,7 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.dedup.Dedup
-import graft.text.TextFunctions
 
 /** Streaming MinHash-LSH candidate generation: near-duplicate
   * candidate pairs emitted INCREMENTALLY as documents arrive — the
@@ -14,11 +13,11 @@ import graft.text.TextFunctions
   * LSH over the full corpus.
   *
   * Two Spark-native moves make it streamable:
-  *  - the per-(doc, band) minhash is computed MAP-ONLY with array
-  *    expressions (`array_min` over the shingle-hash array per band)
-  *    instead of the batch explode+groupBy — a streaming aggregation
-  *    would need event time and would block the downstream stateful
-  *    operator; a pure projection needs neither;
+  *  - the per-(doc, band) minhash is [[Dedup.bandSignature]], the
+  *    batch operator's own MAP-ONLY generator over the per-document
+  *    shingle-hash array — a streaming aggregation would need event
+  *    time and would block the downstream stateful operator; a pure
+  *    projection needs neither;
   *  - candidate emission is one `flatMapGroupsWithState` keyed on the
   *    (band, minhash) bucket: state = the ids seen in that bucket, a
   *    new arrival pairs with each of them (plus same-batch peers), so
@@ -42,10 +41,9 @@ object StreamLsh {
 
   /** Map-only per-band minhash signatures: `(id, band, h)` rows, no
     * shuffle, no state — safe upstream of any stateful operator.
-    * Documents with fewer than `k` words emit nothing (the batch
-    * operator's empty-shingle behavior). The hash chain matches
-    * [[Dedup.lshCandidatePairs]] bit for bit: 28-bit md5-prefix base
-    * hash, per-band affine `(2b+1)h + 7919b + 13 mod 1e9+7`. */
+    * Documents with fewer than `k` words emit nothing. The signature
+    * is the same function [[Dedup.lshCandidatePairs]] runs:
+    * [[Dedup.shingleHashes]] then [[Dedup.bandSignature]]. */
   def bandSignatures(
       docs: DataFrame, textCol: String, idCol: String,
       k: Int = 3, bands: Int = 8): DataFrame =
@@ -57,27 +55,9 @@ object StreamLsh {
   private def bandSignaturesCarrying(
       docs: DataFrame, textCol: String, idCol: String,
       k: Int, bands: Int,
-      carry: Seq[org.apache.spark.sql.Column]): DataFrame = {
-    val words = split(TextFunctions.normalized(col(textCol)), " ")
-    docs
-      // HOF rule: lambdas slice materialized columns, never
-      // re-evaluate outer expression trees per element
-      .select(Seq(col(idCol).cast("long").as("id"), words.as("_w")) ++ carry: _*)
-      .select(Seq(col("id"), Dedup.shinglesOfWords(col("_w"), k).as("_sh")) ++ carry: _*)
-      .select(Seq(col("id"),
-        transform(col("_sh"),
-          s => conv(substring(md5(s.cast("binary")), 1, 7), 16, 10).cast("long"))
-          .as("_hv")) ++ carry: _*)
-      .select(Seq(col("id"), explode(
-        transform(sequence(lit(0), lit(bands - 1)),
-          b => struct(b.cast("int").as("band"),
-            array_min(transform(col("_hv"),
-              h => ((b * 2 + 1) * h + b * 7919 + 13) % 1000000007L)).as("h"))))
-        .as("_bh")) ++ carry: _*)
-      .select(Seq(col("id"), col("_bh.band").as("band"),
-        col("_bh.h").as("h")) ++ carry: _*)
-      .where(col("h").isNotNull)
-  }
+      carry: Seq[org.apache.spark.sql.Column]): DataFrame =
+    Dedup.shingleHashes(docs, col(idCol).cast("long"), col(textCol), k, carry)
+      .select(Seq(col("id"), Dedup.bandSignature(col("hv"), bands)) ++ carry: _*)
 
   /** Candidate pairs `(id1 < id2)` from a STREAMING document source.
     * Each (band, minhash) bucket keeps the sorted ids seen so far;

@@ -139,6 +139,67 @@ class MlSuite extends SparkSpec {
     assert(j.getDouble(2) == 1.0) // identical after normalization
   }
 
+  test("ngramJaccard edges: short or absent ids drop, repeats stay, disjoint is 0") {
+    val docs = Seq(
+      (1L, "alpha beta gamma delta"),
+      (2L, "alpha beta gamma epsilon"), // shares 1 of 3 distinct shingles with 1
+      (3L, "one two three four"),       // disjoint from 1
+      (4L, "too short"),                // fewer than k = 3 words: no shingles
+    ).toDF("doc_id", "text")
+    val pairs = Seq((1L, 2L), (1L, 3L), (1L, 4L), (1L, 99L), (2L, 3L), (2L, 3L))
+      .toDF("id1", "id2")
+    val got = Dedup.ngramJaccard(docs, pairs, "text", "doc_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toSeq
+    assert(got.map(_._1).sorted == Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 3L)),
+      s"got $got")
+    val byPair = got.toMap
+    assert(byPair((1L, 2L)) == 0.333333)
+    assert(byPair((1L, 3L)) == 0.0)
+    assert(got.filter(_._1 == ((2L, 3L))).map(_._2).distinct.size == 1)
+  }
+
+  test("ngramJaccard: a repeated pair keeps its own value on every copy") {
+    // the intersection is sized per pair row, never summed over the
+    // copies of a pair (which overstates it, and divides by zero for
+    // identical sets)
+    val docs = Seq((1L, "alpha beta gamma delta"), (2L, "alpha beta gamma epsilon"),
+      (3L, "alpha beta gamma delta")).toDF("doc_id", "text")
+    val pairs = Seq((1L, 2L), (1L, 2L), (1L, 3L), (1L, 3L)).toDF("id1", "id2")
+    val got = Dedup.ngramJaccard(docs, pairs, "text", "doc_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
+    assert(got == Seq((1L, 2L, 0.333333), (1L, 2L, 0.333333), (1L, 3L, 1.0), (1L, 3L, 1.0)))
+  }
+
+  test("ngramJaccard over LSH pairs: no sort-merge join, no hash-array filter below the round-robin") {
+    import org.apache.spark.sql.catalyst.expressions.{HigherOrderFunction, Size}
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    // one file: the scan under-parallelises, so the input is widened
+    // by a round-robin exchange, as at gate scale
+    val dir = tempDir("jaccard") + "/docs"
+    docsDf.coalesce(1).write.parquet(dir)
+    val docs = spark.read.parquet(dir)
+    val j = Dedup.ngramJaccard(docs, Dedup.lshCandidatePairs(docs, "text", "doc_id"),
+      "text", "doc_id")
+    assert(j.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      == Set((1L, 2L, 1.0)))
+    val nodes = planNodes(j)
+    assert(!nodes.exists(_.isInstanceOf[SortMergeJoinExec]), j.queryExecution.executedPlan)
+    val roundRobin = nodes.collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RoundRobinPartitioning] => e
+    }
+    assert(roundRobin.nonEmpty, j.queryExecution.executedPlan)
+    val pushed = roundRobin.flatMap(_.collect {
+      case f: FilterExec if f.condition.exists {
+        case _: Size | _: HigherOrderFunction => true
+        case _ => false
+      } => f
+    })
+    assert(pushed.isEmpty, s"filter pushed below the input's round-robin: $pushed")
+  }
+
   test("simhash: identical docs equal, 64-bit variant consistent") {
     def sigs(df: DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
